@@ -1794,32 +1794,60 @@ object DedupOps {
     * relation (`arrays` = corpus index ∪ batch, or a refreshed index
     * that already contains the batch) and the batch's own arrays.
     * This is the incremental-dedup kernel: candidates come from ONE
-    * equi-join of the corpus shingle rows against the BROADCAST batch
-    * rows — the corpus side streams map-side and never shuffles (the
-    * q36 decontamination posture: a daily batch is tiny relative to
-    * the indexed corpus). Batch-internal pairs fall out of the same
-    * join because `arrays` includes the batch. The AllPairs length
-    * filter prunes before verification (lossless under the final
-    * J >= τ filter, as in q31); verification is the shared
-    * [[jaccardFor]] sorted-overlap kernel. At production scale a
-    * boilerplate-grade corpus shingle would fan out by its df here —
-    * that is q31's skew territory, and the same df cap composes (drop
-    * capped shingles from the broadcast side); the oracled query keeps
-    * the exact uncapped form. */
+    * equi-join of the corpus prefix rows against the BROADCAST batch
+    * prefix rows — the corpus side streams map-side and never
+    * shuffles (the q36 decontamination posture: a daily batch is tiny
+    * relative to the indexed corpus). Batch-internal pairs fall out of
+    * the same join because `arrays` includes the batch. Verification
+    * is the shared [[jaccardFor]] sorted-overlap kernel.
+    *
+    * Three LOSSLESS prunes, the q31 set ([[prefixCandidatesFrom]])
+    * under a different global order:
+    *   - the AllPairs PREFIX filter: each side probes only the first
+    *     n - ⌈τ·n⌉ + 1 shingles of its array. The order is the shingle
+    *     HASH order — the shingler already emits ascending arrays, so
+    *     the order is global, fixed as the corpus grows, and needs no
+    *     df statistic (q31's rarity order would need a corpus-wide
+    *     freq pass per batch). Any pair with J >= τ shares its first
+    *     common shingle inside both prefixes;
+    *   - the AllPairs LENGTH filter: min(|A|,|B|) >= τ·max(|A|,|B|);
+    *   - the PPJoin POSITIONAL filter: a match at 0-based slot p of A
+    *     and q of B supports at most min(|A|-p, |B|-q) overlapping
+    *     shingles, and J >= τ needs overlap >= τ·(|A|+|B|)/(1+τ); the
+    *     first common shingle's own row always meets it.
+    * All three prune at `lo` = τ - 1e-4, not τ: the final filter is
+    * round(J, 4) >= τ, which admits J down to τ - 5e-5, and every
+    * float comparison errs toward KEEPING a row. The same floor gates
+    * a double-only prefilter ahead of `round`, which goes through
+    * BigDecimal per row and so only runs for the few pairs that
+    * nearly pass. At production scale a boilerplate-grade corpus
+    * shingle would fan out by its df here — that is q31's skew
+    * territory, and the same df cap composes (drop capped shingles
+    * from the broadcast side); the oracled query keeps the exact
+    * uncapped form. */
   private[graft] def incrementalNearDupsFrom(arrays: DataFrame,
       newArrays: DataFrame, tau: Double): DataFrame = {
-    val probe = shingleRows(arrays)
-    val batch = shingleRows(newArrays)
+    val lo = tau - 1e-4
+    def prefixRows(a: DataFrame): DataFrame = a.select(col("doc_id"), col("n"),
+      posexplode(slice(col("sarr"), lit(1),
+        (col("n") - ceil(col("n") * lo - 1e-9) + 1).cast("int")))
+        .as(Seq("pos", "shingle")))
+    val probe = prefixRows(arrays)
+    val batch = prefixRows(newArrays)
     val cand = Hints.spreadDedupPairs(
       probe.as("s").join(broadcast(batch.as("b")),
           col("s.shingle") === col("b.shingle") &&
             col("s.doc_id") =!= col("b.doc_id") &&
             least(col("s.n"), col("b.n")) >=
-              ceil(greatest(col("s.n"), col("b.n")) * tau))
+              greatest(col("s.n"), col("b.n")) * lo - 1e-9 &&
+            least(col("s.n") - col("s.pos"), col("b.n") - col("b.pos"))
+              * (1.0 + lo) >= (col("s.n") + col("b.n")) * lo - 1e-9)
         .select(least(col("s.doc_id"), col("b.doc_id")).as("doc_a"),
           greatest(col("s.doc_id"), col("b.doc_id")).as("doc_b")),
       Seq("doc_a", "doc_b"))
-    jaccardFor(cand, arrays).filter(col("jaccard") >= tau)
+    jaccardFor(cand, arrays)
+      .filter(col("inter") / (col("n_a") + col("n_b") - col("inter")) >= lo)
+      .filter(col("jaccard") >= tau)
   }
 
   /** q75 — INCREMENTAL dedup: near-dups of an appended batch against

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 /** [EXT] Structured Streaming twins of the batch EventOps plans: the
   * same logical shapes (tumbling-window rollup, gap sessionization)
@@ -285,14 +286,18 @@ object StreamingOps {
     * ledgered append is a multi-step transaction no declarative sink
     * expresses.
     *
-    * A long-running pipeline accumulates one staged dir per batch and
-    * the corpus read becomes a widening union; [[compactStagedState]]
-    * folds the committed batch dirs into one compact dir between
-    * restarts — O(staged bytes), results bit-identical, the stream
-    * resumes on its original checkpoint (round 16; the former path —
-    * rebuild the seed index from a corpus snapshot and clear the
-    * staging root wholesale — was O(corpus) and remains legal but is
-    * no longer the maintenance default). */
+    * The corpus is read through [[stagedCorpus]]: seed index ∪ one
+    * scan whose file list holds every prior staged dir plus this
+    * batch's, so the batch plan — and its generated code — is the same
+    * at every lineage depth. A long-running pipeline still accumulates
+    * one staged dir per batch, and with it files, footers and listing
+    * work per scan; [[compactStagedState]] folds the committed batch
+    * dirs into one compact dir between restarts — O(staged bytes),
+    * results bit-identical, the stream resumes on its original
+    * checkpoint (round 16; the former path — rebuild the seed index
+    * from a corpus snapshot and clear the staging root wholesale — was
+    * O(corpus) and remains legal but is no longer the maintenance
+    * default). */
   /** (compact ids, batch ids) currently present under a staging root.
     * Names that don't parse (a compactor's in-flight `compact-N.tmp`,
     * the `_drift` metric dir, the `_graft_checkpoint` stamp) are
@@ -339,6 +344,22 @@ object StreamingOps {
       .map(i => root.resolve(s"batch-$i").toString)
   }
 
+  /** The corpus relation every staged-lineage ingest batch reads: the
+    * `seed` index ∪ ONE multi-path scan over the staged `dirs` (`view`
+    * narrows that scan before the union). The plan has the same shape
+    * however many dirs the lineage holds — only the scan's file list
+    * grows — so codegen stage ids, and with them the generated classes
+    * Spark's codegen cache keys on, repeat from batch to batch: Janino
+    * and the JIT compile a pipeline's stages once, not per
+    * micro-batch. One scan per dir would shift every later stage id
+    * with the dir count and recompile each batch cold. All dirs under
+    * one stage root share one schema, passed explicitly so the scan
+    * skips footer inference. */
+  private[graft] def stagedCorpus(spark: SparkSession, seed: DataFrame,
+      schema: StructType, dirs: Seq[String],
+      view: DataFrame => DataFrame = identity): DataFrame =
+    seed.unionByName(view(spark.read.schema(schema).parquet(dirs: _*)))
+
   /** INCREMENTAL STAGED-STATE COMPACTION (round 16) — retires the
     * "clear the staging root wholesale + rebuild the seed index"
     * maintenance path, the last O(corpus) operation in the streaming
@@ -346,11 +367,11 @@ object StreamingOps {
     * together with any previous compact dir, into ONE
     * `compact-<maxFoldedId>` dir under the same staging root, in one
     * pass over the STAGED state only: cost is O(bytes staged since
-    * the last compaction), never O(seed corpus), and afterwards each
-    * micro-batch's corpus plan folds ONE compact read plus the
-    * few batches staged since — lineage stops growing with total
-    * batch count (the round-15 verdict's O(#batches)-per-micro-batch
-    * finding at `StreamingOps` corpus folds).
+    * the last compaction), never O(seed corpus). The corpus plan's
+    * SHAPE never depended on the dir count ([[stagedCorpus]] reads
+    * every dir through one scan); what the fold bounds is the scan's
+    * file count, the footers it opens and the listing it pays — they
+    * stop growing with total batch count.
     *
     * Safety rules, in order of importance:
     *   - The NEWEST staged batch is never folded. It is the only
@@ -398,8 +419,8 @@ object StreamingOps {
     * (highest compact + live batches). The operator's play on true:
     * stop the stream at its next natural restart point, run
     * [[compactStagedState]], restart — results are bit-identical
-    * (StreamingSpec) and the per-batch corpus plan folds back to
-    * one compact read + the recent batches. Kept OUT of foreachBatch
+    * (StreamingSpec) and the per-batch corpus scan is back to one
+    * compact dir + the recent batches. Kept OUT of foreachBatch
     * on purpose, like the IVF rebuild: a Spark job inside the
     * micro-batch would stall ingest, and the fold needs the stopped-
     * stream replay-safety contract. */
@@ -576,12 +597,11 @@ object StreamingOps {
         val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")))
         sh.write.mode("overwrite").parquet(bdir)
         val newArrays = spark.read.schema(sh.schema).parquet(bdir)
-        val corpus = priorBatchDirs(batchId)
-          .foldLeft(DedupOps.stagedShingleArrays(spark, seedDir))(
-            (acc, d) => acc.unionByName(
-              spark.read.schema(sh.schema).parquet(d)))
-        val pairs = DedupOps.incrementalNearDupsFrom(
-          corpus.unionByName(newArrays), newArrays, 0.5)
+        // the batch's own dir rides the corpus scan: corpus ∪ batch
+        val arrays = stagedCorpus(spark,
+          DedupOps.stagedShingleArrays(spark, seedDir), sh.schema,
+          priorBatchDirs(batchId) :+ bdir)
+        val pairs = DedupOps.incrementalNearDupsFrom(arrays, newArrays, 0.5)
         val mode =
           if (DeltaLog.versions(pairsTable).isEmpty) "overwrite" else "append"
         DeltaTable.write(pairs, pairsTable, mode,
@@ -634,10 +654,9 @@ object StreamingOps {
               .filter(length(col("text")) >= 60))
         fp.write.mode("overwrite").parquet(bdir)
         val bfp = spark.read.schema(fp.schema).parquet(bdir)
-        val corpusFp = priorBatchDirs(batchId)
-          .map(spark.read.schema(fp.schema).parquet(_))
-          .foldLeft(MultimodalOps.stagedMediaFingerprints(spark, seedDir))(
-            _ unionByName _)
+        val corpusFp = stagedCorpus(spark,
+          MultimodalOps.stagedMediaFingerprints(spark, seedDir), fp.schema,
+          priorBatchDirs(batchId))
         val pairs = MultimodalOps.neardupFingerprintPairs(
           bfp, corpusFp, selfPairs = true)
         val mode =
@@ -684,7 +703,15 @@ object StreamingOps {
     * dirs with id < its own as corpus. The standing min-label
     * invariant is maintained inductively — each overwrite holds the
     * pointer-doubled min labels, which is exactly what the next
-    * batch's contraction requires. */
+    * batch's contraction requires.
+    *
+    * The staged (vec_id, embedding) rows take ONE `distinct()` over
+    * the combined scan of every prior dir, not one per dir. That is
+    * the corpus a fold leaves: [[compactStagedState]] folds dirs with
+    * a `distinct()` over their union, and [[batchDirs]] never returns
+    * two dirs that cover the same batch (batch ids at or below the
+    * compact id are subsumed and skipped), so no batch's rows are
+    * read twice before or after a fold. */
   def semanticIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, labelsTable: String, ckptDir: String,
       stageRoot: String)
@@ -706,15 +733,14 @@ object StreamingOps {
           carryEmbedding = true)
         assigned.write.mode("overwrite").parquet(bdir)
         val prior = priorBatchDirs(batchId)
-        val priorStaged = prior.map(spark.read.schema(assigned.schema).parquet(_))
-        val corpus = priorStaged
-          .map(_.select(col("vec_id"), col("embedding")).distinct())
-          .foldLeft(graft.Tables.load(spark, seedDir, "embeddings")
-            .select("vec_id", "embedding"))(_ unionByName _)
-        val corpusCells = priorStaged
-          .map(_.select(col("vec_id"), col("cell")))
-          .foldLeft(SimilarityOps.stagedCorpusCells(spark, seedDir))(
-            _ unionByName _)
+        val corpus = stagedCorpus(spark,
+          graft.Tables.load(spark, seedDir, "embeddings")
+            .select("vec_id", "embedding"),
+          assigned.schema, prior,
+          _.select(col("vec_id"), col("embedding")).distinct())
+        val corpusCells = stagedCorpus(spark,
+          SimilarityOps.stagedCorpusCells(spark, seedDir), assigned.schema,
+          prior, _.select(col("vec_id"), col("cell")))
         val labels =
           if (DeltaLog.versions(labelsTable).isEmpty)
             SimilarityOps.stagedSemanticLabels(spark, seedDir)
@@ -917,10 +943,9 @@ object StreamingOps {
         // (overwrite -> replay-idempotent)
         val bh = bw.select("h").distinct()
         bh.write.mode("overwrite").parquet(bdir)
-        val corpusH = batchDirs(root, batchId)
-          .foldLeft(DedupOps.stagedWindowHashSet(spark, seedDir))(
-            (acc, d) => acc.unionByName(
-              spark.read.schema(bh.schema).parquet(d)))
+        val corpusH = stagedCorpus(spark,
+          DedupOps.stagedWindowHashSet(spark, seedDir), bh.schema,
+          batchDirs(root, batchId))
         val vsCorpus = bw.join(corpusH, Seq("h"), "left_semi")
           .select("doc_id", "pos")
         // within-batch: cross-document hashes only (nd > 1, the batch
@@ -971,10 +996,11 @@ object StreamingOps {
     * batch's — the same (vec_id, pos, r) shape q46/q47/q78 search
     * over. */
   def sqServingRecon(spark: SparkSession, seedDir: String,
-      stageRoot: String): DataFrame =
-    batchDirs(java.nio.file.Paths.get(stageRoot), Long.MaxValue)
-      .foldLeft(graft.operators.SimilarityOps.stagedSqRecon(spark, seedDir))(
-        (acc, d) => acc.unionByName(spark.read.parquet(d)))
+      stageRoot: String): DataFrame = {
+    val seed = graft.operators.SimilarityOps.stagedSqRecon(spark, seedDir)
+    stagedCorpus(spark, seed, seed.schema,
+      batchDirs(java.nio.file.Paths.get(stageRoot), Long.MaxValue))
+  }
 
   /** The per-batch drift metrics a [[sqIngestPipeline]] persists under
     * `_drift/` — batchId → drift fraction. This is the production

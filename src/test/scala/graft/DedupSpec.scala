@@ -379,6 +379,48 @@ class DedupSpec extends SparkSpec {
       "the novel batch doc has no near-dups")
     mtimes1.foreach { case (f, m) =>
       assert(fileMtime(f) === m, s"full q31 run rebuilt staged file: $f") }
+    // 5. the prefix/positional pruning is lossless on harder inputs:
+    // seeded docs with truncated copies whose sizes straddle the
+    // length bound ⌈τ·max⌉, a pair at exactly J = 0.5, and a pair at
+    // J = 5000/10001 that round(·, 4) lifts to 0.5000. Reference: the
+    // unpruned join (every shingle probed, no length filter).
+    import org.apache.spark.sql.functions.{explode, greatest, least}
+    val rng = new scala.util.Random(20260)
+    val vocab = (0 until 30).map(i => s"w$i")
+    def words(k: Int) = Seq.fill(k)(vocab(rng.nextInt(vocab.size)))
+    val bases = (0 until 12).map(i => (i.toLong, words(8 + rng.nextInt(30))))
+    val copies = bases.flatMap { case (id, ws) =>
+      val cut = (ws.size + 2) / 2 // shingle count ≈ half the source's
+      Seq(-1, 0, 1, 2).map(d => (1000L + 10 * id + d + 1, ws.take(cut + d))) ++
+        Seq((2000L + id, ws.updated(rng.nextInt(ws.size), "zz")))
+    }
+    val chain = (0 until 10003).map(i => s"t$i")
+    val edge = Seq(
+      (3000L, chain.take(22)), (3001L, chain.take(12)), // 10 ⊂ 20: J = 0.5
+      (3002L, chain), (3003L, chain.take(5002))) // 5000 ⊂ 10001
+    val all = (bases ++ copies ++ edge)
+      .map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val arrays = DedupOps.shingleArrays(all, spread = false)
+    val batchArrays = arrays.filter(col("doc_id") >= 1000L)
+    val probeRows = arrays.select(col("doc_id"), explode(col("sarr")).as("shingle"))
+    val unpruned = DedupOps.jaccardFor(
+      probeRows.as("s").join(probeRows.as("b").filter(col("doc_id") >= 1000L),
+          col("s.shingle") === col("b.shingle") && col("s.doc_id") =!= col("b.doc_id"))
+        .select(least(col("s.doc_id"), col("b.doc_id")).as("doc_a"),
+          greatest(col("s.doc_id"), col("b.doc_id")).as("doc_b"))
+        .distinct(), arrays)
+      .filter(col("jaccard") >= 0.5)
+    val pruned = rows(DedupOps.incrementalNearDupsFrom(arrays, batchArrays, 0.5))
+    val expect = rows(unpruned)
+    assert(pruned === expect)
+    assert(expect.contains((3000L, 3001L, 10, 20, 10, 0.5)))
+    assert(expect.contains((3002L, 3003L, 5000, 10001, 5000, 0.5)))
+    // the truncated copies land on both sides of the threshold
+    val truncated = bases.flatMap { case (id, _) =>
+      (0 until 4).map(k => (id, 1000L + 10 * id + k)) }
+    val kept = truncated.count { case (a, b) =>
+      expect.exists(r => r._1 == a && r._2 == b) }
+    assert(kept > 0 && kept < truncated.size)
   }
 
   test("q36 gram relation is memoized: second invocation stages no new dir") {

@@ -57,7 +57,16 @@ class PlanSpec extends SparkSpec {
       // linear at sf1.)
       "q147_model_quality" ->
         graft.operators.TextOps.queries("q147_model_quality"),
-      "q149_tpch_q8" -> Relational.queries("q149_tpch_q8"))
+      "q149_tpch_q8" -> Relational.queries("q149_tpch_q8"),
+      // the streaming near-dup kernel's prefix probe (slice +
+      // posexplode) must stay codegen'd like q31's
+      "incremental_near_dups" -> { (s: org.apache.spark.sql.SparkSession,
+          d: String) =>
+        val arrays = DedupOps.stagedShingleArrays(s, d)
+        DedupOps.incrementalNearDupsFrom(arrays,
+          arrays.filter(org.apache.spark.sql.functions.col("doc_id") % 17 === 3),
+          0.5)
+      })
     for ((name, q) <- hot) {
       val p = plan(q(spark, sf))
       val fb = fallbacks(p)

@@ -828,6 +828,46 @@ class StreamingSpec extends SparkSpec {
       assert(fileMtime(f) === m, s"seed index file rewritten: $f") }
   }
 
+  test("staged corpus: the near-dup batch plan has the same scans and " +
+      "codegen stage ids over 1 prior dir and over 5") {
+    import graft.operators.DedupOps
+    import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+    val root = java.nio.file.Files.createTempDirectory("graft-corpus-shape")
+    val dirs = (0 until 7).map { i =>
+      val d = root.resolve(s"batch-$i").toString
+      DedupOps.shingleArrays(Seq((i.toLong,
+          s"document $i on staged lineage and the plans it compiles"))
+        .toDF("doc_id", "text"), spread = false).write.parquet(d)
+      d
+    }
+    val seed = spark.read.parquet(dirs.head)
+    val bdir = dirs.last
+    // the nearDupIngestPipeline batch plan over `prior` staged dirs
+    def shape(prior: Seq[String]): (Int, Seq[Int], Long) = {
+      val newArrays = spark.read.schema(seed.schema).parquet(bdir)
+      val pairs = DedupOps.incrementalNearDupsFrom(
+        StreamingOps.stagedCorpus(spark, seed, seed.schema, prior :+ bdir),
+        newArrays, 0.5)
+      val p = pairs.queryExecution.executedPlan
+      (p.collect { case s: FileSourceScanExec => s }.size,
+        p.collect { case w: WholeStageCodegenExec => w.codegenStageId },
+        pairs.count())
+    }
+    // static plans: AQE would assign stage ids only as stages run
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val (scans1, ids1, n1) = shape(dirs.slice(1, 2))
+      val (scans5, ids5, n5) = shape(dirs.slice(1, 6))
+      assert(scans1 === scans5, "a staged dir must not add a scan")
+      assert(ids1 === ids5, "codegen stage ids must not shift with depth")
+      assert(ids1.nonEmpty)
+      // the doc texts share their tails: more corpus, more pairs
+      assert(n5 > n1)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("streaming burst alerts: finalized days score against the " +
       "per-type PREFIX Welford state, spike flags, exactly-once " +
       "across restart") {
