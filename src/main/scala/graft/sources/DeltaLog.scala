@@ -41,6 +41,13 @@ import scala.util.control.NonFatal
 object DeltaLog {
   private val V = "%020d"
 
+  /** The lost-race signal of [[commit]]: another writer already claimed
+    * the target version. Retry loops catch this type only, so every
+    * other IllegalStateException (a refused table, a failed invariant)
+    * surfaces on the attempt that raised it. */
+  final class CommitConflictException(msg: String)
+    extends IllegalStateException(msg)
+
   /** stats: flat map with keys `n` (row count), `min.<col>`,
     * `max.<col>` — values stringified with toString, which for
     * numerics is the shortest round-trip form, so ordering of the
@@ -631,7 +638,7 @@ object DeltaLog {
       try Files.createLink(target, tmp)
       catch {
         case _: java.nio.file.FileAlreadyExistsException =>
-          throw new IllegalStateException(
+          throw new CommitConflictException(
             s"concurrent commit: version $next already exists in $table")
       }
       // stock Delta's periodic-checkpoint policy: every Nth commit

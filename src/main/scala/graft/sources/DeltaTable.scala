@@ -54,19 +54,18 @@ object DeltaTable {
 
   /** Write `df` to `table` with the given mode ("overwrite"|"append").
     *
-    * Concurrency: optimistic. The data files are staged and moved in
-    * unconditionally (they are invisible until committed); if another
-    * writer claims our target log version first, we re-read the log
-    * and retry the commit — appends always re-apply cleanly
-    * (add-only), overwrites recompute their remove set against the
-    * new latest snapshot. Bounded retries, then surface the conflict.
+    * Concurrency: the data files are staged once and moved in
+    * unconditionally (they are invisible until committed); the commit
+    * runs through [[transact]], whose attempts re-derive only the
+    * actions — appends always re-apply cleanly (add-only), overwrites
+    * recompute their remove set against the new latest snapshot.
     */
   /** `txn` = (appId, version): commit a SetTransaction alongside the
     * data, and SKIP the whole write if the log already records that
     * version (or later) for the app — the idempotence contract a
     * streaming sink's replayed micro-batch relies on. The check runs
-    * inside the optimistic-retry loop against the freshest snapshot,
-    * so two racing replays of the same batch commit exactly once. */
+    * on every [[transact]] attempt against the freshest snapshot, so
+    * two racing replays of the same batch commit exactly once. */
   /** Thrown internally when an identity-assigning append loses the
     * commit race to ANOTHER assigner: the staged values were numbered
     * from a stale high-water mark, so the whole write redoes (fresh
@@ -137,8 +136,7 @@ object DeltaTable {
       if (DeltaLog.versions(table).isEmpty) None
       else Some(DeltaLog.snapshot(table))
     }
-    for ((appId, version) <- txn; snap <- entrySnap)
-      if (snap.txns.get(appId).exists(_ >= version)) return snap.version
+    for (snap <- entrySnap if txnLanded(snap, txn)) return snap.version
     // GENERATED COLUMNS: resolve the generation contract this write
     // stages under — an append inherits the committed expressions; an
     // overwrite (re)declares via the parameter and carries forward the
@@ -306,14 +304,12 @@ object DeltaTable {
     if (genChecks.nonEmpty)
       enforceConstraints(df.sparkSession, table, added, genChecks,
         writeMapping)
-    // atomic log commit, with optimistic retry on version conflicts
-    val maxAttempts = 16
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val prior =
-        if (DeltaLog.versions(table).isEmpty) None else Some(DeltaLog.snapshot(table))
-      val readVersion = prior.map(_.version).getOrElse(-1L)
+    // atomic log commit: the files stage once, each attempt re-derives
+    // only the actions against the fresher snapshot
+    transact(table, "write", create = true,
+        prestaged = added.map(_.path)) { snap =>
+      val prior = Some(snap).filter(_.version >= 0)
+      val readVersion = snap.version
       // a concurrent addCheckConstraint may have landed since our last
       // validation: enforce any constraint we haven't yet checked
       // before committing rows at a version that it governs
@@ -374,14 +370,11 @@ object DeltaTable {
         val finalL2p = ColumnMapping.logicalToPhysical(tableSchema)
         val conflicts = df.schema.fieldNames.filter(c =>
           finalL2p.get(c).exists(p => stagedL2p.get(c).exists(_ != p)))
-        if (conflicts.nonEmpty) {
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
+        if (conflicts.nonEmpty)
           throw new IllegalStateException(
             s"graft-delta append to $table: column mapping for " +
               s"${conflicts.mkString(",")} changed concurrently " +
               "(racing schema evolution); re-run the append")
-        }
       }
       // IDENTITY range race: if another assigner advanced the mark
       // since our values were numbered, the staged bytes collide with
@@ -391,11 +384,8 @@ object DeltaTable {
           .map(j => IdentityColumns.of(
             DataType.fromJson(j).asInstanceOf[StructType]))
           .getOrElse(Nil).map(s => s.col -> s.base).toMap
-        if (idSpecs.exists(s => freshBases.get(s.col).exists(_ != s.base))) {
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
+        if (idSpecs.exists(s => freshBases.get(s.col).exists(_ != s.base)))
           throw new IdentityRangeConflict
-        }
       }
       // generated-column + identity metadata ride the committed schema
       // (identity with the ADVANCED high-water mark — monotone even
@@ -467,29 +457,13 @@ object DeltaTable {
           ridActs ++
           addedR.map(DeltaLog.addActionOf(_))
       // a racer may have committed OUR txn version between attempts:
-      // re-check before re-committing, else the batch lands twice
-      val racedTxn = txn.exists { case (appId, v) =>
-        prior.exists(_.txns.get(appId).exists(_ >= v)) }
-      if (racedTxn) {
-        // our staged files are orphans (no log references them)
-        added.foreach(f =>
-          Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-        return prior.get.version
-      }
-      // writer-side protocol gate (a fresh table, prior=None, has no
-      // protocol to violate yet — its first commit writes one)
-      prior.foreach(p => DeltaLog.assertWritable(table, p, actions))
-      try return timed(s"log-commit $table") {
-        DeltaLog.commit(table, readVersion, actions, prior) }
-      catch {
-        case _: IllegalStateException if attempt < maxAttempts =>
-          // lost the race — re-read the log and re-derive the commit
-          Thread.sleep(5L * attempt)
-      }
+      // re-check before re-committing, else the batch lands twice (the
+      // staged files are then orphans, dropped by transact)
+      if (txnLanded(snap, txn)) Done(snap.version)
+      else Commit(actions)
     }
     // overwrite leaves removed files on disk (old versions still need
     // them for time travel — same as real Delta until vacuum())
-    throw new IllegalStateException("unreachable")
   }
 
   /** ALTER TABLE ADD CONSTRAINT (Delta's CHECK constraints): store
@@ -508,9 +482,7 @@ object DeltaTable {
       s"constraint name must be alphanumeric/underscore: $name")
     require(!sqlExpr.contains('"'),
       "constraint expression must not contain double quotes")
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "addCheckConstraint") { snap =>
       val bad = read(spark, table, Some(snap.version))
         .filter(not(expr(sqlExpr))).limit(1).count()
       require(bad == 0,
@@ -527,13 +499,8 @@ object DeltaTable {
         snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
           DeltaLog.tableId(table),
           snap.configuration + (s"delta.constraints.$name" -> sqlExpr)))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException => Thread.sleep(5L)
-      }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"addCheckConstraint($table, $name): lost the commit race $maxAttempts times")
   }
 
   /** ALTER TABLE DROP CONSTRAINT — remove `delta.constraints.<name>`
@@ -544,9 +511,7 @@ object DeltaTable {
     * live count, matching stock Delta. */
   def dropCheckConstraint(table: String, name: String): Long = {
     val key = s"delta.constraints.$name"
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "dropCheckConstraint") { snap =>
       require(snap.configuration.contains(key),
         s"no CHECK constraint named $name on $table " +
           s"(have: ${snap.checkConstraints.map(_._1).sorted.mkString(",")})")
@@ -554,14 +519,8 @@ object DeltaTable {
         snap.schemaJson.map(DeltaLog.metaDataAction(_,
           snap.partitionColumns, DeltaLog.tableId(table),
           snap.configuration - key))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException => Thread.sleep(5L)
-      }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"dropCheckConstraint($table, $name): lost the commit race " +
-        s"$maxAttempts times")
   }
 
   /** ALTER TABLE SET TBLPROPERTIES (k = v) — a plain metadata commit
@@ -590,9 +549,7 @@ object DeltaTable {
         s"setTableProperty($key): use enableDeletionVectors (protocol " +
           "must rise to the table-features gate atomically)")
     }
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "setTableProperties") { snap =>
       // delta.enableChangeDataFeed is a PROTOCOL-bearing property
       // (stock Delta: writer feature `changeDataFeed`): once set, DML
       // writes `_change_data/` sidecars, and a writer that did not
@@ -616,12 +573,8 @@ object DeltaTable {
         DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
             new StructType().json), snap.partitionColumns,
           DeltaLog.tableId(table), snap.configuration ++ kvs))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"setTableProperties($table, ${kvs.map(_._1).mkString(",")}): " +
-        s"lost the commit race $maxAttempts times")
   }
 
   /** ALTER TABLE SET delta.columnMapping.mode = 'name' — the one-way
@@ -632,60 +585,127 @@ object DeltaTable {
     * Delta spec so a mapping-unaware client refuses the table instead
     * of misreading it. Idempotent. */
   def enableColumnMapping(table: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
-      if (ColumnMapping.enabled(snap)) return snap.version
-      require(!RowTracking.enabled(snap),
-        s"enableColumnMapping($table): not supported on row-tracked " +
-          "tables (see enableRowTracking — the composition is refused " +
-          "both ways)")
-      val schema = snap.schemaJson
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse(throw new IllegalStateException(
-          s"enableColumnMapping($table): table has no committed schema"))
-      val (annotated, maxId) = ColumnMapping.annotateAsIs(schema, 0L)
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET COLUMN MAPPING"),
-        DeltaLog.protocolAction(
-          math.max(snap.minReaderVersion, 2),
-          math.max(snap.minWriterVersion, 5),
-          // a table already at the features gate (DV enabled) must keep
-          // LISTING its features — and gain the mapping one
-          if (snap.minReaderVersion >= 3)
-            (snap.readerFeatures + "columnMapping").toSeq else Nil,
-          if (snap.minWriterVersion >= 7)
-            (snap.writerFeatures + "columnMapping").toSeq else Nil),
-        DeltaLog.metaDataAction(annotated.json, snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration +
-            (ColumnMapping.ModeKey -> "name") +
-            (ColumnMapping.MaxIdKey -> maxId.toString)))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+    transact(table, "enableColumnMapping") { snap =>
+      if (ColumnMapping.enabled(snap)) Done(snap.version)
+      else {
+        require(!RowTracking.enabled(snap),
+          s"enableColumnMapping($table): not supported on row-tracked " +
+            "tables (see enableRowTracking — the composition is refused " +
+            "both ways)")
+        val schema = snap.schemaJson
+          .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+          .getOrElse(throw new IllegalStateException(
+            s"enableColumnMapping($table): table has no committed schema"))
+        val (annotated, maxId) = ColumnMapping.annotateAsIs(schema, 0L)
+        val actions = Seq(
+          DeltaLog.commitInfoAction("SET COLUMN MAPPING"),
+          DeltaLog.protocolAction(
+            math.max(snap.minReaderVersion, 2),
+            math.max(snap.minWriterVersion, 5),
+            // a table already at the features gate (DV enabled) must keep
+            // LISTING its features — and gain the mapping one
+            if (snap.minReaderVersion >= 3)
+              (snap.readerFeatures + "columnMapping").toSeq else Nil,
+            if (snap.minWriterVersion >= 7)
+              (snap.writerFeatures + "columnMapping").toSeq else Nil),
+          DeltaLog.metaDataAction(annotated.json, snap.partitionColumns,
+            DeltaLog.tableId(table),
+            snap.configuration +
+              (ColumnMapping.ModeKey -> "name") +
+              (ColumnMapping.MaxIdKey -> maxId.toString)))
+        Commit(actions)
+      }
     }
-    throw new IllegalStateException(
-      s"enableColumnMapping($table): lost the commit race $maxAttempts times")
   }
 
   private[graft] def dvEnabled(snap: DeltaLog.Snapshot): Boolean =
     snap.configuration.get(DeletionVectors.PropKey).contains("true")
 
-  /** Every mutating commit funnels here: the writer-side protocol gate
-    * ([[DeltaLog.assertWritable]]) runs against the snapshot the
-    * commit was derived from, then the optimistic commit is attempted.
-    * The gate sits INSIDE each retry loop by construction (callers
-    * re-snapshot per attempt), so a protocol upgrade or
-    * `delta.appendOnly` flip racing this writer is honored on the
-    * retry, not silently overwritten. */
-  private def gatedCommit(table: String, snap: DeltaLog.Snapshot,
-      actions: Seq[String]): Long = {
-    DeltaLog.assertWritable(table, snap, actions)
-    // passing the scanned snapshot lets commit derive the N.crc
-    // checksum incrementally (pre-state + actions) instead of
-    // re-replaying the log — O(actions) per commit
-    DeltaLog.commit(table, snap.version, actions, Some(snap))
+  /** What one [[transact]] attempt decided against its snapshot. */
+  private[graft] sealed trait Txn
+  /** Commit `actions` as the snapshot's next version. `staged` are the
+    * table-relative files this attempt wrote (data files,
+    * `_change_data/` sidecars, deletion-vector sidecars): no version
+    * references them unless this commit lands. */
+  private[graft] final case class Commit(actions: Seq[String],
+      staged: Seq[String] = Nil) extends Txn
+  /** Nothing to commit: the op resolves to `version` as it stands. */
+  private[graft] final case class Done(version: Long) extends Txn
+
+  /** The optimistic transaction every mutating commit runs through.
+    *
+    * Each attempt takes a fresh snapshot (with `create`, a table with
+    * no log yet reads as an empty version −1 snapshot), hands it to
+    * `attempt`, and commits the returned actions as the snapshot's
+    * next version. The writer-side protocol gate
+    * ([[DeltaLog.assertWritable]]) runs against the same snapshot, so
+    * a protocol upgrade or `delta.appendOnly` flip that wins the race
+    * is honored on the retry, not silently overwritten. The commit is
+    * pinned to the snapshot the actions were derived from: a DML or
+    * compaction never clobbers data it did not read, because a racing
+    * commit fails the pin and the whole attempt re-runs.
+    *
+    * Cleanup: when an attempt's commit does not land, its `staged`
+    * files are deleted — on every lost race, the last included.
+    * `prestaged` are files written once before the transaction
+    * (`write` stages before it retries): they are deleted unless a
+    * commit lands.
+    *
+    * Policy: only a lost race ([[DeltaLog.CommitConflictException]])
+    * retries, up to 16 attempts with a 5 ms × attempt sleep between
+    * them; then one IllegalStateException naming the op and the table.
+    * Anything else `attempt` or the gate throws surfaces on the attempt
+    * that raised it. */
+  private[graft] def transact(table: String, op: String,
+      create: Boolean = false, prestaged: Seq[String] = Nil)(
+      attempt: DeltaLog.Snapshot => Txn): Long = {
+    val maxAttempts = 16
+    def drop(files: Seq[String]): Unit =
+      files.foreach(p => Files.deleteIfExists(Paths.get(table).resolve(p)))
+    var landed = false
+    @annotation.tailrec
+    def run(n: Int): Long = {
+      val snap =
+        if (create && DeltaLog.versions(table).isEmpty)
+          DeltaLog.Snapshot(-1L, None, Nil)
+        else DeltaLog.snapshot(table)
+      attempt(snap) match {
+        case Done(v) => v
+        case Commit(actions, staged) =>
+          val won =
+            try {
+              DeltaLog.assertWritable(table, snap, actions)
+              // passing the scanned snapshot lets commit derive the
+              // N.crc checksum incrementally (pre-state + actions)
+              // instead of re-replaying the log — O(actions) per commit
+              Some(timed(s"log-commit $table") {
+                DeltaLog.commit(table, snap.version, actions, Some(snap)) })
+            } catch {
+              case _: DeltaLog.CommitConflictException => drop(staged); None
+              case e: Throwable => drop(staged); throw e
+            }
+          won match {
+            case Some(v) =>
+              landed = true
+              v
+            case None if n < maxAttempts =>
+              Thread.sleep(5L * n)
+              run(n + 1)
+            case None => throw new IllegalStateException(
+              s"$op($table): lost the commit race $maxAttempts times")
+          }
+      }
+    }
+    try run(1) finally if (!landed) drop(prestaged)
   }
+
+  /** The `(appId, version)` idempotence check of [[write]] and
+    * [[merge]]: whether `snap` already records that version (or a
+    * later one) for the app. Both run it on every attempt, so two
+    * racing replays of the same batch commit exactly once. */
+  private def txnLanded(snap: DeltaLog.Snapshot,
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (appId, v) => snap.txns.get(appId).exists(_ >= v) }
 
   /** Legacy writer capabilities ACTIVE on this snapshot — the set a
     * legacy→table-features protocol upgrade must carry into
@@ -726,29 +746,26 @@ object DeltaTable {
     * resurrecting deleted rows. One-way, like the mapping upgrade.
     * Idempotent. */
   def enableDeletionVectors(table: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
-      if (dvEnabled(snap)) return snap.version
-      val feats = Set("deletionVectors") ++
-        (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty)
-      val wfeats = feats ++ activeLegacyWriterFeatures(snap)
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET DELETION VECTORS"),
-        DeltaLog.protocolAction(
-          math.max(snap.minReaderVersion, 3),
-          math.max(snap.minWriterVersion, 7),
-          (snap.readerFeatures ++ feats).toSeq,
-          (snap.writerFeatures ++ wfeats).toSeq),
-        DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-            new StructType().json), snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration + (DeletionVectors.PropKey -> "true")))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+    transact(table, "enableDeletionVectors") { snap =>
+      if (dvEnabled(snap)) Done(snap.version)
+      else {
+        val feats = Set("deletionVectors") ++
+          (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty)
+        val wfeats = feats ++ activeLegacyWriterFeatures(snap)
+        val actions = Seq(
+          DeltaLog.commitInfoAction("SET DELETION VECTORS"),
+          DeltaLog.protocolAction(
+            math.max(snap.minReaderVersion, 3),
+            math.max(snap.minWriterVersion, 7),
+            (snap.readerFeatures ++ feats).toSeq,
+            (snap.writerFeatures ++ wfeats).toSeq),
+          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
+              new StructType().json), snap.partitionColumns,
+            DeltaLog.tableId(table),
+            snap.configuration + (DeletionVectors.PropKey -> "true")))
+        Commit(actions)
+      }
     }
-    throw new IllegalStateException(
-      s"enableDeletionVectors($table): lost the commit race $maxAttempts times")
   }
 
   /** Opt the table into V2 CHECKPOINTS (the protocol's `v2Checkpoint`
@@ -763,32 +780,29 @@ object DeltaTable {
     * reader that cannot follow sidecar references must refuse the
     * table rather than replay half a snapshot. */
   def enableV2Checkpoints(table: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "enableV2Checkpoints") { snap =>
       if (snap.configuration.get("delta.checkpointPolicy").contains("v2"))
-        return snap.version
-      val feats = Set("v2Checkpoint") ++
-        (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty) ++
-        (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty)
-      val wfeats = feats ++ snap.writerFeatures ++
-        activeLegacyWriterFeatures(snap)
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET CHECKPOINT POLICY"),
-        DeltaLog.protocolAction(
-          math.max(snap.minReaderVersion, 3),
-          math.max(snap.minWriterVersion, 7),
-          (snap.readerFeatures ++ feats).toSeq,
-          wfeats.toSeq),
-        DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-            new StructType().json), snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration + ("delta.checkpointPolicy" -> "v2")))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+        Done(snap.version)
+      else {
+        val feats = Set("v2Checkpoint") ++
+          (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty) ++
+          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty)
+        val wfeats = feats ++ snap.writerFeatures ++
+          activeLegacyWriterFeatures(snap)
+        val actions = Seq(
+          DeltaLog.commitInfoAction("SET CHECKPOINT POLICY"),
+          DeltaLog.protocolAction(
+            math.max(snap.minReaderVersion, 3),
+            math.max(snap.minWriterVersion, 7),
+            (snap.readerFeatures ++ feats).toSeq,
+            wfeats.toSeq),
+          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
+              new StructType().json), snap.partitionColumns,
+            DeltaLog.tableId(table),
+            snap.configuration + ("delta.checkpointPolicy" -> "v2")))
+        Commit(actions)
+      }
     }
-    throw new IllegalStateException(
-      s"enableV2Checkpoints($table): lost the commit race $maxAttempts times")
   }
 
   /** Opt the table into IN-COMMIT TIMESTAMPS (the protocol's
@@ -801,36 +815,32 @@ object DeltaTable {
     * spec's enablement provenance (version + wall time) so consumers
     * know which historical versions predate the guarantee. */
   def enableInCommitTimestamps(table: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "enableInCommitTimestamps") { snap =>
       if (snap.configuration.get("delta.enableInCommitTimestamps")
-          .contains("true")) return snap.version
-      val wfeats = Set("inCommitTimestamp") ++ snap.writerFeatures ++
-        activeLegacyWriterFeatures(snap) ++
-        (if (ColumnMapping.enabled(snap)) Set("columnMapping")
-         else Set.empty[String]) ++
-        (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET IN-COMMIT TIMESTAMPS"),
-        DeltaLog.protocolAction(snap.minReaderVersion,
-          math.max(snap.minWriterVersion, 7),
-          snap.readerFeatures.toSeq, wfeats.toSeq),
-        DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-            new StructType().json), snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration ++ Map(
-            "delta.enableInCommitTimestamps" -> "true",
-            "delta.inCommitTimestampEnablementVersion" ->
-              (snap.version + 1).toString,
-            "delta.inCommitTimestampEnablementTimestamp" ->
-              System.currentTimeMillis().toString)))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+          .contains("true")) Done(snap.version)
+      else {
+        val wfeats = Set("inCommitTimestamp") ++ snap.writerFeatures ++
+          activeLegacyWriterFeatures(snap) ++
+          (if (ColumnMapping.enabled(snap)) Set("columnMapping")
+           else Set.empty[String]) ++
+          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
+        val actions = Seq(
+          DeltaLog.commitInfoAction("SET IN-COMMIT TIMESTAMPS"),
+          DeltaLog.protocolAction(snap.minReaderVersion,
+            math.max(snap.minWriterVersion, 7),
+            snap.readerFeatures.toSeq, wfeats.toSeq),
+          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
+              new StructType().json), snap.partitionColumns,
+            DeltaLog.tableId(table),
+            snap.configuration ++ Map(
+              "delta.enableInCommitTimestamps" -> "true",
+              "delta.inCommitTimestampEnablementVersion" ->
+                (snap.version + 1).toString,
+              "delta.inCommitTimestampEnablementTimestamp" ->
+                System.currentTimeMillis().toString)))
+        Commit(actions)
+      }
     }
-    throw new IllegalStateException(
-      s"enableInCommitTimestamps($table): lost the commit race " +
-        s"$maxAttempts times")
   }
 
   /** Opt the table into ROW TRACKING (see [[RowTracking]]): one commit
@@ -843,45 +853,42 @@ object DeltaTable {
     * mapping composition is not implemented — refused loudly (the
     * materialized-column plumbing would need physical-name awareness). */
   def enableRowTracking(table: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
-      if (RowTracking.enabled(snap)) return snap.version
-      require(!ColumnMapping.enabled(snap),
-        s"enableRowTracking($table): not supported on column-mapped " +
-          "tables (materialized row-id columns are physically named)")
-      var next = RowTracking.highWaterMark(snap) + 1
-      val backfilled = snap.files.map { f =>
-        val n = f.stats.get("n").flatMap(_.toLongOption).getOrElse(
-          throw new IllegalStateException(
-            s"enableRowTracking($table): live file ${f.path} lacks a " +
-              "row-count stat; cannot size its id range (foreign " +
-              "writer?) — OPTIMIZE the table first"))
-        val withId = f.copy(baseRowId = Some(next),
-          defaultRowCommitVersion = Some(snap.version + 1))
-        next += n
-        withId
+    transact(table, "enableRowTracking") { snap =>
+      if (RowTracking.enabled(snap)) Done(snap.version)
+      else {
+        require(!ColumnMapping.enabled(snap),
+          s"enableRowTracking($table): not supported on column-mapped " +
+            "tables (materialized row-id columns are physically named)")
+        var next = RowTracking.highWaterMark(snap) + 1
+        val backfilled = snap.files.map { f =>
+          val n = f.stats.get("n").flatMap(_.toLongOption).getOrElse(
+            throw new IllegalStateException(
+              s"enableRowTracking($table): live file ${f.path} lacks a " +
+                "row-count stat; cannot size its id range (foreign " +
+                "writer?) — OPTIMIZE the table first"))
+          val withId = f.copy(baseRowId = Some(next),
+            defaultRowCommitVersion = Some(snap.version + 1))
+          next += n
+          withId
+        }
+        val wfeats = snap.writerFeatures ++
+          activeLegacyWriterFeatures(snap) ++
+          Set("rowTracking", "domainMetadata") ++
+          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
+        val actions = Seq(
+          DeltaLog.commitInfoAction("SET ROW TRACKING"),
+          DeltaLog.protocolAction(snap.minReaderVersion,
+            math.max(snap.minWriterVersion, 7),
+            snap.readerFeatures.toSeq, wfeats.toSeq),
+          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
+              new StructType().json), snap.partitionColumns,
+            DeltaLog.tableId(table),
+            snap.configuration + (RowTracking.PropKey -> "true")),
+          RowTracking.domainAction(next - 1)) ++
+          backfilled.map(DeltaLog.addActionOf(_, dataChange = false))
+        Commit(actions)
       }
-      val wfeats = snap.writerFeatures ++
-        activeLegacyWriterFeatures(snap) ++
-        Set("rowTracking", "domainMetadata") ++
-        (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET ROW TRACKING"),
-        DeltaLog.protocolAction(snap.minReaderVersion,
-          math.max(snap.minWriterVersion, 7),
-          snap.readerFeatures.toSeq, wfeats.toSeq),
-        DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-            new StructType().json), snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration + (RowTracking.PropKey -> "true")),
-        RowTracking.domainAction(next - 1)) ++
-        backfilled.map(DeltaLog.addActionOf(_, dataChange = false))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
     }
-    throw new IllegalStateException(
-      s"enableRowTracking($table): lost the commit race $maxAttempts times")
   }
 
   /** Guard shared by rename/drop: mapping on, column exists, column is
@@ -925,9 +932,7 @@ object DeltaTable {
     * stay put. Old versions time-travel to the old name (each version's
     * metaData carries its own mapping). */
   def renameColumn(table: String, oldName: String, newName: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "renameColumn") { snap =>
       val schema = requireEvolvable(snap, table, oldName, "renameColumn")
       require(!schema.fieldNames.contains(newName),
         s"renameColumn($table): $newName already exists")
@@ -939,11 +944,8 @@ object DeltaTable {
         DeltaLog.commitInfoAction("RENAME COLUMN"),
         DeltaLog.metaDataAction(renamed.json, snap.partitionColumns,
           DeltaLog.tableId(table), snap.configuration))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"renameColumn($table, $oldName): lost the commit race $maxAttempts times")
   }
 
   /** ALTER TABLE DROP COLUMN — metadata-only under column mapping: the
@@ -953,9 +955,7 @@ object DeltaTable {
     * bytes can never resurrect — the new column reads null over old
     * files like any additive column. */
   def dropColumn(table: String, name: String): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "dropColumn") { snap =>
       val schema = requireEvolvable(snap, table, name, "dropColumn")
       require(schema.fields.length > 1,
         s"dropColumn($table, $name): cannot drop the last column")
@@ -964,11 +964,8 @@ object DeltaTable {
         DeltaLog.commitInfoAction("DROP COLUMN"),
         DeltaLog.metaDataAction(remaining.json, snap.partitionColumns,
           DeltaLog.tableId(table), snap.configuration))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"dropColumn($table, $name): lost the commit race $maxAttempts times")
   }
 
   /** The public Delta `typeWidening` matrix: type changes every
@@ -1025,9 +1022,7 @@ object DeltaTable {
     * and per the spec the change history is recorded in the field's
     * `delta.typeChanges` metadata. Sets `delta.enableTypeWidening`. */
   def alterColumnType(table: String, name: String, to: DataType): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "alterColumnType") { snap =>
       val schema = snap.schemaJson
         .map(j => DataType.fromJson(j).asInstanceOf[StructType])
         .getOrElse(throw new IllegalStateException(
@@ -1092,11 +1087,8 @@ object DeltaTable {
         DeltaLog.metaDataAction(widened.json, snap.partitionColumns,
           DeltaLog.tableId(table),
           snap.configuration + ("delta.enableTypeWidening" -> "true")))
-      try return gatedCommit(table, snap, actions)
-      catch { case _: IllegalStateException => Thread.sleep(5L) }
+      Commit(actions)
     }
-    throw new IllegalStateException(
-      s"alterColumnType($table, $name): lost the commit race $maxAttempts times")
   }
 
   /** Enforce the table's CHECK constraints against freshly staged
@@ -1652,14 +1644,10 @@ object DeltaTable {
     * half-compacted table — the commit is the same createLink point
     * every write uses. No-op when already compact.
     *
-    * Concurrency: the commit is PINNED to the snapshot that was
-    * compacted — unlike a user overwrite, compaction must not clobber
-    * data it didn't read, so a concurrent append (which would make the
-    * remove-set stale) fails the pinned commit and the WHOLE
-    * compaction re-runs against the new snapshot. (Routing through
-    * write(…, "overwrite") would retry by removing the newest files
-    * while writing only the old rows — silently dropping the race's
-    * appends.) */
+    * Concurrency: see [[transact]] — the commit is pinned to the
+    * compacted snapshot. (Routing through write(…, "overwrite") would
+    * retry by removing the newest files while writing only the old
+    * rows — silently dropping the race's appends.) */
   /** OPTIMIZE WHERE (stock Delta's partition-scoped compaction): only
     * partitions whose VALUES satisfy `where` rewrite — at 100 TB the
     * operational shape is "compact yesterday's partition after the
@@ -1679,9 +1667,7 @@ object DeltaTable {
     require(where.nonEmpty,
       "compactWhere needs at least one partition predicate; " +
         "use compact() for the whole table")
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "compactWhere") { snap =>
       require(snap.partitionColumns.nonEmpty,
         s"compactWhere($table): table is not partitioned")
       val refs = where.flatMap(_.references).distinct
@@ -1724,40 +1710,33 @@ object DeltaTable {
       val work = selected.groupBy(_.partitionValues).filter {
         case (_, fs) => fs.length > 1 || fs.exists(_.dv.isDefined)
       }.values.flatten.toSeq.sortBy(_.path)
-      if (work.isEmpty) return snap.version
-      val rows = (if (!RowTracking.enabled(snap))
-          readTableFiles(spark, table, snap,
-            work.map(f => Paths.get(table).resolve(f.path).toString))
-        else rowIdFrame(spark, table, snap, work)
-          .withColumnRenamed("_row_id", RowTracking.IdCol)
-          .withColumnRenamed("_row_commit_version", RowTracking.VerCol))
-        .repartition(snap.partitionColumns.map(col): _*)
-      val added = stageIn(rows, table, snap.partitionColumns,
-        mappingOf(snap))
-      val actions =
-        Seq(DeltaLog.commitInfoAction("COMPACT WHERE")) ++
-          snap.schemaJson.map(DeltaLog.metaDataAction(_,
-            snap.partitionColumns, DeltaLog.tableId(table),
-            snap.configuration)) ++
-          work.map(f => DeltaLog.removeAction(f.path, dataChange = false)) ++
-          added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
-            f.partitionValues, dataChange = false))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException =>
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
+      if (work.isEmpty) Done(snap.version)
+      else {
+        val rows = (if (!RowTracking.enabled(snap))
+            readTableFiles(spark, table, snap,
+              work.map(f => Paths.get(table).resolve(f.path).toString))
+          else rowIdFrame(spark, table, snap, work)
+            .withColumnRenamed("_row_id", RowTracking.IdCol)
+            .withColumnRenamed("_row_commit_version", RowTracking.VerCol))
+          .repartition(snap.partitionColumns.map(col): _*)
+        val added = stageIn(rows, table, snap.partitionColumns,
+          mappingOf(snap))
+        val actions =
+          Seq(DeltaLog.commitInfoAction("COMPACT WHERE")) ++
+            snap.schemaJson.map(DeltaLog.metaDataAction(_,
+              snap.partitionColumns, DeltaLog.tableId(table),
+              snap.configuration)) ++
+            work.map(f => DeltaLog.removeAction(f.path, dataChange = false)) ++
+            added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
+              f.partitionValues, dataChange = false))
+        Commit(actions, added.map(_.path))
       }
     }
-    throw new IllegalStateException(
-      s"compactWhere($table): lost the commit race $maxAttempts times")
   }
 
   def compact(spark: SparkSession, table: String,
       maxFileBytes: Long = 128L << 20): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "compact") { snap =>
       val total = snap.files.map(_.size).sum
       val nOut = math.max(1, math.ceil(total.toDouble / maxFileBytes).toInt)
       // no-op floor: a partitioned table can never have fewer files
@@ -1770,49 +1749,42 @@ object DeltaTable {
       // operation's job even when the file count is already optimal
       if (snap.files.forall(_.dv.isEmpty) &&
           snap.files.length <= math.max(nOut, nPartitions))
-        return snap.version
-      // Partitioned tables compact WITHIN the committed layout: shuffle
-      // rows back together by partition key (co-locating each value's
-      // rows in one task ⇒ one output file per live partition value)
-      // and re-stage with the same partitionBy. An unpartitioned
-      // coalesce here would silently flatten the layout and break
-      // pruning for every later read.
-      // ROW TRACKING: a compacted file carries the survivors' ORIGINAL
-      // ids in the materialized columns, so OPTIMIZE preserves row
-      // identity (the feature's core promise — layout maintenance must
-      // not invalidate id-keyed consumers)
-      val snapDf =
-        if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
-        else rowIdFrame(spark, table, snap, snap.files)
-          .withColumnRenamed("_row_id", RowTracking.IdCol)
-          .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
-      val compacted =
-        if (snap.partitionColumns.isEmpty) snapDf.coalesce(nOut)
-        else snapDf.repartition(snap.partitionColumns.map(
-          org.apache.spark.sql.functions.col): _*)
-      val added = stageIn(compacted, table, snap.partitionColumns,
-        mappingOf(snap))
-      val actions =
-        Seq(DeltaLog.commitInfoAction("COMPACT")) ++
-          snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-            DeltaLog.tableId(table), snap.configuration)) ++
-          // dataChange=false: same rows, new layout — streams and the
-          // change feed skip this version by the protocol bit
-          snap.files.map(f =>
-            DeltaLog.removeAction(f.path, dataChange = false)) ++
-          added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
-            f.partitionValues, dataChange = false))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException =>
-          // someone committed past our snapshot; compacted files are
-          // orphans (no log references them) — drop and re-run whole
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
+        Done(snap.version)
+      else {
+        // Partitioned tables compact WITHIN the committed layout: shuffle
+        // rows back together by partition key (co-locating each value's
+        // rows in one task ⇒ one output file per live partition value)
+        // and re-stage with the same partitionBy. An unpartitioned
+        // coalesce here would silently flatten the layout and break
+        // pruning for every later read.
+        // ROW TRACKING: a compacted file carries the survivors' ORIGINAL
+        // ids in the materialized columns, so OPTIMIZE preserves row
+        // identity (the feature's core promise — layout maintenance must
+        // not invalidate id-keyed consumers)
+        val snapDf =
+          if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
+          else rowIdFrame(spark, table, snap, snap.files)
+            .withColumnRenamed("_row_id", RowTracking.IdCol)
+            .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
+        val compacted =
+          if (snap.partitionColumns.isEmpty) snapDf.coalesce(nOut)
+          else snapDf.repartition(snap.partitionColumns.map(
+            org.apache.spark.sql.functions.col): _*)
+        val added = stageIn(compacted, table, snap.partitionColumns,
+          mappingOf(snap))
+        val actions =
+          Seq(DeltaLog.commitInfoAction("COMPACT")) ++
+            snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
+              DeltaLog.tableId(table), snap.configuration)) ++
+            // dataChange=false: same rows, new layout — streams and the
+            // change feed skip this version by the protocol bit
+            snap.files.map(f =>
+              DeltaLog.removeAction(f.path, dataChange = false)) ++
+            added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
+              f.partitionValues, dataChange = false))
+        Commit(actions, added.map(_.path))
       }
     }
-    throw new IllegalStateException(
-      s"compact($table): lost the commit race $maxAttempts times")
   }
 
   /** OPTIMIZE ZORDER BY — rewrite the table clustered along a k-D
@@ -1836,9 +1808,8 @@ object DeltaTable {
     * Z-value, and the table rewrites through
     * `repartitionByRange(targetFiles, z)` + `sortWithinPartitions(z)`
     * — a range shuffle whose boundaries Spark samples, so no global
-    * sort bottleneck. The swap commits atomically like compact
-    * (remove-all + add-all, pinned to the scanned snapshot, orphan
-    * cleanup on a lost race). Content is byte-identical, only layout
+    * sort bottleneck. The swap commits remove-all + add-all through
+    * [[transact]], like compact. Content is byte-identical, only layout
     * changes — the q85 oracle proves it; DeltaSpec proves the
     * SKIPPING: after zorder, a filter on either dimension scans a
     * fraction of the files. Unpartitioned tables only (stock delta
@@ -1855,9 +1826,7 @@ object DeltaTable {
     // down so k dimensions always fit one signed long
     val bits = math.min(16, 60 / k)
     val maxBucket = (1L << bits) - 1
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "zorder") { snap =>
       require(snap.partitionColumns.isEmpty,
         s"zorder($table): partitioned tables cluster within partitions " +
           "by the partition key already; zorder supports unpartitioned")
@@ -1904,15 +1873,8 @@ object DeltaTable {
             DeltaLog.removeAction(f.path, dataChange = false)) ++
           added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
             f.partitionValues, dataChange = false))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException =>
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-      }
+      Commit(actions, added.map(_.path))
     }
-    throw new IllegalStateException(
-      s"zorder($table): lost the commit race $maxAttempts times")
   }
 
   /** Table-relative path of an executor-reported `input_file_name()`
@@ -1935,25 +1897,20 @@ object DeltaTable {
     * files that CONTAIN matching rows (everything else is untouched —
     * a predicate that prunes to one partition rewrites one
     * partition's files), those files' surviving rows are re-staged,
-    * and the swap commits atomically as remove(touched)+add(rewrites).
-    * The commit is PINNED to the snapshot that was scanned (same
-    * argument as [[compact]]): a concurrent append must not be
-    * clobbered, so a conflict re-runs the whole delete against the
-    * new snapshot. Returns the new version (or the current one if
+    * and the swap commits remove(touched)+add(rewrites) through
+    * [[transact]]. Returns the new version (or the current one if
     * nothing matched). */
   def delete(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Long = {
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "delete") { snap =>
       val df = read(spark, table, Some(snap.version))
       val touched = df.filter(condition)
         .select(input_file_name().as("f")).distinct()
         .collect().map(r => relativize(table, r.getString(0))).toSet
-      if (touched.isEmpty) return snap.version
       val touchedPaths = touched.toSeq.sorted
         .map(f => Paths.get(table).resolve(f).toString)
-      if (dvEnabled(snap)) {
+      if (touched.isEmpty) Done(snap.version)
+      else if (dvEnabled(snap)) {
         // DELETION-VECTOR path: mark dead rows in sidecar bitmaps
         // instead of rewriting files. A point-delete in a 128 MB file
         // moves ZERO data bytes — the whole reason DVs exist at 100 TB.
@@ -1988,14 +1945,8 @@ object DeltaTable {
                 snap, rewriteAdds, snap.version + 1)
               da ++ fr.map(DeltaLog.addActionOf(_)) } ++
             cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        try return gatedCommit(table, snap, actions)
-        catch {
-          case _: IllegalStateException =>
-            (rewriteAdds ++ cdc).foreach(f =>
-              Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-            dvDescs.foreach { case (_, d) =>
-              Files.deleteIfExists(Paths.get(table).resolve(d.path)) }
-        }
+        Commit(actions,
+          (rewriteAdds ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
       } else {
         // row-tracked survivors carry their ORIGINAL ids into the
         // rewritten files — a delete must never renumber untouched rows
@@ -2019,33 +1970,24 @@ object DeltaTable {
                 snap, added, snap.version + 1)
               da ++ fr.map(DeltaLog.addActionOf(_)) } ++
             cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        try return gatedCommit(table, snap, actions)
-        catch {
-          case _: IllegalStateException =>
-            (added ++ cdc).foreach(f =>
-              Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-        }
+        Commit(actions, (added ++ cdc).map(_.path))
       }
     }
-    throw new IllegalStateException(
-      s"delete($table): lost the commit race $maxAttempts times")
   }
 
   /** UPDATE rows matching `condition`, setting each column in `set` to
     * its new expression ([EXT] Delta DML). Same touched-file-rewrite
     * machinery as [[delete]]: only files containing matches re-stage —
     * their rows pass through `CASE WHEN condition THEN expr ELSE col`
-    * projections — and the swap commits atomically pinned to the
-    * scanned snapshot. Updating a partition column is rejected (it
+    * projections — and the swap commits through [[transact]].
+    * Updating a partition column is rejected (it
     * would silently move rows across the layout; real Delta requires a
     * delete+insert for that too). */
   def update(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column]): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
+    transact(table, "update") { snap =>
       require(!set.keys.exists(snap.partitionColumns.contains),
         s"update cannot set partition columns (${snap.partitionColumns
           .mkString(",")}); delete+append to move rows across the layout")
@@ -2071,7 +2013,6 @@ object DeltaTable {
       val touched = df.filter(condition)
         .select(input_file_name().as("f")).distinct()
         .collect().map(r => relativize(table, r.getString(0))).toSet
-      if (touched.isEmpty) return snap.version
       val touchedPaths = touched.toSeq.sorted
         .map(f => Paths.get(table).resolve(f).toString)
       def applySet(d: DataFrame, always: Boolean): DataFrame = {
@@ -2108,7 +2049,8 @@ object DeltaTable {
         if (always || genRecompute.isEmpty) recomputed
         else recomputed.select(inCols.map(col).toIndexedSeq: _*)
       }
-      if (dvEnabled(snap)) {
+      if (touched.isEmpty) Done(snap.version)
+      else if (dvEnabled(snap)) {
         // DELETION-VECTOR update: mark the matched rows dead in place,
         // stage ONLY their post-images as a new file — a 10-row update
         // in a 128 MB file moves 10 rows, not 128 MB (same move stock
@@ -2170,14 +2112,7 @@ object DeltaTable {
                 snap, added, snap.version + 1)
               da ++ fr.map(DeltaLog.addActionOf(_)) } ++
             cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        try return gatedCommit(table, snap, actions)
-        catch {
-          case _: IllegalStateException =>
-            (added ++ cdc).foreach(f =>
-              Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-            dvDescs.foreach { case (_, d) =>
-              Files.deleteIfExists(Paths.get(table).resolve(d.path)) }
-        }
+        Commit(actions, (added ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
       } else {
         // row-tracked: untouched rows of touched files keep their ids
         // (materialized); matched rows renumber (post-image = new row
@@ -2211,16 +2146,9 @@ object DeltaTable {
                 snap, added, snap.version + 1)
               da ++ fr.map(DeltaLog.addActionOf(_)) } ++
             cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        try return gatedCommit(table, snap, actions)
-        catch {
-          case _: IllegalStateException =>
-            (added ++ cdc).foreach(f =>
-              Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-        }
+        Commit(actions, (added ++ cdc).map(_.path))
       }
     }
-    throw new IllegalStateException(
-      s"update($table): lost the commit race $maxAttempts times")
   }
 
   /** MERGE (upsert) `source` into `table` on equality of `keys` ([EXT]
@@ -2231,7 +2159,8 @@ object DeltaTable {
     * re-staged together with ALL source rows; untouched files never
     * move. The source must be key-unique — two source rows for one key
     * is an ambiguous upsert and fails loudly (same rule as Delta's
-    * MERGE). Schema must match the table's (by field set). */
+    * MERGE). Schema must match the table's (by field set). Commits
+    * through [[transact]]. */
   /** `txn` = (appId, version): same idempotence contract as
     * [[write]]'s — the merge is SKIPPED when the log already records
     * that version (or later) for the app, and the SetTransaction
@@ -2242,185 +2171,169 @@ object DeltaTable {
   def merge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    for ((appId, version) <- txn) {
-      val already = DeltaLog.versions(table).nonEmpty &&
-        DeltaLog.snapshot(table).txns.get(appId).exists(_ >= version)
-      if (already) return DeltaLog.snapshot(table).version
-    }
-    val dupKeys = source.groupBy(keys.map(col): _*)
+    // one job, run by the first attempt that does not find the txn
+    // already landed (a replayed batch skips it)
+    lazy val dupKeys = source.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
-    require(dupKeys == 0,
-      s"merge source has duplicate keys on (${keys.mkString(",")}): " +
-        "ambiguous upsert")
-    val maxAttempts = 8
-    for (_ <- 1 to maxAttempts) {
-      val snap = DeltaLog.snapshot(table)
-      val target = read(spark, table, Some(snap.version))
-      // GENERATED COLUMNS: a source that omits them gets them computed
-      // (the natural upsert flow — raw rows in, the table derives);
-      // one that provides them validates like a CHECK over the staged
-      // bytes (genChecksM below)
-      val gensM = snap.schemaJson.map(j => GeneratedColumns.of(
-        DataType.fromJson(j).asInstanceOf[StructType])).getOrElse(Nil)
-      val (sourceG, genChecksM) = GeneratedColumns.applyToWrite(source, gensM)
-      // IDENTITY COLUMNS: the source must omit them (GENERATED ALWAYS).
-      // Matched rows KEEP the target's identity (one broadcast join of
-      // the small source against the target's key+id projection);
-      // inserts get fresh values beyond the mark, which commits
-      // advanced in this merge's own metaData.
-      val idSpecsM = snap.schemaJson.map(j => IdentityColumns.of(
-        DataType.fromJson(j).asInstanceOf[StructType])).getOrElse(Nil)
-      val sourceI =
-        if (idSpecsM.isEmpty) sourceG
-        else {
-          val idCols = idSpecsM.map(_.col)
-          val provided = idCols.filter(sourceG.columns.contains)
-          require(provided.isEmpty,
-            s"merge source provides identity column(s) " +
-              s"${provided.mkString(",")}: GENERATED ALWAYS values are " +
-              "engine-assigned; omit them")
-          val badKeys = idCols.intersect(keys)
-          require(badKeys.isEmpty,
-            s"merge keys ${badKeys.mkString(",")} are identity columns " +
-              "the source cannot carry; merge on a natural key instead")
-          val tgtKeyed = target.select((keys ++ idCols).map(col): _*)
-          val matched = tgtKeyed.join(broadcast(sourceG), keys, "inner")
-          val insertsRaw = sourceG.join(
-            tgtKeyed.select(keys.map(col): _*), keys, "left_anti")
-          val inserted = idSpecsM.foldLeft(insertsRaw) { case (d, sp) =>
-            IdentityColumns.assign(d, sp) }
-          matched.select(target.columns.map(col): _*)
-            .unionByName(inserted.select(target.columns.map(col): _*))
-        }
-      require(target.schema.fieldNames.sorted.sameElements(
-        sourceI.schema.fieldNames.sorted),
-        s"merge source schema ${sourceI.schema.simpleString} does not match " +
-          s"table schema ${target.schema.simpleString}")
-      val srcKeys = sourceI.select(keys.map(col): _*)
-      // bind input_file_name to the target scan BEFORE joining — with
-      // a file-backed source in the same plan the expression is
-      // otherwise ambiguous (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION)
-      val targetKeyFiles = target
-        .select((input_file_name().as("f") +: keys.map(col)): _*)
-      val touched = targetKeyFiles
-        .join(broadcast(srcKeys), keys, "left_semi")
-        .select("f").distinct()
-        .collect().map(r => relativize(table, r.getString(0))).toSet
-      val touchedPaths = touched.toSeq.sorted
-        .map(f => Paths.get(table).resolve(f).toString)
-      // DELETION-VECTOR merge: instead of re-staging every touched
-      // file's unmatched rows, mark the REPLACED target rows dead in
-      // place and stage only the source rows — upsert write
-      // amplification drops from |touched files| to |source|. Files
-      // more than half replaced rewrite (planDvDml's heuristic).
-      val useDv = dvEnabled(snap) && touched.nonEmpty
-      val (dvDescsPlan, rewriteFiles, touchedRows) =
-        if (!useDv) {
-          val tr =
-            if (touched.isEmpty) None
-            else Some(dmlRowsWithIds(spark, table, snap, touched))
-          (Seq.empty[(DeltaLog.AddFile, Array[Int])],
-            Seq.empty[DeltaLog.AddFile], tr)
-        } else {
-          val withPos = readTableFilesWithPos(spark, table, snap, touchedPaths)
-          val matched = withPos.join(broadcast(srcKeys), keys, "left_semi")
-          val (dv, rw) = planDvDml(table, snap, touched, matched)
-          (dv, rw, Some(withPos.drop(PosFile, PosIdx)))
-        }
-      // ROW TRACKING: survivors of a touched file are merely copied —
-      // they carry their ORIGINAL ids into the rewritten files; source
-      // rows (inserts and matched post-images) carry no tracking
-      // columns, so allowMissingColumns nulls them and they draw fresh
-      // ids from the staged baseRowId ranges.
-      val rewritten =
-        if (useDv) {
-          // source rows + survivors of the rewrite-fallback files only
-          val src = sourceI.select(target.columns.map(col): _*)
-          if (rewriteFiles.isEmpty) src
-          else src.unionByName(
-            dmlRowsWithIds(spark, table, snap, rewriteFiles.map(_.path))
-              .join(broadcast(srcKeys), keys, "left_anti"),
-            allowMissingColumns = true)
-        } else touchedRows match {
-          case None => sourceI.select(target.columns.map(col): _*)
-          case Some(tr) =>
-            tr.join(broadcast(srcKeys), keys, "left_anti")
-              .unionByName(sourceI.select(target.columns.map(col): _*),
-                allowMissingColumns = true)
-        }
-      // a racer may have committed OUR txn version since the entry
-      // check (write()'s lesson): skip before staging lands twice
-      val racedTxn = txn.exists { case (appId, v) =>
-        snap.txns.get(appId).exists(_ >= v) }
-      if (racedTxn) return snap.version
-      val dvDescs = dvDescsPlan.map { case (f, ndv) =>
-        (f, DeletionVectors.write(table, ndv)) }
-      val added = stageIn(rewritten, table, snap.partitionColumns,
-        mappingOf(snap))
-      // the mark each identity column LANDED at, from the staged stats
-      // (survivor rows sit at or below the prior mark, so the max over
-      // ALL staged rows is exactly the new mark; monotone vs prior)
-      val idHwmsM: Map[String, Long] = idSpecsM.map { sp =>
-        val landed = landedHwm(spark, table, added, sp, mappingOf(snap))
-        sp.col -> (sp.hwm match {
-          case Some(prev) =>
-            if (sp.step > 0) math.max(landed, prev)
-            else math.min(landed, prev)
-          case None => landed
-        })
-      }.toMap
-      // upserted source rows must honor the table's CHECK contract
-      enforceConstraints(spark, table, added,
-        snap.checkConstraints ++ genChecksM, mappingOf(snap))
-      // CDF: unmatched source rows are inserts; each matched key yields
-      // the replaced target row (preimage) + its source row (postimage)
-      val cdc =
-        if (!cdfEnabled(snap)) Nil
-        else {
-          val src = sourceI.select(target.columns.map(col): _*)
-          val tgtKeys = target.select(keys.map(col): _*)
-          val inserts = src.join(tgtKeys, keys, "left_anti")
-            .withColumn("_change_type", lit("insert"))
-          val matched = touchedRows match {
-            case None => inserts.limit(0)
-            case Some(tr) =>
-              dropIdCols(tr).join(broadcast(srcKeys), keys, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(src.join(tgtKeys, keys, "left_semi")
-                  .withColumn("_change_type", lit("update_postimage")))
+    transact(table, "merge") { snap =>
+      if (txnLanded(snap, txn)) Done(snap.version)
+      else {
+        require(dupKeys == 0,
+          s"merge source has duplicate keys on (${keys.mkString(",")}): " +
+            "ambiguous upsert")
+        val target = read(spark, table, Some(snap.version))
+        // GENERATED COLUMNS: a source that omits them gets them computed
+        // (the natural upsert flow — raw rows in, the table derives);
+        // one that provides them validates like a CHECK over the staged
+        // bytes (genChecksM below)
+        val gensM = snap.schemaJson.map(j => GeneratedColumns.of(
+          DataType.fromJson(j).asInstanceOf[StructType])).getOrElse(Nil)
+        val (sourceG, genChecksM) = GeneratedColumns.applyToWrite(source, gensM)
+        // IDENTITY COLUMNS: the source must omit them (GENERATED ALWAYS).
+        // Matched rows KEEP the target's identity (one broadcast join of
+        // the small source against the target's key+id projection);
+        // inserts get fresh values beyond the mark, which commits
+        // advanced in this merge's own metaData.
+        val idSpecsM = snap.schemaJson.map(j => IdentityColumns.of(
+          DataType.fromJson(j).asInstanceOf[StructType])).getOrElse(Nil)
+        val sourceI =
+          if (idSpecsM.isEmpty) sourceG
+          else {
+            val idCols = idSpecsM.map(_.col)
+            val provided = idCols.filter(sourceG.columns.contains)
+            require(provided.isEmpty,
+              s"merge source provides identity column(s) " +
+                s"${provided.mkString(",")}: GENERATED ALWAYS values are " +
+                "engine-assigned; omit them")
+            val badKeys = idCols.intersect(keys)
+            require(badKeys.isEmpty,
+              s"merge keys ${badKeys.mkString(",")} are identity columns " +
+                "the source cannot carry; merge on a natural key instead")
+            val tgtKeyed = target.select((keys ++ idCols).map(col): _*)
+            val matched = tgtKeyed.join(broadcast(sourceG), keys, "inner")
+            val insertsRaw = sourceG.join(
+              tgtKeyed.select(keys.map(col): _*), keys, "left_anti")
+            val inserted = idSpecsM.foldLeft(insertsRaw) { case (d, sp) =>
+              IdentityColumns.assign(d, sp) }
+            matched.select(target.columns.map(col): _*)
+              .unionByName(inserted.select(target.columns.map(col): _*))
           }
-          stageCdc(inserts.unionByName(matched), table, mappingOf(snap))
+        require(target.schema.fieldNames.sorted.sameElements(
+          sourceI.schema.fieldNames.sorted),
+          s"merge source schema ${sourceI.schema.simpleString} does not match " +
+            s"table schema ${target.schema.simpleString}")
+        val srcKeys = sourceI.select(keys.map(col): _*)
+        // bind input_file_name to the target scan BEFORE joining — with
+        // a file-backed source in the same plan the expression is
+        // otherwise ambiguous (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION)
+        val targetKeyFiles = target
+          .select((input_file_name().as("f") +: keys.map(col)): _*)
+        val touched = targetKeyFiles
+          .join(broadcast(srcKeys), keys, "left_semi")
+          .select("f").distinct()
+          .collect().map(r => relativize(table, r.getString(0))).toSet
+        val touchedPaths = touched.toSeq.sorted
+          .map(f => Paths.get(table).resolve(f).toString)
+        // DELETION-VECTOR merge: instead of re-staging every touched
+        // file's unmatched rows, mark the REPLACED target rows dead in
+        // place and stage only the source rows — upsert write
+        // amplification drops from |touched files| to |source|. Files
+        // more than half replaced rewrite (planDvDml's heuristic).
+        val useDv = dvEnabled(snap) && touched.nonEmpty
+        val (dvDescsPlan, rewriteFiles, touchedRows) =
+          if (!useDv) {
+            val tr =
+              if (touched.isEmpty) None
+              else Some(dmlRowsWithIds(spark, table, snap, touched))
+            (Seq.empty[(DeltaLog.AddFile, Array[Int])],
+              Seq.empty[DeltaLog.AddFile], tr)
+          } else {
+            val withPos = readTableFilesWithPos(spark, table, snap, touchedPaths)
+            val matched = withPos.join(broadcast(srcKeys), keys, "left_semi")
+            val (dv, rw) = planDvDml(table, snap, touched, matched)
+            (dv, rw, Some(withPos.drop(PosFile, PosIdx)))
+          }
+        // ROW TRACKING: survivors of a touched file are merely copied —
+        // they carry their ORIGINAL ids into the rewritten files; source
+        // rows (inserts and matched post-images) carry no tracking
+        // columns, so allowMissingColumns nulls them and they draw fresh
+        // ids from the staged baseRowId ranges.
+        val rewritten =
+          if (useDv) {
+            // source rows + survivors of the rewrite-fallback files only
+            val src = sourceI.select(target.columns.map(col): _*)
+            if (rewriteFiles.isEmpty) src
+            else src.unionByName(
+              dmlRowsWithIds(spark, table, snap, rewriteFiles.map(_.path))
+                .join(broadcast(srcKeys), keys, "left_anti"),
+              allowMissingColumns = true)
+          } else touchedRows match {
+            case None => sourceI.select(target.columns.map(col): _*)
+            case Some(tr) =>
+              tr.join(broadcast(srcKeys), keys, "left_anti")
+                .unionByName(sourceI.select(target.columns.map(col): _*),
+                  allowMissingColumns = true)
+          }
+        val dvDescs = dvDescsPlan.map { case (f, ndv) =>
+          (f, DeletionVectors.write(table, ndv)) }
+        val added = stageIn(rewritten, table, snap.partitionColumns,
+          mappingOf(snap))
+        // the mark each identity column LANDED at, from the staged stats
+        // (survivor rows sit at or below the prior mark, so the max over
+        // ALL staged rows is exactly the new mark; monotone vs prior)
+        val idHwmsM: Map[String, Long] = idSpecsM.map { sp =>
+          val landed = landedHwm(spark, table, added, sp, mappingOf(snap))
+          sp.col -> (sp.hwm match {
+            case Some(prev) =>
+              if (sp.step > 0) math.max(landed, prev)
+              else math.min(landed, prev)
+            case None => landed
+          })
+        }.toMap
+        // upserted source rows must honor the table's CHECK contract
+        enforceConstraints(spark, table, added,
+          snap.checkConstraints ++ genChecksM, mappingOf(snap))
+        // CDF: unmatched source rows are inserts; each matched key yields
+        // the replaced target row (preimage) + its source row (postimage)
+        val cdc =
+          if (!cdfEnabled(snap)) Nil
+          else {
+            val src = sourceI.select(target.columns.map(col): _*)
+            val tgtKeys = target.select(keys.map(col): _*)
+            val inserts = src.join(tgtKeys, keys, "left_anti")
+              .withColumn("_change_type", lit("insert"))
+            val matched = touchedRows match {
+              case None => inserts.limit(0)
+              case Some(tr) =>
+                dropIdCols(tr).join(broadcast(srcKeys), keys, "left_semi")
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(src.join(tgtKeys, keys, "left_semi")
+                    .withColumn("_change_type", lit("update_postimage")))
+            }
+            stageCdc(inserts.unionByName(matched), table, mappingOf(snap))
+          }
+        val mergeSchemaJson = snap.schemaJson.map { j =>
+          if (idHwmsM.isEmpty) j
+          else IdentityColumns.annotate(
+            DataType.fromJson(j).asInstanceOf[StructType],
+            idSpecsM.map(sp => sp.copy(hwm =
+              Some(idHwmsM.getOrElse(sp.col, sp.base))))).json
         }
-      val mergeSchemaJson = snap.schemaJson.map { j =>
-        if (idHwmsM.isEmpty) j
-        else IdentityColumns.annotate(
-          DataType.fromJson(j).asInstanceOf[StructType],
-          idSpecsM.map(sp => sp.copy(hwm =
-            Some(idHwmsM.getOrElse(sp.col, sp.base))))).json
-      }
-      val actions =
-        Seq(DeltaLog.commitInfoAction("MERGE")) ++
-          mergeSchemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-            DeltaLog.tableId(table), snap.configuration)) ++
-          txn.map { case (appId, v) => DeltaLog.txnAction(appId, v) }.toSeq ++
-          touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-          dvDescs.map { case (f, d) =>
-            DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
-          { val (fr, da) = RowTracking.assignFresh(
-              snap, added, snap.version + 1)
-            da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-          cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-      try return gatedCommit(table, snap, actions)
-      catch {
-        case _: IllegalStateException =>
-          (added ++ cdc).foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-          dvDescs.foreach { case (_, d) =>
-            Files.deleteIfExists(Paths.get(table).resolve(d.path)) }
+        val actions =
+          Seq(DeltaLog.commitInfoAction("MERGE")) ++
+            mergeSchemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
+              DeltaLog.tableId(table), snap.configuration)) ++
+            txn.map { case (appId, v) => DeltaLog.txnAction(appId, v) }.toSeq ++
+            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
+            dvDescs.map { case (f, d) =>
+              DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
+            { val (fr, da) = RowTracking.assignFresh(
+                snap, added, snap.version + 1)
+              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
+            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
+        Commit(actions, (added ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
       }
     }
-    throw new IllegalStateException(
-      s"merge($table): lost the commit race $maxAttempts times")
   }
 
   /** Append-time schema resolution. Same fields (by name+type, order
@@ -3176,38 +3089,32 @@ object DeltaTable {
     * PRESERVED: restore is itself a version, every pre-restore state
     * still time-travels, and no data file is touched until vacuum.
     * Restoring past a vacuum horizon fails loudly (the snapshot read
-    * does), never silently resurrecting missing files. */
+    * does), never silently resurrecting missing files. Commits through
+    * [[transact]]. */
   def restore(table: String, version: Long): Long = {
     val target = DeltaLog.snapshot(table, Some(version))
-    val maxAttempts = 16
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val cur = DeltaLog.snapshot(table)
-      if (cur.version == version) return cur.version // no-op restore
-      val targetPaths = target.files.map(_.path).toSet
-      val curPaths = cur.files.map(_.path).toSet
-      val actions =
-        Seq(DeltaLog.commitInfoAction("RESTORE")) ++
-          target.schemaJson.map(DeltaLog.metaDataAction(_,
-            target.partitionColumns, DeltaLog.tableId(table),
-            target.configuration)) ++
-          cur.files.filterNot(f => targetPaths(f.path))
-            .map(f => DeltaLog.removeAction(f.path)) ++
-          // re-add files the current state lacks — AND files whose
-          // path survives but whose deletion vector differs (a DV-only
-          // delete changes liveness without changing the path; the
-          // restored version must get ITS vector state back)
-          target.files.filter(f => !curPaths(f.path) ||
-              cur.files.find(_.path == f.path).exists(_.dv != f.dv))
-            .map(DeltaLog.addActionOf(_))
-      try return gatedCommit(table, cur, actions)
-      catch {
-        case _: IllegalStateException if attempt < maxAttempts =>
-          Thread.sleep(5L * attempt)
+    transact(table, "restore") { cur =>
+      if (cur.version == version) Done(cur.version) // no-op restore
+      else {
+        val targetPaths = target.files.map(_.path).toSet
+        val curPaths = cur.files.map(_.path).toSet
+        val actions =
+          Seq(DeltaLog.commitInfoAction("RESTORE")) ++
+            target.schemaJson.map(DeltaLog.metaDataAction(_,
+              target.partitionColumns, DeltaLog.tableId(table),
+              target.configuration)) ++
+            cur.files.filterNot(f => targetPaths(f.path))
+              .map(f => DeltaLog.removeAction(f.path)) ++
+            // re-add files the current state lacks — AND files whose
+            // path survives but whose deletion vector differs (a DV-only
+            // delete changes liveness without changing the path; the
+            // restored version must get ITS vector state back)
+            target.files.filter(f => !curPaths(f.path) ||
+                cur.files.find(_.path == f.path).exists(_.dv != f.dv))
+              .map(DeltaLog.addActionOf(_))
+        Commit(actions)
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** SHALLOW CLONE (the public protocol's `CREATE TABLE … SHALLOW CLONE
@@ -3365,8 +3272,8 @@ object DeltaTable {
     * ingest through [[write]] — those features rewrite the frame on
     * the way in, and COPY INTO's contract is byte-faithful file
     * ingestion. Constraints ARE enforced; row tracking ids ARE
-    * assigned; the appendOnly gate applies via [[DeltaLog
-    * .assertWritable]]. Returns (commitVersion, filesLoaded). */
+    * assigned; commits run through [[transact]], so the appendOnly
+    * gate applies. Returns (commitVersion, filesLoaded). */
   def copyInto(spark: SparkSession, table: String,
       source: String): (Long, Int) = {
     require(DeltaLog.versions(table).nonEmpty,
@@ -3394,10 +3301,10 @@ object DeltaTable {
       "graft.copyInto." + d.map("%02x".format(_)).mkString
     }
     val byDomain = srcFiles.map(p => domainOf(p) -> p)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val snap = DeltaLog.snapshot(table)
+    // each attempt re-derives the fresh set, so a racing COPY INTO of
+    // the same files loads each exactly once
+    var loaded = 0
+    val version = transact(table, "copyInto") { snap =>
       require(mappingOf(snap).isEmpty,
         s"COPY INTO $table: column-mapped targets ingest through write()")
       val tblSchema = snap.schemaJson
@@ -3409,49 +3316,41 @@ object DeltaTable {
         s"COPY INTO $table: generated/identity targets ingest through " +
           "write() (those features rewrite rows on the way in)")
       val fresh = byDomain.filterNot(d => snap.domainMetadata.contains(d._1))
-      if (fresh.isEmpty) return (snap.version, 0)
-      val df0 = spark.read.parquet(fresh.map(_._2.toString): _*)
-      // byte-faithful contract: source columns must BE the table's
-      // columns (order-insensitive); project to the table's order
-      val tblTypes = tblSchema.fields.map(f => f.name -> f.dataType).toMap
-      val missing = tblSchema.fieldNames.filterNot(df0.columns.contains)
-      val extra = df0.columns.filterNot(tblTypes.contains)
-      val mistyped = df0.schema.fields.filter(f =>
-        tblTypes.get(f.name).exists(_ != f.dataType))
-      require(missing.isEmpty && extra.isEmpty && mistyped.isEmpty,
-        s"COPY INTO $table: source schema does not match the table " +
-          s"(missing=${missing.mkString(",")} extra=${extra.mkString(",")}" +
-          s" mistyped=${mistyped.map(_.name).mkString(",")})")
-      val df = df0.select(tblSchema.fieldNames.map(col(_)): _*)
-      val added = stageIn(df, table, snap.partitionColumns)
-      enforceConstraints(spark, table, added,
-        snap.checkConstraints.toSeq.sortBy(_._1))
-      val (addedR, ridActs) = RowTracking.assignFresh(snap, added,
-        snap.version + 1)
-      val actions =
-        Seq(DeltaLog.commitInfoAction("COPY INTO"),
-          DeltaLog.metaDataAction(snap.schemaJson.get,
-            snap.partitionColumns, DeltaLog.tableId(table),
-            snap.configuration)) ++
-          fresh.map { case (domain, p) =>
-            DeltaLog.domainMetadataAction(domain,
-              s"""{"source":${DeltaLog.Json.str(p.toString)}}""") } ++
-          ridActs ++
-          addedR.map(DeltaLog.addActionOf(_))
-      DeltaLog.assertWritable(table, snap, actions)
-      try return (DeltaLog.commit(table, snap.version, actions, Some(snap)),
-        fresh.length)
-      catch {
-        case _: IllegalStateException if attempt < 16 =>
-          // lost a commit race: our staged bytes are orphans (no log
-          // references them); clean and re-derive the fresh set — a
-          // racing COPY INTO of the same files must win exactly once
-          added.foreach(f =>
-            Files.deleteIfExists(Paths.get(table).resolve(f.path)))
-          Thread.sleep(5L * attempt)
+      loaded = fresh.length
+      if (fresh.isEmpty) Done(snap.version)
+      else {
+        val df0 = spark.read.parquet(fresh.map(_._2.toString): _*)
+        // byte-faithful contract: source columns must BE the table's
+        // columns (order-insensitive); project to the table's order
+        val tblTypes = tblSchema.fields.map(f => f.name -> f.dataType).toMap
+        val missing = tblSchema.fieldNames.filterNot(df0.columns.contains)
+        val extra = df0.columns.filterNot(tblTypes.contains)
+        val mistyped = df0.schema.fields.filter(f =>
+          tblTypes.get(f.name).exists(_ != f.dataType))
+        require(missing.isEmpty && extra.isEmpty && mistyped.isEmpty,
+          s"COPY INTO $table: source schema does not match the table " +
+            s"(missing=${missing.mkString(",")} extra=${extra.mkString(",")}" +
+            s" mistyped=${mistyped.map(_.name).mkString(",")})")
+        val df = df0.select(tblSchema.fieldNames.map(col(_)): _*)
+        val added = stageIn(df, table, snap.partitionColumns)
+        enforceConstraints(spark, table, added,
+          snap.checkConstraints.toSeq.sortBy(_._1))
+        val (addedR, ridActs) = RowTracking.assignFresh(snap, added,
+          snap.version + 1)
+        val actions =
+          Seq(DeltaLog.commitInfoAction("COPY INTO"),
+            DeltaLog.metaDataAction(snap.schemaJson.get,
+              snap.partitionColumns, DeltaLog.tableId(table),
+              snap.configuration)) ++
+            fresh.map { case (domain, p) =>
+              DeltaLog.domainMetadataAction(domain,
+                s"""{"source":${DeltaLog.Json.str(p.toString)}}""") } ++
+            ridActs ++
+            addedR.map(DeltaLog.addActionOf(_))
+        Commit(actions, added.map(_.path))
       }
     }
-    throw new IllegalStateException("unreachable")
+    (version, loaded)
   }
 
   // -- data skipping ---------------------------------------------------

@@ -3626,4 +3626,98 @@ class DeltaSpec extends SparkSpec {
     runValidator(t2)
     assert(DeltaTable.copyInto(spark, t2, src)._2 === 0)
   }
+
+  test("transact: an IllegalStateException raised by an op body " +
+      "surfaces on the first attempt with its own message and commits " +
+      "nothing") {
+    val t = freshTable()
+    DeltaTable.write(employees3, t, "overwrite")                     // v0
+    var calls = 0
+    val e = intercept[IllegalStateException] {
+      DeltaTable.transact(t, "probe") { _ =>
+        calls += 1
+        throw new IllegalStateException("probe refused")
+      }
+    }
+    assert(e.getMessage === "probe refused")
+    assert(calls === 1, "a body refusal is not a lost race: no retry")
+    assert(DeltaLog.versions(t) === Seq(0L))
+    // a real op: a log with no metaData has no schema to annotate
+    val t2 = freshTable()
+    DeltaLog.commit(t2, -1L, Seq(DeltaLog.commitInfoAction("CREATE"),
+      DeltaLog.protocolAction()))
+    val e2 = intercept[IllegalStateException](DeltaTable.enableColumnMapping(t2))
+    assert(e2.getMessage.contains("no committed schema"), e2.getMessage)
+    assert(!e2.getMessage.contains("lost the commit race"))
+    assert(DeltaLog.versions(t2) === Seq(0L))
+  }
+
+  test("transact: every lost race, the last included, deletes that " +
+      "attempt's staged files; the give-up names the op, table and 16") {
+    val t = freshTable()
+    DeltaTable.write(employees3, t, "overwrite")                     // v0
+    import scala.jdk.CollectionConverters._
+    val staged = scala.collection.mutable.ArrayBuffer[String]()
+    val e = intercept[IllegalStateException] {
+      DeltaTable.transact(t, "probe") { _ =>
+        // this attempt's staged bytes, then a racer claims its version
+        val name = s"part-probe-${staged.length}.parquet"
+        val scratch = Files.createTempDirectory("graft-probe").resolve("d")
+        employee1.coalesce(1).write.parquet(scratch.toString)
+        val part = Files.list(scratch)
+        try Files.move(part.iterator.asScala
+            .find(_.getFileName.toString.endsWith(".parquet")).get,
+          java.nio.file.Paths.get(t).resolve(name))
+        finally part.close()
+        staged += name
+        DeltaTable.write(employee1, t, "append")
+        DeltaTable.Commit(Seq(DeltaLog.commitInfoAction("PROBE"),
+          DeltaLog.addAction(name, Files.size(
+            java.nio.file.Paths.get(t).resolve(name)))), Seq(name))
+      }
+    }
+    assert(e.getMessage === s"probe($t): lost the commit race 16 times")
+    assert(staged.length === 16)
+    assert(staged.forall(n =>
+      !Files.exists(java.nio.file.Paths.get(t).resolve(n))),
+      "a lost attempt left its staged file behind")
+    // the table is the racers' state: v0 + 16 appends, no probe commit
+    assert(DeltaLog.versions(t) === (0L to 16L))
+    assert(DeltaTable.read(spark, t).count() === 3L + 16L)
+    assert(DeltaLog.snapshot(t).files.forall(!_.path.startsWith("part-probe")))
+    runValidator(t)
+  }
+
+  test("merge(txn): two concurrent merges carrying the same txn land " +
+      "exactly one MERGE commit") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    val t = freshTable()
+    DeltaTable.write((0L until 10L).map(i => (i, i)).toDF("id", "v")
+      .coalesce(1), t, "overwrite")                                  // v0
+    for (round <- 1L to 4L) {
+      // additive source: a second landing would double the inserts
+      val src = (round * 100 until round * 100 + 5)
+        .map(i => (i, i)).toDF("id", "v")
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val twins = (0 until 2).map(_ => Future {
+        go.await()
+        DeltaTable.merge(spark, t, src, Seq("id"), txn = Some(("twin", round)))
+      })
+      go.countDown()
+      Await.result(Future.sequence(twins), 120.seconds)
+      val carrying = DeltaLog.versions(t).filter { v =>
+        Files.readAllLines(DeltaLog.logDir(t).resolve(f"$v%020d.json"))
+          .asScala.exists(l => l.contains("\"txn\"") &&
+            l.contains("\"appId\":\"twin\"") &&
+            l.contains(s"\"version\":$round}"))
+      }
+      assert(carrying.length === 1,
+        s"round $round: txn landed in versions $carrying")
+    }
+    assert(DeltaTable.read(spark, t).count() === 10L + 4 * 5)
+    runValidator(t)
+  }
 }

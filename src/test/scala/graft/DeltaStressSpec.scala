@@ -17,7 +17,10 @@ import graft.sources.{DeltaLog, DeltaTable}
   *   3. appended rows that were never targeted by a delete survive to
   *      the final snapshot (no commit clobbers another's data);
   *   4. versions are gap-free 0..latest — optimistic commits may
-  *      retry, but a won version is never overwritten.
+  *      retry, but a won version is never overwritten;
+  *   5. (the first torture) no orphans: every on-disk file outside
+  *      `_delta_log` is referenced by some version — an op that loses
+  *      a race, or gives up, deletes what it staged.
   */
 class DeltaStressSpec extends SparkSpec {
   import spark.implicits._
@@ -130,6 +133,27 @@ class DeltaStressSpec extends SparkSpec {
           s"${lost.toSeq.sorted.take(10)} (aborted ops: ${aborted.get()})")
       // 2. independent wire-format validation of the whole history
       runValidator(t)
+      // 5. no orphans: data files, `_change_data/` and deletion-vector
+      // sidecars on disk are each referenced by some version's actions
+      val pathRef = "\"(?:path|pathOrInlineDv)\":\"([^\"]+)\"".r
+      val referenced = vs.flatMap { v =>
+        java.nio.file.Files.readAllLines(
+          DeltaLog.logDir(t).resolve(f"$v%020d.json")).asScala
+          .flatMap(l => pathRef.findAllMatchIn(l).map(_.group(1)))
+      }.toSet
+      val tableDir = java.nio.file.Paths.get(t)
+      val w = java.nio.file.Files.walk(tableDir)
+      val onDisk =
+        try w.iterator.asScala
+          .filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => tableDir.relativize(p).toString)
+          .filterNot(r => r.startsWith("_delta_log") ||
+            r.startsWith(".staging-")).toSet
+        finally w.close()
+      val orphans = onDisk -- referenced
+      assert(orphans.isEmpty,
+        s"seed $seed: files no version references: " +
+          s"${orphans.toSeq.sorted.take(10)} (aborted ops: ${aborted.get()})")
     }
   }
 
