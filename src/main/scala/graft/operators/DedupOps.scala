@@ -1206,14 +1206,14 @@ object DedupOps {
         stagedShingleArrays(spark, dir).count())).longValue)
   }
 
-  /** The STAGED rarity-ordered prefix relation
-    * (doc_id, n, shingle, pos): each doc's first n - ⌈τ·n⌉ + 1
-    * shingles under the global (df, shingle) order, hyper-common
+  /** The STAGED rarity-ordered prefix relation (doc_id, n, shingle,
+    * pos): each doc's first n - ⌈lo·n⌉ + 1 shingles (lo =
+    * [[pruneFloor]]) under the global (df, shingle) order, hyper-common
     * (df > cap) shingles dropped, `pos` = the shingle's 1-based rank in
-    * the doc's FULL rarity order (the positional filter's input —
-    * round 18). The candidate generator self-joins this relation and
-    * Spark does not dedupe common subplans — unstaged, the freq
-    * shuffle AND the rarity window would execute twice.
+    * the doc's FULL rarity order (the positional filter's input — round
+    * 18). The candidate generator self-joins this relation and Spark
+    * does not dedupe common subplans — unstaged, the freq shuffle AND
+    * the rarity window would execute twice.
     *
     * The df cap applies AFTER the rarity positions are assigned:
     * rarest-first ordering puts hyper-common shingles at the TAIL of
@@ -1248,7 +1248,7 @@ object DedupOps {
       val t = graft.Scratch.dir("graft-prefix").resolve("p").toString
       sh.join(freq, "shingle")
         .withColumn("pos", row_number().over(byRarity))
-        .filter(col("pos") <= col("n") - ceil(col("n") * tau) + 1 &&
+        .filter(col("pos") <= col("n") - ceil(col("n") * pruneFloor(tau)) + 1 &&
           col("df") <= cap)
         .select("doc_id", "n", "shingle", "pos")
         .write.parquet(t)
@@ -1299,15 +1299,23 @@ object DedupOps {
     *     case — die HERE instead of flooding the dedup and the
     *     verify's array joins. The 1e-9 slack makes float rounding
     *     err toward KEEPING a row, never pruning it.
+    * Both filters, like the staged prefix, prune at [[pruneFloor]].
     */
   private[graft] def prefixCandidatesFrom(prefix: DataFrame,
-      tau: Double): DataFrame =
+      tau: Double): DataFrame = {
+    val lo = pruneFloor(tau)
     prefix.as("a").join(prefix.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")) >= ceil(greatest(col("a.n"), col("b.n")) * tau) &&
+          least(col("a.n"), col("b.n")) >= ceil(greatest(col("a.n"), col("b.n")) * lo) &&
           (lit(1) + least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")))
-            * (1.0 + tau) >= (col("a.n") + col("b.n")) * tau - 1e-9)
+            * (1.0 + lo) >= (col("a.n") + col("b.n")) * lo - 1e-9)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+  }
+
+  /** The threshold every AllPairs/PPJoin prune uses: τ − 1e-4, not τ.
+    * The final filter is round(J, 4) >= τ, which admits J down to
+    * τ − 5e-5, so a prune at τ would lose those pairs. */
+  private def pruneFloor(tau: Double): Double = tau - 1e-4
 
   /** prefixCandidates minus its final distinct (profiling hook). */
   private[graft] def prefixCandidatesRaw(spark: SparkSession, dir: String,
@@ -1827,7 +1835,7 @@ object DedupOps {
     * uncapped form. */
   private[graft] def incrementalNearDupsFrom(arrays: DataFrame,
       newArrays: DataFrame, tau: Double): DataFrame = {
-    val lo = tau - 1e-4
+    val lo = pruneFloor(tau)
     def prefixRows(a: DataFrame): DataFrame = a.select(col("doc_id"), col("n"),
       posexplode(slice(col("sarr"), lit(1),
         (col("n") - ceil(col("n") * lo - 1e-9) + 1).cast("int")))

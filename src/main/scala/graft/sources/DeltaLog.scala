@@ -4,6 +4,18 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType,
+  MessageTypeParser}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Minimal Delta-protocol-shaped transaction log, implemented from
   * scratch per the Delta Lake VLDB'20 design (PAPERS.md). The reference
@@ -201,11 +213,9 @@ object DeltaLog {
     }
   }
 
-  def checkpointPath(table: String, version: Long): Path =
-    logDir(table).resolve(V.format(version) + ".checkpoint.json")
-
-  /** The PROTOCOL-format checkpoint: parquet, one action per row —
-    * the file a stock delta-spark reader discovers and replays. */
+  /** The checkpoint: parquet, one action per row — the file a stock
+    * delta-spark reader discovers and replays, and the only checkpoint
+    * format this engine writes or reads. */
   def parquetCheckpointPath(table: String, version: Long): Path =
     logDir(table).resolve(V.format(version) + ".checkpoint.parquet")
 
@@ -323,8 +333,8 @@ object DeltaLog {
       Paths.get(table).toAbsolutePath.normalize.toString
         .getBytes(StandardCharsets.UTF_8)).toString
 
-  /** Versions that have a self-contained checkpoint (written by
-    * vacuum, in either format), ascending. Discovered by listing —
+  /** Versions that have a self-contained checkpoint (single-file,
+    * complete multi-part or v2), ascending. Discovered by listing —
     * `_last_checkpoint` is written as the protocol's hint file but the
     * listing is truth, so a crash between checkpoint write and hint
     * write changes nothing. */
@@ -337,10 +347,7 @@ object DeltaLog {
         try {
           val names = s.iterator.asScala.map(_.getFileName.toString).toSeq
           (names.flatMap { n =>
-            if (n.endsWith(".checkpoint.json") &&
-                V2ManifestRe.findFirstIn(n).isEmpty)
-              n.stripSuffix(".checkpoint.json").toLongOption
-            else if (n.endsWith(".checkpoint.parquet"))
+            if (n.endsWith(".checkpoint.parquet"))
               n.stripSuffix(".checkpoint.parquet").toLongOption
             else None
           },
@@ -378,7 +385,13 @@ object DeltaLog {
   /** One JSON action line as a typed replay event (None for the kinds
     * replay ignores). */
   private def parseActionLine(line: String): Option[ReplayAction] =
-    Json.parse(line) match {
+    actionOf(Json.parse(line))
+
+  /** One action — its kind and its fields, nested objects and arrays
+    * as raw JSON text — as a typed replay event: the one mapping for
+    * the JSON log and the parquet checkpoint alike. */
+  private def actionOf(action: (String, Map[String, String])): Option[ReplayAction] =
+    action match {
       case ("add", fields) => Some(AddA(addFileOf(fields)))
       case ("remove", fields) => Some(RemoveA(fields("path")))
       case ("metaData", fields) => Some(MetaA(
@@ -404,124 +417,234 @@ object DeltaLog {
       case _ => None
     }
 
-  /** A checkpoint's content as typed replay events. The JSON side file
-    * is the fast path (no Spark job); absent that, the protocol
-    * parquet checkpoint's rows decode STRAIGHT to typed actions —
-    * round 10: the old path collected every row as a JSON string
-    * (`toJSON.collect()`) and re-parsed it, roughly doubling the
-    * snapshot's driver footprint at millions of live files. Rows now
-    * stream through `toLocalIterator` (one partition in memory at a
-    * time) into [[AddFile]]s directly. Either file alone fully
-    * reconstructs the snapshot; DeltaSpec proves parquet-only replay. */
+  /** A checkpoint's content as typed replay events: a v2 manifest's
+    * non-file actions plus its sidecars, else the single-file
+    * checkpoint, else a complete multi-part set. Every parquet file
+    * decodes through [[readCheckpointFile]] — no Spark job. */
   private def checkpointActions(table: String,
       version: Long): Iterator[ReplayAction] = {
-    val json = checkpointPath(table, version)
-    if (Files.exists(json))
-      return Files.readAllLines(json, StandardCharsets.UTF_8).asScala
-        .iterator.filter(_.nonEmpty).flatMap(parseActionLine)
-    // V2 checkpoint: typed actions straight off the manifest lines,
-    // file actions from the referenced sidecar parquet files
-    v2Manifest(table, version) match {
-      case Some(m) =>
-        val manifestActions = Files.readAllLines(m, StandardCharsets.UTF_8)
-          .asScala.iterator.filter(_.nonEmpty).flatMap(parseActionLine)
-        val sidecars = v2SidecarRefs(m)
-          .map(r => sidecarDir(table).resolve(r).toString)
-        return manifestActions ++ sidecars.iterator.flatMap(p =>
-          decodeActionRows(table, version, Seq(p)))
-      case None => ()
-    }
-    val pq = parquetCheckpointPath(table, version)
-    val paths: Seq[String] =
-      if (Files.exists(pq)) Seq(pq.toString)
-      else completeMultiPart(table, version)
-        .map(_.map(_.toString))
-        .getOrElse(throw new IllegalStateException(
-          s"checkpoint $version of $table listed but no readable format " +
-            "exists (json/parquet missing, multi-part set incomplete)"))
-    decodeActionRows(table, version, paths)
+    val (head, files): (Iterator[ReplayAction], Seq[Path]) =
+      v2Manifest(table, version) match {
+        case Some(m) =>
+          (Files.readAllLines(m, StandardCharsets.UTF_8).asScala.iterator
+            .filter(_.nonEmpty).flatMap(parseActionLine),
+            v2SidecarRefs(m).map(r => sidecarDir(table).resolve(r)))
+        case None =>
+          val pq = parquetCheckpointPath(table, version)
+          (Iterator.empty,
+            if (Files.exists(pq)) Seq(pq)
+            else completeMultiPart(table, version).getOrElse(
+              throw new IllegalStateException(
+                s"checkpoint $version of $table listed but no readable " +
+                  "file exists (parquet missing, multi-part set incomplete)")))
+      }
+    head ++ decodeCached(files)
   }
 
-  /** Parquet action rows (classic checkpoint parts or v2 sidecars) as
-    * typed replay events, streamed via toLocalIterator. */
-  private def decodeActionRows(table: String, version: Long,
-      paths: Seq[String]): Iterator[ReplayAction] = {
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .getOrElse(throw new IllegalStateException(
-        s"decoding parquet checkpoint of $table@$version requires an " +
-          "active SparkSession"))
-    // one scan over all parts; action order across parts is free (a
-    // checkpoint carries exactly one metaData/protocol, so the
-    // last-wins replay rule has nothing to disambiguate)
-    val df = spark.read.parquet(paths: _*)
-    val schema = df.schema
-    def ord(name: String): Option[Int] =
-      if (schema.fieldNames.contains(name)) Some(schema.fieldIndex(name))
-      else None
-    val (addO, removeO, metaO, txnO, domainO, protoO) =
-      (ord("add"), ord("remove"), ord("metaData"), ord("txn"),
-        ord("domainMetadata"), ord("protocol"))
-    def sub(r: org.apache.spark.sql.Row, o: Option[Int])
-        : Option[org.apache.spark.sql.Row] =
-      o.filter(!r.isNullAt(_)).map(r.getStruct)
-    def strOpt(r: org.apache.spark.sql.Row, n: String): Option[String] =
-      if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
-        Some(r.getString(r.fieldIndex(n)))
-      else None
-    def longOpt(r: org.apache.spark.sql.Row, n: String): Option[Long] =
-      if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
-        Some(r.getLong(r.fieldIndex(n)))
-      else None
-    def mapOf(r: org.apache.spark.sql.Row, n: String): Map[String, String] =
-      if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
-        r.getMap[String, String](r.fieldIndex(n)).toMap
-      else Map.empty
-    def seqOf(r: org.apache.spark.sql.Row, n: String): Seq[String] =
-      if (r.schema.fieldNames.contains(n) && !r.isNullAt(r.fieldIndex(n)))
-        r.getSeq[String](r.fieldIndex(n))
-      else Nil
-    df.toLocalIterator().asScala.flatMap { row =>
-      sub(row, addO).map { a =>
-        val dv =
-          if (a.schema.fieldNames.contains("deletionVector") &&
-              !a.isNullAt(a.fieldIndex("deletionVector"))) {
-            val d = a.getStruct(a.fieldIndex("deletionVector"))
-            strOpt(d, "pathOrInlineDv").map(p =>
-              DeletionVectors.Descriptor(p,
-                longOpt(d, "sizeInBytes").getOrElse(0L),
-                longOpt(d, "cardinality").getOrElse(0L)))
-          } else None
-        AddA(AddFile(
-          strOpt(a, "path").getOrElse(throw new IllegalStateException(
-            s"checkpoint $version of $table: add row without a path")),
-          longOpt(a, "size").getOrElse(0L),
-          strOpt(a, "stats").map(Json.parseFlat).getOrElse(Map.empty),
-          mapOf(a, "partitionValues"), dv,
-          longOpt(a, "baseRowId"), longOpt(a, "defaultRowCommitVersion")))
-      }.orElse(sub(row, removeO).flatMap(r =>
-        strOpt(r, "path").map(RemoveA)))
-        .orElse(sub(row, metaO).map(m => MetaA(
-          strOpt(m, "schemaString"), seqOf(m, "partitionColumns"),
-          mapOf(m, "configuration"))))
-        .orElse(sub(row, txnO).flatMap(t =>
-          for (app <- strOpt(t, "appId"); v <- longOpt(t, "version"))
-            yield TxnA(app, v)))
-        .orElse(sub(row, domainO).flatMap(d =>
-          strOpt(d, "domain").map(dm => DomainA(dm,
-            strOpt(d, "configuration").getOrElse(""),
-            d.schema.fieldNames.contains("removed") &&
-              !d.isNullAt(d.fieldIndex("removed")) &&
-              d.getBoolean(d.fieldIndex("removed"))))))
-        .orElse(sub(row, protoO).map(p => ProtocolA(
-          if (p.schema.fieldNames.contains("minReaderVersion") &&
-              !p.isNullAt(p.fieldIndex("minReaderVersion")))
-            Some(p.getInt(p.fieldIndex("minReaderVersion"))) else None,
-          if (p.schema.fieldNames.contains("minWriterVersion") &&
-              !p.isNullAt(p.fieldIndex("minWriterVersion")))
-            Some(p.getInt(p.fieldIndex("minWriterVersion"))) else None,
-          seqOf(p, "readerFeatures").toSet, seqOf(p, "writerFeatures").toSet)))
+  /** The last few checkpoints decoded, keyed by their files'
+    * identities (path, size, mtime, inode). A placed checkpoint file
+    * never changes (a racer's rewrite is a new file holding the same
+    * snapshot), so the snapshots taken between two checkpoints — and
+    * time travel to the one before — decode its parquet once: until
+    * the JIT has warmed it, parquet-mr takes ~3 ms per file, against
+    * ~0.05 ms per JSON version file replayed after it. LRU of 4, so it
+    * holds at most four checkpoints' actions. */
+  private val decoded = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Seq[(Path, Any)], Seq[ReplayAction]](
+      8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          Seq[(Path, Any)], Seq[ReplayAction]]): Boolean = size > 4
+    })
+
+  private def decodeCached(files: Seq[Path]): Iterator[ReplayAction] = {
+    val key = files.map { p =>
+      val a = Files.readAttributes(p,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      p.toAbsolutePath -> (a.size, a.lastModifiedTime, a.fileKey)
     }
+    Option(decoded.get(key)).getOrElse {
+      val actions = files.flatMap(readCheckpointFile)
+      decoded.put(key, actions)
+      actions
+    }.iterator
+  }
+
+  private val StrMap = "(MAP) { repeated group key_value { " +
+    "required binary key (STRING); optional binary value (STRING); } }"
+  private val StrList =
+    "(LIST) { repeated group list { optional binary element (STRING); } }"
+
+  /** The checkpoint action row: one parquet row per action, exactly one
+    * non-null top-level column — the names, types and nesting Spark's
+    * writer gives delta-spark's checkpoint layout, so a stock reader
+    * (and `spark.read.parquet`) sees the same schema. `stats` stays a
+    * JSON string per the protocol; its flat {n, min.*, max.*} content
+    * is this engine's own — a foreign reader that can't parse it loses
+    * data skipping, never correctness. */
+  private val CheckpointSchema: MessageType =
+    MessageTypeParser.parseMessageType(s"""message spark_schema {
+      optional group txn {
+        optional binary appId (STRING); optional int64 version; }
+      optional group add {
+        optional binary path (STRING);
+        optional group partitionValues $StrMap
+        optional int64 size; optional int64 modificationTime;
+        optional boolean dataChange; optional binary stats (STRING);
+        optional group deletionVector {
+          optional binary storageType (STRING);
+          optional binary pathOrInlineDv (STRING);
+          optional int64 sizeInBytes; optional int64 cardinality; }
+        optional int64 baseRowId; optional int64 defaultRowCommitVersion; }
+      optional group domainMetadata {
+        optional binary domain (STRING);
+        optional binary configuration (STRING); optional boolean removed; }
+      optional group remove {
+        optional binary path (STRING); optional int64 deletionTimestamp;
+        optional boolean dataChange; }
+      optional group metaData {
+        optional binary id (STRING);
+        optional group format {
+          optional binary provider (STRING); optional group options $StrMap }
+        optional binary schemaString (STRING);
+        optional group partitionColumns $StrList
+        optional group configuration $StrMap }
+      optional group protocol {
+        optional int32 minReaderVersion; optional int32 minWriterVersion;
+        optional group readerFeatures $StrList
+        optional group writerFeatures $StrList }
+    }""")
+
+  /** V2 sidecars carry file actions only: the add/remove projection. */
+  private val SidecarSchema = {
+    val all: GroupType = CheckpointSchema
+    new MessageType(all.getName, all.getType("add"), all.getType("remove"))
+  }
+
+  /** Write checkpoint `actions` (JSON action lines, as the log holds
+    * them) as parquet with parquet-mr on the driver: the full schema,
+    * or for v2 `sidecars` its add/remove projection; split into files
+    * of at most `maxPer` actions, `target(k, n)` naming file k of n.
+    * Each file is written to a hidden temp file in `_delta_log` and
+    * moved into place with ATOMIC_MOVE, in order — so a crash leaves
+    * either no file or a whole one, and an interrupted multi-part set
+    * stays incomplete. Returns each written path with its action
+    * count. */
+  private[sources] def writeCheckpointFiles(table: String,
+      actions: Seq[String], sidecars: Boolean, maxPer: Int)(
+      target: (Int, Int) => Path): Seq[(Path, Int)] = {
+    val schema = if (sidecars) SidecarSchema else CheckpointSchema
+    val groups = if (actions.isEmpty) Seq(Nil) else actions.grouped(maxPer).toSeq
+    groups.zipWithIndex.map { case (group, k) =>
+      val path = target(k + 1, groups.length)
+      val tmp = logDir(table).resolve(s".ckpt-${java.util.UUID.randomUUID}.tmp")
+      try {
+        val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+          .withType(schema).withConf(new PlainParquetConfiguration())
+          .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        val rows = new SimpleGroupFactory(schema)
+        try group.foreach { line =>
+          val row = rows.newGroup()
+          val (kind, fields) = Json.parse(line)
+          fill(row.addGroup(kind), fields)
+          w.write(row)
+        } finally w.close()
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
+      path -> group.length
+    }
+  }
+
+  /** Fill a checkpoint row group from one action's JSON fields, driven
+    * by the group's parquet type: int64/int32/boolean/string values,
+    * MAP and LIST groups, nested groups. JSON fields the schema lacks
+    * are dropped; absent ones stay null. */
+  private def fill(g: Group, fields: Map[String, String]): Unit =
+    g.getType.getFields.asScala.foreach { t =>
+      val n = t.getName
+      fields.get(n).foreach { v =>
+        if (t.isPrimitive) t.asPrimitiveType.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 => g.append(n, v.toLong)
+          case PrimitiveTypeName.INT32 => g.append(n, v.toInt)
+          case PrimitiveTypeName.BOOLEAN => g.append(n, v.toBoolean)
+          case _ => g.append(n, v)
+        } else {
+          val sub = g.addGroup(n)
+          t.getLogicalTypeAnnotation match {
+            case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
+              Json.parseFlat(v).toSeq.sortBy(_._1).foreach { case (k, x) =>
+                sub.addGroup(0).append("key", k).append("value", x) }
+            case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
+              Json.parseStringArray(v).foreach(x =>
+                sub.addGroup(0).append("element", x))
+            case _ => fill(sub, Json.parseFlat(v))
+          }
+        }
+      }
+    }
+
+  /** One checkpoint parquet file (single-file, part or v2 sidecar) as
+    * typed replay events, read with parquet-mr on the driver through
+    * `LocalInputFile` + `PlainParquetConfiguration`: no Spark job and
+    * no Hadoop `Path`/`Configuration`, whose per-open set-up costs
+    * ~11 ms against ~1 ms here. The file decodes whole: a part holds at
+    * most the per-file action cap. */
+  private def readCheckpointFile(p: Path): Seq[ReplayAction] = {
+    val r = ParquetFileReader.open(new LocalInputFile(p),
+      ParquetReadOptions.builder(new PlainParquetConfiguration()).build())
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      val io = new ColumnIOFactory().getColumnIO(schema)
+      val out = Vector.newBuilder[ReplayAction]
+      var pages = r.readNextRowGroup()
+      while (pages != null) {
+        val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+        for (_ <- 0L until pages.getRowCount) {
+          // one non-null top-level column per row: the action
+          val row = rows.read()
+          out ++= (0 until schema.getFieldCount)
+            .find(row.getFieldRepetitionCount(_) > 0)
+            .flatMap(i => actionOf(schema.getFieldName(i) -> fieldsOf(row.getGroup(i, 0))))
+        }
+        pages = r.readNextRowGroup()
+      }
+      out.result()
+    } finally r.close()
+  }
+
+  /** A checkpoint row group as JSON fields, the inverse of [[fill]]:
+    * values as strings, MAP/LIST/nested groups as raw JSON text. Read
+    * by name off the file's own schema, so a foreign writer's extra
+    * columns (`tags`, `createdTime`, ...) pass through unused. */
+  private def fieldsOf(g: Group): Map[String, String] = {
+    def obj(kvs: Iterable[(String, String)]): String = kvs
+      .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
+      .mkString("{", ",", "}")
+    val t = g.getType
+    (0 until t.getFieldCount).filter(g.getFieldRepetitionCount(_) > 0).map { i =>
+      val f = t.getType(i)
+      f.getName -> (
+        if (f.isPrimitive) f.asPrimitiveType.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 => g.getLong(i, 0).toString
+          case PrimitiveTypeName.INT32 => g.getInteger(i, 0).toString
+          case PrimitiveTypeName.BOOLEAN => g.getBoolean(i, 0).toString
+          case _ => g.getString(i, 0)
+        } else {
+          val sub = g.getGroup(i, 0)
+          // MAP/LIST: one repeated group of key/value or element
+          def items = (0 until sub.getFieldRepetitionCount(0))
+            .map(sub.getGroup(0, _))
+          f.getLogicalTypeAnnotation match {
+            case _: LogicalTypeAnnotation.MapLogicalTypeAnnotation =>
+              obj(items.filter(_.getFieldRepetitionCount(1) > 0)
+                .map(kv => kv.getString(0, 0) -> kv.getString(1, 0)))
+            case _: LogicalTypeAnnotation.ListLogicalTypeAnnotation =>
+              items.filter(_.getFieldRepetitionCount(0) > 0)
+                .map(e => Json.str(e.getString(0, 0))).mkString("[", ",", "]")
+            case _ => obj(fieldsOf(sub))
+          }
+        })
+    }.toMap
   }
 
   /** Replay the log up to `versionAsOf` (inclusive; latest if None):
@@ -797,7 +920,8 @@ object DeltaLog {
       dv: Option[DeletionVectors.Descriptor] = None,
       dataChange: Boolean = true,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None): String = {
+      defaultRowCommitVersion: Option[Long] = None,
+      modificationTime: Option[Long] = None): String = {
     val statsField =
       if (stats.isEmpty) ""
       else {
@@ -815,7 +939,8 @@ object DeltaLog {
       .getOrElse("")
     val ridField = baseRowId.map(b => s""","baseRowId":$b""").getOrElse("") +
       defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""")
-        .getOrElse("")
+        .getOrElse("") +
+      modificationTime.map(m => s""","modificationTime":$m""").getOrElse("")
     s"""{"add":{"path":${Json.str(path)},"partitionValues":$pv,"size":$size$statsField$dvField$ridField,"dataChange":$dataChange}}"""
   }
 
@@ -823,9 +948,10 @@ object DeltaLog {
     * field carried — the re-add shape (DV re-adds, restore, clone,
     * checkpoints, row-tracking backfill) must never silently drop a
     * field a newer feature added. */
-  def addActionOf(f: AddFile, dataChange: Boolean = true): String =
+  def addActionOf(f: AddFile, dataChange: Boolean = true,
+      modificationTime: Option[Long] = None): String =
     addAction(f.path, f.size, f.stats, f.partitionValues, f.dv,
-      dataChange, f.baseRowId, f.defaultRowCommitVersion)
+      dataChange, f.baseRowId, f.defaultRowCommitVersion, modificationTime)
 
   /** Decode an add action's flat fields back into an AddFile (shared
     * by snapshot replay and versionChanges). */

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit, max, min}
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
@@ -2381,170 +2382,6 @@ object DeltaTable {
     else StructType(old.fields ++ newFields.map(_.copy(nullable = true)))
   }
 
-  /** The protocol-format checkpoint: one parquet row per action, null
-    * columns for the actions a row doesn't carry — the column layout
-    * (txn/add/remove/metaData/protocol) delta-spark's checkpoint
-    * reader expects, with the table's current protocol, its
-    * configuration (constraints survive parquet-only replay) and a
-    * stable metaData id.
-    * `stats` stays a JSON string per the protocol; its flat
-    * {n, min.*, max.*} content is this engine's own — a foreign reader
-    * that can't parse it loses data skipping, never correctness.
-    * `dataChange` is false on checkpoint adds (spec requirement).
-    * Our own replay decodes these rows back into action lines via
-    * `toJSON` (see [[DeltaLog.snapshot]]), so either checkpoint format
-    * alone reconstructs the table. */
-  /** Returns the number of parquet files written: 1 = the classic
-    * single `N.checkpoint.parquet`; >1 = a MULTI-PART classic
-    * checkpoint (`N.checkpoint.K.P.parquet`, the protocol's shape for
-    * tables whose action count outgrows one file — at 100 TB the live
-    * add-set is millions of rows and a single-file checkpoint is the
-    * one log-path cost that scales with table size). The threshold is
-    * `spark.graft.checkpoint.maxActionsPerFile` (default 100k). Parts
-    * move into place one by one; discovery ignores an INCOMPLETE set
-    * (crash mid-write), so replay falls back to an older checkpoint or
-    * the raw version files — never a half-read snapshot. */
-  /** The checkpoint-row form of an `add` action — shared by the
-    * classic parquet checkpoint and v2 sidecar files. */
-  private def ckptAddType: StructType = {
-    import org.apache.spark.sql.types.{BooleanType, LongType, MapType,
-      StructField}
-    StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType),
-      StructField("deletionVector", StructType(Seq(
-        StructField("storageType", StringType),
-        StructField("pathOrInlineDv", StringType),
-        StructField("sizeInBytes", LongType),
-        StructField("cardinality", LongType)))),
-      StructField("baseRowId", LongType),
-      StructField("defaultRowCommitVersion", LongType)))
-  }
-
-  private def ckptStatsJson(f: DeltaLog.AddFile): String =
-    if (f.stats.isEmpty) null
-    else f.stats.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        s"${DeltaLog.Json.str(k)}:${DeltaLog.Json.str(v)}" }
-      .mkString("{", ",", "}")
-
-  private def ckptAddRow(f: DeltaLog.AddFile): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row(
-      f.path, f.partitionValues, f.size, 0L, false, ckptStatsJson(f),
-      f.dv.map(d => org.apache.spark.sql.Row(
-        "p", d.path, d.sizeInBytes, d.cardinality)).orNull,
-      f.baseRowId.map(Long.box).orNull,
-      f.defaultRowCommitVersion.map(Long.box).orNull)
-
-  private def writeParquetCheckpoint(spark: SparkSession, table: String,
-      version: Long, snap: DeltaLog.Snapshot): Int = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType,
-      LongType, MapType, StructField}
-    val schema = StructType(Seq(
-      StructField("txn", StructType(Seq(
-        StructField("appId", StringType),
-        StructField("version", LongType)))),
-      StructField("add", ckptAddType),
-      StructField("domainMetadata", StructType(Seq(
-        StructField("domain", StringType),
-        StructField("configuration", StringType),
-        StructField("removed", BooleanType)))),
-      StructField("remove", StructType(Seq(
-        StructField("path", StringType),
-        StructField("deletionTimestamp", LongType),
-        StructField("dataChange", BooleanType)))),
-      StructField("metaData", StructType(Seq(
-        StructField("id", StringType),
-        StructField("format", StructType(Seq(
-          StructField("provider", StringType),
-          StructField("options", MapType(StringType, StringType))))),
-        StructField("schemaString", StringType),
-        StructField("partitionColumns", ArrayType(StringType)),
-        StructField("configuration", MapType(StringType, StringType))))),
-      StructField("protocol", StructType(Seq(
-        StructField("minReaderVersion", IntegerType),
-        StructField("minWriterVersion", IntegerType),
-        StructField("readerFeatures", ArrayType(StringType)),
-        StructField("writerFeatures", ArrayType(StringType)))))))
-    val rows: Seq[Row] =
-      Seq(Row(null, null, null, null, null,
-        Row(snap.minReaderVersion, snap.minWriterVersion,
-          if (snap.readerFeatures.isEmpty) null
-          else snap.readerFeatures.toSeq.sorted,
-          if (snap.writerFeatures.isEmpty) null
-          else snap.writerFeatures.toSeq.sorted))) ++
-        snap.schemaJson.map(sj => Row(null, null, null, null,
-          Row(DeltaLog.tableId(table), Row("parquet", Map.empty[String, String]),
-            sj, snap.partitionColumns, snap.configuration), null)).toSeq ++
-        snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
-          Row(Row(app, v), null, null, null, null, null) } ++
-        snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
-          Row(null, null, Row(d, c, false), null, null, null) } ++
-        snap.files.map(f => Row(null, ckptAddRow(f),
-          null, null, null, null))
-    val maxPer = spark.conf
-      .getOption("spark.graft.checkpoint.maxActionsPerFile")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100_000)
-    val groups: Seq[Seq[Row]] =
-      if (rows.length <= maxPer) Seq(rows)
-      else rows.grouped(maxPer).toSeq
-    val targets: Seq[Path] =
-      if (groups.length == 1) Seq(DeltaLog.parquetCheckpointPath(table, version))
-      else (1 to groups.length).map(k =>
-        DeltaLog.multiPartCheckpointPath(table, version, k, groups.length))
-    groups.zip(targets).foreach { case (group, target) =>
-      val tmpDir = Files.createTempDirectory(DeltaLog.logDir(table), ".pckpt-")
-      try {
-        spark.createDataFrame(group.asJava, schema).coalesce(1)
-          .write.mode("overwrite").parquet(tmpDir.toString)
-        val s = Files.list(tmpDir)
-        val part =
-          try s.iterator.asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(
-              s"parquet checkpoint write produced no part file in $tmpDir"))
-          finally s.close()
-        Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-      } finally {
-        val s = Files.walk(tmpDir)
-        try s.iterator.asScala.toSeq.reverse.foreach(p =>
-          try Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-        finally s.close()
-      }
-    }
-    groups.length
-  }
-
-  /** Garbage-collect data files that no retained version references:
-    * keep the last `keepVersions` versions readable, drop every data
-    * file only older versions need, and prune the log prefix so time
-    * travel past the horizon fails loudly instead of reading missing
-    * files.
-    *
-    * Protocol shape (matching real Delta's checkpoint design):
-    * committed `N.json` files are IMMUTABLE — the horizon (oldest
-    * retained) version is summarized into a checkpoint in BOTH
-    * formats: the protocol's `N.checkpoint.parquet` (one action per
-    * row — protocol, metaData with table id, txn ledger, every live
-    * add — the file a stock delta reader replays) and a
-    * `N.checkpoint.json` side file with the same actions as JSON
-    * lines (the engine's no-Spark-job fast path). Either alone fully
-    * reconstructs the snapshot (DeltaSpec deletes the JSON and
-    * replays from parquet only); `_last_checkpoint` is updated to
-    * point at them. Replay
-    * ([[DeltaLog.snapshot]]) starts from the newest checkpoint at or
-    * below the target, so the pruned prefix is never read — crash
-    * anywhere in this sequence and the table stays consistent:
-    * checkpoint written but prefix alive ⇒ replay prefers the
-    * checkpoint (same state by construction); died earlier ⇒ plain
-    * replay as if vacuum never ran. Returns deleted data-file paths
-    * (table-relative, partitioned layouts walked recursively). */
   /** Stock Delta's periodic-checkpoint cadence (one checkpoint per 10
     * commits by default; a table overrides it with the protocol's own
     * `delta.checkpointInterval` property). Bounds `snapshot()`'s replay
@@ -2558,61 +2395,64 @@ object DeltaTable {
     config.get("delta.checkpointInterval").flatMap(_.toLongOption)
       .filter(_ > 0).getOrElse(DefaultCheckpointInterval)
 
-  /** Write BOTH checkpoint formats + the `_last_checkpoint` hint for
-    * `version`: the engine's JSON fast-path side file and the
-    * protocol-format parquet a stock delta reader replays. Derived
-    * data, atomic move — replacing a racer's identical checkpoint is
+  /** Write the checkpoint for `version` plus the `_last_checkpoint`
+    * hint. The checkpoint is the protocol's parquet — the one format,
+    * written and read by [[DeltaLog]]'s driver-side codec, no Spark
+    * job: a single `N.checkpoint.parquet`, or past
+    * `spark.graft.checkpoint.maxActionsPerFile` actions (default 100k)
+    * a MULTI-PART set `N.checkpoint.K.P.parquet` (the protocol's shape
+    * for tables whose live add-set outgrows one file — at 100 TB it is
+    * millions of rows). Parts move into place one by one; discovery
+    * ignores an INCOMPLETE set (crash mid-write), so replay falls back
+    * to an older checkpoint or the raw version files — never a
+    * half-read snapshot. Under `delta.checkpointPolicy=v2` the shape is
+    * a manifest plus sidecars ([[writeV2Checkpoint]]). Derived data,
+    * atomic moves — replacing a racer's identical checkpoint is
     * harmless, and the version files it summarizes are already
     * committed. */
   private[sources] def writeCheckpoint(table: String, version: Long): Unit = {
     val snap = DeltaLog.snapshot(table, Some(version))
-    // v2 policy: manifest + sidecars (falls back to the classic shape
-    // when no session can write parquet sidecars — correctness first)
-    if (snap.configuration.get("delta.checkpointPolicy").contains("v2") &&
-        org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-          .isDefined) {
-      writeV2Checkpoint(table, version, snap)
-      return
-    }
-    val logDir = DeltaLog.logDir(table)
-    val checkpoint =
-      Seq(DeltaLog.commitInfoAction("CHECKPOINT"),
-        // carry the table's CURRENT protocol (a constraint may have
-        // upgraded minWriterVersion past the default; a features-gate
-        // table must keep listing its features)
-        DeltaLog.protocolAction(snap.minReaderVersion,
-          snap.minWriterVersion, snap.readerFeatures.toSeq,
-          snap.writerFeatures.toSeq)) ++
-        snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-          DeltaLog.tableId(table), snap.configuration)) ++
-        // txn ledger must survive a pruned prefix — dropping it would
-        // let a restarted streaming query re-apply old micro-batches
-        snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
-          DeltaLog.txnAction(app, v) } ++
-        snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
-          DeltaLog.domainMetadataAction(d, c) } ++
-        snap.files.map(DeltaLog.addActionOf(_, dataChange = false))
-    val tmp = Files.createTempFile(logDir, ".ckpt-", ".tmp")
-    Files.write(tmp, checkpoint.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, DeltaLog.checkpointPath(table, version),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    // the PROTOCOL-format checkpoint: the same snapshot as parquet
-    // action rows — what a stock delta reader replays. Needs a session
-    // for the parquet codec (best-effort skip otherwise: the JSON side
-    // file already guarantees our own replay). Large snapshots split
-    // into the protocol's multi-part shape (see writeParquetCheckpoint).
-    val parts: Option[Int] = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(writeParquetCheckpoint(_, table, version, snap))
+    val maxPer = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .flatMap(_.conf.getOption("spark.graft.checkpoint.maxActionsPerFile"))
+      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100_000)
+    // the table's CURRENT protocol (a constraint may have upgraded
+    // minWriterVersion past the default; a features-gate table must keep
+    // listing its features), metaData, and the txn ledger, which must
+    // survive a pruned prefix — dropping it would let a restarted
+    // streaming query re-apply old micro-batches
+    val state = Seq(DeltaLog.protocolAction(snap.minReaderVersion,
+      snap.minWriterVersion, snap.readerFeatures.toSeq,
+      snap.writerFeatures.toSeq)) ++
+      snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
+        DeltaLog.tableId(table), snap.configuration)) ++
+      snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
+        DeltaLog.txnAction(app, v) } ++
+      snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
+        DeltaLog.domainMetadataAction(d, c) }
+    // checkpoint adds: dataChange=false and a modificationTime, both
+    // required there by the protocol (the log's add lines carry none)
+    val adds = snap.files.map(DeltaLog.addActionOf(_, dataChange = false,
+      modificationTime = Some(0L)))
+    val (size, parts) =
+      if (snap.configuration.get("delta.checkpointPolicy").contains("v2"))
+        (writeV2Checkpoint(table, version, state, adds, maxPer), 1)
+      else {
+        val files = DeltaLog.writeCheckpointFiles(table, state ++ adds,
+          sidecars = false, maxPer) { (k, n) =>
+          if (n == 1) DeltaLog.parquetCheckpointPath(table, version)
+          else DeltaLog.multiPartCheckpointPath(table, version, k, n)
+        }
+        (files.map(_._2).sum, files.length)
+      }
     // _last_checkpoint hint (the protocol's fast-path pointer;
     // discovery by listing remains the source of truth); multi-part
     // checkpoints advertise their part count per the spec
-    val partsField = parts.filter(_ > 1).map(p => s""","parts":$p""").getOrElse("")
+    val logDir = DeltaLog.logDir(table)
+    val partsField = if (parts > 1) s""","parts":$parts""" else ""
     val hint = Files.createTempFile(logDir, ".lastckpt-", ".tmp")
     Files.write(hint,
-      s"""{"version":$version,"size":${checkpoint.length}$partsField}"""
+      s"""{"version":$version,"size":$size$partsField}"""
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     Files.move(hint, logDir.resolve("_last_checkpoint"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
@@ -2627,81 +2467,31 @@ object DeltaTable {
     * manifest therefore implies durable sidecars; a crash mid-write
     * leaves unreferenced sidecars that the next vacuum collects.
     * Replay follows the references ([[DeltaLog]] checkpointActions);
-    * discovery refuses a manifest whose sidecars are missing. */
+    * discovery refuses a manifest whose sidecars are missing. Returns
+    * the checkpoint's action count. */
   private def writeV2Checkpoint(table: String, version: Long,
-      snap: DeltaLog.Snapshot): Unit = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.StructField
-    val spark = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).get
+      state: Seq[String], adds: Seq[String], maxPer: Int): Int = {
     val logDir = DeltaLog.logDir(table)
     val scDir = DeltaLog.sidecarDir(table)
     Files.createDirectories(scDir)
-    val sidecarSchema = StructType(Seq(
-      StructField("add", ckptAddType),
-      StructField("remove", StructType(Seq(
-        StructField("path", StringType))))))
-    val rows: Seq[Row] = snap.files.map(f => Row(ckptAddRow(f), null))
-    val maxPer = spark.conf
-      .getOption("spark.graft.checkpoint.maxActionsPerFile")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(100_000)
-    val groups: Seq[Seq[Row]] =
-      if (rows.isEmpty) Seq(Seq.empty)
-      else if (rows.length <= maxPer) Seq(rows)
-      else rows.grouped(maxPer).toSeq
-    val sidecarNames = groups.map { group =>
-      val name = java.util.UUID.randomUUID().toString + ".parquet"
-      val tmpDir = Files.createTempDirectory(logDir, ".v2sc-")
-      try {
-        spark.createDataFrame(group.asJava, sidecarSchema).coalesce(1)
-          .write.mode("overwrite").parquet(tmpDir.toString)
-        val s = Files.list(tmpDir)
-        val part =
-          try s.iterator.asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException(
-              s"v2 sidecar write produced no part file in $tmpDir"))
-          finally s.close()
-        Files.move(part, scDir.resolve(name),
-          StandardCopyOption.REPLACE_EXISTING)
-      } finally {
-        val s = Files.walk(tmpDir)
-        try s.iterator.asScala.toSeq.reverse.foreach(p =>
-          try Files.deleteIfExists(p)
-          catch { case _: java.io.IOException => () })
-        finally s.close()
-      }
-      name
+    val sidecars = DeltaLog.writeCheckpointFiles(table, adds,
+      sidecars = true, maxPer) { (_, _) =>
+      scDir.resolve(java.util.UUID.randomUUID().toString + ".parquet")
     }
     val manifest: Seq[String] =
-      Seq(s"""{"checkpointMetadata":{"version":$version}}""",
-        DeltaLog.protocolAction(snap.minReaderVersion,
-          snap.minWriterVersion, snap.readerFeatures.toSeq,
-          snap.writerFeatures.toSeq)) ++
-        snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-          DeltaLog.tableId(table), snap.configuration)) ++
-        snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
-          DeltaLog.txnAction(app, v) } ++
-        snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
-          DeltaLog.domainMetadataAction(d, c) } ++
-        sidecarNames.map { n =>
-          val sz = Files.size(scDir.resolve(n))
-          s"""{"sidecar":{"path":${DeltaLog.Json.str(n)},""" +
-            s""""sizeInBytes":$sz,""" +
+      Seq(s"""{"checkpointMetadata":{"version":$version}}""") ++ state ++
+        sidecars.map { case (p, _) =>
+          s"""{"sidecar":{"path":${DeltaLog.Json.str(p.getFileName.toString)},""" +
+            s""""sizeInBytes":${Files.size(p)},""" +
             s""""modificationTime":${System.currentTimeMillis()}}}"""
         }
-    val manifestUuid = java.util.UUID.randomUUID().toString
     val tmp = Files.createTempFile(logDir, ".v2m-", ".tmp")
     Files.write(tmp, manifest.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, DeltaLog.v2ManifestPath(table, version, manifestUuid),
+    Files.move(tmp, DeltaLog.v2ManifestPath(table, version,
+      java.util.UUID.randomUUID().toString),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val hint = Files.createTempFile(logDir, ".lastckpt-", ".tmp")
-    Files.write(hint,
-      s"""{"version":$version,"size":${manifest.length + rows.length}}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(hint, logDir.resolve("_last_checkpoint"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    manifest.length + adds.length
   }
 
   /** Post-commit hook ([[DeltaLog.commit]]): checkpoint every
@@ -2744,7 +2534,28 @@ object DeltaTable {
     vacuum(table, keep, dryRun)
   }
 
-  /** `dryRun = true` (the public `VACUUM … DRY RUN`): return the data
+  /** Garbage-collect data files that no retained version references:
+    * keep the last `keepVersions` versions readable, drop every data
+    * file only older versions need, and prune the log prefix so time
+    * travel past the horizon fails loudly instead of reading missing
+    * files.
+    *
+    * Protocol shape (matching real Delta's checkpoint design):
+    * committed `N.json` files are IMMUTABLE — the horizon (oldest
+    * retained) version is summarized into the protocol's parquet
+    * checkpoint ([[writeCheckpoint]]: protocol, metaData with table id,
+    * txn ledger, every live add — the file a stock delta reader
+    * replays, and the only checkpoint format), and `_last_checkpoint`
+    * is updated to point at it. Replay ([[DeltaLog.snapshot]]) starts
+    * from the newest checkpoint at or below the target, so the pruned
+    * prefix is never read — crash anywhere in this sequence and the
+    * table stays consistent: checkpoint written but prefix alive ⇒
+    * replay prefers the checkpoint (same state by construction); died
+    * earlier ⇒ plain replay as if vacuum never ran. Returns deleted
+    * data-file paths (table-relative, partitioned layouts walked
+    * recursively).
+    *
+    * `dryRun = true` (the public `VACUUM … DRY RUN`): return the data
     * files the equivalent real vacuum would delete, touching NOTHING —
     * no checkpoint write, no log prune, no deletion. The operator's
     * audit mode: run it before a retention change on a 100 TB table. */
@@ -2783,8 +2594,8 @@ object DeltaTable {
         finally w.close()
       return onDisk.filterNot(referenced).sorted
     }
-    // 1+2. both checkpoint formats + the _last_checkpoint hint for the
-    // horizon (shared with the periodic auto-checkpoint policy)
+    // 1+2. the checkpoint + the _last_checkpoint hint for the horizon
+    // (shared with the periodic auto-checkpoint policy)
     writeCheckpoint(table, horizon)
     // 3. drop the pruned prefix: version files AND superseded
     // checkpoints strictly below the horizon (reads there now fail
@@ -2795,7 +2606,6 @@ object DeltaTable {
       Files.deleteIfExists(DeltaLog.checksumPath(table, v))
     }
     DeltaLog.checkpointVersions(table).filter(_ < horizon).foreach { v =>
-      Files.deleteIfExists(DeltaLog.checkpointPath(table, v))
       Files.deleteIfExists(DeltaLog.parquetCheckpointPath(table, v))
       DeltaLog.multiPartCheckpointFiles(table, v)
         .foreach(f => Files.deleteIfExists(f._1))
@@ -3428,24 +3238,31 @@ object DeltaTable {
     // O(files) stat maps it must embed in the log anyway. Same reader,
     // same renderings, zero data I/O either way.
     val perFile: Seq[(Path, Option[Map[String, String]])] =
-      if (files.size < 8)
-        files.map(p => p -> FooterStats.read(p.toString, conf, statTypes))
-      else if (files.size <= distributedStatsFileFloor(spark)) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, files.size))
-        try files.map { p =>
-          p -> pool.submit(new java.util.concurrent.Callable[
-            Option[Map[String, String]]] {
-            def call(): Option[Map[String, String]] =
-              FooterStats.read(p.toString, conf, statTypes)
-          })
-        }.map { case (p, f) => p -> f.get() }
-        finally pool.shutdown()
+      if (files.size <= distributedStatsFileFloor(spark)) {
+        // one read-option set for every footer (built per file, it
+        // re-reads a dozen keys from `conf` on each open); footer reads
+        // take no codec, so the pool threads can share it
+        val opts = HadoopReadOptions.builder(conf).build()
+        if (files.size < 8)
+          files.map(p => p -> FooterStats.read(p.toString, conf, opts, statTypes))
+        else {
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            math.min(16, files.size))
+          try files.map { p =>
+            p -> pool.submit(new java.util.concurrent.Callable[
+              Option[Map[String, String]]] {
+              def call(): Option[Map[String, String]] =
+                FooterStats.read(p.toString, conf, opts, statTypes)
+            })
+          }.map { case (p, f) => p -> f.get() }
+          finally pool.shutdown()
+        }
       } else {
         import scala.jdk.CollectionConverters._
         // a Hadoop Configuration is not serializable: ship its entries
-        // and rebuild per task (defaults off — the entries are the
-        // session's full resolved view)
+        // and rebuild it, with its read options, once per partition
+        // (defaults off — the entries are the session's full resolved
+        // view)
         val confEntries = conf.iterator().asScala
           .map(e => e.getKey -> e.getValue).toArray
         val st = statTypes
@@ -3456,10 +3273,11 @@ object DeltaTable {
           s"graft-delta: footer stats, ${names.size} staged files")
         try {
           val read = spark.sparkContext.parallelize(names, slices)
-            .map { p =>
+            .mapPartitions { ps =>
               val c = new org.apache.hadoop.conf.Configuration(false)
               confEntries.foreach { case (k, v) => c.set(k, v) }
-              p -> FooterStats.read(p, c, st)
+              val opts = HadoopReadOptions.builder(c).build()
+              ps.map(p => p -> FooterStats.read(p, c, opts, st))
             }.collect()
           read.map { case (p, s) => Paths.get(p) -> s }.toSeq
         } finally spark.sparkContext.setJobDescription(null)
@@ -3629,13 +3447,15 @@ private[sources] object FooterStats extends Serializable {
     * Returns None only when the footer itself cannot be read (the
     * caller then falls back to stagedRowCount semantics). */
   def read(p: String, conf: org.apache.hadoop.conf.Configuration,
+      options: org.apache.parquet.ParquetReadOptions,
       statTypes: Map[String, DataType]): Option[Map[String, String]] =
     try {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
+      // the Hadoop input file keeps `.crc` verification of staged files
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(
-          java.nio.file.Paths.get(p).toUri), conf))
+          java.nio.file.Paths.get(p).toUri), conf), options)
       try {
         val blocks = r.getFooter.getBlocks.asScala.toSeq
         val n = blocks.map(_.getRowCount).sum

@@ -114,6 +114,29 @@ class DedupSpec extends SparkSpec {
     assert(pairs.head._2 === 1.0)
   }
 
+  test("q31 keeps a J = 5000/10001 pair that round(J, 4) lifts to 0.5000") {
+    // |A| = 7500, |B| = 7501 shingles, overlap 5000: J ≈ 0.49995, which
+    // the final round(J, 4) >= 0.5 filter and the oracle both admit.
+    // In rarity order each doc's private shingles (df 1) come first, so
+    // the first shared one sits at A rank 2501, B rank 2502: its
+    // positional bound is 1 + min(4999, 4999) = 5000 overlap — below
+    // the 5000.33 a prune at τ demands, above the 4999.67 at τ − 1e-4.
+    val shared = (0 until 5002).map(i => s"c$i")
+    val docA = (0 until 2500).map(i => s"a$i") ++ shared // 7500 3-grams
+    val docB = (0 until 2501).map(i => s"b$i") ++ shared // 7501 3-grams
+    val dir = java.nio.file.Files.createTempDirectory("graft-q31-edge").toString
+    Seq(docA, docB).zipWithIndex.map { case (ws, i) =>
+      val text = ws.mkString(" ")
+      (i.toLong + 1, text, "en", "src", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val pairs = DedupOps.q31NgramJaccard(spark, dir).collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getAs[Number]("inter").longValue,
+        r.getAs[Number]("n_a").longValue, r.getAs[Number]("n_b").longValue,
+        r.getDouble(5)))
+    assert(pairs.toSeq === Seq((1L, 2L, 5000L, 7500L, 7501L, 0.5)))
+  }
+
   test("minhash LSH finds the same high-jaccard pairs as the exact pass") {
     val exact = DedupOps.q31NgramJaccard(spark, corpusDir).collect()
       .filter(_.getDouble(5) >= 0.9).map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -24,6 +24,16 @@ class DeltaSpec extends SparkSpec {
   private def employee1 = Seq((4, "David", 70000L, "2024-01-18"))
     .toDF("id", "name", "salary", "date")
 
+  /** `*.checkpoint.json` side files in `t`'s log: the parquet
+    * checkpoint is the only format, so there must be none. */
+  private def jsonCheckpoints(t: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(DeltaLog.logDir(t))
+    try s.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".checkpoint.json")).toSeq
+    finally s.close()
+  }
+
   test("overwrite then append: count 3 -> 4 (reference sequence)") {
     val t = freshTable()
     DeltaTable.write(employees3, t, "overwrite")
@@ -351,7 +361,8 @@ class DeltaSpec extends SparkSpec {
     // checkpoint, with _last_checkpoint pointing at it (Delta's shape)
     assert(java.util.Arrays.equals(Files.readAllBytes(v1File), v1Content),
       "vacuum must not rewrite a committed version file")
-    assert(Files.exists(logDir.resolve("%020d.checkpoint.json".format(1L))))
+    assert(Files.exists(DeltaLog.parquetCheckpointPath(t, 1L)))
+    assert(jsonCheckpoints(t).isEmpty)
     assert(new String(Files.readAllBytes(logDir.resolve("_last_checkpoint")))
       .startsWith("""{"version":1,"size":"""))
     // simulate a crash between checkpoint write and prefix delete: the
@@ -384,9 +395,45 @@ class DeltaSpec extends SparkSpec {
       .select("metaData.id", "metaData.format.provider").collect()
     assert(meta.length === 1 && meta(0).getString(0) === DeltaLog.tableId(t))
     assert(meta(0).getString(1) === "parquet")
-    // delete the JSON side checkpoint: replay must reconstruct the
+    // its schema is the one Spark's writer gives delta-spark's layout
+    import org.apache.spark.sql.types._
+    val str = StringType
+    val strMap = MapType(str, str)
+    val strList = ArrayType(str)
+    assert(ck.schema === StructType(Seq(
+      StructField("txn", StructType(Seq(
+        StructField("appId", str), StructField("version", LongType)))),
+      StructField("add", StructType(Seq(
+        StructField("path", str), StructField("partitionValues", strMap),
+        StructField("size", LongType), StructField("modificationTime", LongType),
+        StructField("dataChange", BooleanType), StructField("stats", str),
+        StructField("deletionVector", StructType(Seq(
+          StructField("storageType", str), StructField("pathOrInlineDv", str),
+          StructField("sizeInBytes", LongType),
+          StructField("cardinality", LongType)))),
+        StructField("baseRowId", LongType),
+        StructField("defaultRowCommitVersion", LongType)))),
+      StructField("domainMetadata", StructType(Seq(
+        StructField("domain", str), StructField("configuration", str),
+        StructField("removed", BooleanType)))),
+      StructField("remove", StructType(Seq(
+        StructField("path", str), StructField("deletionTimestamp", LongType),
+        StructField("dataChange", BooleanType)))),
+      StructField("metaData", StructType(Seq(
+        StructField("id", str),
+        StructField("format", StructType(Seq(
+          StructField("provider", str), StructField("options", strMap)))),
+        StructField("schemaString", str),
+        StructField("partitionColumns", strList),
+        StructField("configuration", strMap)))),
+      StructField("protocol", StructType(Seq(
+        StructField("minReaderVersion", IntegerType),
+        StructField("minWriterVersion", IntegerType),
+        StructField("readerFeatures", strList),
+        StructField("writerFeatures", strList)))))))
+    // no JSON side checkpoint exists: replay must reconstruct the
     // snapshot from the parquet checkpoint ALONE
-    assert(Files.deleteIfExists(DeltaLog.checkpointPath(t, 3L)))
+    assert(jsonCheckpoints(t).isEmpty)
     val rows = DeltaTable.read(spark, t)
       .select("id", "name").collect().map(_.getInt(0)).sorted
     assert(rows.toSeq === Seq(1, 2, 3))
@@ -939,13 +986,14 @@ class DeltaSpec extends SparkSpec {
     // ordinary appends inherit the upgraded protocol via replay
     DeltaTable.write(employee1, t, "append")
     assert(DeltaLog.snapshot(t).minWriterVersion === 3)
-    // vacuum to a checkpoint, then delete the JSON side file so replay
-    // must come from the PROTOCOL parquet checkpoint alone: protocol
-    // and configuration (the constraints) both survive
+    // vacuum to a checkpoint; with no JSON side file, replay comes from
+    // the PROTOCOL parquet checkpoint alone: protocol and configuration
+    // (the constraints) both survive
     DeltaTable.write(employees3, t, "overwrite")
     DeltaTable.vacuum(t, 1)
     val horizon = DeltaLog.checkpointVersions(t).max
-    Files.delete(DeltaLog.checkpointPath(t, horizon))
+    assert(Files.exists(DeltaLog.parquetCheckpointPath(t, horizon)))
+    assert(jsonCheckpoints(t).isEmpty)
     val s2 = DeltaLog.snapshot(t)
     assert(s2.minReaderVersion === 1 && s2.minWriterVersion === 3)
     assert(s2.checkConstraints.map(_._1).toSet ===
@@ -1755,13 +1803,12 @@ class DeltaSpec extends SparkSpec {
     for (i <- 1 to 23)                                           // v1..v23
       DeltaTable.write(Seq((100 + i, s"W$i", 1000L * i, "2024-02-01"))
         .toDF("id", "name", "salary", "date"), t, "append")
-    // checkpoints landed at the interval versions, in BOTH formats,
-    // and the hint points at the newest
+    // parquet checkpoints landed at the interval versions, no JSON
+    // side files, and the hint points at the newest
     assert(DeltaLog.checkpointVersions(t).toSet === Set(10L, 20L))
-    for (v <- Seq(10L, 20L)) {
-      assert(Files.exists(DeltaLog.checkpointPath(t, v)))
+    for (v <- Seq(10L, 20L))
       assert(Files.exists(DeltaLog.parquetCheckpointPath(t, v)))
-    }
+    assert(jsonCheckpoints(t).isEmpty)
     val hint = new String(Files.readAllBytes(
       DeltaLog.logDir(t).resolve("_last_checkpoint")), "UTF-8")
     assert(hint.contains("\"version\":20"))
@@ -3084,9 +3131,9 @@ class DeltaSpec extends SparkSpec {
         .!(ProcessLogger(s => out.append(s).append('\n'),
           s => out.append(s).append('\n')))
       assert(code === 0, s"validator failed a healthy multi-part table:\n$out")
-      // parts-only replay: drop the JSON side file — the snapshot must
+      // parts-only replay: with no JSON side file, the snapshot must
       // reconstruct from the parquet parts (22 rows = 3 + 19 appends)
-      Files.delete(DeltaLog.checkpointPath(t, horizon))
+      assert(jsonCheckpoints(t).isEmpty)
       assert(DeltaTable.read(spark, t).count() === 22)
       // an INCOMPLETE set is not a checkpoint: with part 2 gone and
       // the prefix pruned, replay refuses instead of fabricating state
@@ -3095,6 +3142,69 @@ class DeltaSpec extends SparkSpec {
       assert(e.getMessage.contains("no preceding checkpoint"),
         s"unexpected failure mode: ${e.getMessage}")
     } finally spark.conf.unset("spark.graft.checkpoint.maxActionsPerFile")
+  }
+
+  test("checkpoint I/O runs no Spark job: classic, multi-part (cap 8) " +
+      "and v2 checkpoint writes and their replays") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // each probe tags its jobs through a local property; a sentinel job
+    // flushes the asynchronous listener bus before the count is read
+    val sc = spark.sparkContext
+    val tag = "graft.spec.probe"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(tag))).getOrElse(""))
+    }
+    var probes = 0
+    def jobsOf(body: => Unit): Int = {
+      probes += 1
+      val (mine, sentinel) = (s"probe-$probes", s"sentinel-$probes")
+      sc.setLocalProperty(tag, mine)
+      try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(tag, sentinel)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(sentinel), "listener bus never delivered the sentinel")
+      started.asScala.count(_ == mine)
+    }
+    def check(shape: String, v2: Boolean, cap: Option[Int])(
+        written: String => Boolean): Unit = {
+      val t = freshTable()
+      cap.foreach(c =>
+        spark.conf.set("spark.graft.checkpoint.maxActionsPerFile", c.toString))
+      try {
+        def append(id: Long): Unit =
+          DeltaTable.write(Seq(id).toDF("id"), t, "append")
+        DeltaTable.write(spark.range(0, 8, 1, 8).toDF("id"), t, "overwrite") // v0
+        DeltaTable.setTableProperty(t, "delta.checkpointInterval", "4")      // v1
+        if (v2) DeltaTable.enableV2Checkpoints(t) else append(8L)             // v2
+        val plain = jobsOf(append(9L))                                         // v3
+        val crossing = jobsOf(append(10L))                      // v4: checkpoints
+        assert(written(t), s"$shape: no checkpoint at v4")
+        assert(crossing === plain, s"$shape: the checkpoint write ran " +
+          s"${crossing - plain} Spark job(s)")
+        var snap: DeltaLog.Snapshot = null
+        assert(jobsOf { snap = DeltaLog.snapshot(t, Some(4L)) } === 0,
+          s"$shape: replay from the checkpoint ran Spark jobs")
+        assert(snap.files.length === (if (v2) 10 else 11), shape)
+      } finally spark.conf.unset("spark.graft.checkpoint.maxActionsPerFile")
+      runValidator(t)
+    }
+    sc.addSparkListener(listener)
+    try {
+      check("classic", v2 = false, cap = None)(t =>
+        Files.exists(DeltaLog.parquetCheckpointPath(t, 4L)))
+      check("multi-part", v2 = false, cap = Some(8))(t =>
+        DeltaLog.completeMultiPart(t, 4L).exists(_.length > 1))
+      check("v2", v2 = true, cap = None)(t =>
+        DeltaLog.v2Manifest(t, 4L).isDefined)
+    } finally sc.removeSparkListener(listener)
   }
 
   // -- in-commit timestamps --------------------------------------------
@@ -3341,7 +3451,7 @@ class DeltaSpec extends SparkSpec {
       .toDF("id", "name", "salary", "date").coalesce(1), t, "append") // v3
     DeltaTable.vacuum(t, 1) // checkpoint at v3 (v2 shape), prune prefix
     assert(DeltaLog.v2Manifest(t, 3L).isDefined, "no v2 manifest at v3")
-    assert(!java.nio.file.Files.exists(DeltaLog.checkpointPath(t, 3L)) &&
+    assert(jsonCheckpoints(t).isEmpty &&
       !java.nio.file.Files.exists(DeltaLog.parquetCheckpointPath(t, 3L)),
       "the v2 policy must replace the classic checkpoint shape")
     val refs = DeltaLog.v2SidecarRefs(DeltaLog.v2Manifest(t, 3L).get)
@@ -3425,7 +3535,7 @@ class DeltaSpec extends SparkSpec {
       .withColumn("id", lit(8)), t, "append")                    // v6
     assert(DeltaLog.v2Manifest(t, 6L).isDefined,
       "auto-checkpoint under the v2 policy must write a v2 manifest")
-    assert(!java.nio.file.Files.exists(DeltaLog.checkpointPath(t, 6L)) &&
+    assert(jsonCheckpoints(t).isEmpty &&
       !java.nio.file.Files.exists(DeltaLog.parquetCheckpointPath(t, 6L)),
       "the v2 policy must not write classic checkpoint files")
     assert(DeltaTable.read(spark, t).count() === 4)
