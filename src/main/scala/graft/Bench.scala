@@ -69,22 +69,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Codegen cache sized to the surface: the default 100 entries
-      // thrash across 140+ queries x ~30-150 generated classes each
-      // (measured: q109's retime re-compiled 26 of its 30 classes
-      // after the cache churned through the delta-lifecycle queries),
-      // so every retime re-paid janino instead of measuring the plan.
-      // A long-lived production session serving repeated plans runs
-      // cache-warm; 10k entries makes the retime pass measure that.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: pay one-time JVM/codegen/filesystem init outside the
     // timed region (a cold first query otherwise books ~30 s of

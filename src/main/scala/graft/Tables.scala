@@ -1,6 +1,8 @@
 package graft
 
+import graft.operators.{StagedCache, StagedIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Path-addressed table loading, mirroring the reference's catalog-free
   * model: every table is a parquet directory/file addressed by path
@@ -29,20 +31,14 @@ object Tables {
     * (scan, pushdown, pruning) is otherwise IDENTICAL: .schema(s) on
     * a parquet read changes where the schema comes from, not the
     * relation. */
-  // keyed by PATH with the content fingerprint in the entry (round-17
-  // ADVICE): a regenerated fixture overwrites its entry instead of
-  // stranding the old fingerprint's forever
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]
+  private val schemas = new StagedIndex[StructType]("schema", _ => Nil)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
     else {
       val path = s"$dir/$name.parquet"
-      val fp = graft.operators.StagedCache.fingerprint(
-        java.nio.file.Paths.get(path))
-      val schema = graft.operators.StagedCache.memoByPath(
-        schemaCache, path, fp, () => spark.read.parquet(path).schema)
+      val schema = schemas.get(StagedCache.source(dir, name))(
+        spark.read.parquet(path).schema)
       normalizeTimestamps(spark.read.schema(schema).parquet(path))
     }
 
@@ -58,7 +54,7 @@ object Tables {
     * this is the boundary that makes that class of breakage
     * structurally impossible (TimestampEncodingSpec is the canary). */
   private def normalizeTimestamps(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.TimestampType
     // The NTZ→LTZ cast preserves instants ONLY because the session is
     // pinned UTC (Bench/Verify/specs all do); from a non-UTC session it
     // would silently shift every timestamp — fail loudly instead.
@@ -95,31 +91,11 @@ object Tables {
     */
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val fp = graft.operators.StagedCache.fingerprint(
-      java.nio.file.Paths.get(path))
-    // the memoized-schema fast path serves the two MODERN encodings
-    // (micros-NTZ / micros-LTZ) without the legacy-conf window or a
-    // fresh inference; the nanos-as-long encoding keeps the full
-    // conf-scoped inference per call (the legacy conf gates the READ
-    // of TIMESTAMP(NANOS), not just inference, so it cannot ride an
-    // explicit schema), which only ever costs on pre-round-7 fixtures
-    val cachedEntry = schemaCache.get(path)
-    val cached = if (cachedEntry != null && cachedEntry._1 == fp)
-      cachedEntry._2 else null
-    if (cached != null &&
-        cached("ts").dataType != org.apache.spark.sql.types.LongType) {
-      val df = spark.read.schema(cached).parquet(path)
-      return df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          normalizeTimestamps(df)
-        case _ => df
-      }
-    }
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     // synchronized: the set/restore window mutates session-global conf;
     // two concurrent loads on one session could otherwise race the
     // restore and leak the legacy conf to an unrelated read
-    val df = Tables.synchronized {
+    def legacyRead(): DataFrame = Tables.synchronized {
       val before = spark.conf.getOption(key)
       spark.conf.set(key, "true")
       try spark.read.parquet(path)
@@ -128,15 +104,22 @@ object Tables {
         case None => spark.conf.unset(key)
       }
     }
-    if (df.schema("ts").dataType != org.apache.spark.sql.types.LongType)
-      schemaCache.put(path, (fp, df.schema))
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        normalizeTimestamps(df)
-      case _ => df
+    // the memoized schema serves the two MODERN encodings (micros-NTZ /
+    // micros-LTZ) without the legacy-conf window or a fresh inference;
+    // the nanos-as-long encoding keeps the full conf-scoped read per
+    // call (the legacy conf gates the READ of TIMESTAMP(NANOS), not
+    // just inference, so it cannot ride an explicit schema), which only
+    // ever costs on pre-round-7 fixtures
+    val schema = schemas.get(StagedCache.source(dir, "events"))(
+      legacyRead().schema)
+    schema("ts").dataType match {
+      case LongType =>
+        legacyRead().withColumn("ts",
+          org.apache.spark.sql.functions.timestamp_micros(
+            org.apache.spark.sql.functions.expr("ts div 1000")))
+      case TimestampNTZType =>
+        normalizeTimestamps(spark.read.schema(schema).parquet(path))
+      case _ => spark.read.schema(schema).parquet(path)
     }
   }
 
@@ -148,16 +131,12 @@ object Tables {
     * pay a full count() job PER INVOCATION for a number that is
     * constant per corpus state (round 17). Falls back to a Spark count
     * if a footer cannot be read. */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.lang.Long)]
+  private val rowCounts = new StagedIndex[Long]("row-count", _ => Nil)
 
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val path = s"$dir/$name.parquet"
-    val p = java.nio.file.Paths.get(path)
-    val fp = graft.operators.StagedCache.fingerprint(p)
-    graft.operators.StagedCache.memoByPath(countCache, path, fp,
-      () => java.lang.Long.valueOf(footerRowCount(spark, p)
-        .getOrElse(load(spark, dir, name).count()))).longValue
+    val p = StagedCache.source(dir, name)
+    rowCounts.get(p)(footerRowCount(spark, p)
+      .getOrElse(load(spark, dir, name).count()))
   }
 
   private def footerRowCount(spark: SparkSession,

@@ -98,8 +98,8 @@ object DedupOps {
     * measured q31 37s → 106s at sf0.1 (same regression as round 1's
     * repartition-before-the-hash-stages). The narrow single-file scan
     * is not the bottleneck. */
-  /** The staged index is MEMOIZED per (session, corpus path, gram
-    * size, corpus mtime): q31, q32 and q34 all consume the same
+  /** The staged index is MEMOIZED per (corpus path, gram size,
+    * corpus fingerprint): q31, q32 and q34 all consume the same
     * 3-gram relation, q36 the 5-gram one, and a production pipeline
     * builds a corpus index once and queries it many times —
     * re-deriving it per query would triple the dominant cost for
@@ -109,40 +109,21 @@ object DedupOps {
     * rebuilding. A corpus mtime change that was NOT registered
     * incrementally invalidates and full-rebuilds; a purged/missing
     * staging dir rebuilds. */
-  private val shingleIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[String], Long)] // state, dirs, nDocs
+  private val shingleIndex = new StagedIndex[StagedParts]("shingles", _.dirs)
 
-  /** Staged-arrays row counts, keyed by corpus path with the index
-    * state in the entry (bounded across regenerations, round-17
-    * ADVICE) — see prefixCandidates. */
-  private val arraysCountCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, java.lang.Long)]
-
-  /** (corpus identity key, corpus state key) — state adds the mtime. */
-  private def shingleIndexKeys(spark: SparkSession, dir: String,
-      gramN: Int): (String, String) = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":" +
-      src.toAbsolutePath + s":n=$gramN"
-    (pathKey, pathKey + ":" +
-      StagedCache.fingerprint(src))
-  }
+  /** Row counts of staged gram relations (the 3-gram arrays, q122's
+    * eval grams) — see prefixCandidates. */
+  private val gramRows = new StagedIndex[Long]("gram-rows", _ => Nil)
 
   private[graft] def stagedShingleArrays(spark: SparkSession, dir: String,
       gramN: Int = 3): DataFrame = {
-    val (pathKey, stateKey) = shingleIndexKeys(spark, dir, gramN)
-    def build(): (String, Seq[String], Long) = {
+    val e = shingleIndex.get(StagedCache.source(dir, "documents"), gramN) {
       val t = graft.Scratch.dir("graft-shingles").resolve("sh").toString
       shingleArrays(Tables.load(spark, dir, "documents"), gramN)
         .write.parquet(t)
-      (stateKey, Seq(t), Tables.load(spark, dir, "documents").count())
+      StagedParts(Nil, Seq(t), Tables.load(spark, dir, "documents").count())
     }
-    val entry = StagedCache.getOrBuild[(String, Seq[String], Long)](
-      shingleIndexCache, pathKey,
-      cur => cur._1 == stateKey && cur._2.forall(d =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(d))),
-      () => build())
-    StagedCache.readStaged(spark, entry._2: _*)
+    StagedCache.readStaged(spark, e.dirs: _*)
   }
 
   /** Incremental index refresh — the append workflow a 100 TB corpus
@@ -155,35 +136,18 @@ object DedupOps {
     * combined corpus.
     *
     * `newDocs` must be exactly the rows appended since the index's
-    * registered state; every registration is RECONCILED by row count
-    * (registered + batch == corpus), and any mismatch — a multi-batch
-    * gap, a same-mtime change, purged staging — clears the entry so
-    * the next consumer full-rebuilds: never a silent drop. No-op when
-    * nothing was staged yet or the index is already current for a
-    * count-consistent corpus. */
+    * registered state; [[StagedIndex.extend]] reconciles every
+    * registration by row count and clears the entry on any mismatch.
+    * No-op when nothing was staged yet or the index is already current
+    * for a count-consistent corpus. */
   def refreshShingleIndex(spark: SparkSession, dir: String,
-      newDocs: DataFrame, gramN: Int = 3): Unit = {
-    val (pathKey, stateKey) = shingleIndexKeys(spark, dir, gramN)
-    shingleIndexCache.compute(pathKey, (_, cur) =>
-      if (cur == null) cur
-      else if (!cur._2.forall(d =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(d))))
-        null // staging purged: clear, next consumer full-rebuilds
-      else {
-        val curN = Tables.rowCount(spark, dir, "documents")
-        if (cur._1 == stateKey) {
-          if (cur._3 == curN) cur // replay / already current
-          else null // corpus changed without an mtime advance: rebuild
-        } else if (cur._3 + newDocs.count() != curN) {
-          null // unregistered appends beyond this batch: rebuild
-        } else {
-          val d = graft.Scratch.dir("graft-shingles").resolve("delta").toString
-          shingleArrays(newDocs, gramN).write.parquet(d)
-          (stateKey, cur._2 :+ d, curN)
-        }
-      })
-    ()
-  }
+      newDocs: DataFrame, gramN: Int = 3): Unit =
+    shingleIndex.extend(StagedCache.source(dir, "documents"), gramN)(
+        Tables.rowCount(spark, dir, "documents"), newDocs.count()) { _ =>
+      val d = graft.Scratch.dir("graft-shingles").resolve("delta").toString
+      shingleArrays(newDocs, gramN).write.parquet(d)
+      Some(d)
+    }
 
   /** Exploded (doc_id, n, shingle) rows off the staged arrays — a
     * narrow generator over the parquet scan, no shuffle. */
@@ -339,11 +303,7 @@ object DedupOps {
     * column); per-source totals broadcast back (|sources| rows). The
     * overlap coefficient divides exact longs and rounds to 4, so the
     * whole matrix is hash-verified. */
-  private val q152Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)] // stateKey, stagedDir
-  /** Build counter for the staged (fp, source) relation — DedupSpec
-    * asserts a repeat invocation stages nothing (cache hit). */
-  private[graft] val q152Stagings = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val q152Index = new StagedIndex[String]("q152-fp", Seq(_))
 
   val q152SourceOverlap: Q = (spark, dir) => {
     val docs = Tables.load(spark, dir, "documents")
@@ -361,31 +321,22 @@ object DedupOps {
     // union + md5 + distinct per reference — the round-16 DevExplain
     // showed 24 parquet scans / 28 hash aggregates. Staged, the
     // corpus is read and fingerprinted exactly once at any scale —
-    // and since round 17 MEMOIZED per (session, corpus fingerprint)
-    // via StagedCache like every other index (round-16 verdict #6):
+    // and since round 17 MEMOIZED per corpus fingerprint like every
+    // other index (round-16 verdict #6):
     // a provenance report is re-run against the same corpus many
     // times, and each re-run was re-fingerprinting the whole corpus
     // into a fresh Scratch dir. The synthetic amplification (%3
     // recrawl, %5 mirror) is code-fixed, so the corpus fingerprint
     // alone keys the cache; DedupSpec pins the second-call hit.
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":q152fp:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" + StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      q152Cache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => {
-        val dPath = graft.Scratch.dir("graft-q152").resolve("d").toString
-        corpus
-          .select(md5(normText(col("text"))).as("fp"), col("source"))
-          .distinct()
-          .write.parquet(dPath)
-        q152Stagings.incrementAndGet()
-        (stateKey, dPath)
-      })
-    val d = StagedCache.readStaged(spark, entry._2)
+    val staged = q152Index.get(StagedCache.source(dir, "documents")) {
+      val dPath = graft.Scratch.dir("graft-q152").resolve("d").toString
+      corpus
+        .select(md5(normText(col("text"))).as("fp"), col("source"))
+        .distinct()
+        .write.parquet(dPath)
+      dPath
+    }
+    val d = StagedCache.readStaged(spark, staged)
     val counts = d.groupBy("source").agg(count(lit(1)).as("n_fp"))
     d.as("a")
       .join(d.as("b"),
@@ -860,40 +811,22 @@ object DedupOps {
     * (the §2.3 shape: group decisions travel as keys, payloads never
     * move). Keeper-min over a staged groupBy is bit-identical to the
     * window-min: same groups, same MIN. */
-  private val q137KeeperCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]
-  private val q137ContamCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]
+  private val q137KeeperIndex = new StagedIndex[String]("q137-keepers", Seq(_))
+  private val q137ContamIndex = new StagedIndex[String]("q137-contam", Seq(_))
 
-  private def q137Keepers(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":q137k:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" + StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      q137KeeperCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => {
+  private def q137Keepers(spark: SparkSession, dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      q137KeeperIndex.get(StagedCache.source(dir, "documents")) {
         val t = graft.Scratch.dir("graft-q137k").resolve("k").toString
         q137Corpus(spark, dir)
           .groupBy("fingerprint").agg(min("doc_id").as("keeper_id"))
           .write.parquet(t)
-        (stateKey, t)
+        t
       })
-    StagedCache.readStaged(spark, entry._2)
-  }
 
-  private def q137Contam(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":q137c:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" + StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      q137ContamCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => {
+  private def q137Contam(spark: SparkSession, dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      q137ContamIndex.get(StagedCache.source(dir, "documents")) {
         val t = graft.Scratch.dir("graft-q137c").resolve("c").toString
         val g = stagedDeconGrams(spark, dir)
         val ev = g.filter(col("source") === "src5")
@@ -902,10 +835,8 @@ object DedupOps {
           .join(broadcast(ev), "shingle")
           .select("doc_id").distinct()
           .write.parquet(t)
-        (stateKey, t)
+        t
       })
-    StagedCache.readStaged(spark, entry._2)
-  }
 
   private[graft] def q137Labeled(spark: SparkSession, dir: String,
       withModelGate: Boolean = true): DataFrame = {
@@ -1188,23 +1119,17 @@ object DedupOps {
   private[graft] val SkewDfCapFloor = 50L
   private def skewDfCap(nDocs: Long): Long = math.max(SkewDfCapFloor, nDocs / 10)
 
-  /** Staged prefix-relation dirs keyed by (corpus path, tau, cap) with
-    * the content fingerprint in the entry (round-17 ADVICE: bounded
-    * across fixture regenerations). */
-  private val prefixCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
+  /** Staged prefix-relation dirs, params (tau, cap). */
+  private val prefixIndex = new StagedIndex[String]("prefix", Seq(_))
 
   /** The skew df cap for `dir`'s 3-gram index — the arrays row count
     * (docs with >=1 shingle) sizes it; a pure function of the staged
     * index state, memoized per corpus path (round 17). NOT
     * Tables.rowCount: empty docs shingle to nothing, so this count can
     * be below the documents row count. */
-  private def defaultDfCap(spark: SparkSession, dir: String): Long = {
-    val (pathKey, stateKey) = shingleIndexKeys(spark, dir, 3)
-    skewDfCap(StagedCache.memoByPath(arraysCountCache, pathKey, stateKey,
-      () => java.lang.Long.valueOf(
-        stagedShingleArrays(spark, dir).count())).longValue)
-  }
+  private def defaultDfCap(spark: SparkSession, dir: String): Long =
+    skewDfCap(gramRows.get(StagedCache.source(dir, "documents"), "arrays")(
+      stagedShingleArrays(spark, dir).count()))
 
   /** The STAGED rarity-ordered prefix relation (doc_id, n, shingle,
     * pos): each doc's first n - ⌈lo·n⌉ + 1 shingles (lo =
@@ -1228,7 +1153,7 @@ object DedupOps {
     * shares a boilerplate header.
     *
     * Like the shingle arrays it derives from, the prefix relation is
-    * MEMOIZED per (session, corpus, mtime, tau, cap): it is a pure
+    * MEMOIZED per (corpus, fingerprint, tau, cap): it is a pure
     * function of those keys, and the freq shuffle + rarity window are
     * q31's second-largest cost after the index build itself. */
   private[graft] def stagedPrefix(spark: SparkSession, dir: String,
@@ -1239,32 +1164,17 @@ object DedupOps {
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val byRarity = Window.partitionBy("doc_id")
       .orderBy(col("df"), col("shingle"))
-    val prefixKey = System.identityHashCode(spark) + ":" +
-      java.nio.file.Paths.get(s"$dir/documents.parquet").toAbsolutePath +
-      s":$tau:$cap"
-    val prefixFp = StagedCache.fingerprint(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    def buildPrefix(): String = {
-      val t = graft.Scratch.dir("graft-prefix").resolve("p").toString
-      sh.join(freq, "shingle")
-        .withColumn("pos", row_number().over(byRarity))
-        .filter(col("pos") <= col("n") - ceil(col("n") * pruneFloor(tau)) + 1 &&
-          col("df") <= cap)
-        .select("doc_id", "n", "shingle", "pos")
-        .write.parquet(t)
-      t
-    }
-    val prefixEntry = prefixCache.get(prefixKey)
-    val prefixDir =
-      if (prefixEntry != null && prefixEntry._1 == prefixFp &&
-          java.nio.file.Files.exists(
-            java.nio.file.Paths.get(prefixEntry._2))) prefixEntry._2
-      else {
-        val d = buildPrefix()
-        prefixCache.put(prefixKey, (prefixFp, d))
-        d
-      }
-    StagedCache.readStaged(spark, prefixDir)
+    StagedCache.readStaged(spark,
+      prefixIndex.get(StagedCache.source(dir, "documents"), (tau, cap)) {
+        val t = graft.Scratch.dir("graft-prefix").resolve("p").toString
+        sh.join(freq, "shingle")
+          .withColumn("pos", row_number().over(byRarity))
+          .filter(col("pos") <= col("n") - ceil(col("n") * pruneFloor(tau)) + 1 &&
+            col("df") <= cap)
+          .select("doc_id", "n", "shingle", "pos")
+          .write.parquet(t)
+        t
+      })
   }
 
   /** Prefix-filtered candidate pairs (doc_a, doc_b) for [[q31NgramJaccard]].
@@ -1538,27 +1448,16 @@ object DedupOps {
     * Oracle: DuckDB recursive CTE computes min-reachable-id per node
     * over the identical confirmed-pair graph. */
   /** The converged cluster-label relation (id, label) STAGED and
-    * MEMOIZED per (session, corpus, mtime) like the shingle and ANN
+    * MEMOIZED per corpus fingerprint like the shingle and ANN
     * indexes (round 11): cluster resolution is an index a pipeline
     * builds once and consults many times — q34 serves the labels,
     * q117 joins them against quality. */
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)] // stateKey, labelsDir
+  private val clusterIndex = new StagedIndex[String]("cc-labels", Seq(_))
 
   private[graft] def stagedClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark).toString + ":cc:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" +
-      StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      clusterCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => (stateKey, buildClusterLabels(spark, dir)))
-    StagedCache.readStaged(spark, entry._2)
-  }
+      dir: String): DataFrame =
+    StagedCache.readStaged(spark, clusterIndex.get(
+      StagedCache.source(dir, "documents"))(buildClusterLabels(spark, dir)))
 
   /** Pointer-doubling label propagation over the confirmed-pair graph
     * (the q34 loop); returns the staged dir of the converged (id,
@@ -1582,14 +1481,6 @@ object DedupOps {
     * tolerated — the staged write keeps its schema and the loop
     * converges to an empty label relation (DegenerateDocsSpec pins a
     * zero-pair corpus end-to-end through q140). */
-  private val CcDebug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-  @inline private def ccTimed[A](what: => String)(f: => A): A =
-    if (!CcDebug) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[cc-prof] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** `alreadyStaged`: the caller guarantees `pairs0` is a plain scan
     * of an already-materialized relation (e.g. it just wrote it to
     * scratch parquet), so the kernel's own staging pass — which exists
@@ -1611,8 +1502,7 @@ object DedupOps {
       else {
         val pairsDir = graft.Scratch.dir(s"graft-$tag-pairs")
           .resolve("p").toString
-        ccTimed(s"$tag pairs-stage") {
-          pairs0.toDF("doc_a", "doc_b").write.parquet(pairsDir) }
+        pairs0.toDF("doc_a", "doc_b").write.parquet(pairsDir)
         spark.read.schema(pairsSchema).parquet(pairsDir)
       }
     // the symmetrized edge view stays UNMATERIALIZED: each per-round
@@ -1630,11 +1520,10 @@ object DedupOps {
     // ahead, which at log-diameter round counts is a whole staged
     // round saved (round 17; labels stay node ids, so the
     // pointer-doubling self-join below is unchanged)
-    ccTimed(s"$tag seed-stage") {
-      edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
-        .select(col("src").as("id"),
-          least(col("src"), col("mn")).as("label"))
-        .write.parquet(labelsDir) }
+    edges.groupBy(col("src")).agg(min(col("dst")).as("mn"))
+      .select(col("src").as("id"),
+        least(col("src"), col("mn")).as("label"))
+      .write.parquet(labelsDir)
     val idType = pairsSchema.head.dataType
     val labelsSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idType),
@@ -1668,11 +1557,10 @@ object DedupOps {
       // staged file and paid one full job of fixed overhead per round
       // (round 17: 0.06-0.12 s each at fixture scale)
       val obs = org.apache.spark.sql.Observation(s"cc-$tag-$iter")
-      ccTimed(s"$tag round-$iter write") {
-        next.observe(obs, org.apache.spark.sql.functions.sum(
-            when(col("label") < col("prev_label"), 1L).otherwise(0L))
-          .as("changed"))
-          .write.parquet(nextDir) }
+      next.observe(obs, org.apache.spark.sql.functions.sum(
+          when(col("label") < col("prev_label"), 1L).otherwise(0L))
+        .as("changed"))
+        .write.parquet(nextDir)
       // BOUNDED wait (round-17 ADVICE): `Observation.get` blocks
       // forever, so a dropped observed-metrics event (the listener bus
       // sheds under load) would hang the loop — a failure mode the old
@@ -1951,34 +1839,27 @@ object DedupOps {
     * come off one hash agg. */
   /** q36's gram relation carries `source` beside each shingle (the
     * eval/train split key a plain array index lacks), so it stages its
-    * own shape — but through the SAME memo mechanism and key structure
-    * (session, corpus path, gram size, mtime) as the array index:
-    * repeated q36 invocations in a session do no gram write, exactly
-    * like the shingle/k-means/SQ8 indexes (DedupSpec pins it). */
-  private def stagedDeconGrams(spark: SparkSession, dir: String): DataFrame = {
-    val (pathKey0, stateKey0) = shingleIndexKeys(spark, dir, 5)
-    val (pathKey, stateKey) = (pathKey0 + ":src", stateKey0 + ":src")
-    def build(): (String, Seq[String], Long) = {
-      graft.functions.GraftFunctions.register(spark)
-      val t = graft.Scratch.dir("graft-decon").resolve("g").toString
-      // native 5-gram shingler (already distinct per doc) exploded to
-      // rows — one narrow generator off the scan, no window shuffle;
-      // repartition for build parallelism (feeds a staged write, so
-      // the round-1 "repartition starves AQE" regression doesn't apply)
-      Tables.load(spark, dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("source"),
-          explode(expr("graft_shingles(text, 5)")).as("shingle"))
-        .write.parquet(t)
-      (stateKey, Seq(t), Tables.load(spark, dir, "documents").count())
-    }
-    val entry = StagedCache.getOrBuild[(String, Seq[String], Long)](
-      shingleIndexCache, pathKey,
-      cur => cur._1 == stateKey && cur._2.forall(d =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(d))),
-      () => build())
-    StagedCache.readStaged(spark, entry._2: _*)
-  }
+    * own shape as its own [[StagedIndex]]: repeated q36 invocations do
+    * no gram write, exactly like the shingle/k-means/SQ8 indexes
+    * (DedupSpec pins it). */
+  private val deconGramIndex = new StagedIndex[String]("decon-grams", Seq(_))
+
+  private def stagedDeconGrams(spark: SparkSession, dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      deconGramIndex.get(StagedCache.source(dir, "documents")) {
+        graft.functions.GraftFunctions.register(spark)
+        val t = graft.Scratch.dir("graft-decon").resolve("g").toString
+        // native 5-gram shingler (already distinct per doc) exploded to
+        // rows — one narrow generator off the scan, no window shuffle;
+        // repartition for build parallelism (feeds a staged write, so
+        // the round-1 "repartition starves AQE" regression doesn't apply)
+        Tables.load(spark, dir, "documents")
+          .repartition(spark.sparkContext.defaultParallelism)
+          .select(col("doc_id"), col("source"),
+            explode(expr("graft_shingles(text, 5)")).as("shingle"))
+          .write.parquet(t)
+        t
+      })
 
   val q36Decontamination: Q = (spark, dir) => {
     val evalSrc = "src5"
@@ -2058,13 +1939,8 @@ object DedupOps {
     // the raw count is itself a pure function of the staged gram index
     // state — memoized, so serving q122 pays no count job either
     // (round 18)
-    val nEv = {
-      val (pathKey, stateKey) = shingleIndexKeys(spark, dir, 5)
-      StagedCache.memoByPath(arraysCountCache,
-        pathKey + s":evcount:$evalSrc", stateKey,
-        () => java.lang.Long.valueOf(
-          g.filter(col("source") === evalSrc).count())).longValue
-    }
+    val nEv = gramRows.get(StagedCache.source(dir, "documents"),
+      ("decon", evalSrc))(g.filter(col("source") === evalSrc).count())
     val mBits = {
       val want = 16L * math.max(nEv, 1L)
       var m = 1L << 16
@@ -2327,34 +2203,22 @@ object DedupOps {
   }
 
   /** The seed corpus's DISTINCT window-hash set, staged once per
-    * (session, corpus, mtime) like the shingle/SQ8 indexes — the
+    * corpus fingerprint like the shingle/SQ8 indexes — the
     * membership relation the STREAMING substring-dedup ingest probes
     * each micro-batch against (existence is all the incoming side
     * needs: any corpus occurrence makes the incoming one a removal
     * candidate; positions matter only within the batch). */
-  private val windowHashCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
+  private val windowHashIndex = new StagedIndex[String]("window-hashes", Seq(_))
 
   private[graft] def stagedWindowHashSet(spark: SparkSession,
-      dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey =
-      System.identityHashCode(spark) + ":substr:" + src.toAbsolutePath
-    val stateKey = pathKey + ":" +
-      StagedCache.fingerprint(src)
-    def build(): (String, String) = {
-      val t = graft.Scratch.dir("graft-substr").resolve("h").toString
-      windowHashes(Tables.load(spark, dir, "documents"))
-        .select("h").distinct().write.parquet(t)
-      (stateKey, t)
-    }
-    val entry = StagedCache.getOrBuild[(String, String)](
-      windowHashCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => build())
-    StagedCache.readStaged(spark, entry._2)
-  }
+      dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      windowHashIndex.get(StagedCache.source(dir, "documents")) {
+        val t = graft.Scratch.dir("graft-substr").resolve("h").toString
+        windowHashes(Tables.load(spark, dir, "documents"))
+          .select("h").distinct().write.parquet(t)
+        t
+      })
 
   private[graft] def substringRemovalSpans(spark: SparkSession,
       dir: String): DataFrame = {
@@ -2372,32 +2236,20 @@ object DedupOps {
     mergeRemovalSpans(flagged)
   }
 
-  /** The span relation, STAGED once per (session, corpus, mtime) —
+  /** The span relation, STAGED once per corpus fingerprint —
     * the q34/q117 precedent: q131 and q132 share one build, and q132's
     * plan references spans TWICE (affected-doc gate + anti-join) which
     * Spark would otherwise compute twice (no common-subplan dedup). */
-  private val spanIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
+  private val spanIndex = new StagedIndex[String]("removal-spans", Seq(_))
 
   private[graft] def stagedRemovalSpans(spark: SparkSession,
-      dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey =
-      System.identityHashCode(spark) + ":spans:" + src.toAbsolutePath
-    val stateKey = pathKey + ":" +
-      StagedCache.fingerprint(src)
-    def build(): (String, String) = {
-      val t = graft.Scratch.dir("graft-substr").resolve("spans").toString
-      substringRemovalSpans(spark, dir).write.parquet(t)
-      (stateKey, t)
-    }
-    val entry = StagedCache.getOrBuild[(String, String)](
-      spanIndexCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => build())
-    StagedCache.readStaged(spark, entry._2)
-  }
+      dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      spanIndex.get(StagedCache.source(dir, "documents")) {
+        val t = graft.Scratch.dir("graft-substr").resolve("spans").toString
+        substringRemovalSpans(spark, dir).write.parquet(t)
+        t
+      })
 
   val q131SubstringDedup: Q = (spark, dir) =>
     stagedRemovalSpans(spark, dir)

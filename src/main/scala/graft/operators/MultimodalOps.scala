@@ -241,34 +241,24 @@ object MultimodalOps {
   }
 
   /** The seed corpus's (media_id, ahash) fingerprint relation, STAGED
-    * and MEMOIZED per (session, corpus fingerprint) — the streaming
+    * and MEMOIZED per corpus fingerprint — the streaming
     * media-ingest twin pairs every batch against this without ever
     * re-hashing the corpus (8 bytes/item of standing state; round
     * 15). Items below the 60-char resize floor are excluded exactly
     * as q136's fixture gate excludes them. */
-  private val mediaFpCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]
+  private val mediaFpIndex = new StagedIndex[String]("media-fp", Seq(_))
 
   private[graft] def stagedMediaFingerprints(spark: SparkSession,
-      dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":mediafp:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" + StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      mediaFpCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => {
+      dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      mediaFpIndex.get(StagedCache.source(dir, "documents")) {
         val d = graft.Scratch.dir("graft-mediafp").resolve("fp").toString
         mediaAHash(Tables.load(spark, dir, "documents")
             .filter(length(col("text")) >= 60)
             .select(col("doc_id").as("media_id"), col("text")))
           .write.parquet(d)
-        (stateKey, d)
+        d
       })
-    StagedCache.readStaged(spark, entry._2)
-  }
 
   /** Banded Hamming<=3 pairs between a (media_id, ahash) probe
     * relation and a corpus fingerprint relation — the q136 pigeonhole
@@ -444,26 +434,16 @@ object MultimodalOps {
     * (through the keys join) and both verify joins — because Spark
     * does not dedupe common subplans. The staged relation is
     * items × 4 rows of (media_id, k, fh) — two longs and an int. */
-  private val frameFpCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String)]
+  private val frameFpIndex = new StagedIndex[String]("frame-fp", Seq(_))
 
   private def stagedFrameFingerprints(spark: SparkSession,
-      dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":framefp:" +
-      src.toAbsolutePath
-    val stateKey = pathKey + ":" + StagedCache.fingerprint(src)
-    val entry = StagedCache.getOrBuild[(String, String)](
-      frameFpCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => {
+      dir: String): DataFrame =
+    StagedCache.readStaged(spark,
+      frameFpIndex.get(StagedCache.source(dir, "documents")) {
         val d = graft.Scratch.dir("graft-framefp").resolve("fp").toString
         frameAHash(temporalMediaItems(spark, dir)).write.parquet(d)
-        (stateKey, d)
+        d
       })
-    StagedCache.readStaged(spark, entry._2)
-  }
 
   val q143TemporalNeardup: Q = (spark, dir) => {
     val fp = stagedFrameFingerprints(spark, dir)

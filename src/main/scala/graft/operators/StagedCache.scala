@@ -2,28 +2,9 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Get-or-build for the staged-index memos (shingle, k-means, SQ8,
-  * celled, BPE) that runs the build's Spark jobs OUTSIDE the
-  * ConcurrentHashMap lock.
-  *
-  * The previous idiom ran the whole build — corpus counts, Lloyd/BPE
-  * training, parquet writes — inside `compute`, holding the key's bin
-  * lock for the build's full duration: concurrent consumers of a
-  * VALID same-key entry (and unrelated keys hashing to the same bin)
-  * blocked behind it, and the pattern would deadlock if a build path
-  * ever re-entered the same cache (flagged by the round-6 review).
-  * Here a valid entry is served from a plain lock-free `get`; a stale
-  * or missing entry is rebuilt outside any lock and registered with a
-  * brief `compute` that re-validates — if a racing builder won in the
-  * meantime, its (valid) entry wins and the loser's freshly staged
-  * scratch dirs are simply orphaned (Scratch dirs are
-  * delete-on-exit; duplicate builds are idempotent by construction).
-  *
-  * The REFRESH paths (e.g. refreshShingleIndex/refreshSqIndex)
-  * intentionally keep their full validate-and-stage logic under
-  * `compute`: they are ordered ledger mutations whose correctness
-  * depends on mutual exclusion with each other, and their delta work
-  * is batch-sized, not corpus-sized. */
+/** The staged indexes' shared state: the build counter, the staged
+  * read-back and the source fingerprint every [[StagedIndex]] keys
+  * validity on. */
 private[graft] object StagedCache {
 
   /** Count of index BUILDS actually executed (not cache hits) — the
@@ -35,17 +16,12 @@ private[graft] object StagedCache {
 
   def buildCount: Long = built.get()
 
-  def getOrBuild[V <: AnyRef](cache: ConcurrentHashMap[String, V],
-      pathKey: String, valid: V => Boolean, build: () => V): V = {
-    val cur = cache.get(pathKey)
-    if (cur != null && valid(cur)) cur
-    else {
-      val b = build() // Spark jobs run unlocked
-      built.incrementAndGet()
-      cache.compute(pathKey, (_, c) =>
-        if (c != null && valid(c)) c else b)
-    }
-  }
+  private[operators] def countBuild(): Unit = built.incrementAndGet()
+
+  /** A fixture table's parquet path under `dir` — the source most
+    * indexes key on. */
+  def source(dir: String, table: String): java.nio.file.Path =
+    java.nio.file.Paths.get(s"$dir/$table.parquet")
 
   /** The single long scalar of an [[org.apache.spark.sql.Observation]]
     * riding a just-completed SYNCHRONOUS action, with a BOUNDED wait
@@ -70,37 +46,6 @@ private[graft] object StagedCache {
         Thread.currentThread().interrupt(); None
     }
 
-  /** Path-keyed scalar/metadata memo with the content-state token
-    * stored IN the entry (round-17 ADVICE): the former idiom keyed the
-    * map by path+fingerprint, so every fixture regeneration stranded
-    * the prior fingerprint's entry forever — a long session rewriting
-    * corpora accumulated dead entries unboundedly. Keyed by path, a
-    * regenerated dataset OVERWRITES its entry; the map is bounded by
-    * the number of distinct paths. `compute` runs outside any lock
-    * (same discipline as [[getOrBuild]]); racing computes of the same
-    * state are idempotent and last-write-wins. */
-  def memoByPath[V](cache: ConcurrentHashMap[String, (String, V)],
-      path: String, state: String, compute: () => V): V = {
-    val cur = cache.get(path)
-    if (cur != null && cur._1 == state) cur._2
-    else {
-      val v = compute()
-      cache.put(path, (state, v))
-      v
-    }
-  }
-
-  /** Content fingerprint of a source dataset path (a parquet file OR a
-    * directory of part files) for cache-validity keying. The previous
-    * idiom keyed on the top-level path's mtime alone, which misses an
-    * in-place rewrite that lands in the same millisecond or replaces
-    * part files without touching the directory entry (round-14 review:
-    * q141 stacks three such caches, so one stale layer silently
-    * changes results). This walks the dataset: file count + total
-    * bytes + max per-file mtime — any part-file add, drop, resize, or
-    * rewrite changes at least one component. Bounded by the dataset's
-    * file count (a directory listing, no data read), the same
-    * traversal every parquet scan's file listing already pays. */
   /** Read-back of a staged scratch/index dir with its schema memoized
     * per process (round 17): staged dirs are write-once — fresh
     * UUID-suffixed Scratch dirs, or fingerprint-keyed rebuild dirs
@@ -126,6 +71,17 @@ private[graft] object StagedCache {
     }
   }
 
+  /** Content fingerprint of a source dataset path (a parquet file OR a
+    * directory of part files) for cache-validity keying. The previous
+    * idiom keyed on the top-level path's mtime alone, which misses an
+    * in-place rewrite that lands in the same millisecond or replaces
+    * part files without touching the directory entry (round-14 review:
+    * q141 stacks three such caches, so one stale layer silently
+    * changes results). This walks the dataset: file count + total
+    * bytes + max per-file mtime — any part-file add, drop, resize, or
+    * rewrite changes at least one component. Bounded by the dataset's
+    * file count (a directory listing, no data read), the same
+    * traversal every parquet scan's file listing already pays. */
   def fingerprint(src: java.nio.file.Path): String = {
     import java.nio.file.Files
     if (!Files.exists(src)) "absent"
@@ -140,5 +96,119 @@ private[graft] object StagedCache {
       } finally it.close()
       s"$n:$bytes:$maxM"
     }
+  }
+}
+
+/** The dirs of an index that grows by appends: `frozen` dirs hold
+  * parameters trained once at build time (centroids, scale params,
+  * codebooks), `parts` the staged rows — the build's dir plus one delta
+  * dir per registered append — and `rows` the corpus row count they
+  * cover, which [[StagedIndex.extend]] reconciles. */
+private[graft] final case class StagedParts(frozen: Seq[String],
+    parts: Seq[String], rows: Long) {
+  def dirs: Seq[String] = frozen ++ parts
+}
+
+/** One staged-index memo: a value derived from a source dataset (staged
+  * scratch dirs, or a scalar of the source's bytes), keyed by (index,
+  * `params`, absolute source path) with the source's
+  * [[StagedCache.fingerprint]] stored in the entry. An entry serves only
+  * while its fingerprint matches and every dir in `dirsOf` exists.
+  * Keyed by path, a rewritten source overwrites its entry, so the map
+  * is bounded by the number of distinct sources. The key carries no
+  * session: every value is write-once scratch dirs or a scalar of the
+  * source bytes, and no build reads session conf.
+  *
+  * A build runs OUTSIDE any lock — corpus counts, Lloyd/BPE training,
+  * parquet writes — and registers with a brief `compute` that
+  * re-validates: if a racing builder won in the meantime, its valid
+  * entry wins and the loser's freshly staged dirs are orphaned (Scratch
+  * dirs are deleted on exit; duplicate builds are idempotent by
+  * construction). Readers of a valid entry never block behind a build,
+  * and a build that re-enters the same index cannot deadlock. Only
+  * [[extend]] works under `compute`: append registrations are ordered
+  * ledger mutations that must exclude each other, and their delta work
+  * is batch-sized, not corpus-sized. */
+private[graft] final class StagedIndex[V](val name: String,
+    dirsOf: V => Seq[String]) {
+  import java.nio.file.{Files, Path, Paths}
+
+  private final class Entry(val fp: String, val value: V)
+
+  private val entries = new ConcurrentHashMap[(Any, String), Entry]
+  private val built = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Builds this index executed (cache hits excluded). */
+  def builds: Long = built.get()
+
+  private def keyOf(src: Path, params: Any) =
+    (params, src.toAbsolutePath.toString)
+
+  private def staged(v: V): Boolean =
+    dirsOf(v).forall(d => Files.exists(Paths.get(d)))
+
+  private def serves(e: Entry, fp: String): Boolean =
+    e != null && e.fp == fp && staged(e.value)
+
+  /** The entry for `src` under `params`, built (and counted in
+    * [[StagedCache.buildCount]]) when missing, stale or purged. */
+  def get(src: Path, params: Any = ())(build: => V): V = {
+    val key = keyOf(src, params)
+    val fp = StagedCache.fingerprint(src)
+    val cur = entries.get(key)
+    if (serves(cur, fp)) cur.value
+    else {
+      val b = build
+      built.incrementAndGet()
+      StagedCache.countBuild()
+      entries.compute(key, (_, c) => if (serves(c, fp)) c else new Entry(fp, b))
+        .value
+    }
+  }
+
+  /** Register `v` as the entry for the source's current state — a
+    * swap staged beside the serving entry, which readers holding the
+    * old dirs keep reading. */
+  def put(src: Path, params: Any = ())(v: V): Unit =
+    entries.put(keyOf(src, params), new Entry(StagedCache.fingerprint(src), v))
+
+  def invalidate(src: Path, params: Any = ()): Unit =
+    entries.remove(keyOf(src, params))
+
+  /** Append-refresh: after a batch of `batchRows` rows was appended to
+    * `src`, register the batch's delta dir (staged by `stage` from the
+    * current entry) under the source's new state. Every registration
+    * is RECONCILED by row count, and any doubt clears the entry so the
+    * next [[get]] full-rebuilds — never a silent drop:
+    *   - nothing registered → no-op;
+    *   - staging purged → clear;
+    *   - same state → keep when the row count still matches (a
+    *     replay), else clear (a change without a fingerprint advance);
+    *   - registered + batch ≠ corpus → clear (unregistered appends
+    *     beyond this batch);
+    *   - otherwise stage the delta and append its dir; a `stage` that
+    *     declines (None) clears.
+    * Returns the delta dir iff one was registered. */
+  def extend(src: Path, params: Any = ())(corpusRows: => Long,
+      batchRows: => Long)(stage: V => Option[String])(
+      implicit parts: V =:= StagedParts): Option[String] = {
+    val fp = StagedCache.fingerprint(src)
+    var delta: Option[String] = None
+    entries.compute(keyOf(src, params), (_, cur) =>
+      if (cur == null) cur
+      else if (!staged(cur.value)) null
+      else {
+        val p = parts(cur.value)
+        val n = corpusRows
+        if (cur.fp == fp) { if (p.rows == n) cur else null }
+        else if (p.rows + batchRows != n) null
+        else stage(cur.value) match {
+          case None => null
+          case Some(d) =>
+            delta = Some(d)
+            new Entry(fp, parts.flip(p.copy(parts = p.parts :+ d, rows = n)))
+        }
+      })
+    delta
   }
 }

@@ -534,33 +534,22 @@ object TextOps {
     * rounds in DuckDB as K unrolled CTE stages — full hash equality,
     * not a fixture pin. */
   /** The trained BPE artifact — (merge table, final tokenization) —
-    * STAGED and MEMOIZED per (session, corpus, mtime) like the dedup
+    * STAGED and MEMOIZED per corpus fingerprint like the dedup
     * and ANN indexes, because a tokenizer is trained once and then
     * APPLIED corpus-wide: the 10-round trainer loop runs once and both
     * the merge-table query (q76) and the encode query (q79) serve from
     * the staged result. */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String)] // stateKey, mergesDir, toksDir
+  private val bpeIndex =
+    new StagedIndex[(String, String)]("bpe", mt => Seq(mt._1, mt._2))
 
   private def stagedBpe(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":bpe:" + src.toAbsolutePath
-    val stateKey = pathKey + ":" +
-      StagedCache.fingerprint(src)
-    // pathKey-keyed memo (the sqIndexEntry idiom): a corpus mtime
-    // change replaces the entry in place instead of leaking the old
-    // one; the 10-round trainer runs OUTSIDE the map lock
-    // (StagedCache), so concurrent q76/q79 callers at worst both
-    // train and one result is orphaned — they never deadlock or
-    // block valid-entry readers for the training duration
-    val entry = StagedCache.getOrBuild[(String, String, String)](
-      bpeCache, pathKey,
-      cur => cur._1 == stateKey &&
-        Seq(cur._2, cur._3).forall(d =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(d))),
-      () => { val (m, t) = trainBpe(spark, dir); (stateKey, m, t) })
-    (StagedCache.readStaged(spark, entry._2), StagedCache.readStaged(spark, entry._3))
+    // the 10-round trainer runs outside any lock (StagedIndex), so
+    // concurrent q76/q79 callers at worst both train and one result is
+    // orphaned — they never block valid-entry readers for the training
+    val (merges, toks) = bpeIndex.get(StagedCache.source(dir, "documents"))(
+      trainBpe(spark, dir))
+    (StagedCache.readStaged(spark, merges), StagedCache.readStaged(spark, toks))
   }
 
   /** Runs the trainer loop and stages (merges dir, final-tokens dir). */
@@ -1246,7 +1235,7 @@ object TextOps {
     *
     * Shape at 100 TB: doc-side bigrams collapse to per-doc TF rows
     * BEFORE the model join (repetitive text shrinks, worst case 1:1),
-    * staged ONCE per (session, corpus, mtime) so the corpus is
+    * staged ONCE per corpus fingerprint so the corpus is
     * tokenized a single time however many relations consume it; the
     * LM relations (c2 keyed by bigram, c1 by unigram) are
     * vocabulary-sized, not corpus-sized — they come off two hash aggs
@@ -1257,22 +1246,17 @@ object TextOps {
     * extreme single-language skew the same thirds come from sampled
     * cutpoints — the exact window form is what the oracle replays. */
   /** q119's per-doc bigram-TF relation, STAGED and MEMOIZED per
-    * (session, corpus, mtime) like the shingle/BPE indexes: the model
+    * corpus fingerprint like the shingle/BPE indexes: the model
     * counts (c2, c1), and the score join all consume the same
     * relation, and Spark does not dedupe common subplans — unstaged,
     * the corpus would be tokenized four times per run. The vocabulary
     * size V (one scalar) is computed at build time and memoized with
     * the entry — a bounded one-row driver value, the q34 license. */
-  private val lmCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, java.lang.Long)] // stateKey, tfDir, V
+  private val lmIndex = new StagedIndex[(String, Long)]("lm-tf", tv => Seq(tv._1))
 
   private def stagedLmTf(spark: SparkSession, dir: String)
       : (DataFrame, Long) = {
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val pathKey = System.identityHashCode(spark) + ":lmtf:" + src.toAbsolutePath
-    val stateKey = pathKey + ":" +
-      StagedCache.fingerprint(src)
-    def build(): (String, String, java.lang.Long) = {
+    val (tfDir, vocab) = lmIndex.get(StagedCache.source(dir, "documents")) {
       val toksAll = Tables.load(spark, dir, "documents")
         .repartition(spark.sparkContext.defaultParallelism)
         .select(col("doc_id"), col("lang"), tokens(col("text")).as("t"))
@@ -1288,14 +1272,9 @@ object TextOps {
         .write.parquet(t)
       val v = toksAll.select(explode(col("t")).as("w"))
         .agg(countDistinct(col("w"))).head.getLong(0)
-      (stateKey, t, java.lang.Long.valueOf(v))
+      (t, v)
     }
-    val entry = StagedCache.getOrBuild[(String, String, java.lang.Long)](
-      lmCache, pathKey,
-      cur => cur._1 == stateKey &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(cur._2)),
-      () => build())
-    (StagedCache.readStaged(spark, entry._2), entry._3.longValue)
+    (StagedCache.readStaged(spark, tfDir), vocab)
   }
 
   val q119LmPerplexity: Q = (spark, dir) => {

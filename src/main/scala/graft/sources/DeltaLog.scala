@@ -81,7 +81,8 @@ object DeltaLog {
       partitionValues: Map[String, String] = Map.empty,
       dv: Option[DeletionVectors.Descriptor] = None,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
+      defaultRowCommitVersion: Option[Long] = None,
+      modificationTime: Long = 0L)
   /** `txns` = latest committed streaming-transaction version per
     * application id (the Delta protocol's SetTransaction action) — the
     * idempotence ledger the streaming sink checks before re-applying a
@@ -920,38 +921,36 @@ object DeltaLog {
       dv: Option[DeletionVectors.Descriptor] = None,
       dataChange: Boolean = true,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None,
-      modificationTime: Option[Long] = None): String = {
+      defaultRowCommitVersion: Option[Long] = None): String =
+    addActionOf(AddFile(path, size, stats, partitionValues, dv, baseRowId,
+      defaultRowCommitVersion), dataChange)
+
+  /** Serialize an AddFile into an add action with EVERY field carried —
+    * the re-add shape (DV re-adds, restore, clone, checkpoints,
+    * row-tracking backfill) must never silently drop a field a newer
+    * feature added. `modificationTime` is required by the protocol on
+    * every add. */
+  def addActionOf(f: AddFile, dataChange: Boolean = true): String = {
     val statsField =
-      if (stats.isEmpty) ""
+      if (f.stats.isEmpty) ""
       else {
-        val flat = stats.toSeq.sortBy(_._1)
+        val flat = f.stats.toSeq.sortBy(_._1)
           .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
           .mkString("{", ",", "}")
         s""","stats":${Json.str(flat)}"""
       }
-    val pv = partitionValues.toSeq.sortBy(_._1)
+    val pv = f.partitionValues.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
       .mkString("{", ",", "}")
     // protocol shape: storageType "p" = path relative to the table root
-    val dvField = dv.map(d =>
+    val dvField = f.dv.map(d =>
       s""","deletionVector":{"storageType":"p","pathOrInlineDv":${Json.str(d.path)},"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}""")
       .getOrElse("")
-    val ridField = baseRowId.map(b => s""","baseRowId":$b""").getOrElse("") +
-      defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""")
-        .getOrElse("") +
-      modificationTime.map(m => s""","modificationTime":$m""").getOrElse("")
-    s"""{"add":{"path":${Json.str(path)},"partitionValues":$pv,"size":$size$statsField$dvField$ridField,"dataChange":$dataChange}}"""
+    val ridField = f.baseRowId.map(b => s""","baseRowId":$b""").getOrElse("") +
+      f.defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""")
+        .getOrElse("")
+    s"""{"add":{"path":${Json.str(f.path)},"partitionValues":$pv,"size":${f.size},"modificationTime":${f.modificationTime}$statsField$dvField$ridField,"dataChange":$dataChange}}"""
   }
-
-  /** Serialize an existing AddFile back into an add action with EVERY
-    * field carried — the re-add shape (DV re-adds, restore, clone,
-    * checkpoints, row-tracking backfill) must never silently drop a
-    * field a newer feature added. */
-  def addActionOf(f: AddFile, dataChange: Boolean = true,
-      modificationTime: Option[Long] = None): String =
-    addAction(f.path, f.size, f.stats, f.partitionValues, f.dv,
-      dataChange, f.baseRowId, f.defaultRowCommitVersion, modificationTime)
 
   /** Decode an add action's flat fields back into an AddFile (shared
     * by snapshot replay and versionChanges). */
@@ -967,7 +966,8 @@ object DeltaLog {
     AddFile(fields("path"),
       fields.get("size").map(_.toLong).getOrElse(0L), stats, pv, dv,
       fields.get("baseRowId").flatMap(_.toLongOption),
-      fields.get("defaultRowCommitVersion").flatMap(_.toLongOption))
+      fields.get("defaultRowCommitVersion").flatMap(_.toLongOption),
+      fields.get("modificationTime").flatMap(_.toLongOption).getOrElse(0L))
   }
 
   /** `dataChange=false` marks a LAYOUT-ONLY action (compaction/zorder

@@ -43,16 +43,6 @@ final class SchemaEvolutionException(val kind: String, msg: String)
 
 object DeltaTable {
 
-  /** Dev-only stage timing for the write path (SPARK_GRAFT_DELTA_DEBUG
-    * set → per-stage seconds on stderr); zero cost when unset. */
-  private val DebugTiming = sys.env.contains("SPARK_GRAFT_DELTA_DEBUG")
-  @inline private def timed[A](what: => String)(f: => A): A =
-    if (!DebugTiming) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[delta-prof] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Write `df` to `table` with the given mode ("overwrite"|"append").
     *
     * Concurrency: the data files are staged once and moved in
@@ -133,10 +123,9 @@ object DeltaTable {
     // generation/identity contracts, partition layout, mapping,
     // constraints) — each DeltaLog.snapshot call is a full log replay,
     // and the commit retry loop re-snapshots for freshness anyway
-    val entrySnap: Option[DeltaLog.Snapshot] = timed(s"entry-snapshot $table") {
+    val entrySnap: Option[DeltaLog.Snapshot] =
       if (DeltaLog.versions(table).isEmpty) None
       else Some(DeltaLog.snapshot(table))
-    }
     for (snap <- entrySnap if txnLanded(snap, txn)) return snap.version
     // GENERATED COLUMNS: resolve the generation contract this write
     // stages under — an append inherits the committed expressions; an
@@ -679,8 +668,7 @@ object DeltaTable {
               // passing the scanned snapshot lets commit derive the
               // N.crc checksum incrementally (pre-state + actions)
               // instead of re-replaying the log — O(actions) per commit
-              Some(timed(s"log-commit $table") {
-                DeltaLog.commit(table, snap.version, actions, Some(snap)) })
+              Some(DeltaLog.commit(table, snap.version, actions, Some(snap)))
             } catch {
               case _: DeltaLog.CommitConflictException => drop(staged); None
               case e: Throwable => drop(staged); throw e
@@ -1512,33 +1500,30 @@ object DeltaTable {
     val tableDir = Paths.get(table)
     Files.createDirectories(tableDir)
     val staging = tableDir.resolve(s".staging-${UUID.randomUUID()}")
-    timed(s"stage-write $table") {
-      // graft-delta data files store timestamps as standard INT64
-      // micros, not Spark's legacy INT96 default: INT96 is deprecated
-      // in the parquet spec, stock Delta writes INT64, and only the
-      // standard encoding carries ordered footer statistics — which
-      // [[collectStats]] reads in place of re-scanning staged bytes.
-      // Set/restore around the one write, FENCED on the same monitor
-      // Tables.loadEvents uses for its nanosAsLong window (round-17
-      // ADVICE): unsynchronized, two interleaved writers could leak
-      // TIMESTAMP_MICROS into the session conf permanently, or a
-      // concurrent writer could capture the restored INT96 value
-      // mid-window and forfeit its timestamp footer stats.
-      val tsKey = "spark.sql.parquet.outputTimestampType"
-      graft.Tables.synchronized {
-        val prevTs = spark.conf.get(tsKey)
-        spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-        try {
-          if (partitionBy.isEmpty) df.write.parquet(staging.toString)
-          else df.write.partitionBy(partitionBy: _*).parquet(staging.toString)
-        } finally spark.conf.set(tsKey, prevTs)
-      }
+    // graft-delta data files store timestamps as standard INT64
+    // micros, not Spark's legacy INT96 default: INT96 is deprecated
+    // in the parquet spec, stock Delta writes INT64, and only the
+    // standard encoding carries ordered footer statistics — which
+    // [[collectStats]] reads in place of re-scanning staged bytes.
+    // Set/restore around the one write, FENCED on the same monitor
+    // Tables.loadEvents uses for its nanosAsLong window (round-17
+    // ADVICE): unsynchronized, two interleaved writers could leak
+    // TIMESTAMP_MICROS into the session conf permanently, or a
+    // concurrent writer could capture the restored INT96 value
+    // mid-window and forfeit its timestamp footer stats.
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    graft.Tables.synchronized {
+      val prevTs = spark.conf.get(tsKey)
+      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
+      try {
+        if (partitionBy.isEmpty) df.write.parquet(staging.toString)
+        else df.write.partitionBy(partitionBy: _*).parquet(staging.toString)
+      } finally spark.conf.set(tsKey, prevTs)
     }
     val commitTag = UUID.randomUUID().toString.take(8)
     // per-file min/max stats (Delta-paper data skipping): ONE job over
     // the staged files, grouped by physical file — not a per-file pass
-    val statsByFile = timed(s"collect-stats $table") {
-      collectStats(spark, staging.toString, df.schema) }
+    val statsByFile = collectStats(spark, staging.toString, df.schema)
     val stagedStream = Files.walk(staging)
     val staged =
       try stagedStream.iterator.asScala
@@ -1575,7 +1560,8 @@ object DeltaTable {
         val dest = tableDir.resolve(name)
         Files.createDirectories(dest.getParent)
         Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-        Some(DeltaLog.AddFile(name, Files.size(dest), stats, partitionValues))
+        Some(DeltaLog.AddFile(name, Files.size(dest), stats, partitionValues,
+          modificationTime = Files.getLastModifiedTime(dest).toMillis))
       }
     }
     deleteRecursively(staging)
@@ -1728,8 +1714,7 @@ object DeltaTable {
               snap.partitionColumns, DeltaLog.tableId(table),
               snap.configuration)) ++
             work.map(f => DeltaLog.removeAction(f.path, dataChange = false)) ++
-            added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
-              f.partitionValues, dataChange = false))
+            added.map(DeltaLog.addActionOf(_, dataChange = false))
         Commit(actions, added.map(_.path))
       }
     }
@@ -1781,8 +1766,7 @@ object DeltaTable {
             // change feed skip this version by the protocol bit
             snap.files.map(f =>
               DeltaLog.removeAction(f.path, dataChange = false)) ++
-            added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
-              f.partitionValues, dataChange = false))
+            added.map(DeltaLog.addActionOf(_, dataChange = false))
         Commit(actions, added.map(_.path))
       }
     }
@@ -1872,8 +1856,7 @@ object DeltaTable {
             DeltaLog.tableId(table), snap.configuration)) ++
           snap.files.map(f =>
             DeltaLog.removeAction(f.path, dataChange = false)) ++
-          added.map(f => DeltaLog.addAction(f.path, f.size, f.stats,
-            f.partitionValues, dataChange = false))
+          added.map(DeltaLog.addActionOf(_, dataChange = false))
       Commit(actions, added.map(_.path))
     }
   }
@@ -2430,10 +2413,8 @@ object DeltaTable {
         DeltaLog.txnAction(app, v) } ++
       snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
         DeltaLog.domainMetadataAction(d, c) }
-    // checkpoint adds: dataChange=false and a modificationTime, both
-    // required there by the protocol (the log's add lines carry none)
-    val adds = snap.files.map(DeltaLog.addActionOf(_, dataChange = false,
-      modificationTime = Some(0L)))
+    // checkpoint adds: dataChange=false, required there by the protocol
+    val adds = snap.files.map(DeltaLog.addActionOf(_, dataChange = false))
     val (size, parts) =
       if (snap.configuration.get("delta.checkpointPolicy").contains("v2"))
         (writeV2Checkpoint(table, version, state, adds, maxPer), 1)
@@ -3052,7 +3033,8 @@ object DeltaTable {
         else stagedRowCount(spark, p)
           .map(c => Map("n" -> c.toString)).getOrElse(Map.empty)
       }
-      DeltaLog.AddFile(rel.toString, Files.size(p), stats, partitionValues)
+      DeltaLog.AddFile(rel.toString, Files.size(p), stats, partitionValues,
+        modificationTime = Files.getLastModifiedTime(p).toMillis)
     }
     val actions =
       Seq(DeltaLog.commitInfoAction("CONVERT"),

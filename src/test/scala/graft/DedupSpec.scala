@@ -24,7 +24,7 @@ class DedupSpec extends SparkSpec {
         "en", "srcD", 80L),
       (4L, "tiny doc", "en", "srcE", 8L),
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-spec").toString
+    val dir = tempDir("graft-dedup-spec").toString
     docs.write.parquet(s"$dir/documents.parquet")
     dir
   }
@@ -68,7 +68,7 @@ class DedupSpec extends SparkSpec {
     val docs = (0 until 59).map { i =>
       (i.toLong, s"$header item u${i}a u${i}b u${i}c", "en", "src", 40L)
     } :+ (59L, s"$header item u58a u58b u58c", "en", "src", 40L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = tempDir("graft-skew").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     val uncapped = DedupOps.prefixCandidates(spark, dir, 0.5,
@@ -97,7 +97,7 @@ class DedupSpec extends SparkSpec {
     val docs = (0 until 59).map { i =>
       (i.toLong, s"$header item u${i}a u${i}b u${i}c", "en", "src", 40L)
     } :+ (59L, s"$header item u58a u58b u58c", "en", "src", 40L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-posf").toString
+    val dir = tempDir("graft-posf").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
     // uncapped: the boilerplate bucket would fan out C(60,2) = 1770
@@ -124,7 +124,7 @@ class DedupSpec extends SparkSpec {
     val shared = (0 until 5002).map(i => s"c$i")
     val docA = (0 until 2500).map(i => s"a$i") ++ shared // 7500 3-grams
     val docB = (0 until 2501).map(i => s"b$i") ++ shared // 7501 3-grams
-    val dir = java.nio.file.Files.createTempDirectory("graft-q31-edge").toString
+    val dir = tempDir("graft-q31-edge").toString
     Seq(docA, docB).zipWithIndex.map { case (ws, i) =>
       val text = ws.mkString(" ")
       (i.toLong + 1, text, "en", "src", text.length.toLong)
@@ -319,7 +319,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("decontamination flags exactly the train docs sharing a 5-gram with eval") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-decon-spec").toString
+    val dir = tempDir("graft-decon-spec").toString
     Seq(
       // eval doc (src5 is the held-out stratum): 7 tokens → 3 5-grams
       (0L, "alpha beta gamma delta epsilon zeta eta", "en", "src5", 39L),
@@ -345,7 +345,7 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = JF.createTempDirectory("graft-incr-spec").toString
+    val dir = tempDir("graft-incr-spec").toString
     val base = "the quick brown fox jumps over the lazy dog near the old river bank " +
       "while morning light filters through tall green trees onto the quiet path"
     Seq(
@@ -546,7 +546,7 @@ class DedupSpec extends SparkSpec {
       (1L, " hello world ", "en", "s", 13L),
       (2L, "hello worlds", "en", "s", 12L),
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp").toString
+    val dir = tempDir("graft-fp").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val fps = TextOps.q24Fingerprint(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -712,7 +712,7 @@ class DedupSpec extends SparkSpec {
     // operator-level: the derived variants pair with each other, never
     // with their byte-plain base, and n_encodings counts the unified
     // byte-distinct renderings
-    val d = java.nio.file.Files.createTempDirectory("graft-nfc-spec").toString
+    val d = tempDir("graft-nfc-spec").toString
     Seq(
       (0L, "plain zero avocado", "en", "s", 18L),
       (1L, "the letter e appears here", "en", "s", 25L), // %4==1: e-variants
@@ -878,9 +878,9 @@ class DedupSpec extends SparkSpec {
     // other index. First call may build or hit (other tests run q152
     // too) — the SECOND call must be a pure cache hit either way.
     val r1 = DedupOps.queries("q152_source_overlap")(spark, sf).collect()
-    val afterFirst = DedupOps.q152Stagings.get()
+    val afterFirst = DedupOps.q152Index.builds
     val r2 = DedupOps.queries("q152_source_overlap")(spark, sf).collect()
-    assert(DedupOps.q152Stagings.get() === afterFirst,
+    assert(DedupOps.q152Index.builds === afterFirst,
       "repeat q152 invocation re-staged the corpus fingerprint relation")
     assert(r1.map(_.toString).sorted.toSeq ===
       r2.map(_.toString).sorted.toSeq)
@@ -943,7 +943,7 @@ class DedupSpec extends SparkSpec {
     // manifest row must read shards=0,total_tokens=0,manifest_fp=0 on
     // BOTH engines (round-14 review: the oracle's un-COALESCEd SUMs
     // returned NULL here and '||' nulled the whole detail string)
-    val dir = java.nio.file.Files.createTempDirectory("graft-q137e").toString
+    val dir = tempDir("graft-q137e").toString
     Seq((0L, "a b c", "en", "src0", 5L), (1L, "d e f", "en", "src1", 5L),
       (2L, "g h i", "de", "src2", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

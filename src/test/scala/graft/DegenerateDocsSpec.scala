@@ -21,7 +21,7 @@ class DegenerateDocsSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-degen").toString
+    val d = tempDir("graft-degen").toString
     Seq[(Long, String, String, String, Long)](
       (0L, null, "en", "src", 0L),
       (1L, "", "en", "src", 0L),
@@ -83,7 +83,7 @@ class DegenerateDocsSpec extends SparkSpec {
   test("decontamination: sub-5-gram docs can neither contaminate nor be contaminated") {
     // src5 is the eval stratum; 'solo' and 'two tokens' have no
     // 5-gram, so eval membership is vacuous and nothing flags
-    val d = java.nio.file.Files.createTempDirectory("graft-degen-dec").toString
+    val d = tempDir("graft-degen-dec").toString
     Seq[(Long, String, String, String, Long)](
       (0L, "solo", "en", "src5", 4L),
       (1L, null, "en", "src5", 0L),
@@ -230,7 +230,7 @@ class DegenerateDocsSpec extends SparkSpec {
     // so the pair graph is EMPTY — the pointer-doubling kernel must
     // cope with staging an empty relation (or the caller must guard),
     // and the output is zero clustered vectors, not an exception
-    val d = java.nio.file.Files.createTempDirectory("graft-nopair").toString
+    val d = tempDir("graft-nopair").toString
     def basis(i: Int): Array[Float] =
       Array.tabulate(8)(j => if (i == j) 1.0f else 0.0f)
     Seq.tabulate(6)(i => (i.toLong, basis(i), 0))

@@ -13,7 +13,7 @@ class DeltaSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String =
-    Files.createTempDirectory("graft-delta-spec").resolve("t").toString
+    tempDir("graft-delta-spec").resolve("t").toString
 
   private def employees3 = Seq(
     (1, "Alice", 75000L, "2024-01-15"),
@@ -32,6 +32,34 @@ class DeltaSpec extends SparkSpec {
     try s.iterator.asScala.map(_.getFileName.toString)
       .filter(_.endsWith(".checkpoint.json")).toSeq
     finally s.close()
+  }
+
+  test("every add of every version carries its file's modificationTime " +
+      "(append, merge, update, delete, compact)") {
+    import scala.jdk.CollectionConverters._
+    val t = freshTable()
+    DeltaTable.write(employees3, t, "overwrite")
+    DeltaTable.write(employee1, t, "append")
+    DeltaTable.merge(spark, t, Seq((2, "Bob", 66000L, "2024-01-16"),
+      (5, "Eve", 90000L, "2024-01-19")).toDF("id", "name", "salary", "date"),
+      Seq("id"))
+    DeltaTable.update(spark, t, $"id" === 1, Map("salary" -> lit(76000L)))
+    DeltaTable.delete(spark, t, $"id" === 3)
+    DeltaTable.compact(spark, t)
+    val mtime = """"modificationTime":(\d+)""".r
+    val vs = DeltaLog.versions(t)
+    assert(vs === (0L to 5L))
+    // a delete that drops a whole file commits no add
+    val adds = vs.flatMap(v =>
+      Files.readAllLines(DeltaLog.logDir(t).resolve(f"$v%020d.json"))
+        .asScala.filter(_.startsWith("""{"add":""")).map(v -> _))
+    assert(adds.map(_._1).distinct.size >= 5)
+    adds.foreach { case (v, a) => assert(
+      mtime.findFirstMatchIn(a).exists(_.group(1).toLong > 0),
+      s"version $v add lacks a modificationTime: $a") }
+    DeltaLog.snapshot(t).files.foreach(f => assert(f.modificationTime ===
+      Files.getLastModifiedTime(java.nio.file.Paths.get(t, f.path)).toMillis))
+    assert(DeltaTable.read(spark, t).count() === 4)
   }
 
   test("overwrite then append: count 3 -> 4 (reference sequence)") {
@@ -1070,7 +1098,7 @@ class DeltaSpec extends SparkSpec {
     // the version prefix; restore the pruned JSONs from a backup so
     // the validator can ALSO prove checkpoint == replay(0..horizon)
     val logDir = java.nio.file.Paths.get(t, "_delta_log")
-    val backup = Files.createTempDirectory("graft-logbak")
+    val backup = tempDir("graft-logbak")
     val vjson = {
       val s = Files.list(logDir)
       try s.iterator.asScala.filter(
@@ -1117,7 +1145,7 @@ class DeltaSpec extends SparkSpec {
     // (what a mapping-unaware writer would produce) and add it to the
     // log — the validator must notice the diverged name in the bytes
     val rogue = Seq((9, "Mallory", 1L)).toDF("id", "name", "base_pay")
-    val rogueDir = Files.createTempDirectory("graft-rogue")
+    val rogueDir = tempDir("graft-rogue")
       .resolve("d").toString
     rogue.coalesce(1).write.parquet(rogueDir)
     val roguePart = {
@@ -1491,7 +1519,7 @@ class DeltaSpec extends SparkSpec {
     // per-file maps by the DECODED path, so on such tables the keys
     // never matched and DELETE/UPDATE silently no-op'd (empty new-
     // deletion sets). This pins the decode at every DML call site.
-    val t = Files.createTempDirectory("graft dv spec")
+    val t = tempDir("graft dv spec")
       .resolve("t with space").toString
     DeltaTable.write(employees3.coalesce(1), t, "overwrite")     // v0
     DeltaTable.enableDeletionVectors(t)                          // v1
@@ -1513,7 +1541,7 @@ class DeltaSpec extends SparkSpec {
     // row tracking under a spaced PARTITION dir: the per-file base-id
     // literal map must hit even though the scan renders the partition
     // value's space as %20
-    val tp = Files.createTempDirectory("graft dv spec").resolve("p").toString
+    val tp = tempDir("graft dv spec").resolve("p").toString
     DeltaTable.write(
       Seq((1, "a b", 10L), (2, "a b", 20L), (3, "c", 30L))
         .toDF("id", "grp", "v"),
@@ -1535,7 +1563,7 @@ class DeltaSpec extends SparkSpec {
     // per-file DV map keys would never match — the same silent-no-op
     // DML class, reintroduced for literal-% paths. The map now carries
     // BOTH the raw and decoded forms, so either render hits.
-    val t = Files.createTempDirectory("graft-dv-pct")
+    val t = tempDir("graft-dv-pct")
       .resolve("sale%20off").resolve("t").toString
     DeltaTable.write(employees3.coalesce(1), t, "overwrite")     // v0
     DeltaTable.enableDeletionVectors(t)                          // v1
@@ -1904,7 +1932,7 @@ class DeltaSpec extends SparkSpec {
     DeltaTable.write(employees3, t, "overwrite")
     DeltaTable.enableColumnMapping(t)
     DeltaTable.renameColumn(t, "salary", "base_pay")
-    val src = Files.createTempDirectory("graft-map-stream")
+    val src = tempDir("graft-map-stream")
     val ckpt = src.resolve("ckpt").toString
     Seq((10, "Zoe", 55000L, "2024-03-01"))
       .toDF("id", "name", "base_pay", "date")
@@ -3724,8 +3752,7 @@ class DeltaSpec extends SparkSpec {
     // carried across a checkpoint+vacuum — the validator's domain and
     // checkpoint invariants must hold over the whole history
     val t2 = freshTable()
-    val src = java.nio.file.Files
-      .createTempDirectory("graft-validator-copy").toString
+    val src = tempDir("graft-validator-copy").toString
     DeltaTable.write(employees3.limit(0), t2, "overwrite")
     employees3.coalesce(1).write.parquet(s"$src/b1")
     DeltaTable.copyInto(spark, t2, src)
@@ -3772,7 +3799,7 @@ class DeltaSpec extends SparkSpec {
       DeltaTable.transact(t, "probe") { _ =>
         // this attempt's staged bytes, then a racer claims its version
         val name = s"part-probe-${staged.length}.parquet"
-        val scratch = Files.createTempDirectory("graft-probe").resolve("d")
+        val scratch = tempDir("graft-probe").resolve("d")
         employee1.coalesce(1).write.parquet(scratch.toString)
         val part = Files.list(scratch)
         try Files.move(part.iterator.asScala

@@ -39,8 +39,7 @@ class DeltaStressSpec extends SparkSpec {
       "delete/update/merge/compact/upgrades validate at every seed") {
     val seeds = 0 until 20
     for (seed <- seeds) {
-      val t = java.nio.file.Files
-        .createTempDirectory(s"graft-stress-$seed").resolve("t").toString
+      val t = tempDir(s"graft-stress-$seed").resolve("t").toString
       // v0: ids 0-9, v = id (every writer's appends use ids >= 1000
       // so deletes targeting >= 1000 cannot hit the base rows)
       DeltaTable.write((0L until 10L).map(i => (i, i)).toDF("id", "v")
@@ -175,7 +174,7 @@ class DeltaStressSpec extends SparkSpec {
       "compactWhere x clone validate at every seed") {
     import org.apache.spark.sql.sources.EqualTo
     for (seed <- 0 until 10) {
-      val base = java.nio.file.Files.createTempDirectory(s"graft-genstress-$seed")
+      val base = tempDir(s"graft-genstress-$seed")
       val t = base.resolve("t").toString
       def mkTs(day: Int, id: Long) = new java.sql.Timestamp(
         java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:00").getTime +
@@ -270,8 +269,7 @@ class DeltaStressSpec extends SparkSpec {
     * the validator run below for every seed). */
   test("append-only toggling races DML: the gate holds at every seed") {
     for (seed <- 0 until 10) {
-      val t = java.nio.file.Files
-        .createTempDirectory(s"graft-aostress-$seed").resolve("t").toString
+      val t = tempDir(s"graft-aostress-$seed").resolve("t").toString
       DeltaTable.write((0L until 10L).map(i => (i, i)).toDF("id", "v")
         .coalesce(1), t, "overwrite")
       val schedules = (0 until 3).map { w =>
@@ -358,8 +356,7 @@ class DeltaStressSpec extends SparkSpec {
   test("row-tracking torture: appends x vectored deletes x compact x " +
       "widen under racing writers keep ids unique and stable") {
     for (seed <- 0 until 10) {
-      val t = java.nio.file.Files
-        .createTempDirectory(s"graft-rtstress-$seed").resolve("t").toString
+      val t = tempDir(s"graft-rtstress-$seed").resolve("t").toString
       DeltaTable.write((0L until 10L).map(i => (i, i.toInt)).toDF("id", "v")
         .coalesce(1), t, "overwrite")
       DeltaTable.enableRowTracking(t)
@@ -440,10 +437,8 @@ class DeltaStressSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     for (seed <- 1 to 3) {
-      val t = java.nio.file.Files
-        .createTempDirectory(s"graft-copy-race-$seed").resolve("t").toString
-      val src = java.nio.file.Files
-        .createTempDirectory(s"graft-copy-race-src-$seed").toString
+      val t = tempDir(s"graft-copy-race-$seed").resolve("t").toString
+      val src = tempDir(s"graft-copy-race-src-$seed").toString
       DeltaTable.write(Seq.empty[(Long, Long)].toDF("id", "v"),
         t, "overwrite")
       // 4 source files x 5 rows, distinct id ranges

@@ -11,7 +11,7 @@ class EventTextSpec extends SparkSpec {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
   test("sessionization splits on >30min gaps, per user") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev").toString
+    val dir = tempDir("graft-ev").toString
     Seq(
       // user 1: two sessions (gap of 45 min between event 2 and 3)
       (0L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0, "{}"),
@@ -32,7 +32,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("hourly rollup buckets on hour boundaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ev2").toString
+    val dir = tempDir("graft-ev2").toString
     Seq(
       (0L, ts("2024-01-01 10:59:59"), 1L, "click", 1.0, "{}"),
       (1L, ts("2024-01-01 11:00:00"), 1L, "click", 2.0, "{}"),
@@ -74,7 +74,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("session_window boundary: exact-gap touch merges, one micro over splits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sw").toString
+    val dir = tempDir("graft-sw").toString
     Seq(
       // user 2: gap of exactly 30 min — touching windows MERGE
       (0L, ts("2024-01-01 09:00:00"), 2L, "view", 5.0, "{}"),
@@ -97,7 +97,7 @@ class EventTextSpec extends SparkSpec {
 
   test("burst detection (q150): a constructed spike flags, steady and " +
       "singleton series never do, zero-variance pins z to 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-burst").toString
+    val dir = tempDir("graft-burst").toString
     // 'click': 9 quiet days of 2 events + day 10 with 20 (the burst);
     // 'view': constant 3/day (stddev 0 → z 0 everywhere);
     // 'ping': a single day (stddev undefined → z 0)
@@ -167,7 +167,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("as-of join: latest prior click per purchase, ties by event order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-asof").toString
+    val dir = tempDir("graft-asof").toString
     Seq(
       (0L, ts("2024-01-01 09:30:00"), 1L, "purchase", 1.0, "{}"), // no prior click
       (1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0, "{}"),
@@ -222,7 +222,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("token stats handle multi-space and mixed case") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tx").toString
+    val dir = tempDir("graft-tx").toString
     Seq((0L, "The  QUICK   brown fox", "en", "s", 22L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -278,7 +278,7 @@ class EventTextSpec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   test("pii scrub redacts emails and phones and fingerprints the clean text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pii").toString
+    val dir = tempDir("graft-pii").toString
     Seq(
       // odd, not %3: no injection — the in-text email is the only PII
       (1L, "write to bob@example.org today", "en", "s", 30L),
@@ -294,7 +294,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("repetition ratio: degenerate doc flags, varied doc scores 0, sub-trigram excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val dir = tempDir("graft-rep").toString
     Seq(
       (0L, "a a a a a", "en", "s", 9L),          // 3 trigram slots, 1 distinct
       (1L, "one two three four", "en", "s", 18L), // 2 slots, 2 distinct
@@ -310,7 +310,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("sequence packing: bin = window the doc's first token lands in, per source") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack").toString
+    val dir = tempDir("graft-pack").toString
     val w300 = Seq.fill(300)("aa").mkString(" ") // 300 BPE word tokens
     Seq(
       (0L, w300, "en", "s1", w300.length.toLong),
@@ -329,7 +329,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("bpe trainer: greedy leftmost-nonoverlapping merges, re-tokenized each round") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpe").toString
+    val dir = tempDir("graft-bpe").toString
     // "a a a a b": the self-pair (a,a) occurs 3× OVERLAPPING; greedy
     // leftmost BPE merges at positions 0 and 2 only (run parity) →
     // ["a a", "a a", "b"]. Round 2's tie between ("a a","a a") and
@@ -347,7 +347,7 @@ class EventTextSpec extends SparkSpec {
   }
 
   test("langid picks the language with the most marker hits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lid").toString
+    val dir = tempDir("graft-lid").toString
     Seq(
       (0L, "the cat and the dog of the house is big", "en", "s", 39L),
       (1L, "el perro de la casa que los gatos", "es", "s", 33L),

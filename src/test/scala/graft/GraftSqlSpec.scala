@@ -11,8 +11,7 @@ import scala.jdk.CollectionConverters._
 class GraftSqlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshTable(): String = java.nio.file.Files
-    .createTempDirectory("graft-sql-spec").resolve("t").toString
+  private def freshTable(): String = tempDir("graft-sql-spec").resolve("t").toString
 
   private def threeRows = Seq(
     (1, "Alice", 75000L), (2, "Bob", 65000L), (3, "Carol", 80000L))
@@ -406,8 +405,7 @@ class GraftSqlSpec extends SparkSpec {
   test("COPY INTO loads each source file exactly once; a rewritten " +
       "source file counts as new; schema mismatch refuses") {
     val t = freshTable()
-    val src = java.nio.file.Files
-      .createTempDirectory("graft-sql-copyinto").toString
+    val src = tempDir("graft-sql-copyinto").toString
     DeltaTable.write(threeRows.limit(0), t, "overwrite") // empty shell
     threeRows.filter(col("id") <= 2).coalesce(1)
       .write.parquet(s"$src/b1")
@@ -436,8 +434,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(DeltaLog.snapshot(t).domainMetadata.keys
       .count(_.startsWith("graft.copyInto.")) === 3)
     // schema mismatch refuses loudly
-    val badSrc = java.nio.file.Files
-      .createTempDirectory("graft-sql-copyinto-bad").toString
+    val badSrc = tempDir("graft-sql-copyinto-bad").toString
     threeRows.withColumnRenamed("salary", "wage").coalesce(1)
       .write.parquet(s"$badSrc/b")
     val ex = intercept[IllegalArgumentException](
@@ -454,8 +451,7 @@ class GraftSqlSpec extends SparkSpec {
       t, "overwrite", partitionBy = Seq("seg"))
     spark.sql(s"ALTER TABLE delta.`$t` ADD CONSTRAINT pos " +
       "CHECK (salary > 0)")
-    val src = java.nio.file.Files
-      .createTempDirectory("graft-sql-copyinto-c").toString
+    val src = tempDir("graft-sql-copyinto-c").toString
     Seq((9, "Niner", 1000L, 1)).toDF("id", "name", "salary", "seg")
       .coalesce(1).write.parquet(s"$src/ok")
     spark.sql(s"COPY INTO delta.`$t` FROM '$src'").collect()
@@ -538,8 +534,7 @@ class GraftSqlSpec extends SparkSpec {
   test("COPY INTO ledger survives checkpoint + vacuum; convert/copy " +
       "walks never adopt log or staging internals") {
     val t = freshTable()
-    val src = java.nio.file.Files
-      .createTempDirectory("graft-sql-copyinto-ck").toString
+    val src = tempDir("graft-sql-copyinto-ck").toString
     DeltaTable.write(threeRows.limit(0), t, "overwrite")
     threeRows.coalesce(1).write.parquet(s"$src/b1")
     spark.sql(s"COPY INTO delta.`$t` FROM '$src'").collect()
@@ -554,8 +549,7 @@ class GraftSqlSpec extends SparkSpec {
     assert(DeltaTable.read(spark, t).count() === 4)
     // a landing zone polluted with delta/staging internals loads only
     // the real files
-    val src2 = java.nio.file.Files
-      .createTempDirectory("graft-sql-copyinto-dirty").toString
+    val src2 = tempDir("graft-sql-copyinto-dirty").toString
     threeRows.filter(col("id") === 2).coalesce(1)
       .write.parquet(s"$src2/real")
     java.nio.file.Files.createDirectories(

@@ -284,7 +284,7 @@ class PlanSpec extends SparkSpec {
 
   test("q83 substrate: the change feed scans only the changed versions' files") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val t = java.nio.file.Files.createTempDirectory("graft-plan-cdf")
+    val t = tempDir("graft-plan-cdf")
       .resolve("t").toString
     DeltaTable.write(spark.range(100).toDF("id"), t, "overwrite")   // v0
     DeltaTable.write(spark.range(100, 110).toDF("id"), t, "append") // v1

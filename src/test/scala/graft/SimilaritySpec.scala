@@ -11,7 +11,7 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("cosine on hand-crafted vectors: orthogonal=0, parallel=1") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sim").toString
+    val dir = tempDir("graft-sim").toString
     Seq(
       (0L, Array(1.0f, 0.0f, 0.0f), 0),
       (1L, Array(0.0f, 1.0f, 0.0f), 0),
@@ -27,7 +27,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("q146 centroid outliers: crafted geometry flags exactly the anti-centroid vector") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-outl").toString
+    val dir = tempDir("graft-outl").toString
     // 5 vectors clustered near +e0 (centroid ≈ +e0) and one pointing
     // the other way: only the anti-aligned vector scores below −0.15
     Seq(
@@ -126,7 +126,7 @@ class SimilaritySpec extends SparkSpec {
     * clusters × 40 vectors in 64-dim — the regime ANN indexes are for
     * (the driver's quasi-uniform fixture is the adversarial case). */
   private lazy val clusteredDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-clustered").toString
+    val dir = tempDir("graft-clustered").toString
     val rnd = new scala.util.Random(7)
     val dims = 64; val kC = 8; val perC = 40
     val centers = Array.fill(kC, dims)(rnd.nextGaussian().toFloat)
@@ -145,7 +145,7 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     val rnd = new scala.util.Random(11)
     val dims = 64
     def cluster(center: Array[Float], ids: Range, noise: Float) =
@@ -306,7 +306,7 @@ class SimilaritySpec extends SparkSpec {
       "reconciliation and degrades to a full rebuild — no silent drop") {
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = JF.createTempDirectory("graft-sqgap").toString
+    val dir = tempDir("graft-sqgap").toString
     Seq((0L, Array(0.0f, 0.0f), 0), (1L, Array(10.0f, 1.0f), 0))
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
@@ -343,7 +343,7 @@ class SimilaritySpec extends SparkSpec {
       "frozen centroids and codebook; existing roots byte-untouched") {
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = JF.createTempDirectory("graft-ivfsq-incr").toString
+    val dir = tempDir("graft-ivfsq-incr").toString
     val rnd = new scala.util.Random(11)
     val dims = 16; val kC = 4; val perC = 20
     val centers = Array.fill(kC, dims)(rnd.nextGaussian().toFloat)
@@ -403,7 +403,7 @@ class SimilaritySpec extends SparkSpec {
       "out-of-range values, and reuses the staged codes byte-for-byte") {
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = JF.createTempDirectory("graft-sqincr").toString
+    val dir = tempDir("graft-sqincr").toString
     // 3-dim corpus with known per-dimension ranges: [0,10], [0,1], [-1,1]
     Seq(
       (0L, Array(0.0f, 0.0f, -1.0f), 0),
@@ -453,7 +453,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF degrades gracefully when the corpus is smaller than k: " +
       "seeds clamp to the corpus, search still serves") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiny").toString
+    val dir = tempDir("graft-tiny").toString
     val rnd = new scala.util.Random(7)
     // 5 vectors < IvfK=16: k-means seeds = all 5, every cell singleton
     (0L until 5L).map(i => (i, Array.fill(16)(rnd.nextGaussian().toFloat), 0))
@@ -682,7 +682,7 @@ class SimilaritySpec extends SparkSpec {
       "full rebuild") {
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val dir = JF.createTempDirectory("graft-pq-incr").toString
+    val dir = tempDir("graft-pq-incr").toString
     val rnd = new scala.util.Random(13)
     val dims = 16; val kC = 4; val perC = 20
     val centers = Array.fill(kC, dims)(rnd.nextGaussian().toFloat)
@@ -813,7 +813,7 @@ class SimilaritySpec extends SparkSpec {
           .select((col("vec_id") + 2L * off).as("vec_id"),
             transform(col("embedding"), x => -x).as("embedding"),
             col("label")))
-      val udir = java.nio.file.Files.createTempDirectory("graft-q141u").toString
+      val udir = tempDir("graft-q141u").toString
       corpus.unionByName(batch).write.parquet(s"$udir/embeddings.parquet")
       val want = minComponents(
         SimilarityOps.queries("q41_embed_neardup")(spark, udir)
@@ -830,7 +830,7 @@ class SimilaritySpec extends SparkSpec {
   test("q141 merge case: a batch vector bridging two standing clusters merges them") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-q141m").toString
+    val dir = tempDir("graft-q141m").toString
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     // clusters A={0,1} (e0-ish) and B={10,11} (e2-ish), cos(A,B)=0 —
     // separate; id 7 points AWAY from both (no pair, unclustered);

@@ -35,8 +35,7 @@ class SparkConnectSpec extends SparkSpec {
     import org.apache.spark.connect.proto._
     import org.apache.spark.sql.connect.service.SparkConnectService
 
-    val t = java.nio.file.Files
-      .createTempDirectory("graft-connect-spec").resolve("t").toString
+    val t = tempDir("graft-connect-spec").resolve("t").toString
     DeltaTable.write(Seq((1, "Alice", 75000L), (2, "Bob", 65000L),
       (3, "Carol", 80000L)).toDF("id", "name", "salary"),
       t, "overwrite")                                            // v0

@@ -10,21 +10,17 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh temp dir under `prefix`, deleted when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = Scratch.dir(prefix)
 }
 
 object SparkSpec {
+  // the harness session, so specs exercise the injected optimizer
+  // rules (MetadataOnlyCount) and native functions exactly as
+  // Bench/Verify do
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same extension wiring as Bench/Verify, so specs exercise the
-      // injected optimizer rules (MetadataOnlyCount) and native
-      // functions exactly as the harness sessions do
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -12,7 +12,7 @@ class StorageSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitionBy writes Hive-style dirs and the scan prunes to one") {
-    val t = Files.createTempDirectory("graft-prune").resolve("t").toString
+    val t = tempDir("graft-prune").resolve("t").toString
     Tables.load(spark, sf, "customer")
       .write.partitionBy("c_mktsegment").parquet(t)
     // on-disk layout: one dir per segment
@@ -57,7 +57,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("parquet overwrite replaces, append accumulates") {
-    val t = Files.createTempDirectory("graft-modes").resolve("t").toString
+    val t = tempDir("graft-modes").resolve("t").toString
     spark.range(10).write.mode("overwrite").parquet(t)
     spark.range(5).write.mode("overwrite").parquet(t)
     assert(spark.read.parquet(t).count() === 5)
@@ -66,7 +66,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("roundtrip preserves values and schema exactly (range write/read)") {
-    val t = Files.createTempDirectory("graft-rt").resolve("t").toString
+    val t = tempDir("graft-rt").resolve("t").toString
     spark.range(100).selectExpr("id", "id * 2 AS doubled",
       "concat('item_', cast(id AS string)) AS name")
       .write.parquet(t)

@@ -55,7 +55,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSet
     // batch q57 over the same rows written as an events fixture
-    val dir = java.nio.file.Files.createTempDirectory("graft-sw-twin").toString
+    val dir = tempDir("graft-sw-twin").toString
     rows.toDF().withColumn("props", org.apache.spark.sql.functions.lit("{}"))
       .write.parquet(s"$dir/events.parquet")
     val batch = graft.operators.EventOps.q57SessionWindow(spark, dir).collect()
@@ -67,7 +67,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file source -> file sink e2e: exactly-once across a restart") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-e2e")
+    val base = tempDir("graft-stream-e2e")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     def drop(id: Long, value: Double): Unit =
       Seq(Event(id, ts("2024-01-01 10:00:00"), 1, "click", value))
@@ -92,7 +92,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-sink windowed rollup emits finalized windows (watermark e2e)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-wm")
+    val base = tempDir("graft-stream-wm")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     Seq(
       Event(0, ts("2024-01-01 10:15:00"), 1, "click", 1.5),
@@ -117,7 +117,7 @@ class StreamingSpec extends SparkSpec {
 
   test("graft-delta sink: exactly-once ingest, restart-safe, append-only log") {
     import graft.sources.DeltaLog
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-delta")
+    val base = tempDir("graft-stream-delta")
     val (src, table, ckpt) = (s"$base/src", s"$base/tbl", s"$base/ckpt")
     def drop(id: Long, value: Double): Unit =
       Seq(Event(id, ts("2024-01-01 10:00:00"), 1, "click", value))
@@ -151,7 +151,7 @@ class StreamingSpec extends SparkSpec {
 
   test("graft-delta sink into a generated-columns table: micro-batches inherit the contract") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-gen")
+    val base = tempDir("graft-stream-gen")
     val (table, ckpt) = (s"$base/tbl", s"$base/ckpt")
     // the table declares its generated partition column up front; the
     // STREAM never computes it - every micro-batch append inherits the
@@ -182,7 +182,7 @@ class StreamingSpec extends SparkSpec {
 
   test("graft-delta sink into an identity table: batches draw disjoint key ranges, replays don't burn them twice") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-id")
+    val base = tempDir("graft-stream-id")
     val (table, ckpt) = (s"$base/tbl", s"$base/ckpt")
     DeltaTable.write(
       spark.createDataFrame(Seq(Tuple1("seed"))).toDF("name"),
@@ -222,7 +222,7 @@ class StreamingSpec extends SparkSpec {
 
   test("graft-delta sink: replayed micro-batch commits exactly once") {
     import graft.sources.{DeltaTable, GraftDeltaStreamSink}
-    val t = java.nio.file.Files.createTempDirectory("graft-sink-replay")
+    val t = tempDir("graft-sink-replay")
       .resolve("t").toString
     val batch = Seq(
       Event(0, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
@@ -244,7 +244,7 @@ class StreamingSpec extends SparkSpec {
 
   test("delta stream source: snapshot + version tailing, lake-to-lake mirror") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val base = java.nio.file.Files.createTempDirectory("graft-delta-src")
+    val base = tempDir("graft-delta-src")
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
     def ids(t: String): Seq[Long] =
       spark.read.format("graft-delta").load(t)
@@ -322,7 +322,7 @@ class StreamingSpec extends SparkSpec {
       "serves its initial snapshot through the manifest + sidecars " +
       "and tails past the checkpoint") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-v2c")
+    val base = tempDir("graft-stream-v2c")
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
     Seq(Event(0, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
         Event(1, ts("2024-01-01 10:01:00"), 1, "view", 2.0))
@@ -360,7 +360,7 @@ class StreamingSpec extends SparkSpec {
   test("delta stream source x deletion vectors: the initial snapshot " +
       "and ignoreChanges re-deliveries subtract vector-dead rows") {
     import graft.sources.{DeltaLog, DeltaTable}
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-dv")
+    val base = tempDir("graft-stream-dv")
     val t = s"$base/t"
     DeltaTable.write((1 to 6).map(i => (i, i * 10L)).toDF("id", "v")
       .coalesce(1), t, "overwrite")                              // v0
@@ -399,7 +399,7 @@ class StreamingSpec extends SparkSpec {
   test("delta stream source: startingVersion skips the snapshot and " +
       "tails from the requested version, in both plain and CDF modes") {
     import graft.sources.DeltaTable
-    val base = java.nio.file.Files.createTempDirectory("graft-startver")
+    val base = tempDir("graft-startver")
     val t = s"$base/t"
     DeltaTable.write(Seq((1, 10L)).toDF("id", "v"), t, "overwrite") // v0
     DeltaTable.write(Seq((2, 20L)).toDF("id", "v"), t, "append")    // v1
@@ -438,7 +438,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming materialized view: change-feed merge equals batch recompute across restarts") {
     import graft.sources.DeltaTable
     import org.apache.spark.sql.functions.{col, count, lit, sum}
-    val base = java.nio.file.Files.createTempDirectory("graft-view")
+    val base = tempDir("graft-view")
     val (src, down, ckpt) = (s"$base/src", s"$base/down", s"$base/ckpt")
     def srcEvents(rows: Event*): Unit = rows.toSeq.toDF()
       .write.format("graft-delta").mode("append").save(src)
@@ -490,7 +490,7 @@ class StreamingSpec extends SparkSpec {
       "batch q153 recompute across batches, restarts and replays") {
     import graft.sources.DeltaTable
     import graft.operators.DedupOps
-    val base = java.nio.file.Files.createTempDirectory("graft-hostrep")
+    val base = tempDir("graft-hostrep")
     val (src, mv, ckpt) = (s"$base/src", s"$base/mv", s"$base/ckpt")
     def srcDocs(rows: (Long, String)*): Unit = rows.toSeq
       .toDF("doc_id", "text")
@@ -536,7 +536,7 @@ class StreamingSpec extends SparkSpec {
 
   test("delta stream source serves a shallow clone: snapshot, own tail, source isolation") {
     import graft.sources.DeltaTable
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-clone")
+    val base = tempDir("graft-stream-clone")
     val (src, tgt, out, ckpt) =
       (s"$base/src", s"$base/tgt", s"$base/out", s"$base/ckpt")
     DeltaTable.write(spark.createDataFrame(Seq((1L, "a"), (2L, "b")))
@@ -564,7 +564,7 @@ class StreamingSpec extends SparkSpec {
 
   test("delta source rate limit: backlog spreads over micro-batches") {
     import graft.sources.DeltaLog
-    val base = java.nio.file.Files.createTempDirectory("graft-delta-rate")
+    val base = tempDir("graft-delta-rate")
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
     Seq(Event(0, ts("2024-01-01 10:00:00"), 1, "click", 1.0))
       .toDF().write.format("graft-delta").save(src) // v0
@@ -592,7 +592,7 @@ class StreamingSpec extends SparkSpec {
       "file; Trigger.Once parks mid-version; restart resumes exactly; " +
       "dropping the option mid-version refuses loudly") {
     import graft.sources.DeltaLog
-    val base = java.nio.file.Files.createTempDirectory("graft-delta-frate")
+    val base = tempDir("graft-delta-frate")
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
     def events(ids: Range) = ids.map(i =>
       Event(i.toLong, ts("2024-01-01 10:00:00"), 1, "click", 1.0)).toDF()
@@ -656,7 +656,7 @@ class StreamingSpec extends SparkSpec {
     // from.version > end.version, the replay delivered zero rows, and
     // the first <cap> snapshot files were marked delivered forever.
     import graft.sources.DeltaLog
-    val base = java.nio.file.Files.createTempDirectory("graft-delta-uncommitted")
+    val base = tempDir("graft-delta-uncommitted")
     val (src, ckpt) = (s"$base/src", s"$base/ckpt")
     def events(ids: Range) = ids.map(i =>
       Event(i.toLong, ts("2024-01-01 10:00:00"), 1, "click", 1.0)).toDF()
@@ -706,7 +706,7 @@ class StreamingSpec extends SparkSpec {
   test("maxBytesPerTrigger: a byte budget below any file size admits " +
       "exactly one file per batch — oversized files never stall") {
     import graft.sources.DeltaLog
-    val base = java.nio.file.Files.createTempDirectory("graft-delta-brate")
+    val base = tempDir("graft-delta-brate")
     val (src, dst, ckpt) = (s"$base/src", s"$base/dst", s"$base/ckpt")
     (0 until 6).map(i =>
       Event(i.toLong, ts("2024-01-01 10:00:00"), 1, "click", 1.0)).toDF()
@@ -730,7 +730,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup: each fingerprint emitted once across batches and restarts") {
     import graft.streaming.StreamingOps.Doc
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
+    val base = tempDir("graft-stream-dedup")
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     def drop(docs: (Long, String)*): Unit =
       docs.map { case (id, t) => Doc(id, t, "en", "s", t.length.toLong) }
@@ -761,7 +761,7 @@ class StreamingSpec extends SparkSpec {
       "growing index, exactly-once across restarts") {
     import graft.operators.DedupOps
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-neardup")
+    val base = tempDir("graft-stream-neardup")
     val (src, pairs, ckpt, stage) =
       (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -832,7 +832,7 @@ class StreamingSpec extends SparkSpec {
       "codegen stage ids over 1 prior dir and over 5") {
     import graft.operators.DedupOps
     import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
-    val root = java.nio.file.Files.createTempDirectory("graft-corpus-shape")
+    val root = tempDir("graft-corpus-shape")
     val dirs = (0 until 7).map { i =>
       val d = root.resolve(s"batch-$i").toString
       DedupOps.shingleArrays(Seq((i.toLong,
@@ -872,7 +872,7 @@ class StreamingSpec extends SparkSpec {
       "per-type PREFIX Welford state, spike flags, exactly-once " +
       "across restart") {
     import graft.sources.DeltaTable
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-burst")
+    val base = tempDir("graft-stream-burst")
     val (src, alerts, state, ckpt) =
       (s"$base/src", s"$base/alerts", s"$base/state", s"$base/ckpt")
     var id = 0L
@@ -943,7 +943,7 @@ class StreamingSpec extends SparkSpec {
       "stamp preserved, idempotent") {
     import graft.operators.DedupOps
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft-compact")
+    val base = tempDir("graft-compact")
     val (src, pairs, ckpt, stage) =
       (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1089,7 +1089,7 @@ class StreamingSpec extends SparkSpec {
       "recompute on streamed docs, exactly-once across restarts") {
     import graft.operators.DedupOps
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-substr")
+    val base = tempDir("graft-stream-substr")
     val (src, spansT, ckpt, stage) =
       (s"$base/src", s"$base/spans", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1167,7 +1167,7 @@ class StreamingSpec extends SparkSpec {
       "batch q133 recompute on streamed docs, exactly-once across restarts") {
     import graft.operators.DedupOps
     import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-clean")
+    val base = tempDir("graft-stream-clean")
     val (src, spansT, cleanT, ckpt, stage) =
       (s"$base/src", s"$base/spans", s"$base/clean", s"$base/ckpt",
         s"$base/stage")
@@ -1239,7 +1239,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-sq")
+    val base = tempDir("graft-stream-sq")
     val (src, codes, ckpt, stage) =
       (s"$base/src", s"$base/codes", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1316,7 +1316,7 @@ class StreamingSpec extends SparkSpec {
     assert(drift.values.forall(v => v >= 0.0 && v <= 1.0), drift.toString)
     // the between-batches rebuild cue: three fabricated high-drift
     // batches trip it, the real (near-seed) batches must not have
-    val fake = java.nio.file.Files.createTempDirectory("graft-driftlog")
+    val fake = tempDir("graft-driftlog")
     java.nio.file.Files.createDirectories(fake.resolve("_drift"))
     for (i <- 0 to 2)
       java.nio.file.Files.write(fake.resolve("_drift").resolve(i.toString),
@@ -1332,7 +1332,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming perceptual media near-dup: batch pairs vs the growing " +
       "fingerprint index, exactly-once across a restart") {
     import graft.operators.MultimodalOps
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-media")
+    val base = tempDir("graft-stream-media")
     val (src, pairsT, ckpt, stage) =
       (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1398,7 +1398,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming incremental semantic dedup: labels == from-scratch " +
       "clustering, cluster merge across a restart, exactly-once") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-semcc")
+    val base = tempDir("graft-stream-semcc")
     val (src, labelsT, ckpt, stage) =
       (s"$base/src", s"$base/labels", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1511,7 +1511,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import java.nio.file.{Files => JF, Paths => JP}
     import java.nio.file.attribute.FileTime
-    val base = java.nio.file.Files.createTempDirectory("graft-rehearsal")
+    val base = tempDir("graft-rehearsal")
     val (src, codes, ckpt, stage) =
       (s"$base/src", s"$base/codes", s"$base/ckpt", s"$base/stage")
     val seedDir = s"$base/seed"
@@ -1614,7 +1614,7 @@ class StreamingSpec extends SparkSpec {
       "across DML, exactly-once across a restart, and maintains a " +
       "downstream aggregate through a DELETE") {
     import graft.sources.DeltaTable
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-cdf")
+    val base = tempDir("graft-stream-cdf")
     val t = s"$base/t"
     val ckpt = s"$base/ckpt"
     DeltaTable.write(Seq((1, "a", 10L), (2, "a", 20L), (3, "b", 30L))
@@ -1690,7 +1690,7 @@ class StreamingSpec extends SparkSpec {
       "the pinned schema, a restart adopts the new names, a mid-stream " +
       "drop fails loudly") {
     import graft.sources.DeltaTable
-    val base = java.nio.file.Files.createTempDirectory("graft-mapped-stream")
+    val base = tempDir("graft-mapped-stream")
     val t = s"$base/t"
     val ckpt = s"$base/ckpt"
     DeltaTable.write(Seq((1, "Alice", 75000L)).toDF("id", "name", "salary"),
@@ -1758,7 +1758,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("near-dup staging guard: a checkpoint reset cannot pair with stale staging") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stage-guard")
+    val base = tempDir("graft-stage-guard")
     val (src, pairs, stage) = (s"$base/src", s"$base/pairs", s"$base/stage")
     val seedDir = s"$base/seed"
     def doc(id: Long, t: String) = (id, t, "en", "s", t.length.toLong)

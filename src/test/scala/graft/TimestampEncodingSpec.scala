@@ -23,7 +23,7 @@ class TimestampEncodingSpec extends SparkSpec {
   private val micros = Seq(1700000000000001L, 1700000123456789L, 1709999999999999L)
 
   private def writeFixture(encode: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tsenc").toString
+    val dir = tempDir("graft-tsenc").toString
     val base = micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")
