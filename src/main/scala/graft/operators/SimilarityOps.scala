@@ -425,14 +425,12 @@ object SimilarityOps {
     * paths too, leaving only the q73 decode seam genuinely
     * rows-only. */
   @volatile private var q42LastDir: Option[String] = None
-  @volatile private var q42OracleBuilt: Option[(String, String)] = None
 
   private[graft] def q42OracleIfStaged: Map[String, String] =
     (for {
       dir <- q42LastDir
       spark <- SparkSession.getActiveSession
-      sql <- scala.util.Try(ivfStagedOracle(spark, dir, q42OracleBuilt,
-        built => q42OracleBuilt = Some(built),
+      sql <- scala.util.Try(ivfStagedOracle(spark, dir, "q42",
         q42OracleTemplate)).toOption.flatten
     } yield Map("q42_ann_ivf" -> sql)).getOrElse(Map.empty)
 
@@ -1534,7 +1532,6 @@ object SimilarityOps {
   }
 
   @volatile private var q126LastDir: Option[String] = None
-  @volatile private var q126OracleBuilt: Option[(String, String)] = None
 
   /** q126's DuckDB oracle, constructed at Verify-dump time exactly
     * like q42's/q77's ([[q77OracleIfStaged]] has the full
@@ -1556,37 +1553,23 @@ object SimilarityOps {
     } yield Map("q126_pq_ann" -> sql)).getOrElse(Map.empty)
 
   private def q126StagedOracle(spark: SparkSession,
-      dir: String): Option[String] = {
-    val src = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    val stateKey = src.toAbsolutePath.toString + ":" +
-      StagedCache.fingerprint(src)
-    q126OracleBuilt match {
-      case Some((k, sql)) if k == stateKey => Some(sql)
-      case _ =>
-        if (stagedCorpusMaxId(spark, dir).exists(_ > Q77OracleMaxCorpus))
-          None
-        else {
-          val e = Tables.load(spark, dir, "embeddings")
-          val dim = e.select(size(col("embedding"))).head.getInt(0)
-          val codeRows = pqCodesWide(stagedPqCodes(spark, dir)).collect()
-            .map(r => s"(${r.getLong(0)},${r.getInt(1)},${r.getInt(2)}," +
-              s"${r.getInt(3)},${r.getInt(4)})")
-          val centRows = stagedPqCents(spark, dir)
-            .select(col("sub"), col("code"),
-              posexplode(col("centroid")).as(Seq("pos", "cv")))
-            .collect()
-            .map(r => f"(${r.getInt(0)},${r.getInt(1)},${r.getInt(2)}," +
-              f"${r.getFloat(3).toDouble}%.17e)")
-          if (codeRows.isEmpty || centRows.isEmpty) None
-          else {
-            val sql = q126OracleTemplate(dim / PqM,
-              codeRows.mkString(","), centRows.mkString(","))
-            q126OracleBuilt = Some((stateKey, sql))
-            Some(sql)
-          }
-        }
+      dir: String): Option[String] =
+    stagedOracle(spark, dir, "q126") {
+      val e = Tables.load(spark, dir, "embeddings")
+      val dim = e.select(size(col("embedding"))).head.getInt(0)
+      val codeRows = pqCodesWide(stagedPqCodes(spark, dir)).collect()
+        .map(r => s"(${r.getLong(0)},${r.getInt(1)},${r.getInt(2)}," +
+          s"${r.getInt(3)},${r.getInt(4)})")
+      val centRows = stagedPqCents(spark, dir)
+        .select(col("sub"), col("code"),
+          posexplode(col("centroid")).as(Seq("pos", "cv")))
+        .collect()
+        .map(r => f"(${r.getInt(0)},${r.getInt(1)},${r.getInt(2)}," +
+          f"${r.getFloat(3).toDouble}%.17e)")
+      if (codeRows.isEmpty || centRows.isEmpty) None
+      else Some(q126OracleTemplate(dim / PqM,
+        codeRows.mkString(","), centRows.mkString(",")))
     }
-  }
 
   /** The replay SQL around the embedded codes + codebooks. Engine
     * twin: [[pqAdcTopK]] — same ordered LUT folds, same left-assoc
@@ -2027,7 +2010,6 @@ object SimilarityOps {
     * and runs no Spark job beyond two bounded collects and the
     * [[stagedCorpusMaxId]] row-group-stats probe). */
   @volatile private var q77LastDir: Option[String] = None
-  @volatile private var q77OracleBuilt: Option[(String, String)] = None // stateKey -> sql
 
   /** Oracle-ization cap: past this corpus size the (vec_id, cell)
     * VALUES embed would bloat oracle_sql.json for no verification gain
@@ -2065,44 +2047,38 @@ object SimilarityOps {
     (for {
       dir <- q77LastDir
       spark <- SparkSession.getActiveSession
-      sql <- scala.util.Try(ivfStagedOracle(spark, dir, q77OracleBuilt,
-        built => q77OracleBuilt = Some(built),
+      sql <- scala.util.Try(ivfStagedOracle(spark, dir, "q77",
         q77OracleTemplate)).toOption.flatten
     } yield Map("q77_ivf_sq_ann" -> sql)).getOrElse(Map.empty)
 
+  /** The staged oracles' SQL (q42, q77, q126, q81), one entry per
+    * query and corpus: valid while `embeddings.parquet` is unchanged.
+    * None = the corpus is past [[Q77OracleMaxCorpus]] or the builder
+    * declined; the query then keeps its rows-only record. */
+  private val oracleSql = new StagedIndex[Option[String]]("staged-oracle", _ => Nil)
+
+  private def stagedOracle(spark: SparkSession, dir: String, query: String)(
+      build: => Option[String]): Option[String] =
+    oracleSql.get(StagedCache.source(dir, "embeddings"), query)(
+      if (stagedCorpusMaxId(spark, dir).exists(_ > Q77OracleMaxCorpus)) None
+      else build)
+
   /** Shared staged-oracle builder for the IVF-backed queries (q42,
     * q77): embeds the memoized cell assignment + probe pairs into the
-    * caller's SQL template, cached per corpus fingerprint. The two
-    * collects are oracle-construction scaffolding at verify scale
-    * (capped), never the production query path. */
+    * caller's SQL template. The two collects are oracle-construction
+    * scaffolding at verify scale (capped), never the production query
+    * path. */
   private def ivfStagedOracle(spark: SparkSession, dir: String,
-      cached: Option[(String, String)],
-      store: ((String, String)) => Unit,
-      template: (String, String) => String): Option[String] = {
-    val src = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    val stateKey = src.toAbsolutePath.toString + ":" +
-      StagedCache.fingerprint(src)
-    cached match {
-      case Some((k, sql)) if k == stateKey => Some(sql)
-      case _ =>
-        if (stagedCorpusMaxId(spark, dir).exists(_ > Q77OracleMaxCorpus))
-          None
-        else {
-          val (assign, _) =
-            stagedKmeans(spark, dir, ivfK(spark, dir), IvfIters)
-          val cells = assign.select(col("vec_id"), col("cell"))
-            .collect().map(r => s"(${r.getLong(0)},${r.getInt(1)})")
-          val probes = ivfProbePairs(spark, dir)
-            .map { case (q, c) => s"($q,$c)" }
-          if (cells.isEmpty || probes.isEmpty) None
-          else {
-            val sql = template(cells.mkString(","), probes.mkString(","))
-            store((stateKey, sql))
-            Some(sql)
-          }
-        }
+      query: String, template: (String, String) => String): Option[String] =
+    stagedOracle(spark, dir, query) {
+      val (assign, _) = stagedKmeans(spark, dir, ivfK(spark, dir), IvfIters)
+      val cells = assign.select(col("vec_id"), col("cell"))
+        .collect().map(r => s"(${r.getLong(0)},${r.getInt(1)})")
+      val probes = ivfProbePairs(spark, dir)
+        .map { case (q, c) => s"($q,$c)" }
+      if (cells.isEmpty || probes.isEmpty) None
+      else Some(template(cells.mkString(","), probes.mkString(",")))
     }
-  }
 
   /** The replay SQL around the embedded assignment: q78's quantization
     * stages + q47's exact re-rank tail, restricted to the probed
@@ -2425,7 +2401,6 @@ object SimilarityOps {
   }
 
   @volatile private var q81LastDir: Option[String] = None
-  @volatile private var q81OracleBuilt: Option[(String, String)] = None
 
   /** q81's DuckDB oracle, constructed at Verify-dump time (round 17,
     * extending the q42/q77/q126 staged pattern to the LIFECYCLE
@@ -2456,47 +2431,32 @@ object SimilarityOps {
     } yield Map("q81_ivf_maintenance" -> sql)).getOrElse(Map.empty)
 
   private def q81StagedOracle(spark: SparkSession,
-      dir: String): Option[String] = {
-    val src = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    val stateKey = src.toAbsolutePath.toString + ":" +
-      StagedCache.fingerprint(src)
-    q81OracleBuilt match {
-      case Some((k, sql)) if k == stateKey => Some(sql)
-      case _ =>
-        if (stagedCorpusMaxId(spark, dir).exists(_ > Q77OracleMaxCorpus))
-          None
-        else {
-          val (mdir, pre, rebuilt, post) = stagedMaintenance(spark, dir)
-          // honest-constant gate: the TRUE-emitting oracle is only
-          // staged when the engine's measured flags ARE the expected
-          // constants — otherwise degrade to rows-only, never lie
-          if (!(pre > 0.5) || !rebuilt || !(post <= 0.3)) None
-          else {
-            val (assign, _) =
-              stagedKmeans(spark, mdir, ivfK(spark, mdir), IvfIters)
-            val cells = assign.select(col("vec_id"), col("cell"))
-              .collect().map(r => s"(${r.getLong(0)},${r.getInt(1)})")
-            val qDf = Tables.load(spark, mdir, "embeddings")
-              .filter(col("vec_id") >= 1000000L &&
-                col("vec_id") < 1000005L)
-              .select(col("vec_id").as("query_id"),
-                col("embedding").as("qv"))
-            // the SHARED probe helper (not an inline copy): a future
-            // probe-count or tiebreak change desyncs oracle and
-            // engine only if someone edits ivfSearchFor alone
-            val probes = ivfProbePairs(spark, mdir, Some(qDf))
-              .map { case (q, c) => s"($q,$c)" }
-            if (cells.isEmpty || probes.isEmpty) None
-            else {
-              val sql = q81OracleTemplate(cells.mkString(","),
-                probes.mkString(","))
-              q81OracleBuilt = Some((stateKey, sql))
-              Some(sql)
-            }
-          }
-        }
+      dir: String): Option[String] =
+    stagedOracle(spark, dir, "q81") {
+      val (mdir, pre, rebuilt, post) = stagedMaintenance(spark, dir)
+      // honest-constant gate: the TRUE-emitting oracle is only
+      // staged when the engine's measured flags ARE the expected
+      // constants — otherwise degrade to rows-only, never lie
+      if (!(pre > 0.5) || !rebuilt || !(post <= 0.3)) None
+      else {
+        val (assign, _) =
+          stagedKmeans(spark, mdir, ivfK(spark, mdir), IvfIters)
+        val cells = assign.select(col("vec_id"), col("cell"))
+          .collect().map(r => s"(${r.getLong(0)},${r.getInt(1)})")
+        val qDf = Tables.load(spark, mdir, "embeddings")
+          .filter(col("vec_id") >= 1000000L &&
+            col("vec_id") < 1000005L)
+          .select(col("vec_id").as("query_id"),
+            col("embedding").as("qv"))
+        // the SHARED probe helper (not an inline copy): a future
+        // probe-count or tiebreak change desyncs oracle and
+        // engine only if someone edits ivfSearchFor alone
+        val probes = ivfProbePairs(spark, mdir, Some(qDf))
+          .map { case (q, c) => s"($q,$c)" }
+        if (cells.isEmpty || probes.isEmpty) None
+        else Some(q81OracleTemplate(cells.mkString(","), probes.mkString(",")))
+      }
     }
-  }
 
   /** The replay SQL: derived-batch union, q42-style candidate
     * generation from the embedded assignment, exact ordered-SUM

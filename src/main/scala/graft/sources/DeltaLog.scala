@@ -122,13 +122,99 @@ object DeltaLog {
     * MAINTAIN (writing anyway breaks the table's contract for every
     * other client — e.g. appending without writing change data). */
   val SupportedReaderVersion = 3
-  val SupportedReaderFeatures: Set[String] =
-    Set("columnMapping", "deletionVectors", "typeWidening", "v2Checkpoint")
   val SupportedWriterVersion = 7
-  val SupportedWriterFeatures: Set[String] = SupportedReaderFeatures ++
-    Set("checkConstraints", "changeDataFeed", "appendOnly",
-      "generatedColumns", "identityColumns", "inCommitTimestamp",
-      "domainMetadata", "rowTracking")
+
+  /** One protocol table feature this engine implements.
+    *   - `readerWriter`: listed in `readerFeatures` too (a reader that
+    *     lacks it would return wrong rows), else writer-only.
+    *   - `legacyGate`: the legacy (reader, writer) versions graft raises
+    *     a table below the features gate to when the feature is added;
+    *     without one, adding it raises the table to writer 7.
+    *   - `impliedBy`: the legacy writer version from which a table
+    *     below the features gate supports the feature unlisted.
+    *   - `requires`: features that must be listed with it.
+    *   - `active`: whether a snapshot uses the feature, so an upgrade to
+    *     writer 7 must list it. */
+  final case class TableFeature(name: String, readerWriter: Boolean,
+      legacyGate: Option[(Int, Int)] = None, impliedBy: Option[Int] = None,
+      requires: Set[String] = Set.empty)(val active: Snapshot => Boolean)
+
+  private def prop(key: String)(snap: Snapshot): Boolean =
+    snap.configuration.get(key).contains("true")
+
+  /** The table-feature registry: every protocol decision (the supported
+    * sets, what an upgrade lists, what a legacy version implies) derives
+    * from these entries. Supporting a new feature means adding one. */
+  val Features: Seq[TableFeature] = Seq(
+    TableFeature("appendOnly", readerWriter = false, impliedBy = Some(2))(
+      prop("delta.appendOnly")),
+    TableFeature("checkConstraints", readerWriter = false,
+      legacyGate = Some((1, 3)), impliedBy = Some(3))(
+      _.checkConstraints.nonEmpty),
+    // no legacy implication: graft lists changeDataFeed whenever it
+    // writes change files, on legacy writer 4-6 tables too
+    TableFeature("changeDataFeed", readerWriter = false)(
+      prop("delta.enableChangeDataFeed")),
+    TableFeature(GeneratedColumns.Feature, readerWriter = false,
+      impliedBy = Some(4))(s => GeneratedColumns.anyIn(s.schemaJson)),
+    TableFeature("columnMapping", readerWriter = true,
+      legacyGate = Some((2, 5)), impliedBy = Some(5))(ColumnMapping.enabled),
+    TableFeature(IdentityColumns.Feature, readerWriter = false,
+      impliedBy = Some(6))(s => IdentityColumns.anyIn(s.schemaJson)),
+    TableFeature("deletionVectors", readerWriter = true)(
+      prop(DeletionVectors.PropKey)),
+    TableFeature("v2Checkpoint", readerWriter = true)(
+      _.configuration.get("delta.checkpointPolicy").contains("v2")),
+    TableFeature("typeWidening", readerWriter = true)(
+      prop("delta.enableTypeWidening")),
+    TableFeature("inCommitTimestamp", readerWriter = false)(
+      prop("delta.enableInCommitTimestamps")),
+    TableFeature("rowTracking", readerWriter = false,
+      requires = Set("domainMetadata"))(RowTracking.enabled),
+    TableFeature("domainMetadata", readerWriter = false)(RowTracking.enabled))
+
+  private val featureByName: Map[String, TableFeature] =
+    Features.map(f => f.name -> f).toMap
+
+  val SupportedReaderFeatures: Set[String] =
+    Features.filter(_.readerWriter).map(_.name).toSet
+  val SupportedWriterFeatures: Set[String] = Features.map(_.name).toSet
+
+  /** The protocol action a commit adding `adding` must carry, if any.
+    *   - Nothing when every added feature (and its requirements) is
+    *     already listed or implied by the table's legacy versions.
+    *   - Below writer 7, when every missing feature has a legacy gate:
+    *     the highest of those gates.
+    *   - Otherwise writer 7 (reader 3 for a reader-writer feature with
+    *     no legacy reader gate), listing the snapshot's features, every
+    *     active feature and the added ones — dropping an active feature
+    *     on the upgrade would let a feature-unaware writer corrupt the
+    *     table. */
+  def protocolFor(snap: Snapshot, adding: Set[String]): Option[String] = {
+    val added = (adding ++ adding.flatMap(featureByName(_).requires))
+      .toSeq.map(featureByName)
+    val (r, w) = (snap.minReaderVersion, snap.minWriterVersion)
+    def implied(f: TableFeature): Boolean = w < 7 &&
+      f.impliedBy.exists(_ <= w) && f.legacyGate.forall(_._1 <= r)
+    val missing = added.filterNot(f => snap.writerFeatures(f.name) || implied(f))
+    if (missing.isEmpty) None
+    else if (w < 7 && missing.forall(_.legacyGate.nonEmpty)) {
+      val gates = missing.flatMap(_.legacyGate)
+      Some(protocolAction((r +: gates.map(_._1)).max, (w +: gates.map(_._2)).max))
+    } else {
+      val listed = added ++ Features.filter(_.active(snap))
+      val reader = (r +: missing.filter(_.readerWriter)
+        .map(_.legacyGate.fold(3)(_._1))).max
+      Some(protocolAction(reader, 7,
+        (snap.readerFeatures ++ listed.filter(_.readerWriter).map(_.name)).toSeq,
+        (snap.writerFeatures ++ listed.map(_.name)).toSeq))
+    }
+  }
+
+  /** The snapshot's own protocol, restated (checkpoints, clones). */
+  def protocolOf(snap: Snapshot): String =
+    protocolAction(snap.minReaderVersion, snap.minWriterVersion,
+      snap.readerFeatures.toSeq, snap.writerFeatures.toSeq)
 
   /** Reader-side protocol gate — runs on every snapshot replay, so an
     * unreadable table fails loudly everywhere (read, stream, DML — a
@@ -978,14 +1064,10 @@ object DeltaLog {
 
   /** Protocol action (reader/writer capability gate). Version 1/2 =
     * the base protocol. Emitted in version 0 of every table and in
-    * every checkpoint, per the Delta spec. The first CHECK constraint
-    * upgrades minWriterVersion to 3 (the protocol's constraint gate — a
-    * writer that doesn't understand constraints must refuse to append,
-    * not violate them); column mapping raises to (2,5); deletion
-    * vectors raise to the table-features gate (3,7), which per the spec
-    * must LIST its features — a stock client at (3,7) refuses any
-    * feature name it doesn't implement, which is exactly the protection
-    * a DV table needs from a DV-unaware reader. */
+    * every checkpoint, per the Delta spec. Which versions and feature
+    * lists an upgrade carries is decided by [[protocolFor]] from the
+    * [[Features]] registry; at the features gate (3 / 7) the lists are
+    * written, sorted. */
   def protocolAction(minReaderVersion: Int = 1,
       minWriterVersion: Int = 2,
       readerFeatures: Seq[String] = Nil,

@@ -408,21 +408,8 @@ object DeltaTable {
           (if (idSpecs.nonEmpty) Set(IdentityColumns.Feature)
            else Set.empty[String])
       val protocolActions =
-        if (readVersion == -1L)
-          Seq(if (neededFeatures.isEmpty) DeltaLog.protocolAction()
-          else DeltaLog.protocolAction(1, 7, Nil, neededFeatures.toSeq))
-        else if (neededFeatures.nonEmpty && prior.exists(p =>
-            !(neededFeatures -- p.writerFeatures -- legacyImplied(p))
-              .isEmpty))
-          Seq(DeltaLog.protocolAction(
-            prior.get.minReaderVersion,
-            math.max(prior.get.minWriterVersion, 7),
-            if (prior.get.minReaderVersion >= 3)
-              prior.get.readerFeatures.toSeq else Nil,
-            (prior.get.writerFeatures ++
-              activeLegacyWriterFeatures(prior.get) ++
-              neededFeatures).toSeq))
-        else Nil
+        DeltaLog.protocolFor(snap, neededFeatures).orElse(
+          if (readVersion == -1L) Some(DeltaLog.protocolAction()) else None)
       // ROW TRACKING: fresh id ranges from the freshest high-water
       // mark, re-derived on every retry attempt (a racer may have
       // advanced the mark)
@@ -435,13 +422,12 @@ object DeltaTable {
           // protocol belongs in a table's FIRST commit (Delta spec);
           // later commits inherit it from replay/checkpoint
           protocolActions ++
-          Seq(DeltaLog.metaDataAction(genSchema.json, effectivePartitionBy,
-            DeltaLog.tableId(table),
-            // table properties (constraints, mapping mode) survive BOTH
-            // modes: an overwrite replaces data, not the table's
-            // contract. New mapped columns advance maxColumnId.
-            prior.map(_.configuration).getOrElse(Map.empty) ++
-              mappedMaxId.map(ColumnMapping.MaxIdKey -> _.toString))) ++
+          // table properties (constraints, mapping mode) survive BOTH
+          // modes: an overwrite replaces data, not the table's
+          // contract. New mapped columns advance maxColumnId.
+          carryMeta(table, snap.copy(partitionColumns = effectivePartitionBy),
+            Some(genSchema.json),
+            _ ++ mappedMaxId.map(ColumnMapping.MaxIdKey -> _.toString)) ++
           txn.map { case (appId, v) => DeltaLog.txnAction(appId, v) }.toSeq ++
           removes ++
           ridActs ++
@@ -477,19 +463,13 @@ object DeltaTable {
         .filter(not(expr(sqlExpr))).limit(1).count()
       require(bad == 0,
         s"cannot add CHECK constraint $name ($sqlExpr): existing rows violate it")
-      val actions = Seq(
-        DeltaLog.commitInfoAction("ADD CONSTRAINT")) ++
-        // the Delta protocol gates CHECK constraints behind writer
-        // version 3: upgrade atomically with the first constraint so a
-        // stock writer that can't enforce it refuses to append rather
-        // than silently committing violating rows
-        (if (snap.minWriterVersion < 3)
-          Seq(DeltaLog.protocolAction(snap.minReaderVersion, 3))
-        else Nil) ++
-        snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration + (s"delta.constraints.$name" -> sqlExpr)))
-      Commit(actions)
+      // the protocol gates CHECK constraints (writer 3, or listed at the
+      // features gate): upgrade atomically with the first constraint so
+      // a stock writer that can't enforce it refuses to append rather
+      // than silently committing violating rows
+      Commit(Seq(DeltaLog.commitInfoAction("ADD CONSTRAINT")) ++
+        DeltaLog.protocolFor(snap, Set("checkConstraints")) ++
+        carryMeta(table, snap, conf = _ + (s"delta.constraints.$name" -> sqlExpr)))
     }
   }
 
@@ -505,11 +485,8 @@ object DeltaTable {
       require(snap.configuration.contains(key),
         s"no CHECK constraint named $name on $table " +
           s"(have: ${snap.checkConstraints.map(_._1).sorted.mkString(",")})")
-      val actions = Seq(DeltaLog.commitInfoAction("DROP CONSTRAINT")) ++
-        snap.schemaJson.map(DeltaLog.metaDataAction(_,
-          snap.partitionColumns, DeltaLog.tableId(table),
-          snap.configuration - key))
-      Commit(actions)
+      Commit(Seq(DeltaLog.commitInfoAction("DROP CONSTRAINT")) ++
+        carryMeta(table, snap, conf = _ - key))
     }
   }
 
@@ -539,31 +516,18 @@ object DeltaTable {
         s"setTableProperty($key): use enableDeletionVectors (protocol " +
           "must rise to the table-features gate atomically)")
     }
+    // delta.enableChangeDataFeed and delta.appendOnly are
+    // PROTOCOL-bearing properties: once set, DML writes `_change_data/`
+    // sidecars or refuses data removes, and a writer unaware of the
+    // feature would break that contract — so turning one on gates its
+    // feature in the same commit
+    val adding = Set("changeDataFeed" -> "delta.enableChangeDataFeed",
+      "appendOnly" -> "delta.appendOnly").collect {
+      case (feature, key) if kvs.contains(key -> "true") => feature }
     transact(table, "setTableProperties") { snap =>
-      // delta.enableChangeDataFeed is a PROTOCOL-bearing property
-      // (stock Delta: writer feature `changeDataFeed`): once set, DML
-      // writes `_change_data/` sidecars, and a writer that did not
-      // would break every incremental consumer — so enabling it
-      // atomically raises the protocol to the table-features gate
-      // LISTING the feature (plus every other legacy feature the
-      // table already uses), exactly like enableDeletionVectors.
-      val protocolRise =
-        if (kvs.contains("delta.enableChangeDataFeed" -> "true") &&
-            !cdfEnabled(snap))
-          Seq(DeltaLog.protocolAction(
-            snap.minReaderVersion,
-            math.max(snap.minWriterVersion, 7),
-            if (snap.minReaderVersion >= 3) snap.readerFeatures.toSeq
-            else Nil,
-            (snap.writerFeatures ++ Set("changeDataFeed") ++
-              activeLegacyWriterFeatures(snap)).toSeq))
-        else Nil
-      val actions = Seq(
-        DeltaLog.commitInfoAction("SET TBLPROPERTIES")) ++ protocolRise ++ Seq(
-        DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-            new StructType().json), snap.partitionColumns,
-          DeltaLog.tableId(table), snap.configuration ++ kvs))
-      Commit(actions)
+      Commit(Seq(DeltaLog.commitInfoAction("SET TBLPROPERTIES")) ++
+        DeltaLog.protocolFor(snap, adding) ++
+        carryMeta(table, snap, conf = _ ++ kvs))
     }
   }
 
@@ -587,23 +551,11 @@ object DeltaTable {
           .getOrElse(throw new IllegalStateException(
             s"enableColumnMapping($table): table has no committed schema"))
         val (annotated, maxId) = ColumnMapping.annotateAsIs(schema, 0L)
-        val actions = Seq(
-          DeltaLog.commitInfoAction("SET COLUMN MAPPING"),
-          DeltaLog.protocolAction(
-            math.max(snap.minReaderVersion, 2),
-            math.max(snap.minWriterVersion, 5),
-            // a table already at the features gate (DV enabled) must keep
-            // LISTING its features — and gain the mapping one
-            if (snap.minReaderVersion >= 3)
-              (snap.readerFeatures + "columnMapping").toSeq else Nil,
-            if (snap.minWriterVersion >= 7)
-              (snap.writerFeatures + "columnMapping").toSeq else Nil),
-          DeltaLog.metaDataAction(annotated.json, snap.partitionColumns,
-            DeltaLog.tableId(table),
-            snap.configuration +
-              (ColumnMapping.ModeKey -> "name") +
-              (ColumnMapping.MaxIdKey -> maxId.toString)))
-        Commit(actions)
+        Commit(Seq(DeltaLog.commitInfoAction("SET COLUMN MAPPING")) ++
+          DeltaLog.protocolFor(snap, Set("columnMapping")) ++
+          carryMeta(table, snap, Some(annotated.json), _ +
+            (ColumnMapping.ModeKey -> "name") +
+            (ColumnMapping.MaxIdKey -> maxId.toString)))
       }
     }
   }
@@ -696,36 +648,21 @@ object DeltaTable {
       txn: Option[(String, Long)]): Boolean =
     txn.exists { case (appId, v) => snap.txns.get(appId).exists(_ >= v) }
 
-  /** Legacy writer capabilities ACTIVE on this snapshot — the set a
-    * legacy→table-features protocol upgrade must carry into
-    * `writerFeatures` (Delta spec: a version-7 table lists everything
-    * it uses; dropping one on upgrade would let a feature-unaware
-    * writer corrupt it). */
-  private def activeLegacyWriterFeatures(
-      snap: DeltaLog.Snapshot): Set[String] =
-    (if (snap.checkConstraints.nonEmpty) Set("checkConstraints")
-     else Set.empty[String]) ++
-      (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
-      (if (snap.configuration.get("delta.appendOnly").contains("true"))
-        Set("appendOnly") else Set.empty) ++
-      (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty) ++
-      (if (GeneratedColumns.anyIn(snap.schemaJson))
-        Set(GeneratedColumns.Feature) else Set.empty) ++
-      (if (IdentityColumns.anyIn(snap.schemaJson))
-        Set(IdentityColumns.Feature) else Set.empty)
-
-  /** Writer features a LEGACY minWriterVersion already implies (the
-    * protocol's version ladder) — no features-gate raise is needed
-    * when the ladder covers the feature. */
-  private def legacyImplied(snap: DeltaLog.Snapshot): Set[String] =
-    snap.minWriterVersion match {
-      case 4 => Set(GeneratedColumns.Feature, "changeDataFeed")
-      case 5 => Set(GeneratedColumns.Feature, "changeDataFeed",
-        "columnMapping")
-      case 6 => Set(GeneratedColumns.Feature, "changeDataFeed",
-        "columnMapping", IdentityColumns.Feature)
-      case _ => Set.empty
-    }
+  /** The metaData action carrying `snap`'s table contract (partition
+    * layout, table id, configuration) into a commit on `table`, with
+    * `schema` replacing the committed schema and `conf` applied to the
+    * configuration. A table with no committed schema gets one only when
+    * the configuration changes (an empty struct), so the change lands. */
+  private def carryMeta(table: String, snap: DeltaLog.Snapshot,
+      schema: Option[String] = None,
+      conf: Map[String, String] => Map[String, String] = identity)
+      : Option[String] = {
+    val cfg = conf(snap.configuration)
+    schema.orElse(snap.schemaJson)
+      .orElse(Option.when(cfg != snap.configuration)(new StructType().json))
+      .map(DeltaLog.metaDataAction(_, snap.partitionColumns,
+        DeltaLog.tableId(table), cfg))
+  }
 
   /** ALTER TABLE SET delta.enableDeletionVectors = true: DELETEs stop
     * rewriting touched files and instead mark dead rows in sidecar
@@ -738,21 +675,9 @@ object DeltaTable {
     transact(table, "enableDeletionVectors") { snap =>
       if (dvEnabled(snap)) Done(snap.version)
       else {
-        val feats = Set("deletionVectors") ++
-          (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty)
-        val wfeats = feats ++ activeLegacyWriterFeatures(snap)
-        val actions = Seq(
-          DeltaLog.commitInfoAction("SET DELETION VECTORS"),
-          DeltaLog.protocolAction(
-            math.max(snap.minReaderVersion, 3),
-            math.max(snap.minWriterVersion, 7),
-            (snap.readerFeatures ++ feats).toSeq,
-            (snap.writerFeatures ++ wfeats).toSeq),
-          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-              new StructType().json), snap.partitionColumns,
-            DeltaLog.tableId(table),
-            snap.configuration + (DeletionVectors.PropKey -> "true")))
-        Commit(actions)
+        Commit(Seq(DeltaLog.commitInfoAction("SET DELETION VECTORS")) ++
+          DeltaLog.protocolFor(snap, Set("deletionVectors")) ++
+          carryMeta(table, snap, conf = _ + (DeletionVectors.PropKey -> "true")))
       }
     }
   }
@@ -773,23 +698,9 @@ object DeltaTable {
       if (snap.configuration.get("delta.checkpointPolicy").contains("v2"))
         Done(snap.version)
       else {
-        val feats = Set("v2Checkpoint") ++
-          (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty) ++
-          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty)
-        val wfeats = feats ++ snap.writerFeatures ++
-          activeLegacyWriterFeatures(snap)
-        val actions = Seq(
-          DeltaLog.commitInfoAction("SET CHECKPOINT POLICY"),
-          DeltaLog.protocolAction(
-            math.max(snap.minReaderVersion, 3),
-            math.max(snap.minWriterVersion, 7),
-            (snap.readerFeatures ++ feats).toSeq,
-            wfeats.toSeq),
-          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-              new StructType().json), snap.partitionColumns,
-            DeltaLog.tableId(table),
-            snap.configuration + ("delta.checkpointPolicy" -> "v2")))
-        Commit(actions)
+        Commit(Seq(DeltaLog.commitInfoAction("SET CHECKPOINT POLICY")) ++
+          DeltaLog.protocolFor(snap, Set("v2Checkpoint")) ++
+          carryMeta(table, snap, conf = _ + ("delta.checkpointPolicy" -> "v2")))
       }
     }
   }
@@ -808,26 +719,14 @@ object DeltaTable {
       if (snap.configuration.get("delta.enableInCommitTimestamps")
           .contains("true")) Done(snap.version)
       else {
-        val wfeats = Set("inCommitTimestamp") ++ snap.writerFeatures ++
-          activeLegacyWriterFeatures(snap) ++
-          (if (ColumnMapping.enabled(snap)) Set("columnMapping")
-           else Set.empty[String]) ++
-          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
-        val actions = Seq(
-          DeltaLog.commitInfoAction("SET IN-COMMIT TIMESTAMPS"),
-          DeltaLog.protocolAction(snap.minReaderVersion,
-            math.max(snap.minWriterVersion, 7),
-            snap.readerFeatures.toSeq, wfeats.toSeq),
-          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-              new StructType().json), snap.partitionColumns,
-            DeltaLog.tableId(table),
-            snap.configuration ++ Map(
-              "delta.enableInCommitTimestamps" -> "true",
-              "delta.inCommitTimestampEnablementVersion" ->
-                (snap.version + 1).toString,
-              "delta.inCommitTimestampEnablementTimestamp" ->
-                System.currentTimeMillis().toString)))
-        Commit(actions)
+        Commit(Seq(DeltaLog.commitInfoAction("SET IN-COMMIT TIMESTAMPS")) ++
+          DeltaLog.protocolFor(snap, Set("inCommitTimestamp")) ++
+          carryMeta(table, snap, conf = _ ++ Map(
+            "delta.enableInCommitTimestamps" -> "true",
+            "delta.inCommitTimestampEnablementVersion" ->
+              (snap.version + 1).toString,
+            "delta.inCommitTimestampEnablementTimestamp" ->
+              System.currentTimeMillis().toString)))
       }
     }
   }
@@ -860,22 +759,11 @@ object DeltaTable {
           next += n
           withId
         }
-        val wfeats = snap.writerFeatures ++
-          activeLegacyWriterFeatures(snap) ++
-          Set("rowTracking", "domainMetadata") ++
-          (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty[String])
-        val actions = Seq(
-          DeltaLog.commitInfoAction("SET ROW TRACKING"),
-          DeltaLog.protocolAction(snap.minReaderVersion,
-            math.max(snap.minWriterVersion, 7),
-            snap.readerFeatures.toSeq, wfeats.toSeq),
-          DeltaLog.metaDataAction(snap.schemaJson.getOrElse(
-              new StructType().json), snap.partitionColumns,
-            DeltaLog.tableId(table),
-            snap.configuration + (RowTracking.PropKey -> "true")),
-          RowTracking.domainAction(next - 1)) ++
-          backfilled.map(DeltaLog.addActionOf(_, dataChange = false))
-        Commit(actions)
+        Commit(Seq(DeltaLog.commitInfoAction("SET ROW TRACKING")) ++
+          DeltaLog.protocolFor(snap, Set("rowTracking")) ++
+          carryMeta(table, snap, conf = _ + (RowTracking.PropKey -> "true")) ++
+          Seq(RowTracking.domainAction(next - 1)) ++
+          backfilled.map(DeltaLog.addActionOf(_, dataChange = false)))
       }
     }
   }
@@ -929,11 +817,8 @@ object DeltaTable {
         s"renameColumn($table): bad column name '$newName'")
       val renamed = StructType(schema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
-      val actions = Seq(
-        DeltaLog.commitInfoAction("RENAME COLUMN"),
-        DeltaLog.metaDataAction(renamed.json, snap.partitionColumns,
-          DeltaLog.tableId(table), snap.configuration))
-      Commit(actions)
+      Commit(Seq(DeltaLog.commitInfoAction("RENAME COLUMN")) ++
+        carryMeta(table, snap, Some(renamed.json)))
     }
   }
 
@@ -949,11 +834,8 @@ object DeltaTable {
       require(schema.fields.length > 1,
         s"dropColumn($table, $name): cannot drop the last column")
       val remaining = StructType(schema.fields.filterNot(_.name == name))
-      val actions = Seq(
-        DeltaLog.commitInfoAction("DROP COLUMN"),
-        DeltaLog.metaDataAction(remaining.json, snap.partitionColumns,
-          DeltaLog.tableId(table), snap.configuration))
-      Commit(actions)
+      Commit(Seq(DeltaLog.commitInfoAction("DROP COLUMN")) ++
+        carryMeta(table, snap, Some(remaining.json)))
     }
   }
 
@@ -1062,30 +944,13 @@ object DeltaTable {
           metadata = new org.apache.spark.sql.types.MetadataBuilder()
             .withMetadata(f.metadata)
             .putString("delta.typeChanges", hist).build())))
-      val feats = Set("typeWidening") ++
-        (if (ColumnMapping.enabled(snap)) Set("columnMapping") else Set.empty) ++
-        (if (dvEnabled(snap)) Set("deletionVectors") else Set.empty)
-      val actions = Seq(
-        DeltaLog.commitInfoAction("ALTER COLUMN TYPE"),
-        DeltaLog.protocolAction(
-          math.max(snap.minReaderVersion, 3),
-          math.max(snap.minWriterVersion, 7),
-          (snap.readerFeatures ++ feats).toSeq,
-          (snap.writerFeatures ++ feats ++
-            activeLegacyWriterFeatures(snap)).toSeq),
-        DeltaLog.metaDataAction(widened.json, snap.partitionColumns,
-          DeltaLog.tableId(table),
-          snap.configuration + ("delta.enableTypeWidening" -> "true")))
-      Commit(actions)
+      Commit(Seq(DeltaLog.commitInfoAction("ALTER COLUMN TYPE")) ++
+        DeltaLog.protocolFor(snap, Set("typeWidening")) ++
+        carryMeta(table, snap, Some(widened.json),
+          _ + ("delta.enableTypeWidening" -> "true")))
     }
   }
 
-  /** Enforce the table's CHECK constraints against freshly staged
-    * files; on violation the orphan staged files are removed and the
-    * write fails loudly BEFORE any commit references them. One
-    * pushed-down filter-limit-1 scan per constraint over only the
-    * staged bytes (parquet row-group stats usually answer it without
-    * reading data pages). */
   /** The mapping-annotated logical schema of `snap`, iff column mapping
     * is enabled — the value every mapped code path threads around. */
   private def mappingOf(snap: DeltaLog.Snapshot): Option[StructType] =
@@ -1440,6 +1305,12 @@ object DeltaTable {
     df.filter(!org.apache.spark.sql.GraftSqlBridge.column(dead))
   }
 
+  /** Enforce the table's CHECK constraints against freshly staged
+    * files; on violation the orphan staged files are removed and the
+    * write fails loudly BEFORE any commit references them. One
+    * pushed-down filter-limit-1 scan per constraint over only the
+    * staged bytes (parquet row-group stats usually answer it without
+    * reading data pages). */
   private def enforceConstraints(spark: SparkSession, table: String,
       added: Seq[DeltaLog.AddFile],
       constraints: Seq[(String, String)],
@@ -1698,25 +1569,9 @@ object DeltaTable {
         case (_, fs) => fs.length > 1 || fs.exists(_.dv.isDefined)
       }.values.flatten.toSeq.sortBy(_.path)
       if (work.isEmpty) Done(snap.version)
-      else {
-        val rows = (if (!RowTracking.enabled(snap))
-            readTableFiles(spark, table, snap,
-              work.map(f => Paths.get(table).resolve(f.path).toString))
-          else rowIdFrame(spark, table, snap, work)
-            .withColumnRenamed("_row_id", RowTracking.IdCol)
-            .withColumnRenamed("_row_commit_version", RowTracking.VerCol))
-          .repartition(snap.partitionColumns.map(col): _*)
-        val added = stageIn(rows, table, snap.partitionColumns,
-          mappingOf(snap))
-        val actions =
-          Seq(DeltaLog.commitInfoAction("COMPACT WHERE")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_,
-              snap.partitionColumns, DeltaLog.tableId(table),
-              snap.configuration)) ++
-            work.map(f => DeltaLog.removeAction(f.path, dataChange = false)) ++
-            added.map(DeltaLog.addActionOf(_, dataChange = false))
-        Commit(actions, added.map(_.path))
-      }
+      else relayout("COMPACT WHERE", table, snap, work,
+        dmlRowsWithIds(spark, table, snap, work.map(_.path))
+          .repartition(snap.partitionColumns.map(col): _*))
     }
   }
 
@@ -1749,25 +1604,12 @@ object DeltaTable {
         // not invalidate id-keyed consumers)
         val snapDf =
           if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
-          else rowIdFrame(spark, table, snap, snap.files)
-            .withColumnRenamed("_row_id", RowTracking.IdCol)
-            .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
+          else dmlRowsWithIds(spark, table, snap, snap.files.map(_.path))
         val compacted =
           if (snap.partitionColumns.isEmpty) snapDf.coalesce(nOut)
           else snapDf.repartition(snap.partitionColumns.map(
             org.apache.spark.sql.functions.col): _*)
-        val added = stageIn(compacted, table, snap.partitionColumns,
-          mappingOf(snap))
-        val actions =
-          Seq(DeltaLog.commitInfoAction("COMPACT")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-              DeltaLog.tableId(table), snap.configuration)) ++
-            // dataChange=false: same rows, new layout — streams and the
-            // change feed skip this version by the protocol bit
-            snap.files.map(f =>
-              DeltaLog.removeAction(f.path, dataChange = false)) ++
-            added.map(DeltaLog.addActionOf(_, dataChange = false))
-        Commit(actions, added.map(_.path))
+        relayout("COMPACT", table, snap, snap.files, compacted)
       }
     }
   }
@@ -1820,9 +1662,7 @@ object DeltaTable {
       // renumber identity
       val df =
         if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
-        else rowIdFrame(spark, table, snap, snap.files)
-          .withColumnRenamed("_row_id", RowTracking.IdCol)
-          .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
+        else dmlRowsWithIds(spark, table, snap, snap.files.map(_.path))
       val aggs = cols.flatMap(c => Seq(
         smin(col(c)).cast("double"), smax(col(c)).cast("double")))
       val r = df.agg(aggs.head, aggs.tail: _*).head() // 2k scalars
@@ -1849,21 +1689,24 @@ object DeltaTable {
         .repartitionByRange(targetFiles, col("__z"))
         .sortWithinPartitions("__z")
         .drop(cols.indices.map(j => s"__zb$j") :+ "__z": _*)
-      val added = stageIn(clustered, table, Nil, mappingOf(snap))
-      val actions =
-        Seq(DeltaLog.commitInfoAction("ZORDER")) ++
-          snap.schemaJson.map(DeltaLog.metaDataAction(_, Nil,
-            DeltaLog.tableId(table), snap.configuration)) ++
-          snap.files.map(f =>
-            DeltaLog.removeAction(f.path, dataChange = false)) ++
-          added.map(DeltaLog.addActionOf(_, dataChange = false))
-      Commit(actions, added.map(_.path))
+      relayout("ZORDER", table, snap, snap.files, clustered)
     }
   }
 
-  /** Table-relative path of an executor-reported `input_file_name()`
-    * URI, e.g. `file:///…/tbl/date=x/part-0.parquet` → `date=x/part-0
-    * .parquet` — the exact string the log's add actions use. */
+  /** The layout-only swap [[compact]], [[compactWhere]] and [[zorder]]
+    * commit: `rows` (the same rows as `replaced`, newly laid out)
+    * re-stage in the table's partition layout, and every file action
+    * carries `dataChange=false` — same rows, new layout, so streams and
+    * the change feed skip the version by the protocol bit. */
+  private def relayout(op: String, table: String, snap: DeltaLog.Snapshot,
+      replaced: Seq[DeltaLog.AddFile], rows: DataFrame): Txn = {
+    val added = stageIn(rows, table, snap.partitionColumns, mappingOf(snap))
+    Commit(Seq(DeltaLog.commitInfoAction(op)) ++ carryMeta(table, snap) ++
+      replaced.map(f => DeltaLog.removeAction(f.path, dataChange = false)) ++
+      added.map(DeltaLog.addActionOf(_, dataChange = false)),
+      added.map(_.path))
+  }
+
   /** A scanned file's LOG path: table-relative for files under the
     * table directory, verbatim-absolute for files a shallow [[clone]]
     * references in its source — the string must equal the add action's
@@ -1874,6 +1717,40 @@ object DeltaTable {
     val p = new java.net.URI(uri).getPath
     if (p.startsWith(tableAbs + "/")) p.stripPrefix(tableAbs + "/")
     else p
+  }
+
+  /** LOG paths of the files holding the rows of `rows` that `hit`
+    * keeps: one distributed pass tags each row with its file (plus the
+    * `keys` columns `hit` may join on), only the distinct file names
+    * reach the driver. The tag binds to `rows`' own scan BEFORE `hit`
+    * runs — with a file-backed frame joined in, `input_file_name` is
+    * otherwise ambiguous (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION). */
+  private def touchedFiles(table: String, rows: DataFrame,
+      keys: Seq[String] = Nil)(
+      hit: DataFrame => DataFrame = identity): Set[String] =
+    hit(rows.select((input_file_name().as("f") +: keys.map(col)): _*))
+      .select("f").distinct()
+      .collect().map(r => relativize(table, r.getString(0))).toSet
+
+  /** The commit of a DML rewrite: remove every `touched` file; re-add
+    * each vectored file under its new deletion vector (`vectors`: the
+    * file and its dead row positions, written here); add the rewritten
+    * files with fresh row-tracking ids; reference the change files.
+    * Removes precede adds — replay is line-ordered, and a vectored file
+    * RE-ADDS its own path. `snap`'s schema is the one committed. */
+  private def swap(op: String, snap: DeltaLog.Snapshot, table: String,
+      touched: Set[String], vectors: Seq[(DeltaLog.AddFile, Array[Int])],
+      added: Seq[DeltaLog.AddFile], cdc: Seq[DeltaLog.AddFile],
+      txn: Option[(String, Long)] = None): Txn = {
+    val dvs = vectors.map { case (f, ndv) => (f, DeletionVectors.write(table, ndv)) }
+    val (fresh, ridActs) = RowTracking.assignFresh(snap, added, snap.version + 1)
+    Commit(Seq(DeltaLog.commitInfoAction(op)) ++ carryMeta(table, snap) ++
+      txn.map { case (appId, v) => DeltaLog.txnAction(appId, v) } ++
+      touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
+      dvs.map { case (f, d) => DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
+      ridActs ++ fresh.map(DeltaLog.addActionOf(_)) ++
+      cdc.map(f => DeltaLog.cdcAction(f.path, f.size)),
+      (added ++ cdc).map(_.path) ++ dvs.map(_._2.path))
   }
 
   /** DELETE rows matching `condition` ([EXT] Delta DML). Touched-file
@@ -1887,10 +1764,8 @@ object DeltaTable {
   def delete(spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Long = {
     transact(table, "delete") { snap =>
-      val df = read(spark, table, Some(snap.version))
-      val touched = df.filter(condition)
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => relativize(table, r.getString(0))).toSet
+      val touched = touchedFiles(table,
+        read(spark, table, Some(snap.version)).filter(condition))()
       val touchedPaths = touched.toSeq.sorted
         .map(f => Paths.get(table).resolve(f).toString)
       if (touched.isEmpty) Done(snap.version)
@@ -1913,24 +1788,7 @@ object DeltaTable {
           if (!cdfEnabled(snap)) Nil
           else stageCdc(matched.drop(PosFile, PosIdx)
             .withColumn("_change_type", lit("delete")), table, mappingOf(snap))
-        val dvDescs = dvPlans.map { case (f, ndv) =>
-          (f, DeletionVectors.write(table, ndv)) }
-        val actions =
-          Seq(DeltaLog.commitInfoAction("DELETE")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_,
-              snap.partitionColumns, DeltaLog.tableId(table),
-              snap.configuration)) ++
-            // removes precede adds: replay is line-ordered, and the
-            // vectored files RE-ADD their own path with the new DV
-            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-            dvDescs.map { case (f, d) =>
-              DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
-            { val (fr, da) = RowTracking.assignFresh(
-                snap, rewriteAdds, snap.version + 1)
-              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        Commit(actions,
-          (rewriteAdds ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
+        swap("DELETE", snap, table, touched, dvPlans, rewriteAdds, cdc)
       } else {
         // row-tracked survivors carry their ORIGINAL ids into the
         // rewritten files — a delete must never renumber untouched rows
@@ -1945,16 +1803,7 @@ object DeltaTable {
           if (!cdfEnabled(snap)) Nil
           else stageCdc(dropIdCols(touchedRows.filter(condition))
             .withColumn("_change_type", lit("delete")), table, mappingOf(snap))
-        val actions =
-          Seq(DeltaLog.commitInfoAction("DELETE")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-              DeltaLog.tableId(table), snap.configuration)) ++
-            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-            { val (fr, da) = RowTracking.assignFresh(
-                snap, added, snap.version + 1)
-              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        Commit(actions, (added ++ cdc).map(_.path))
+        swap("DELETE", snap, table, touched, Nil, added, cdc)
       }
     }
   }
@@ -1994,9 +1843,7 @@ object DeltaTable {
       val genRecompute = gensU.filterNot { case (g, _) => set.contains(g) }
       val genChecks = gensU.filter { case (g, _) => set.contains(g) }
         .map { case (g, e) => s"generated column $g" -> s"`$g` <=> ($e)" }
-      val touched = df.filter(condition)
-        .select(input_file_name().as("f")).distinct()
-        .collect().map(r => relativize(table, r.getString(0))).toSet
+      val touched = touchedFiles(table, df.filter(condition))()
       val touchedPaths = touched.toSeq.sorted
         .map(f => Paths.get(table).resolve(f).toString)
       def applySet(d: DataFrame, always: Boolean): DataFrame = {
@@ -2082,21 +1929,7 @@ object DeltaTable {
                   .withColumn("_change_type", lit("update_postimage"))),
               table, mappingOf(snap))
           }
-        val dvDescs = dvPlans.map { case (f, ndv) =>
-          (f, DeletionVectors.write(table, ndv)) }
-        val actions =
-          Seq(DeltaLog.commitInfoAction("UPDATE")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_,
-              snap.partitionColumns, DeltaLog.tableId(table),
-              snap.configuration)) ++
-            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-            dvDescs.map { case (f, d) =>
-              DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
-            { val (fr, da) = RowTracking.assignFresh(
-                snap, added, snap.version + 1)
-              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        Commit(actions, (added ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
+        swap("UPDATE", snap, table, touched, dvPlans, added, cdc)
       } else {
         // row-tracked: untouched rows of touched files keep their ids
         // (materialized); matched rows renumber (post-image = new row
@@ -2121,16 +1954,7 @@ object DeltaTable {
                   .withColumn("_change_type", lit("update_postimage"))),
               table, mappingOf(snap))
           }
-        val actions =
-          Seq(DeltaLog.commitInfoAction("UPDATE")) ++
-            snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-              DeltaLog.tableId(table), snap.configuration)) ++
-            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-            { val (fr, da) = RowTracking.assignFresh(
-                snap, added, snap.version + 1)
-              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        Commit(actions, (added ++ cdc).map(_.path))
+        swap("UPDATE", snap, table, touched, Nil, added, cdc)
       }
     }
   }
@@ -2144,8 +1968,9 @@ object DeltaTable {
     * move. The source must be key-unique — two source rows for one key
     * is an ambiguous upsert and fails loudly (same rule as Delta's
     * MERGE). Schema must match the table's (by field set). Commits
-    * through [[transact]]. */
-  /** `txn` = (appId, version): same idempotence contract as
+    * through [[transact]].
+    *
+    * `txn` = (appId, version): same idempotence contract as
     * [[write]]'s — the merge is SKIPPED when the log already records
     * that version (or later) for the app, and the SetTransaction
     * commits atomically with the rewrite. This is what makes
@@ -2207,15 +2032,8 @@ object DeltaTable {
           s"merge source schema ${sourceI.schema.simpleString} does not match " +
             s"table schema ${target.schema.simpleString}")
         val srcKeys = sourceI.select(keys.map(col): _*)
-        // bind input_file_name to the target scan BEFORE joining — with
-        // a file-backed source in the same plan the expression is
-        // otherwise ambiguous (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION)
-        val targetKeyFiles = target
-          .select((input_file_name().as("f") +: keys.map(col)): _*)
-        val touched = targetKeyFiles
-          .join(broadcast(srcKeys), keys, "left_semi")
-          .select("f").distinct()
-          .collect().map(r => relativize(table, r.getString(0))).toSet
+        val touched = touchedFiles(table, target, keys)(
+          _.join(broadcast(srcKeys), keys, "left_semi"))
         val touchedPaths = touched.toSeq.sorted
           .map(f => Paths.get(table).resolve(f).toString)
         // DELETION-VECTOR merge: instead of re-staging every touched
@@ -2258,8 +2076,6 @@ object DeltaTable {
                 .unionByName(sourceI.select(target.columns.map(col): _*),
                   allowMissingColumns = true)
           }
-        val dvDescs = dvDescsPlan.map { case (f, ndv) =>
-          (f, DeletionVectors.write(table, ndv)) }
         val added = stageIn(rewritten, table, snap.partitionColumns,
           mappingOf(snap))
         // the mark each identity column LANDED at, from the staged stats
@@ -2303,19 +2119,8 @@ object DeltaTable {
             idSpecsM.map(sp => sp.copy(hwm =
               Some(idHwmsM.getOrElse(sp.col, sp.base))))).json
         }
-        val actions =
-          Seq(DeltaLog.commitInfoAction("MERGE")) ++
-            mergeSchemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-              DeltaLog.tableId(table), snap.configuration)) ++
-            txn.map { case (appId, v) => DeltaLog.txnAction(appId, v) }.toSeq ++
-            touched.toSeq.sorted.map(DeltaLog.removeAction(_)) ++
-            dvDescs.map { case (f, d) =>
-              DeltaLog.addActionOf(f.copy(dv = Some(d))) } ++
-            { val (fr, da) = RowTracking.assignFresh(
-                snap, added, snap.version + 1)
-              da ++ fr.map(DeltaLog.addActionOf(_)) } ++
-            cdc.map(f => DeltaLog.cdcAction(f.path, f.size))
-        Commit(actions, (added ++ cdc).map(_.path) ++ dvDescs.map(_._2.path))
+        swap("MERGE", snap.copy(schemaJson = mergeSchemaJson), table, touched,
+          dvDescsPlan, added, cdc, txn)
       }
     }
   }
@@ -2404,11 +2209,7 @@ object DeltaTable {
     // listing its features), metaData, and the txn ledger, which must
     // survive a pruned prefix — dropping it would let a restarted
     // streaming query re-apply old micro-batches
-    val state = Seq(DeltaLog.protocolAction(snap.minReaderVersion,
-      snap.minWriterVersion, snap.readerFeatures.toSeq,
-      snap.writerFeatures.toSeq)) ++
-      snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-        DeltaLog.tableId(table), snap.configuration)) ++
+    val state = Seq(DeltaLog.protocolOf(snap)) ++ carryMeta(table, snap) ++
       snap.txns.toSeq.sortBy(_._1).map { case (app, v) =>
         DeltaLog.txnAction(app, v) } ++
       snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
@@ -2891,9 +2692,7 @@ object DeltaTable {
         val curPaths = cur.files.map(_.path).toSet
         val actions =
           Seq(DeltaLog.commitInfoAction("RESTORE")) ++
-            target.schemaJson.map(DeltaLog.metaDataAction(_,
-              target.partitionColumns, DeltaLog.tableId(table),
-              target.configuration)) ++
+            carryMeta(table, target) ++
             cur.files.filterNot(f => targetPaths(f.path))
               .map(f => DeltaLog.removeAction(f.path)) ++
             // re-add files the current state lacks — AND files whose
@@ -2937,11 +2736,8 @@ object DeltaTable {
     def abs(p: String): String =
       if (p.startsWith("/")) p else srcAbs.resolve(p).toString
     val actions =
-      Seq(DeltaLog.commitInfoAction("CLONE"),
-        DeltaLog.protocolAction(snap.minReaderVersion, snap.minWriterVersion,
-          snap.readerFeatures.toSeq, snap.writerFeatures.toSeq)) ++
-        snap.schemaJson.map(DeltaLog.metaDataAction(_, snap.partitionColumns,
-          DeltaLog.tableId(target), snap.configuration)).toSeq ++
+      Seq(DeltaLog.commitInfoAction("CLONE"), DeltaLog.protocolOf(snap)) ++
+        carryMeta(target, snap) ++
         snap.domainMetadata.toSeq.sortBy(_._1).map { case (d, c) =>
           DeltaLog.domainMetadataAction(d, c) } ++
         snap.files.map(f => DeltaLog.addActionOf(f.copy(path = abs(f.path),
@@ -3130,10 +2926,8 @@ object DeltaTable {
         val (addedR, ridActs) = RowTracking.assignFresh(snap, added,
           snap.version + 1)
         val actions =
-          Seq(DeltaLog.commitInfoAction("COPY INTO"),
-            DeltaLog.metaDataAction(snap.schemaJson.get,
-              snap.partitionColumns, DeltaLog.tableId(table),
-              snap.configuration)) ++
+          Seq(DeltaLog.commitInfoAction("COPY INTO")) ++
+            carryMeta(table, snap) ++
             fresh.map { case (domain, p) =>
               DeltaLog.domainMetadataAction(domain,
                 s"""{"source":${DeltaLog.Json.str(p.toString)}}""") } ++

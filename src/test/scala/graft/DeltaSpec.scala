@@ -2235,6 +2235,59 @@ class DeltaSpec extends SparkSpec {
       DeltaTable.delete(spark, t, col("id") === 1))
   }
 
+  test("protocol upgrades are order-independent: each legacy feature " +
+      "before or after each features-gate op ends up listed") {
+    import scala.sys.process.{Process, ProcessLogger}
+    import org.apache.spark.sql.types.LongType
+    // (feature names the op gates, the op)
+    val legacy: Seq[(String, Set[String], String => Unit)] = Seq(
+      ("constraint", Set("checkConstraints"), t =>
+        DeltaTable.addCheckConstraint(spark, t, "pos", "salary > 0")),
+      ("appendOnly", Set("appendOnly"), t =>
+        DeltaTable.setTableProperty(t, "delta.appendOnly", "true")),
+      ("cdf", Set("changeDataFeed"), t =>
+        DeltaTable.setTableProperty(t, "delta.enableChangeDataFeed", "true")),
+      ("mapping", Set("columnMapping"), t =>
+        DeltaTable.enableColumnMapping(t)))
+    val gated: Seq[(String, Set[String], String => Unit)] = Seq(
+      ("dv", Set("deletionVectors"), t => DeltaTable.enableDeletionVectors(t)),
+      ("v2", Set("v2Checkpoint"), t => DeltaTable.enableV2Checkpoints(t)),
+      ("ict", Set("inCommitTimestamp"), t =>
+        DeltaTable.enableInCommitTimestamps(t)),
+      ("rowTracking", Set("rowTracking", "domainMetadata"), t =>
+        DeltaTable.enableRowTracking(t)),
+      ("widen", Set("typeWidening"), t =>
+        DeltaTable.alterColumnType(t, "id", LongType)))
+    val readerWriter =
+      Set("columnMapping", "deletionVectors", "v2Checkpoint", "typeWidening")
+    val tables = for {
+      (ln, lf, lop) <- legacy
+      (gn, gf, gop) <- gated
+      // refused both ways (enableRowTracking / enableColumnMapping)
+      if !(ln == "mapping" && gn == "rowTracking")
+      legacyFirst <- Seq(true, false)
+    } yield {
+      val t = freshTable()
+      DeltaTable.write(employees3, t, "overwrite")
+      if (legacyFirst) { lop(t); gop(t) } else { gop(t); lop(t) }
+      val snap = DeltaLog.snapshot(t)
+      val order = if (legacyFirst) s"$ln then $gn" else s"$gn then $ln"
+      assert(snap.minWriterVersion === 7, order)
+      assert((lf ++ gf).subsetOf(snap.writerFeatures),
+        s"$order: writerFeatures ${snap.writerFeatures}")
+      if (snap.minReaderVersion >= 3)
+        assert((lf ++ gf).intersect(readerWriter).subsetOf(snap.readerFeatures),
+          s"$order: readerFeatures ${snap.readerFeatures}")
+      t
+    }
+    val out = new StringBuilder
+    val code = Process(Seq("python3",
+      new java.io.File("tools/delta_validate.py").getAbsolutePath) ++ tables)
+      .!(ProcessLogger(s => out.append(s).append('\n'),
+        s => out.append(s).append('\n')))
+    assert(code === 0, s"delta_validate.py failed:\n$out")
+  }
+
   // ---------------------------------------------------------------
   // GENERATED COLUMNS (delta.generationExpression + the
   // generatedColumns writer feature) — write-side maintenance and the

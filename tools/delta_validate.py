@@ -78,6 +78,10 @@ and asserts the wire-format invariants the Delta Lake protocol
      and replay-equality checks as any checkpoint; and a v2 checkpoint
      (or `delta.checkpointPolicy=v2`) implies the protocol lists
      `v2Checkpoint` in BOTH feature sets at the features gate.
+ 22. legacy features at the features gate: at minWriterVersion 7, CHECK
+     constraints imply a listed `checkConstraints` writer feature and
+     `delta.appendOnly=true` a listed `appendOnly` (the legacy ladder
+     implies nothing there; compare invariant 13 for changeDataFeed).
 
 Usage: python3 tools/delta_validate.py TABLE_DIR [TABLE_DIR...]
 Exit 0 = every table passes; 1 = at least one invariant violated.
@@ -411,6 +415,23 @@ def validate(table):
         has_constraints = any(k.startswith("delta.constraints.") for k in full.config)
         if has_constraints and (full.protocol or {}).get("minWriterVersion", 0) < 3:
             problems.append("CHECK constraints present but minWriterVersion < 3")
+        # -- legacy features at the features gate (invariant 22): at
+        # writer 7 the legacy ladder implies nothing, so CHECK
+        # constraints and delta.appendOnly=true must be LISTED like any
+        # feature (as invariant 13 requires of changeDataFeed) — a stock
+        # writer enforces only the features the protocol lists
+        pr = full.protocol or {}
+        if pr.get("minWriterVersion", 0) >= 7:
+            listed = set(pr.get("writerFeatures") or [])
+            if has_constraints and "checkConstraints" not in listed:
+                problems.append(
+                    "CHECK constraints present at writer 7 but the protocol "
+                    "does not list the checkConstraints writer feature")
+            if (full.config.get("delta.appendOnly") == "true"
+                    and "appendOnly" not in listed):
+                problems.append(
+                    "delta.appendOnly=true at writer 7 but the protocol does "
+                    "not list the appendOnly writer feature")
 
         # -- deletion vectors (invariant 12): sidecars decode, reconcile
         # with descriptors, and the protocol gates them
