@@ -31,6 +31,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // injected AFTER MetadataOnlyCount so COUNT(*) over a vectored
     // table still answers from the log with zero I/O)
     ext.injectOptimizerRule(_ => graft.plans.DvScanRewrite)
+    // filter and projection constants become class fields of the
+    // generated code, so a query shape compiles once whatever its
+    // constants (see ConstantStableCodegen)
+    ext.injectColumnar(_ => graft.plans.ConstantStableCodegen.Columnar)
     // SQL DDL surface for path-addressed Delta maintenance (round 10):
     // OPTIMIZE [WHERE|ZORDER BY], VACUUM [RETAIN], DESCRIBE
     // HISTORY/DETAIL, RESTORE, ALTER TABLE ADD CONSTRAINT / SET

@@ -171,7 +171,8 @@ object DeltaLog {
       prop("delta.enableInCommitTimestamps")),
     TableFeature("rowTracking", readerWriter = false,
       requires = Set("domainMetadata"))(RowTracking.enabled),
-    TableFeature("domainMetadata", readerWriter = false)(RowTracking.enabled))
+    TableFeature("domainMetadata", readerWriter = false)(s =>
+      RowTracking.enabled(s) || s.domainMetadata.nonEmpty))
 
   private val featureByName: Map[String, TableFeature] =
     Features.map(f => f.name -> f).toMap

@@ -4,10 +4,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.parquet.HadoopReadOptions
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, input_file_name, lit, max, min}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, max, min}
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types.{DataType, DateType, LongType, NumericType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DateType, LongType, NumericType, StringType, StructField, StructType, TimestampType}
 
 /** Spark-facing Delta-equivalent table API (SURVEY.md §7-D): versioned
   * ACID overwrite/append/read + time travel over local/HDFS-style
@@ -494,9 +494,21 @@ object DeltaTable {
     * carrying the updated configuration. Properties with their own
     * lifecycle APIs are rejected here: constraints need existing-data
     * validation ([[addCheckConstraint]]) and column mapping needs the
-    * schema annotation + protocol upgrade ([[enableColumnMapping]]). */
+    * schema annotation + protocol upgrade ([[enableColumnMapping]]),
+    * and a feature flag an enable op owns needs its protocol upgrade
+    * (`EnableOps`). */
   def setTableProperty(table: String, key: String, value: String): Long =
     setTableProperties(table, Seq(key -> value))
+
+  /** The properties an enable op owns: each also raises the protocol
+    * (and some backfill metadata), so a plain metadata commit of the
+    * key would leave the table claiming a feature its protocol lacks. */
+  private val EnableOps = Map(
+    DeletionVectors.PropKey -> "enableDeletionVectors",
+    RowTracking.PropKey -> "enableRowTracking",
+    "delta.enableInCommitTimestamps" -> "enableInCommitTimestamps",
+    "delta.checkpointPolicy" -> "enableV2Checkpoints",
+    "delta.enableTypeWidening" -> "alterColumnType")
 
   /** Set several table properties in ONE commit — a multi-key
     * `ALTER TABLE … SET TBLPROPERTIES ('a'='1','b'='2')` must be a
@@ -512,8 +524,8 @@ object DeltaTable {
       require(!key.startsWith("delta.columnMapping."),
         s"setTableProperty($key): use enableColumnMapping (schema " +
           "annotation + protocol upgrade)")
-      require(key != DeletionVectors.PropKey,
-        s"setTableProperty($key): use enableDeletionVectors (protocol " +
+      require(!EnableOps.contains(key),
+        s"setTableProperty($key): use ${EnableOps(key)} (protocol " +
           "must rise to the table-features gate atomically)")
     }
     // delta.enableChangeDataFeed and delta.appendOnly are
@@ -1387,8 +1399,9 @@ object DeltaTable {
       val prevTs = spark.conf.get(tsKey)
       spark.conf.set(tsKey, "TIMESTAMP_MICROS")
       try {
-        if (partitionBy.isEmpty) df.write.parquet(staging.toString)
-        else df.write.partitionBy(partitionBy: _*).parquet(staging.toString)
+        val w = df.write.option(NoSuccessMarker, "false")
+        if (partitionBy.isEmpty) w.parquet(staging.toString)
+        else w.partitionBy(partitionBy: _*).parquet(staging.toString)
       } finally spark.conf.set(tsKey, prevTs)
     }
     val commitTag = UUID.randomUUID().toString.take(8)
@@ -1439,6 +1452,12 @@ object DeltaTable {
     added
   }
 
+  /** The Hadoop committer option that, set to false, skips the
+    * `_SUCCESS` marker: nothing reads a staging dir's marker, and
+    * without a native Hadoop library each local file it writes (the
+    * marker and its `.crc`) forks a `chmod`. */
+  private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+
   /** Exact row count of one staged parquet file from its FOOTER — the
     * driver-side fallback for files the stats job missed. A footer is
     * a few KB regardless of file size, and this path only runs for
@@ -1473,7 +1492,7 @@ object DeltaTable {
     val df = mapping.map(m => ColumnMapping.toPhysical(df0, m)).getOrElse(df0)
     val tableDir = Paths.get(table)
     val staging = tableDir.resolve(s".staging-${UUID.randomUUID()}")
-    df.write.parquet(staging.toString)
+    df.write.option(NoSuccessMarker, "false").parquet(staging.toString)
     val tag = UUID.randomUUID().toString.take(8)
     val stagedStream = Files.walk(staging)
     val staged =
@@ -1728,9 +1747,13 @@ object DeltaTable {
   private def touchedFiles(table: String, rows: DataFrame,
       keys: Seq[String] = Nil)(
       hit: DataFrame => DataFrame = identity): Set[String] =
+    // each partition sends its distinct names and the driver unions
+    // them: one job, where a distributed distinct shuffles
     hit(rows.select((input_file_name().as("f") +: keys.map(col)): _*))
-      .select("f").distinct()
-      .collect().map(r => relativize(table, r.getString(0))).toSet
+      .select("f").as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.toSet.iterator)(
+        Encoders.STRING)
+      .collect().map(relativize(table, _)).toSet
 
   /** The commit of a DML rewrite: remove every `touched` file; re-add
     * each vectored file under its new deletion vector (`vectors`: the
@@ -1980,14 +2003,13 @@ object DeltaTable {
   def merge(spark: SparkSession, table: String, source: DataFrame,
       keys: Seq[String], txn: Option[(String, Long)] = None): Long = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    // one job, run by the first attempt that does not find the txn
-    // already landed (a replayed batch skips it)
-    lazy val dupKeys = source.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
+    // decided by the first attempt that does not find the txn already
+    // landed (a replayed batch skips it)
+    lazy val dupKeys = duplicateKeys(source, keys)
     transact(table, "merge") { snap =>
       if (txnLanded(snap, txn)) Done(snap.version)
       else {
-        require(dupKeys == 0,
+        require(!dupKeys,
           s"merge source has duplicate keys on (${keys.mkString(",")}): " +
             "ambiguous upsert")
         val target = read(spark, table, Some(snap.version))
@@ -2123,6 +2145,38 @@ object DeltaTable {
           dvDescsPlan, added, cdc, txn)
       }
     }
+  }
+
+  /** Whether two rows of `source` share a value of `keys`. The key
+    * columns are collected once to the driver (merge broadcasts them to
+    * every executor anyway) and compared with GROUP BY's equality:
+    * nulls equal each other, NaN equals NaN, -0.0 equals 0.0, binary
+    * values compare by content and collated strings by collation key. */
+  private[graft] def duplicateKeys(source: DataFrame,
+      keys: Seq[String]): Boolean = {
+    val keyed = source.select(keys.map(col): _*)
+    val types = keyed.schema.fields.map(_.dataType).toSeq
+    val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+    keyed.collect().exists(r =>
+      !seen.add(types.indices.map(i => groupKey(r.get(i), types(i)))))
+  }
+
+  /** `v` (a collected value of type `dt`) as a value whose `==` is
+    * GROUP BY's equality on `dt`. */
+  private def groupKey(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (f: Float, _) => java.lang.Float.floatToIntBits(if (f == 0f) 0f else f)
+    case (d: Double, _) =>
+      java.lang.Double.doubleToLongBits(if (d == 0d) 0d else d)
+    case (b: Array[Byte], _) => b.toSeq
+    case (s: String, st: StringType) =>
+      org.apache.spark.sql.catalyst.util.CollationFactory.getCollationKey(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s), st.collationId)
+    case (r: Row, st: StructType) =>
+      st.fields.indices.map(i => groupKey(r.get(i), st(i).dataType))
+    case (a: scala.collection.Seq[_], at: ArrayType) =>
+      a.map(groupKey(_, at.elementType))
+    case _ => v
   }
 
   /** Append-time schema resolution. Same fields (by name+type, order
@@ -2927,6 +2981,7 @@ object DeltaTable {
           snap.version + 1)
         val actions =
           Seq(DeltaLog.commitInfoAction("COPY INTO")) ++
+            DeltaLog.protocolFor(snap, Set("domainMetadata")) ++
             carryMeta(table, snap) ++
             fresh.map { case (domain, p) =>
               DeltaLog.domainMetadataAction(domain,

@@ -3910,4 +3910,180 @@ class DeltaSpec extends SparkSpec {
     assert(DeltaTable.read(spark, t).count() === 10L + 4 * 5)
     runValidator(t)
   }
+
+  /** Spark jobs `body` starts, tagged through a local property; a
+    * sentinel job flushes the asynchronous listener bus first. */
+  private def sparkJobs(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val (mine, sentinel) = (s"body-${System.nanoTime()}", "sentinel")
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(tag))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, mine)
+      try body finally sc.setLocalProperty(tag, null)
+      sc.setLocalProperty(tag, sentinel)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(tag, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(sentinel), "listener bus never delivered the sentinel")
+      started.asScala.count(_ == mine)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A 400-row table of 4 files: k, g = k % 7, v = k / 2. */
+  private def kgvTable(): String = {
+    val t = freshTable()
+    DeltaTable.write(spark.range(0, 400, 1, 4).select($"id".as("k"),
+      ($"id" % 7).cast("int").as("g"), ($"id" * 0.5).as("v")), t, "overwrite")
+    t
+  }
+
+  test("a DML or read shape compiles once: new constants add no " +
+      "generated class, and scans keep their pushed filters") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val t = kgvTable()
+    def round(m: Long, r: Long, dv: Double, lo: Long, hi: Long): Unit = {
+      DeltaTable.update(spark, t, pmod($"k", lit(m)) === lit(r),
+        Map("v" -> ($"v" + lit(dv))))
+      DeltaTable.delete(spark, t, pmod($"k", lit(m + 2)) === lit(r))
+      val read = DeltaTable.read(spark, t, None,
+        Seq(GreaterThanOrEqual("k", lo), LessThan("k", hi)))
+        .where($"k" >= lo && $"k" < hi)
+      val got = read.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+      val files = DeltaLog.snapshot(t).files.map(f => s"$t/${f.path}")
+      val plain = spark.read.parquet(files: _*)
+        .where($"k" >= lo && $"k" < hi).select("k", "g", "v")
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
+      assert(got.nonEmpty && got.sameElements(plain))
+      val plan = nodes(read.queryExecution.executedPlan)
+      val pushed = plan.collect { case s: FileSourceScanExec =>
+        s.metadata.getOrElse("PushedFilters", "") }.mkString
+      assert(pushed.contains(s"GreaterThanOrEqual(k,$lo)") &&
+        pushed.contains(s"LessThan(k,$hi)"), pushed)
+      assert(plan.exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[
+          graft.plans.ParamLiteral])
+        case _ => false
+      }, s"the filter kept inlined constants:\n${plan.head}")
+    }
+    round(5L, 1L, 0.25, 100L, 300L)
+    val compiled = CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount
+    round(7L, 3L, 1.5, 40L, 260L)
+    assert(CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount ===
+      compiled, "new constants compiled new classes")
+  }
+
+  test("merge's duplicate-key check decides as GROUP BY does: null, NaN, " +
+      "+-0.0, binary, collated, two-column and file-backed keys") {
+    import org.apache.spark.sql.DataFrame
+    def oracle(df: DataFrame, keys: Seq[String]): Boolean =
+      df.groupBy(keys.map(col): _*).count().filter($"count" > 1)
+        .limit(1).count() > 0
+    def verdict(dup: Boolean, df: DataFrame, keys: String*): Unit = {
+      assert(oracle(df, keys) === dup, s"oracle on ${df.collect().toSeq}")
+      assert(DeltaTable.duplicateKeys(df, keys) === dup,
+        s"driver check on ${df.collect().toSeq}")
+    }
+    verdict(true, Seq[java.lang.Long](null, 1L, null).toDF("k"), "k")
+    verdict(false, Seq[java.lang.Long](null, 1L).toDF("k"), "k")
+    verdict(true, Seq(Double.NaN, 1.0, Double.NaN).toDF("k"), "k")
+    verdict(false, Seq(Double.NaN, 1.0).toDF("k"), "k")
+    verdict(true, Seq(0.0, -0.0).toDF("k"), "k")
+    verdict(true, Seq(0.0f, -0.0f).toDF("k"), "k")
+    verdict(true, Seq(Float.NaN, Float.NaN).toDF("k"), "k")
+    verdict(true, Seq(Array[Byte](1, 2), Array[Byte](1, 2)).toDF("k"), "k")
+    verdict(false, Seq(Array[Byte](1, 2), Array[Byte](1, 3)).toDF("k"), "k")
+    verdict(true, Seq("a", "A").toDF("s")
+      .select(collate($"s", "UTF8_LCASE").as("k")), "k")
+    verdict(false, Seq("a", "A").toDF("k"), "k")
+    val pairs = Seq[(java.lang.Integer, String)]((1, "a"), (1, "b"),
+      (null, "a"), (2, null)).toDF("i", "s")
+    verdict(false, pairs, "i", "s")
+    verdict(true, pairs.union(Seq[(java.lang.Integer, String)](
+      (null, "a")).toDF("i", "s")), "i", "s")
+    verdict(true, pairs.union(Seq[(java.lang.Integer, String)](
+      (2, null)).toDF("i", "s")), "i", "s")
+    // a file-backed source, and the verdict through merge itself
+    val dir = tempDir("graft-merge-dup-src")
+    Seq((1L, 0.0), (2L, -0.0)).toDF("k", "v").write.parquet(s"$dir/a")
+    Seq((1L, 1.0), (2L, 2.0), (1L, 3.0)).toDF("k", "v")
+      .write.parquet(s"$dir/b")
+    val clean = spark.read.parquet(s"$dir/a")
+    val dup = spark.read.parquet(s"$dir/b")
+    verdict(false, clean, "k")
+    verdict(true, clean, "v")
+    verdict(true, dup, "k")
+    val t = freshTable()
+    DeltaTable.write(Seq((1L, 9.0)).toDF("k", "v"), t, "overwrite")
+    val ex = intercept[IllegalArgumentException] {
+      DeltaTable.merge(spark, t, dup, Seq("k"))
+    }
+    assert(ex.getMessage.contains("duplicate keys"))
+    DeltaTable.merge(spark, t, clean, Seq("k"))
+    assert(DeltaTable.read(spark, t).orderBy("k").as[(Long, Double)]
+      .collect().toSeq === Seq((1L, 0.0), (2L, -0.0)))
+  }
+
+  test("a merge runs at most 4 Spark jobs, an update or a delete at most 2") {
+    val t = kgvTable()
+    val src = Seq((3L, 1, 9.0), (401L, 2, 4.0)).toDF("k", "g", "v")
+    val merge = sparkJobs(DeltaTable.merge(spark, t, src, Seq("k")))
+    val update = sparkJobs(DeltaTable.update(spark, t, $"k" === 7L,
+      Map("v" -> ($"v" + lit(1.0)))))
+    val delete = sparkJobs(DeltaTable.delete(spark, t, $"k" === 8L))
+    assert(merge <= 4 && update <= 2 && delete <= 2,
+      s"jobs: merge $merge, update $update, delete $delete")
+    assert(DeltaTable.read(spark, t).count() === 400L)
+    runValidator(t)
+  }
+
+  test("setTableProperties refuses every property an enable op owns") {
+    val t = freshTable()
+    DeltaTable.write(employees3, t, "overwrite")
+    Seq("delta.enableDeletionVectors" -> "enableDeletionVectors",
+      "delta.enableRowTracking" -> "enableRowTracking",
+      "delta.enableInCommitTimestamps" -> "enableInCommitTimestamps",
+      "delta.checkpointPolicy" -> "enableV2Checkpoints",
+      "delta.enableTypeWidening" -> "alterColumnType").foreach {
+      case (key, op) =>
+        val ex = intercept[IllegalArgumentException] {
+          DeltaTable.setTableProperty(t, key, if (key.endsWith("Policy"))
+            "v2" else "true")
+        }
+        assert(ex.getMessage.contains(op), ex.getMessage)
+    }
+    assert(DeltaLog.versions(t) === Seq(0L))
+    runValidator(t)
+  }
+
+  test("COPY INTO commits its ledger under the domainMetadata writer feature") {
+    val t = freshTable()
+    val src = tempDir("graft-copy-domain-src").toString
+    DeltaTable.write(Seq.empty[(Long, Long)].toDF("id", "v"), t, "overwrite")
+    Seq((1L, 1L), (2L, 2L)).toDF("id", "v").coalesce(1)
+      .write.parquet(s"$src/b0")
+    assert(DeltaTable.copyInto(spark, t, src)._2 === 1)
+    val snap = DeltaLog.snapshot(t)
+    assert(snap.domainMetadata.keys.exists(_.startsWith("graft.copyInto.")))
+    assert(snap.minWriterVersion === 7 &&
+      snap.writerFeatures.contains("domainMetadata"))
+    runValidator(t)
+  }
 }

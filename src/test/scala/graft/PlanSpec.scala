@@ -437,4 +437,44 @@ class PlanSpec extends SparkSpec {
     assert(p.toString.toLowerCase.contains("pmod"),
       s"the salted stage's partition key must derive from pmod:\n$p")
   }
+
+  test("constant-stable codegen: every rewritten type, edge values " +
+      "included, computes as interpreted evaluation does") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, date_from_unix_date, lit, timestamp_seconds}
+    val id = col("id")
+    // (column over ids -3..3, constant compared, constant added)
+    val cases: Seq[(Column, Any, Option[Any])] = Seq(
+      (id.cast("tinyint"), Byte.MinValue, Some(100.toByte)),
+      (id.cast("smallint"), Short.MaxValue, Some(-7.toShort)),
+      (id.cast("int"), Int.MinValue, Some(Int.MaxValue - 3)),
+      (id, Long.MinValue, Some(Long.MinValue + 3)),
+      (id.cast("float"), Float.NaN, Some(-0.0f)),
+      (id.cast("double"), Double.PositiveInfinity, Some(Double.NaN)),
+      (id.cast("double"), -0.0, Some(2.5)),
+      (date_from_unix_date(id.cast("int") + 19782),
+        java.sql.Date.valueOf("2024-02-29"), None),
+      (timestamp_seconds(id * 86400L + 1709210096L),
+        java.sql.Timestamp.valueOf("2024-02-29 12:34:56"), None))
+    def run(codegen: Boolean): Seq[Seq[Any]] = {
+      spark.conf.set("spark.sql.codegen.factoryMode",
+        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      try cases.map { case (x, c, add) =>
+        val y = add.fold(x)(a => x + lit(a))
+        val df = spark.range(-3, 4, 1, 2).select(x.as("x"), y.as("y"))
+          .where(col("x") =!= lit(c) && col("x") < lit(c) || col("x") >= lit(c))
+        if (codegen) assert(df.queryExecution.executedPlan.exists(
+          _.expressions.exists(_.exists(_.isInstanceOf[graft.plans.ParamLiteral]))),
+          s"$c: no ParamLiteral in\n${df.queryExecution.executedPlan}")
+        df.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString).toSeq
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val compiled = run(codegen = true)
+    assert(compiled.forall(_.nonEmpty))
+    assert(compiled === run(codegen = false))
+  }
 }

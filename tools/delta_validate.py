@@ -82,6 +82,9 @@ and asserts the wire-format invariants the Delta Lake protocol
      constraints imply a listed `checkConstraints` writer feature and
      `delta.appendOnly=true` a listed `appendOnly` (the legacy ladder
      implies nothing there; compare invariant 13 for changeDataFeed).
+ 23. domain metadata: a version that commits a `domainMetadata` action
+     leaves the protocol at writer 7 listing the `domainMetadata`
+     writer feature (the protocol permits the action only there).
 
 Usage: python3 tools/delta_validate.py TABLE_DIR [TABLE_DIR...]
 Exit 0 = every table passes; 1 = at least one invariant violated.
@@ -149,6 +152,7 @@ class Replay:
         # re-derivation (and re-gate) when the property flips underneath
         append_only_before = self.config.get("delta.appendOnly") == "true"
         data_removes = []
+        has_domain = False
         for a in actions:
             if "add" in a:
                 f = a["add"]
@@ -218,6 +222,7 @@ class Replay:
                 else:
                     self.txns[app] = max(ver, self.txns.get(app, ver))
             elif "domainMetadata" in a:
+                has_domain = True
                 d = a["domainMetadata"]
                 if d.get("domain") is None:
                     self.problems.append(f"v{v}: domainMetadata without domain")
@@ -231,6 +236,14 @@ class Replay:
                 self.problems.append(f"v{v}: unknown action {list(a.keys())}")
         if n_meta > 1:
             self.problems.append(f"v{v}: {n_meta} metaData actions in one commit")
+        # invariant 23: domainMetadata actions need the listed feature
+        pr = self.protocol or {}
+        if has_domain and (pr.get("minWriterVersion", 0) < 7 or
+                           "domainMetadata" not in
+                           (pr.get("writerFeatures") or [])):
+            self.problems.append(
+                f"v{v}: domainMetadata action but the protocol does not "
+                "list the domainMetadata writer feature (writer 7)")
         if append_only_before and data_removes:
             self.problems.append(
                 f"v{v}: data-changing remove(s) {sorted(data_removes)[:3]} "
