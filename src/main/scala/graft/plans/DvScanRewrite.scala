@@ -82,41 +82,6 @@ object DvScanRewrite extends Rule[LogicalPlan] {
       rewritten.getOrElse(l)
   }
 
-  /** Wrap every parquet scan in `plan` with the same codegen'd
-    * dead-row filter the rule above builds — the STREAMING getBatch
-    * path (round 15; it read its files through a plain vectorized
-    * parquet scan and probed through a per-row Scala UDF, the one
-    * non-codegen probe left). The streaming scan has no row-based
-    * fallback format, so an unbindable `_metadata` (a shadowing user
-    * column) throws instead of silently delivering vectored rows. */
-  def filterDeleted(plan: LogicalPlan,
-      dvs: graft.sources.DvMap): LogicalPlan = {
-    val lookup = new DvLookup(dvs)
-    // transformUp: the replacement subtree contains the matched
-    // LogicalRelation as a child, which top-down transform would
-    // re-match forever (bottom-up never revisits replacement nodes)
-    plan.transformUp {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        val withMeta = l.withMetadataColumns()
-        (for {
-          meta <- withMeta.output.find(_.name == "_metadata")
-          st = meta.dataType.asInstanceOf[StructType]
-          fpOrd = st.fieldNames.indexOf("file_path")
-          riOrd = st.fieldNames.indexOf("row_index")
-          if fpOrd >= 0 && riOrd >= 0
-        } yield Project(l.output.map(a => a: org.apache.spark.sql.catalyst
-            .expressions.NamedExpression),
-          Filter(Not(DvRowDeleted(lookup,
-              GetStructField(meta, fpOrd, Some("file_path")),
-              GetStructField(meta, riOrd, Some("row_index")))),
-            withMeta)): LogicalPlan)
-          .getOrElse(throw new IllegalStateException(
-            "graft-delta stream source: _metadata columns are not " +
-              "bindable on the change-feed scan, so deletion-vector " +
-              "dead rows cannot be filtered"))
-    }
-  }
-
   private def dvFormatOf(l: LogicalRelation): Option[DvParquetFileFormat] =
     l.relation match {
       case fs: HadoopFsRelation => fs.fileFormat match {

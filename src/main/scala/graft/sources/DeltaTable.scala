@@ -971,114 +971,52 @@ object DeltaTable {
 
   /** Names of the row-position plumbing columns
     * [[readTableFilesWithPos]] appends (prefixed to never collide with
-    * a user column; stripped by [[readTableFiles]]). */
+    * a user column). */
   private val PosFile = "__gdv_file"
   private val PosIdx = "__gdv_idx"
 
-  /** Read specific table files under the committed schema, LOGICAL-named
-    * — the one read shape DML rewrites need: physical bytes in, logical
-    * frame out (identity when mapping is off or never diverged). Rows
-    * marked dead by a live deletion vector are subtracted — UNLESS
-    * `applyDv=false`: a HISTORICAL consumer (the change feed reading an
-    * old append version's files) must see the rows as they were
-    * inserted, not as the CURRENT snapshot's vectors have since marked
-    * them (the later delete contributes its own change rows). */
-  /** Whether every requested path sits under the table directory — a
-    * shallow clone's absolute source references don't, and partitioned
-    * reads of those must serve partition values from the LOG (no
-    * common basePath exists for directory inference). */
-  private def allUnderTable(table: String, paths: Seq[String]): Boolean = {
-    val prefix =
-      Paths.get(table).toAbsolutePath.normalize.toString.stripSuffix("/") + "/"
-    paths.forall(p => Paths.get(p).toAbsolutePath.normalize.toString
-      .startsWith(prefix))
-  }
-
-  /** The requested paths' AddFiles, from the snapshot. */
-  private def restrictTo(table: String, snap: DeltaLog.Snapshot,
-      paths: Seq[String]): Seq[DeltaLog.AddFile] = {
-    val wanted = paths.map(p =>
-      Paths.get(p).toAbsolutePath.normalize.toString).toSet
-    snap.files.filter(f => wanted.contains(
-      Paths.get(table).resolve(f.path).toAbsolutePath.normalize.toString))
-  }
-
+  /** Read `files` under `snap`'s committed schema through the
+    * log-backed relation ([[GraftDeltaRelation]]), LOGICAL-named:
+    * partition values from the log, physical bytes renamed at reader
+    * construction, and rows marked dead by a live deletion vector
+    * dropped in-scan — UNLESS `applyDv=false`: a HISTORICAL consumer
+    * (the change feed reading an old append version's files) must see
+    * the rows as they were inserted, not as the CURRENT snapshot's
+    * vectors have since marked them (the later delete contributes its
+    * own change rows). */
   private def readTableFiles(spark: SparkSession, table: String,
-      snap: DeltaLog.Snapshot, paths: Seq[String],
-      applyDv: Boolean = true): DataFrame = {
-    if (snap.partitionColumns.nonEmpty && !allUnderTable(table, paths)) {
-      // shallow-clone shape: log-backed relation (partition values from
-      // the log; the DV-aware format subtracts dead rows in-scan)
-      val sub = restrictTo(table, snap, paths)
-      return GraftDeltaRelation.frame(spark, table, snap.copy(files =
-        if (applyDv) sub else sub.map(_.copy(dv = None))))
-    }
-    if (applyDv && snap.files.exists(_.dv.isDefined))
-      return readTableFilesWithPos(spark, table, snap, paths)
-        .drop(PosFile, PosIdx)
-    // fast path (no vectors anywhere): no metadata columns, plan
-    // byte-identical to pre-DV behavior
-    val reader =
-      if (snap.partitionColumns.isEmpty) spark.read
-      else spark.read.option("basePath", table)
-    val s = snap.schemaJson
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    s match {
-      case None => reader.parquet(paths: _*)
-      case Some(logical) if !ColumnMapping.enabled(snap) =>
-        reader.schema(logical).parquet(paths: _*)
-      case Some(logical) =>
-        ColumnMapping.toLogical(
-          reader.schema(ColumnMapping.physicalSchema(logical))
-            .parquet(paths: _*), logical)
-    }
-  }
+      snap: DeltaLog.Snapshot, files: Seq[DeltaLog.AddFile],
+      applyDv: Boolean = true): DataFrame =
+    GraftDeltaRelation.frame(spark, table, snap.copy(files =
+      if (applyDv) files else files.map(_.copy(dv = None))))
 
   /** [[readTableFiles]] plus two plumbing columns: the scanned file's
     * path ([[PosFile]]) and the row's PHYSICAL index within it
     * ([[PosIdx]], from `_metadata.row_index` — correct under pushdown
     * and row-group skipping, which is why DV bookkeeping uses it and
-    * never a counter). Deletion-vector rows are already subtracted:
-    * consumers see live rows tagged with their physical position — the
-    * exact shape DV-writing DML needs. */
+    * never a counter). The relation reads with vectors stripped, so
+    * the physical index stays visible, and [[subtractDeleted]] drops
+    * the dead rows: consumers see live rows tagged with their physical
+    * position — the exact shape DV-writing DML needs. `extraData` as
+    * in [[GraftDeltaRelation.relation]]. */
   private def readTableFilesWithPos(spark: SparkSession, table: String,
-      snap: DeltaLog.Snapshot, paths: Seq[String]): DataFrame = {
-    if (snap.partitionColumns.nonEmpty && !allUnderTable(table, paths)) {
-      // shallow-clone shape: plain log-backed scan (DVs stripped so the
-      // physical row index is still visible), then the explicit
-      // subtraction below-equivalent — mirrors the in-table path
-      val sub = restrictTo(table, snap, paths).map(_.copy(dv = None))
-      val raw = GraftDeltaRelation.frame(spark, table,
-        snap.copy(files = sub))
-        .withColumn(PosFile, col("_metadata.file_path"))
-        .withColumn(PosIdx, col("_metadata.row_index"))
-      return subtractDeleted(raw, table, snap)
-    }
-    val reader =
-      if (snap.partitionColumns.isEmpty) spark.read
-      else spark.read.option("basePath", table)
-    val s = snap.schemaJson
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val mapped = ColumnMapping.enabled(snap)
-    val raw0 = s match {
-      case None => reader.parquet(paths: _*)
-      case Some(logical) if !mapped =>
-        reader.schema(logical).parquet(paths: _*)
-      case Some(logical) =>
-        reader.schema(ColumnMapping.physicalSchema(logical))
-          .parquet(paths: _*)
-    }
-    val raw = raw0
+      snap: DeltaLog.Snapshot, files: Seq[DeltaLog.AddFile],
+      extraData: Seq[StructField] = Nil): DataFrame =
+    subtractDeleted(GraftDeltaRelation.frame(spark, table,
+        snap.copy(files = files.map(_.copy(dv = None))), extraData)
       .withColumn(PosFile, col("_metadata.file_path"))
-      .withColumn(PosIdx, col("_metadata.row_index"))
-    val live = subtractDeleted(raw, table, snap)
-    s match {
-      case Some(logical) if mapped =>
-        live.select(logical.fields.map(f =>
-          col(ColumnMapping.physicalName(f)).as(f.name)).toIndexedSeq
-          ++ Seq(col(PosFile), col(PosIdx)): _*)
-      case _ => live
-    }
+      .withColumn(PosIdx, col("_metadata.row_index")), table, snap)
+
+  /** The live files of `snap` at the given log paths, in path order;
+    * every path must name one. */
+  private def filesAt(snap: DeltaLog.Snapshot,
+      paths: Iterable[String]): Seq[DeltaLog.AddFile] = {
+    val wanted = paths.toSet
+    val found = snap.files.filter(f => wanted.contains(f.path))
+    require(found.length == wanted.size,
+      s"log paths ${(wanted -- found.map(_.path)).mkString(", ")} are " +
+        s"not live at version ${snap.version}")
+    found.sortBy(_.path)
   }
 
   /** Shared DV-DML planner: given the matched (condition/key-hit) rows
@@ -1178,11 +1116,6 @@ object DeltaTable {
       col(PosFile), "^file:/*", "/")
       .isin(paths.toSeq.flatMap(scanKeyForms): _*))
 
-  /** Filter out rows a live deletion vector marks dead. The vector map
-    * is log-sized (one sorted int array per vectored file, total size =
-    * deleted-row count) and broadcast once; the per-row check is a
-    * binary search — no shuffle, no join, the filter rides the scan
-    * stage. */
   /** `files` of `snap` as a LOGICAL frame carrying two extra columns:
     * `_row_id` — the row's stable ROW TRACKING id — and
     * `_row_commit_version`. Resolution per row: the materialized
@@ -1200,23 +1133,9 @@ object DeltaTable {
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(throw new IllegalStateException(
         s"readWithRowIds($table): no committed schema"))
-    val outSchema = StructType(logical.fields ++ Seq(
-      StructField("_row_id", LongType), StructField("_row_commit_version",
-        LongType)))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row], outSchema)
-    val readSchema = StructType(logical.fields ++ Seq(
+    val live = readTableFilesWithPos(spark, table, snap, files, Seq(
       StructField(RowTracking.IdCol, LongType),
       StructField(RowTracking.VerCol, LongType)))
-    val reader =
-      if (snap.partitionColumns.isEmpty) spark.read
-      else spark.read.option("basePath", table)
-    val raw = reader.schema(readSchema).parquet(
-      files.map(f => Paths.get(table).resolve(f.path).toString): _*)
-      .withColumn(PosFile, col("_metadata.file_path"))
-      .withColumn(PosIdx, col("_metadata.row_index"))
-    val live = subtractDeleted(raw, table, snap)
     // Key the per-file literal map by FULL normalized absolute path,
     // not basename: basenames carry only ~32 bits of commitTag entropy
     // (birthday collision around 2^16 commits) and two partition dirs
@@ -1262,21 +1181,13 @@ object DeltaTable {
     * row tracking — only logically-modified rows may renumber; a
     * DELETE that rewrites a file must not invalidate id-keyed
     * consumers of the file's untouched rows). Plain read when tracking
-    * is off. `relPaths` are log-relative. */
+    * is off. */
   private def dmlRowsWithIds(spark: SparkSession, table: String,
-      snap: DeltaLog.Snapshot, relPaths: Iterable[String]): DataFrame = {
-    val sorted = relPaths.toSeq.distinct.sorted
-    if (!RowTracking.enabled(snap))
-      readTableFiles(spark, table, snap,
-        sorted.map(f => Paths.get(table).resolve(f).toString))
-    else {
-      val wanted = sorted.toSet
-      rowIdFrame(spark, table, snap, snap.files.filter(f =>
-        wanted.contains(f.path)))
-        .withColumnRenamed("_row_id", RowTracking.IdCol)
-        .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
-    }
-  }
+      snap: DeltaLog.Snapshot, files: Seq[DeltaLog.AddFile]): DataFrame =
+    if (!RowTracking.enabled(snap)) readTableFiles(spark, table, snap, files)
+    else rowIdFrame(spark, table, snap, files)
+      .withColumnRenamed("_row_id", RowTracking.IdCol)
+      .withColumnRenamed("_row_commit_version", RowTracking.VerCol)
 
   /** Null out the materialized row-tracking columns on rows `matched`
     * by a DML condition: post-images are logically NEW row versions
@@ -1302,6 +1213,11 @@ object DeltaTable {
   private def dropIdCols(d: DataFrame): DataFrame =
     d.drop(RowTracking.IdCol, RowTracking.VerCol)
 
+  /** Filter out rows a live deletion vector marks dead. The vector map
+    * is log-sized (one sorted int array per vectored file, total size =
+    * deleted-row count) and broadcast once; the per-row check is a
+    * binary search — no shuffle, no join, the filter rides the scan
+    * stage. */
   private def subtractDeleted(df: DataFrame, table: String,
       snap: DeltaLog.Snapshot): DataFrame = {
     val dvs = DeletionVectors.liveVectors(table, snap)
@@ -1589,7 +1505,7 @@ object DeltaTable {
       }.values.flatten.toSeq.sortBy(_.path)
       if (work.isEmpty) Done(snap.version)
       else relayout("COMPACT WHERE", table, snap, work,
-        dmlRowsWithIds(spark, table, snap, work.map(_.path))
+        dmlRowsWithIds(spark, table, snap, work)
           .repartition(snap.partitionColumns.map(col): _*))
     }
   }
@@ -1623,7 +1539,7 @@ object DeltaTable {
         // not invalidate id-keyed consumers)
         val snapDf =
           if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
-          else dmlRowsWithIds(spark, table, snap, snap.files.map(_.path))
+          else dmlRowsWithIds(spark, table, snap, snap.files)
         val compacted =
           if (snap.partitionColumns.isEmpty) snapDf.coalesce(nOut)
           else snapDf.repartition(snap.partitionColumns.map(
@@ -1681,7 +1597,7 @@ object DeltaTable {
       // renumber identity
       val df =
         if (!RowTracking.enabled(snap)) read(spark, table, Some(snap.version))
-        else dmlRowsWithIds(spark, table, snap, snap.files.map(_.path))
+        else dmlRowsWithIds(spark, table, snap, snap.files)
       val aggs = cols.flatMap(c => Seq(
         smin(col(c)).cast("double"), smax(col(c)).cast("double")))
       val r = df.agg(aggs.head, aggs.tail: _*).head() // 2k scalars
@@ -1789,14 +1705,13 @@ object DeltaTable {
     transact(table, "delete") { snap =>
       val touched = touchedFiles(table,
         read(spark, table, Some(snap.version)).filter(condition))()
-      val touchedPaths = touched.toSeq.sorted
-        .map(f => Paths.get(table).resolve(f).toString)
+      val touchedAdds = filesAt(snap, touched)
       if (touched.isEmpty) Done(snap.version)
       else if (dvEnabled(snap)) {
         // DELETION-VECTOR path: mark dead rows in sidecar bitmaps
         // instead of rewriting files. A point-delete in a 128 MB file
         // moves ZERO data bytes — the whole reason DVs exist at 100 TB.
-        val withPos = readTableFilesWithPos(spark, table, snap, touchedPaths)
+        val withPos = readTableFilesWithPos(spark, table, snap, touchedAdds)
         val matched = withPos.filter(condition)
         val (dvPlans, rewriteFiles) = planDvDml(table, snap, touched, matched)
         val rewriteAdds =
@@ -1804,7 +1719,7 @@ object DeltaTable {
           else stageIn(
             // survivors of a rewrite-fallback file are merely COPIED:
             // they keep their row ids (materialized into the new file)
-            dmlRowsWithIds(spark, table, snap, rewriteFiles.map(_.path))
+            dmlRowsWithIds(spark, table, snap, rewriteFiles)
               .filter(!condition),
             table, snap.partitionColumns, mappingOf(snap))
         val cdc =
@@ -1815,7 +1730,7 @@ object DeltaTable {
       } else {
         // row-tracked survivors carry their ORIGINAL ids into the
         // rewritten files — a delete must never renumber untouched rows
-        val touchedRows = dmlRowsWithIds(spark, table, snap, touched)
+        val touchedRows = dmlRowsWithIds(spark, table, snap, touchedAdds)
         // survivors of ONLY the touched files, original schema/layout
         val survivors = touchedRows.filter(!condition)
         val added = stageIn(survivors, table, snap.partitionColumns,
@@ -1867,8 +1782,7 @@ object DeltaTable {
       val genChecks = gensU.filter { case (g, _) => set.contains(g) }
         .map { case (g, e) => s"generated column $g" -> s"`$g` <=> ($e)" }
       val touched = touchedFiles(table, df.filter(condition))()
-      val touchedPaths = touched.toSeq.sorted
-        .map(f => Paths.get(table).resolve(f).toString)
+      val touchedAdds = filesAt(snap, touched)
       def applySet(d: DataFrame, always: Boolean): DataFrame = {
         import org.apache.spark.sql.functions.{when, expr}
         // project over the INPUT's columns, not df's: a row-tracked
@@ -1909,7 +1823,7 @@ object DeltaTable {
         // stage ONLY their post-images as a new file — a 10-row update
         // in a 128 MB file moves 10 rows, not 128 MB (same move stock
         // Delta's DV MERGE/UPDATE makes).
-        val withPos = readTableFilesWithPos(spark, table, snap, touchedPaths)
+        val withPos = readTableFilesWithPos(spark, table, snap, touchedAdds)
         val matched = withPos.filter(condition)
         val (dvPlans, rewriteFiles) = planDvDml(table, snap, touched, matched)
         val dvPaths = dvPlans.map(p => Paths.get(table).resolve(p._1.path)
@@ -1926,7 +1840,7 @@ object DeltaTable {
           // (post-images) renumber — null their materialized ids so the
           // staged file's baseRowId range covers them
           else Some(applySet(renumberMatched(
-            dmlRowsWithIds(spark, table, snap, rewriteFiles.map(_.path)),
+            dmlRowsWithIds(spark, table, snap, rewriteFiles),
             condition), always = false))
         // when every touched file fell to the rewrite heuristic there
         // are no vectored post-images — don't stage an empty file
@@ -1957,7 +1871,7 @@ object DeltaTable {
         // row-tracked: untouched rows of touched files keep their ids
         // (materialized); matched rows renumber (post-image = new row
         // version). The nulling reads PRE-set values — before applySet.
-        val touchedRows = dmlRowsWithIds(spark, table, snap, touched)
+        val touchedRows = dmlRowsWithIds(spark, table, snap, touchedAdds)
         val updated = applySet(renumberMatched(touchedRows, condition),
           always = false)
         val added = stageIn(updated, table, snap.partitionColumns,
@@ -2056,8 +1970,7 @@ object DeltaTable {
         val srcKeys = sourceI.select(keys.map(col): _*)
         val touched = touchedFiles(table, target, keys)(
           _.join(broadcast(srcKeys), keys, "left_semi"))
-        val touchedPaths = touched.toSeq.sorted
-          .map(f => Paths.get(table).resolve(f).toString)
+        val touchedAdds = filesAt(snap, touched)
         // DELETION-VECTOR merge: instead of re-staging every touched
         // file's unmatched rows, mark the REPLACED target rows dead in
         // place and stage only the source rows — upsert write
@@ -2068,11 +1981,11 @@ object DeltaTable {
           if (!useDv) {
             val tr =
               if (touched.isEmpty) None
-              else Some(dmlRowsWithIds(spark, table, snap, touched))
+              else Some(dmlRowsWithIds(spark, table, snap, touchedAdds))
             (Seq.empty[(DeltaLog.AddFile, Array[Int])],
               Seq.empty[DeltaLog.AddFile], tr)
           } else {
-            val withPos = readTableFilesWithPos(spark, table, snap, touchedPaths)
+            val withPos = readTableFilesWithPos(spark, table, snap, touchedAdds)
             val matched = withPos.join(broadcast(srcKeys), keys, "left_semi")
             val (dv, rw) = planDvDml(table, snap, touched, matched)
             (dv, rw, Some(withPos.drop(PosFile, PosIdx)))
@@ -2088,7 +2001,7 @@ object DeltaTable {
             val src = sourceI.select(target.columns.map(col): _*)
             if (rewriteFiles.isEmpty) src
             else src.unionByName(
-              dmlRowsWithIds(spark, table, snap, rewriteFiles.map(_.path))
+              dmlRowsWithIds(spark, table, snap, rewriteFiles)
                 .join(broadcast(srcKeys), keys, "left_anti"),
               allowMissingColumns = true)
           } else touchedRows match {
@@ -2484,51 +2397,12 @@ object DeltaTable {
 
   /** Read the table at the latest (or a past) version, optionally
     * skipping files whose min/max stats prove they cannot satisfy
-    * `filters` (conjunctive). An empty live set yields an empty
-    * DataFrame with the committed schema. */
+    * `filters` (conjunctive; see [[filesMatching]]). */
   def read(spark: SparkSession, table: String,
       versionAsOf: Option[Long] = None,
       filters: Seq[Filter] = Seq.empty): DataFrame = {
     val snap = DeltaLog.snapshot(table, versionAsOf)
-    val schema = snap.schemaJson.map(j =>
-      DataType.fromJson(j).asInstanceOf[StructType])
-    val mapped = ColumnMapping.enabled(snap)
-    // GENERATED PARTITION COLUMNS: a filter on the base column derives
-    // a partition filter on the generated one (monotone shapes only —
-    // see GeneratedColumns.derivePartitionFilters), pruning partitions
-    // the caller's predicate could never reach
-    val withDerived = schema match {
-      case Some(s) if snap.partitionColumns.nonEmpty =>
-        filters ++ GeneratedColumns.derivePartitionFilters(filters, s,
-          snap.partitionColumns, java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone))
-      case _ => filters
-    }
-    // Under column mapping, file stats are keyed by PHYSICAL name (they
-    // were collected over the staged physical frame) — pushdown filters
-    // arrive logical and translate before the skipping consult;
-    // untranslatable shapes drop (skipping stays conservative).
-    val skipFilters =
-      if (!mapped) withDerived
-      else {
-        val m = schema.map(ColumnMapping.logicalToPhysical)
-          .getOrElse(Map.empty[String, String])
-        withDerived.flatMap(ColumnMapping.translateFilter(_, m))
-      }
-    val skipSchema = schema.map(s =>
-      if (mapped) ColumnMapping.physicalSchema(s) else s)
-      .getOrElse(new StructType())
-    val live = liveFilesAfterSkipping(snap, skipFilters, skipSchema)
-    val paths = live.map(f => Paths.get(table).resolve(f.path).toString)
-    // readTableFiles handles the three shapes (schemaless, plain,
-    // mapped), recovers partition columns via basePath, and subtracts
-    // deletion-vector rows when the snapshot carries any.
-    (schema, paths) match {
-      case (Some(s), Nil) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ColumnMapping.stripMapping(s))
-      case (_, ps) => readTableFiles(spark, table, snap, ps)
-    }
+    readTableFiles(spark, table, snap, filesMatching(snap, filters))
   }
 
   def latestVersion(table: String): Long = DeltaLog.snapshot(table).version
@@ -2618,10 +2492,11 @@ object DeltaTable {
     *
     * Scale shape: the driver touches only log JSON (one line per file
     * per commit); the data path is one parquet scan over exactly the
-    * added files plus one over the range's sidecars, partition columns
-    * recovered via basePath, and the per-version tagging rides the
-    * scan's partitioning (a file belongs to one version —
-    * `input_file_name` maps it back with zero shuffle). */
+    * added files (through the log-backed relation, partition values
+    * from the log) plus one over the range's sidecars, and the
+    * per-version tagging rides the scan's partitioning (a file belongs
+    * to one version — `input_file_name` maps it back with zero
+    * shuffle). */
   def changes(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     val latest = DeltaLog.snapshot(table)
@@ -2675,14 +2550,13 @@ object DeltaTable {
     }
     val insertPart = {
       val byV = insertsByVersion.result()
-      val paths = byV.flatMap(_._2).map(f =>
-        Paths.get(table).resolve(f.path).toString)
-      if (paths.isEmpty) None
+      val adds = byV.flatMap(_._2)
+      if (adds.isEmpty) None
       // applyDv=false: these files are read AS OF their append version
       // — rows a later delete vectored must still appear as inserts
       // (the delete's own change rows account for their removal)
       else Some(versionTag(byV,
-        readTableFiles(spark, table, latest, paths, applyDv = false)
+        readTableFiles(spark, table, latest, adds, applyDv = false)
           .withColumn("_change_type", lit("insert"))))
     }
     val cdcPart = {
@@ -3127,6 +3001,38 @@ object DeltaTable {
   private def distributedStatsFileFloor(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.stats.distributedFileFloor")
       .flatMap(_.toIntOption).getOrElse(64)
+
+  /** The files of `snap` that MAY hold rows satisfying the conjunction
+    * of LOGICAL-named `filters` — the one skipping consult of [[read]]
+    * and [[GraftDeltaFileIndex.listFiles]]. A filter on the base column
+    * of a generated partition column derives a partition filter on it
+    * (monotone shapes only, see
+    * [[GeneratedColumns.derivePartitionFilters]]), pruning partitions
+    * the caller's predicate could never reach. Under column mapping
+    * the stats are keyed by PHYSICAL name (collected over the staged
+    * physical frame), so every filter translates first; untranslatable
+    * shapes drop (skipping stays conservative). `fallback` types the
+    * stats of a log with no committed schema. */
+  private[sources] def filesMatching(snap: DeltaLog.Snapshot,
+      filters: Seq[Filter], fallback: StructType = new StructType())
+      : Seq[DeltaLog.AddFile] = {
+    val committed = snap.schemaJson
+      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    committed match {
+      case None => liveFilesAfterSkipping(snap, filters, fallback)
+      case Some(s) =>
+        val all = filters ++ GeneratedColumns.derivePartitionFilters(
+          filters, s, snap.partitionColumns, java.time.ZoneId.of(
+            org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+        if (!ColumnMapping.enabled(snap)) liveFilesAfterSkipping(snap, all, s)
+        else {
+          val l2p = ColumnMapping.logicalToPhysical(s)
+          liveFilesAfterSkipping(snap,
+            all.flatMap(ColumnMapping.translateFilter(_, l2p)),
+            ColumnMapping.physicalSchema(s))
+        }
+    }
+  }
 
   /** Files that MAY satisfy the conjunction of `filters` given their
     * min/max stats; a file without stats for a referenced column is

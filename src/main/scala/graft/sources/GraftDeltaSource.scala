@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** `format("graft-delta")` / `format("delta")` integration: the
   * Delta-equivalent layer (DeltaLog/DeltaTable) exposed through Spark's
@@ -236,10 +236,9 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
   private def fileCapped: Boolean =
     maxFilesPerTrigger.isDefined || maxBytesPerTrigger.isDefined
 
-  private val initialSnap = DeltaLog.snapshot(table)
-  private val partitionColumns = initialSnap.partitionColumns
-  // mapping state pinned at source creation — a streaming query's
-  // schema is fixed for its lifetime (same contract as Delta's source).
+  // schema, mapping and partition columns pinned at source creation —
+  // a streaming query's schema is fixed for its lifetime (same contract
+  // as Delta's source); getBatch reads every batch through this snapshot.
   // The pinned-schema contract across MID-STREAM schema changes:
   //   - RENAME: metadata-only under mapping (physical names frozen),
   //     so the stream KEEPS SERVING the creation-time logical names —
@@ -250,7 +249,7 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
   //     column; schema-reading it would fabricate nulls) — the next
   //     micro-batch FAILS LOUDLY instead (Delta's stance on stream
   //     schema change). StreamingSpec pins all three.
-  private val mappedRead = ColumnMapping.enabled(initialSnap)
+  private val initialSnap = DeltaLog.snapshot(table)
 
   /** Rate-limit cursor (Delta's maxFilesPerTrigger analog, in
     * versions): getOffset advances at most `maxVersionsPerTrigger`
@@ -542,42 +541,13 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
     if (files.isEmpty)
       return org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(
         sqlContext, spark.sparkContext.emptyRDD[InternalRow], schema)
-    val paths = files.map(f =>
-      java.nio.file.Paths.get(table).resolve(f.path).toString)
-    val reader =
-      if (partitionColumns.isEmpty) spark.read
-      else spark.read.option("basePath", table)
-    val raw =
-      if (!mappedRead) reader.schema(schema).parquet(paths: _*)
-      else reader.schema(ColumnMapping.physicalSchema(schema))
-        .parquet(paths: _*)
-    // deletion vectors: a delivered add may carry one (the initial
-    // snapshot after a vectored delete; a DV re-add under
-    // ignoreChanges) — its dead rows must not reach the stream. The
-    // filter runs on the RAW scan (before any projection) so
-    // `_metadata` is still resolvable.
-    val dvEntries = files.flatMap(f => f.dv.map(d =>
-      f.path -> DeletionVectors.read(table, d)))
-    val dvs = new DvMap(
-      dvEntries.map { case (rel, v) =>
-        java.nio.file.Paths.get(table).resolve(rel)
-          .toAbsolutePath.normalize.toString -> v }.toMap,
-      dvEntries.map { case (rel, v) =>
-        java.nio.file.Paths.get(rel).getFileName.toString -> v }.toMap)
-    val live =
-      if (dvs.isEmpty) raw
-      else
-        // the batch path's codegen'd bitmap probe (DvScanRewrite),
-        // injected into the analyzed scan plan — round 15 retires the
-        // per-row Scala UDF this branch carried (the one non-codegen
-        // probe left; the expression ships the log-sized DvMap as a
-        // task reference object, same footprint as the old broadcast)
-        org.apache.spark.sql.GraftSqlBridge.dataFrame(spark,
-          graft.plans.DvScanRewrite.filterDeleted(
-            raw.queryExecution.analyzed, dvs))
-    val base =
-      if (!mappedRead) live else ColumnMapping.toLogical(live, schema)
-    val ordered = base
+    // the batch's files through the log-backed relation of the PINNED
+    // creation snapshot: its schema, mapping and partition columns;
+    // partition values from each file's log entry; dead rows of a
+    // delivered vectored add (the initial snapshot after a vectored
+    // delete, a DV re-add under ignoreChanges) dropped in-scan
+    val ordered = GraftDeltaRelation.frame(spark, table,
+        initialSnap.copy(files = files))
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
     org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(
       sqlContext, ordered.queryExecution.toRdd, ordered.schema)
@@ -656,8 +626,7 @@ class DeltaNamedSource extends GraftDeltaSource {
   * own row-group stats), so approximate skipping can never change
   * results. */
 class GraftDeltaFileIndex(table: String, snap: DeltaLog.Snapshot,
-    schema: StructType, partSchema: StructType = new StructType(),
-    l2p: Map[String, String] = Map.empty)
+    schema: StructType, partSchema: StructType = new StructType())
     extends FileIndex {
 
   private val tablePath = new HPath(table)
@@ -684,34 +653,11 @@ class GraftDeltaFileIndex(table: String, snap: DeltaLog.Snapshot,
     })
   }
 
-  /** The committed LOGICAL schema (generation metadata intact) — the
-    * namespace generation expressions and their base columns live in.
-    * Partition columns keep logical==physical names (rename of one is
-    * refused), so filters derived here consult partition values
-    * directly even under column mapping. */
-  private lazy val logicalSchema: StructType =
-    snap.schemaJson.map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType]).getOrElse(schema)
-
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // under column mapping the stats are physically keyed; predicates
-    // arrive logical and translate before the consult
-    val logical = dataFilters.flatMap(GraftDeltaFileIndex.translate)
-    // GENERATED PARTITION COLUMNS: a pushed filter on the base column
-    // derives a partition filter on the generated one (monotone shapes
-    // only), pruning partitions with zero I/O — the scale payoff of
-    // declaring `event_date` generated instead of hand-computed
-    val derived =
-      if (snap.partitionColumns.isEmpty) Nil
-      else GeneratedColumns.derivePartitionFilters(logical, logicalSchema,
-        snap.partitionColumns, java.time.ZoneId.of(
-          org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
-    val translated = logical.flatMap(f =>
-      if (l2p.isEmpty) Some(f) else ColumnMapping.translateFilter(f, l2p)) ++
-      derived
-    val live = DeltaTable.liveFilesAfterSkipping(snap, translated, schema)
+    // `schema` types the stats only when the log has no committed schema
+    val live = DeltaTable.filesMatching(snap,
+      dataFilters.flatMap(GraftDeltaFileIndex.translate), schema)
     if (partSchema.isEmpty)
       return Seq(PartitionDirectory(InternalRow.empty, live.map(status).toArray))
     // one PartitionDirectory per live partition-value tuple, pruned by
@@ -748,14 +694,22 @@ class GraftDeltaFileIndex(table: String, snap: DeltaLog.Snapshot,
     * Σ `stats.n` (physical rows) − Σ deletion-vector cardinality
     * (dead rows) — or None the moment any live file lacks `n`
     * (foreign writer / skipped collection), because a partial sum
-    * would be a silent undercount. Consumed by
+    * would be a silent undercount. Also None when a shallow clone's
+    * ABSOLUTE reference is gone: those files live under the source
+    * table, whose vacuum may delete them, and the scan then fails
+    * loudly instead of counting rows that no longer exist. Consumed by
     * [[graft.plans.MetadataOnlyCount]] to answer `COUNT(*)` with zero
     * data I/O. */
   def metadataRowCount: Option[Long] = {
     val counts = snap.files.map(f =>
       f.stats.get("n").flatMap(_.toLongOption)
         .map(_ - f.dv.map(_.cardinality).getOrElse(0L)))
-    if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+    val stranded = snap.files.exists { f =>
+      val p = java.nio.file.Paths.get(f.path)
+      p.isAbsolute && !java.nio.file.Files.exists(p)
+    }
+    if (stranded || counts.exists(_.isEmpty)) None
+    else Some(counts.flatten.sum)
   }
 
   override def partitionSchema: StructType = partSchema
@@ -769,8 +723,12 @@ class GraftDeltaFileIndex(table: String, snap: DeltaLog.Snapshot,
   * the mapped/DV-aware file-format selection. */
 private[sources] object GraftDeltaRelation {
 
+  /** `extraData`: data columns appended after the committed ones — the
+    * materialized row-tracking columns a row-id read needs (absent
+    * from a file, they read as null). */
   def relation(spark: SparkSession, table: String,
-      snap: DeltaLog.Snapshot): HadoopFsRelation = {
+      snap: DeltaLog.Snapshot,
+      extraData: Seq[StructField] = Nil): HadoopFsRelation = {
     val committed = snap.schemaJson
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(spark.read.parquet(
@@ -799,9 +757,8 @@ private[sources] object GraftDeltaRelation {
     val partitionSchema = StructType(
       snap.partitionColumns.flatMap(c => schema.fields.find(_.name == c)))
     val dataSchema = StructType(
-      schema.fields.filterNot(f => snap.partitionColumns.contains(f.name)))
-    val skipSchema =
-      if (mapped) ColumnMapping.physicalSchema(committed) else schema
+      schema.fields.filterNot(f => snap.partitionColumns.contains(f.name)) ++
+        extraData)
     val liveDvs = DeletionVectors.liveVectors(table, snap)
     val fileFormat =
       if (liveDvs.nonEmpty) new DvParquetFileFormat(l2p, liveDvs)
@@ -809,8 +766,7 @@ private[sources] object GraftDeltaRelation {
         new MappedParquetFileFormat(l2p)
       else new ParquetFileFormat
     HadoopFsRelation(
-      location = new GraftDeltaFileIndex(table, snap, skipSchema,
-        partitionSchema, l2p),
+      location = new GraftDeltaFileIndex(table, snap, schema, partitionSchema),
       partitionSchema = partitionSchema,
       dataSchema = dataSchema,
       bucketSpec = None,
@@ -819,10 +775,11 @@ private[sources] object GraftDeltaRelation {
   }
 
   /** The relation as a DataFrame (columns: dataSchema then partition
-    * columns, Spark's file-source convention). */
-  def frame(spark: SparkSession, table: String,
-      snap: DeltaLog.Snapshot): DataFrame =
-    spark.baseRelationToDataFrame(relation(spark, table, snap))
+    * columns, Spark's file-source convention) — the one place a
+    * snapshot's files become a DataFrame. */
+  def frame(spark: SparkSession, table: String, snap: DeltaLog.Snapshot,
+      extraData: Seq[StructField] = Nil): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, table, snap, extraData))
 }
 
 object GraftDeltaFileIndex {

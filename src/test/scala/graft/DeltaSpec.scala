@@ -4086,4 +4086,86 @@ class DeltaSpec extends SparkSpec {
       snap.writerFeatures.contains("domainMetadata"))
     runValidator(t)
   }
+
+  test("row tracking on a partitioned shallow clone: ids equal the " +
+      "source's; delete, update and merge rewrite the cloned files") {
+    val src = freshTable()
+    DeltaTable.write(Seq((1, 0, 10L), (2, 0, 20L), (3, 1, 30L), (4, 1, 40L))
+      .toDF("id", "p", "v").coalesce(1), src, "overwrite",
+      partitionBy = Seq("p"))
+    DeltaTable.enableRowTracking(src)
+    val tgt = freshTable()
+    DeltaTable.shallowClone(src, tgt)
+    val srcIds = idsOf(src)
+    assert(srcIds.size === 4)
+    assert(idsOf(tgt) === srcIds)
+    // partition values come from the log for the cloned (absolute) adds
+    assert(DeltaTable.readWithRowIds(spark, tgt).select("id", "p")
+      .as[(Int, Int)].collect().sorted === Array((1, 0), (2, 0), (3, 1), (4, 1)))
+    DeltaTable.delete(spark, tgt, $"id" === 1)
+    assert(idsOf(tgt) === srcIds - 1, "a delete must not renumber survivors")
+    DeltaTable.update(spark, tgt, $"id" === 2,
+      Map("v" -> (lit(21L): org.apache.spark.sql.Column)))
+    val afterUpdate = idsOf(tgt)
+    assert(afterUpdate - 2 === srcIds - 1 - 2)
+    assert(!srcIds.values.toSet.contains(afterUpdate(2)),
+      "the updated row draws a fresh id")
+    DeltaTable.merge(spark, tgt,
+      Seq((3, 1, 33L), (5, 1, 50L)).toDF("id", "p", "v"), Seq("id"))
+    val afterMerge = idsOf(tgt)
+    assert(afterMerge.keySet === Set(2, 3, 4, 5))
+    assert(afterMerge(4) === srcIds(4), "an untouched row keeps its id")
+    assert(afterMerge(2) === afterUpdate(2))
+    assert(afterMerge.values.toSet.size === 4)
+    assert(!srcIds.values.toSet.contains(afterMerge(3)) &&
+      !srcIds.values.toSet.contains(afterMerge(5)))
+    assert(DeltaTable.read(spark, tgt).select("id", "p", "v")
+      .as[(Int, Int, Long)].collect().sorted ===
+      Array((2, 0, 21L), (3, 1, 33L), (4, 1, 40L), (5, 1, 50L)))
+    // the source is untouched
+    assert(idsOf(src) === srcIds)
+    assert(DeltaTable.read(spark, src).select("id", "v").as[(Int, Long)]
+      .collect().sorted === Array((1, 10L), (2, 20L), (3, 30L), (4, 40L)))
+    runValidator(tgt)
+  }
+
+  test("read returns one column order whether files survive skipping, " +
+      "all are skipped, or the version has none") {
+    import org.apache.spark.sql.sources.GreaterThan
+    val t = freshTable()
+    // the committed schema lists the partition column first
+    DeltaTable.write(Seq((0, 1L, 10L), (1, 2L, 20L)).toDF("p", "k", "v"),
+      t, "overwrite", partitionBy = Seq("p"))                    // v0
+    DeltaTable.delete(spark, t, lit(true))                       // v1: no files
+    assert(DeltaLog.snapshot(t).files.isEmpty)
+    val survived = DeltaTable.read(spark, t, Some(0L))
+    val skipped = DeltaTable.read(spark, t, Some(0L),
+      Seq(GreaterThan("k", 100L)))
+    val none = DeltaTable.read(spark, t)
+    assert(survived.collect().length === 2)
+    assert(skipped.collect().isEmpty && none.collect().isEmpty)
+    assert(skipped.columns.toSeq === survived.columns.toSeq)
+    assert(none.columns.toSeq === survived.columns.toSeq)
+  }
+
+  test("reads and DML over a table of more than 32 files run no " +
+      "file-listing job") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // paths, a path-listed parquet read starts one more job to list them
+    def table(nFiles: Int): String = {
+      val t = freshTable()
+      DeltaTable.write(spark.range(0, 4L * nFiles, 1, nFiles).toDF("k")
+        .withColumn("v", $"k" * 10), t, "overwrite")
+      assert(DeltaLog.snapshot(t).files.length === nFiles)
+      t
+    }
+    val (small, large) = (table(2), table(40))
+    def readJobs(t: String): Int =
+      sparkJobs(DeltaTable.read(spark, t).collect())
+    def deleteJobs(t: String): Int =
+      sparkJobs(DeltaTable.delete(spark, t, $"k" === 1L))
+    assert(readJobs(large) === readJobs(small))
+    assert(deleteJobs(large) === deleteJobs(small))
+    assert(DeltaTable.read(spark, large).count() === 4L * 40 - 1)
+  }
 }

@@ -562,6 +562,31 @@ class StreamingSpec extends SparkSpec {
       === Array(1L, 2L, 3L))
   }
 
+  test("delta stream source serves a partitioned table and its shallow " +
+      "clone: partition values from the log, pinned column order") {
+    import graft.sources.DeltaTable
+    val base = tempDir("graft-stream-pclone")
+    val (src, tgt) = (s"$base/src", s"$base/tgt")
+    DeltaTable.write(spark.createDataFrame(Seq((0, 1L, "a"), (1, 2L, "b")))
+      .toDF("p", "id", "v"), src, "overwrite", partitionBy = Seq("p"))
+    DeltaTable.shallowClone(src, tgt)
+    for ((t, name) <- Seq(src -> "pclone_src", tgt -> "pclone_tgt")) {
+      val q = spark.readStream.format("graft-delta").load(t)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$base/ckpt-$name").start()
+      try {
+        q.processAllAvailable() // initial batch: the snapshot
+        DeltaTable.write(spark.createDataFrame(Seq((1, 3L, "c")))
+          .toDF("p", "id", "v"), t, "append")
+        q.processAllAvailable() // the append
+      } finally q.stop()
+      val got = spark.table(name)
+      assert(got.columns.toSeq === Seq("p", "id", "v"), name)
+      assert(got.as[(Int, Long, String)].collect().sorted ===
+        Array((0, 1L, "a"), (1, 2L, "b"), (1, 3L, "c")), name)
+    }
+  }
+
   test("delta source rate limit: backlog spreads over micro-batches") {
     import graft.sources.DeltaLog
     val base = tempDir("graft-delta-rate")

@@ -931,9 +931,15 @@ def validate(table):
                                         f"inside data file {p}")
                 # under column mapping, DROP is metadata-only: a file may
                 # legally carry a dropped column's physical bytes, so the
-                # outside-the-schema check applies only to unmapped tables
+                # outside-the-schema check applies only to unmapped tables;
+                # a row-tracked rewrite carries the materialized row-id
+                # columns invariant 19 reads
+                tracked = (full.config.get("delta.enableRowTracking")
+                           == "true")
                 extra = [c for c in dcols if schema_fields and
-                         c not in schema_fields and not mapping_on]
+                         c not in schema_fields and not mapping_on and
+                         not (tracked and c in ("__graft_row_id",
+                                                "__graft_row_commit"))]
                 if extra:
                     problems.append(f"data file {p} carries columns {extra} "
                                     "outside the logged schema")
