@@ -94,7 +94,9 @@ object Tables {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     // synchronized: the set/restore window mutates session-global conf;
     // two concurrent loads on one session could otherwise race the
-    // restore and leak the legacy conf to an unrelated read
+    // restore and leak the legacy conf to an unrelated read. This
+    // window is the monitor's only user: staged writes pin their
+    // timestamp encoding in the writer, not in the session conf.
     def legacyRead(): DataFrame = Tables.synchronized {
       val before = spark.conf.getOption(key)
       spark.conf.set(key, "true")

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
-import org.apache.parquet.HadoopReadOptions
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, max, min}
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
@@ -1274,19 +1273,19 @@ object DeltaTable {
   }
 
   /** Write `df`'s data files INTO the table directory (invisible until
-    * a commit references them): distributed parquet write to a scratch
-    * dir, per-file min/max stats in one job, then atomic per-file
-    * moves under commit-unique names. With `partitionBy`, the staging
-    * write lays out Hive-style `col=value/` dirs; each staged file's
-    * partition values are decoded from its directory path and carried
-    * on the AddFile (the log is the source of truth for pruning — the
-    * dir layout is kept only so the files remain self-describing to a
-    * plain `spark.read.parquet` user). */
+    * a commit references them): one [[StagedWriter]] job into a
+    * per-write `.staging-<uuid>` dir, then atomic per-file moves under
+    * commit-unique names. Each file's stats and partition values come
+    * from the task that wrote it. With `partitionBy`, files keep their
+    * Hive-style `col=value/` dirs (the log is the source of truth for
+    * pruning; the layout keeps the files self-describing to a plain
+    * `spark.read.parquet` user). Files a failed attempt or job leaves
+    * stay inside the staging dir, which no reader lists. */
   /** `mapping` = the table's column-mapping-annotated LOGICAL schema,
     * when mapping is enabled: the frame arrives logical-named (every
     * caller's contract) and stages under PHYSICAL names — the files
     * must store what the mapping metadata says they store. Stats are
-    * collected over the renamed frame, so they key by physical name,
+    * taken over the renamed frame, so they key by physical name,
     * matching what the read path consults. */
   private def stageIn(df0: DataFrame, table: String,
       partitionBy0: Seq[String] = Nil,
@@ -1295,97 +1294,22 @@ object DeltaTable {
     val partitionBy = mapping.map(m =>
       partitionBy0.map(c => ColumnMapping.logicalToPhysical(m).getOrElse(c, c)))
       .getOrElse(partitionBy0)
-    val spark = df.sparkSession
     val tableDir = Paths.get(table)
-    Files.createDirectories(tableDir)
     val staging = tableDir.resolve(s".staging-${UUID.randomUUID()}")
-    // graft-delta data files store timestamps as standard INT64
-    // micros, not Spark's legacy INT96 default: INT96 is deprecated
-    // in the parquet spec, stock Delta writes INT64, and only the
-    // standard encoding carries ordered footer statistics — which
-    // [[collectStats]] reads in place of re-scanning staged bytes.
-    // Set/restore around the one write, FENCED on the same monitor
-    // Tables.loadEvents uses for its nanosAsLong window (round-17
-    // ADVICE): unsynchronized, two interleaved writers could leak
-    // TIMESTAMP_MICROS into the session conf permanently, or a
-    // concurrent writer could capture the restored INT96 value
-    // mid-window and forfeit its timestamp footer stats.
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    graft.Tables.synchronized {
-      val prevTs = spark.conf.get(tsKey)
-      spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try {
-        val w = df.write.option(NoSuccessMarker, "false")
-        if (partitionBy.isEmpty) w.parquet(staging.toString)
-        else w.partitionBy(partitionBy: _*).parquet(staging.toString)
-      } finally spark.conf.set(tsKey, prevTs)
-    }
+    val staged = StagedWriter.write(df, staging, partitionBy).sortBy(_.path)
     val commitTag = UUID.randomUUID().toString.take(8)
-    // per-file min/max stats (Delta-paper data skipping): ONE job over
-    // the staged files, grouped by physical file — not a per-file pass
-    val statsByFile = collectStats(spark, staging.toString, df.schema)
-    val stagedStream = Files.walk(staging)
-    val staged =
-      try stagedStream.iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-      finally stagedStream.close()
-    val added = staged.zipWithIndex.flatMap { case (p, i) =>
-      val rel = staging.relativize(p) // e.g. c_mktsegment=BUILDING/part-0.parquet
-      val partDirs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
-      val partitionValues = partDirs.map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"unexpected staged partition dir: $seg")
-        val k = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.take(eq))
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.drop(eq + 1))
-        k -> v
-      }.toMap
-      // a staged file the stats job didn't see is either EMPTY (an
-      // empty input partition — groupBy(input_file_name) yields no
-      // group for it) or lost to a path-keying mismatch; one footer
-      // read resolves which. Zero-row files are dropped here instead
-      // of committed — they carry no data, and at scale they bloat
-      // the log and defeat stats-only answers (metadataRowCount
-      // refuses any snapshot holding a stats-less file).
-      val stats = {
-        val collected = statsByFile.getOrElse(rel.toString, Map.empty)
-        if (collected.nonEmpty) collected
-        else stagedRowCount(spark, p)
-          .map(c => Map("n" -> c.toString)).getOrElse(Map.empty)
-      }
-      if (stats.get("n").contains("0")) None
-      else {
-        val name = (partDirs :+ f"part-$i%05d-$commitTag.parquet").mkString("/")
-        val dest = tableDir.resolve(name)
-        Files.createDirectories(dest.getParent)
-        Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-        Some(DeltaLog.AddFile(name, Files.size(dest), stats, partitionValues,
-          modificationTime = Files.getLastModifiedTime(dest).toMillis))
-      }
+    val added = staged.zipWithIndex.map { case (f, i) =>
+      val name = (f.path.split('/').init :+ f"part-$i%05d-$commitTag.parquet")
+        .mkString("/")
+      val dest = tableDir.resolve(name)
+      Files.createDirectories(dest.getParent)
+      Files.move(staging.resolve(f.path), dest, StandardCopyOption.ATOMIC_MOVE)
+      DeltaLog.AddFile(name, f.size, f.stats, f.partitionValues,
+        modificationTime = f.modificationTime)
     }
     deleteRecursively(staging)
     added
   }
-
-  /** The Hadoop committer option that, set to false, skips the
-    * `_SUCCESS` marker: nothing reads a staging dir's marker, and
-    * without a native Hadoop library each local file it writes (the
-    * marker and its `.crc`) forks a `chmod`. */
-  private val NoSuccessMarker = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-
-  /** Exact row count of one staged parquet file from its FOOTER — the
-    * driver-side fallback for files the stats job missed. A footer is
-    * a few KB regardless of file size, and this path only runs for
-    * stats-less staged files (normally just empty partitions). */
-  private def stagedRowCount(spark: SparkSession, p: Path): Option[Long] =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toUri),
-        spark.sessionState.newHadoopConf())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Some(r.getRecordCount) finally r.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Whether the table has opted into the CHANGE DATA FEED (the public
     * Delta table property): when true, every DML commit also stages
@@ -1401,27 +1325,21 @@ object DeltaTable {
     * mapping the data columns store physical names (`_change_type` is
     * outside the mapping and passes through), matching the data files
     * so the change-feed read path can reuse the same schema plumbing.
-    * Distributed write, no stats (the feed is consumed whole per
-    * version, never skipped). */
+    * Distributed write; the stats go unused (the feed is consumed
+    * whole per version, never skipped). */
   private def stageCdc(df0: DataFrame, table: String,
       mapping: Option[StructType]): Seq[DeltaLog.AddFile] = {
     val df = mapping.map(m => ColumnMapping.toPhysical(df0, m)).getOrElse(df0)
     val tableDir = Paths.get(table)
     val staging = tableDir.resolve(s".staging-${UUID.randomUUID()}")
-    df.write.option(NoSuccessMarker, "false").parquet(staging.toString)
+    val staged = StagedWriter.write(df, staging).sortBy(_.path)
     val tag = UUID.randomUUID().toString.take(8)
-    val stagedStream = Files.walk(staging)
-    val staged =
-      try stagedStream.iterator.asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.toString)
-      finally stagedStream.close()
-    Files.createDirectories(tableDir.resolve("_change_data"))
-    val out = staged.zipWithIndex.map { case (p, i) =>
+    if (staged.nonEmpty) Files.createDirectories(tableDir.resolve("_change_data"))
+    val out = staged.zipWithIndex.map { case (f, i) =>
       val name = f"_change_data/cdc-$i%05d-$tag.parquet"
-      val dest = tableDir.resolve(name)
-      Files.move(p, dest, StandardCopyOption.ATOMIC_MOVE)
-      DeltaLog.AddFile(name, Files.size(dest))
+      Files.move(staging.resolve(f.path), tableDir.resolve(name),
+        StandardCopyOption.ATOMIC_MOVE)
+      DeltaLog.AddFile(name, f.size)
     }
     deleteRecursively(staging)
     out
@@ -2680,9 +2598,9 @@ object DeltaTable {
     * existing parquet file, with the schema (partition columns
     * included) inferred by Spark's own parquet reader. At 100 TB this
     * is the difference between a day-long rewrite and one metadata
-    * commit: the conversion cost is one footer-less listing walk plus
-    * one distributed stats job (itself optional best-effort), never a
-    * data read. Partition directories (`col=value/`) become
+    * commit: the conversion cost is one listing walk plus one footer
+    * read per file on the driver ([[FooterStats.read]]), never a data
+    * read. Partition directories (`col=value/`) become
     * partitionValues exactly as [[stageIn]] records them for native
     * writes, so pruning, stats-based skipping and every later DML work
     * identically on converted and natively-written tables.
@@ -2733,9 +2651,9 @@ object DeltaTable {
       require(declared.map(_.toLowerCase) == partCols.map(_.toLowerCase),
         s"convert: PARTITIONED BY (${declared.mkString(",")}) does not " +
           s"match the directory layout (${partCols.mkString(",")})")
-    // same one-job stats pass a native write gets; keys are paths
-    // relative to the table root, identical to the adds below
-    val statsByFile = collectStats(spark, tableDir.toString, df.schema)
+    // each adopted file's stats from its own footer, rendered as a
+    // native write renders them
+    val statTypes = FooterStats.statTypes(df.schema)
     val adds = files.map { p =>
       val rel = tableDir.relativize(p)
       val partitionValues = (0 until rel.getNameCount - 1).map { i =>
@@ -2751,12 +2669,7 @@ object DeltaTable {
       require(partitionValues.keySet == partCols.toSet,
         s"convert: inconsistent partition layout at $rel " +
           s"(expected ${partCols.mkString(",")})")
-      val stats = {
-        val collected = statsByFile.getOrElse(rel.toString, Map.empty)
-        if (collected.nonEmpty) collected
-        else stagedRowCount(spark, p)
-          .map(c => Map("n" -> c.toString)).getOrElse(Map.empty)
-      }
+      val stats = FooterStats.read(p, statTypes).getOrElse(Map.empty)
       DeltaLog.AddFile(rel.toString, Files.size(p), stats, partitionValues,
         modificationTime = Files.getLastModifiedTime(p).toMillis)
     }
@@ -2870,8 +2783,6 @@ object DeltaTable {
 
   // -- data skipping ---------------------------------------------------
 
-  /** One Spark job computing per-staged-file row counts and min/max of
-    * every numeric/string column, keyed by file basename. */
   /** Canonical whole-second UTC rendering for timestamp stats — the
     * same encoding [[canonValue]] gives filter literals, so the
     * skipping compare is bytewise sound. min floors to the second and
@@ -2881,126 +2792,6 @@ object DeltaTable {
     FooterStats.canonTsStatMicros(
       org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t),
       isMin)
-
-  /** Footer-based stats (round 17): the min/max/rowcount of every
-    * staged file comes from its parquet FOOTER — O(KB) driver-side
-    * metadata reads — instead of the former distributed
-    * groupBy(input_file_name) agg, which RE-READ every staged byte
-    * right after writing it (2x the write path's data I/O at any
-    * scale; 0.15-0.28 s of fixed job cost per commit at fixture
-    * scale, measured round 17). Parquet chunk statistics are exact
-    * for the types we stat — they are what stock Delta's
-    * convert-to-delta trusts — with two documented degradations, both
-    * CONSERVATIVE (a file without a column's stats is always kept by
-    * [[liveFilesAfterSkipping]]):
-    *   - a column whose min+max exceed parquet-mr's 4 KB footer-stats
-    *     cap (very long strings) carries no stats;
-    *   - INT96 timestamps carry no usable stats, so [[stageIn]] writes
-    *     the standard TIMESTAMP_MICROS encoding whenever the schema
-    *     has a timestamp column (INT96 is deprecated in the parquet
-    *     spec; stock Delta writes INT64 micros too). Foreign INT96
-    *     files (convert-to-delta) simply forfeit timestamp stats.
-    * Values render EXACTLY as the old agg path rendered them (same
-    * JVM toString per type; temporal stats keep the canonical
-    * whole-second/ISO encodings [[canonValue]] compares against), so
-    * committed stats are byte-compatible across the change. Keys are
-    * paths RELATIVE to `staging` — the same render the callers'
-    * file walks produce, closing the old URI-substring fragility. */
-  private def collectStats(spark: SparkSession, staging: String,
-      schema: StructType): Map[String, Map[String, String]] = {
-    val root = Paths.get(staging)
-    if (!Files.exists(root)) return Map.empty
-    val statTypes: Map[String, DataType] = schema.fields.iterator.collect {
-      case f if (f.dataType match {
-        case _: NumericType | StringType | DateType | TimestampType => true
-        case _ => false
-      }) => f.name -> f.dataType
-    }.toMap
-    val walk = Files.walk(root)
-    val files =
-      try walk.iterator.asScala.filter { p =>
-        p.getFileName.toString.endsWith(".parquet") && {
-          val rel = root.relativize(p)
-          // same visibility rules as Spark's reader (and the old agg
-          // path): _delta_log, hidden and _-prefixed entries excluded
-          (0 until rel.getNameCount).forall { i =>
-            val s = rel.getName(i).toString
-            !s.startsWith(".") && !s.startsWith("_")
-          }
-        }
-      }.toSeq.sortBy(_.toString)
-      finally walk.close()
-    val conf = spark.sessionState.newHadoopConf()
-    // footer opens are independent ~ms-scale metadata reads; a small
-    // bounded pool keeps a many-file commit (partitioned staging,
-    // convert-to-delta) at listing-latency rather than files x latency.
-    // Past [[DistributedStatsFileFloor]] files the reads move INTO a
-    // Spark job (round-18, verdict #3): at a 100 TB commit the staged
-    // file count scales with the write's task count, and serializing
-    // tens of thousands of ~ms opens through one driver pool would
-    // make the driver the write path's bottleneck — the executors read
-    // the footers where the files are, the driver only collects the
-    // O(files) stat maps it must embed in the log anyway. Same reader,
-    // same renderings, zero data I/O either way.
-    val perFile: Seq[(Path, Option[Map[String, String]])] =
-      if (files.size <= distributedStatsFileFloor(spark)) {
-        // one read-option set for every footer (built per file, it
-        // re-reads a dozen keys from `conf` on each open); footer reads
-        // take no codec, so the pool threads can share it
-        val opts = HadoopReadOptions.builder(conf).build()
-        if (files.size < 8)
-          files.map(p => p -> FooterStats.read(p.toString, conf, opts, statTypes))
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, files.size))
-          try files.map { p =>
-            p -> pool.submit(new java.util.concurrent.Callable[
-              Option[Map[String, String]]] {
-              def call(): Option[Map[String, String]] =
-                FooterStats.read(p.toString, conf, opts, statTypes)
-            })
-          }.map { case (p, f) => p -> f.get() }
-          finally pool.shutdown()
-        }
-      } else {
-        import scala.jdk.CollectionConverters._
-        // a Hadoop Configuration is not serializable: ship its entries
-        // and rebuild it, with its read options, once per partition
-        // (defaults off — the entries are the session's full resolved
-        // view)
-        val confEntries = conf.iterator().asScala
-          .map(e => e.getKey -> e.getValue).toArray
-        val st = statTypes
-        val names = files.map(_.toString)
-        val slices = math.max(1, math.min(names.size / 32 + 1,
-          spark.sparkContext.defaultParallelism * 2))
-        spark.sparkContext.setJobDescription(
-          s"graft-delta: footer stats, ${names.size} staged files")
-        try {
-          val read = spark.sparkContext.parallelize(names, slices)
-            .mapPartitions { ps =>
-              val c = new org.apache.hadoop.conf.Configuration(false)
-              confEntries.foreach { case (k, v) => c.set(k, v) }
-              val opts = HadoopReadOptions.builder(c).build()
-              ps.map(p => p -> FooterStats.read(p, c, opts, st))
-            }.collect()
-          read.map { case (p, s) => Paths.get(p) -> s }.toSeq
-        } finally spark.sparkContext.setJobDescription(null)
-      }
-    perFile.flatMap { case (p, st) =>
-      st.map(kv => root.relativize(p).toString -> kv)
-    }.toMap
-  }
-
-  /** Staged-file count above which [[collectStats]] reads footers in a
-    * distributed job instead of a driver thread pool. Parameterised
-    * (spark.graft.stats.distributedFileFloor) with a local default
-    * sized so every fixture-scale commit keeps the zero-job driver
-    * path — the bench's per-commit cost is unchanged — while a
-    * many-thousand-file production commit scales with the cluster. */
-  private def distributedStatsFileFloor(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.stats.distributedFileFloor")
-      .flatMap(_.toIntOption).getOrElse(64)
 
   /** The files of `snap` that MAY hold rows satisfying the conjunction
     * of LOGICAL-named `filters` — the one skipping consult of [[read]]
@@ -3168,62 +2959,73 @@ object DeltaTable {
 }
 
 
-/** The per-file parquet-footer stats reader behind
-  * [[DeltaTable.collectStats]] — a SEPARATE serializable object so the
-  * distributed branch can run it inside executor tasks (round 18;
-  * `object DeltaTable` itself is not serializable and must not be
-  * captured in a task closure). Driver pool and Spark job call the
-  * identical code, so renderings cannot diverge between the paths. */
-private[sources] object FooterStats extends Serializable {
+/** Per-file stats from a parquet footer: the one rendering of the
+  * `stats` map an `add` carries. [[StagedWriter]] tasks call [[of]] on
+  * the footer of each file they just closed; [[read]] opens a file's
+  * footer and calls the same [[of]], so the two cannot diverge. A
+  * separate serializable object, because the writer's tasks run it
+  * (`object DeltaTable` itself must not be captured in a task
+  * closure). */
+private[graft] object FooterStats extends Serializable {
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.types._
 
+  /** The columns of `schema` that carry min/max stats, with their
+    * types: top-level numbers, strings, dates and timestamps. */
+  def statTypes(schema: StructType): Map[String, DataType] =
+    schema.fields.iterator.collect {
+      case f if (f.dataType match {
+        case _: NumericType | StringType | DateType | TimestampType => true
+        case _ => false
+      }) => f.name -> f.dataType
+    }.toMap
+
   /** One file's stats map from its parquet footer: exact "n" plus
     * "min."/"max." entries for every statted column whose chunk
-    * statistics are present and trusted across ALL row groups.
-    * Returns None only when the footer itself cannot be read (the
-    * caller then falls back to stagedRowCount semantics). */
-  def read(p: String, conf: org.apache.hadoop.conf.Configuration,
-      options: org.apache.parquet.ParquetReadOptions,
-      statTypes: Map[String, DataType]): Option[Map[String, String]] =
-    try {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      // the Hadoop input file keeps `.crc` verification of staged files
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(
-          java.nio.file.Paths.get(p).toUri), conf), options)
-      try {
-        val blocks = r.getFooter.getBlocks.asScala.toSeq
-        val n = blocks.map(_.getRowCount).sum
-        val base = Map("n" -> n.toString)
-        if (n == 0L) return Some(base)
-        val cols = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.size == 1)
-          .groupBy(_.getPath.toDotString)
-        val minMax = statTypes.toSeq.flatMap { case (name, dt) =>
-          cols.get(name).toSeq.flatMap { chunks =>
-            // every row group must carry trusted, non-empty stats for
-            // the column, else the column forfeits stats (conservative;
-            // all-null chunks have no min/max and are skipped, but if
-            // EVERY chunk is all-null the column is genuinely unstatted
-            // — the old agg path rendered NULL min/max the same way)
-            val stats = chunks.map(_.getStatistics)
-            if (stats.exists(s => s == null || s.isEmpty))
-              Nil
-            else {
-              val nonNull = stats.filter(_.hasNonNullValue)
-              if (nonNull.isEmpty) Nil
-              else try renderFooterMinMax(name, dt, nonNull)
-              catch { // an encoding surprise costs ONE column's stats,
-                // never the file's row count (skipping is conservative)
-                case scala.util.control.NonFatal(_) => Nil
-              }
-            }
+    * statistics are present and trusted across ALL row groups. */
+  def of(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      statTypes: Map[String, DataType]): Map[String, String] = {
+    val blocks = footer.getBlocks.asScala.toSeq
+    val n = blocks.map(_.getRowCount).sum
+    val base = Map("n" -> n.toString)
+    if (n == 0L) return base
+    val cols = blocks.flatMap(_.getColumns.asScala)
+      .filter(_.getPath.size == 1)
+      .groupBy(_.getPath.toDotString)
+    val minMax = statTypes.toSeq.flatMap { case (name, dt) =>
+      cols.get(name).toSeq.flatMap { chunks =>
+        // every row group must carry trusted, non-empty stats for
+        // the column, else the column forfeits stats (conservative;
+        // all-null chunks have no min/max and are skipped, but if
+        // EVERY chunk is all-null the column is genuinely unstatted)
+        val stats = chunks.map(_.getStatistics)
+        if (stats.exists(s => s == null || s.isEmpty))
+          Nil
+        else {
+          val nonNull = stats.filter(_.hasNonNullValue)
+          if (nonNull.isEmpty) Nil
+          else try renderFooterMinMax(name, dt, nonNull)
+          catch { // an encoding surprise costs ONE column's stats,
+            // never the file's row count (skipping is conservative)
+            case scala.util.control.NonFatal(_) => Nil
           }
         }
-        Some(base ++ minMax)
-      } finally r.close()
+      }
+    }
+    base ++ minMax
+  }
+
+  /** [[of]] the footer of the parquet file at `p`, read with
+    * parquet-mr through `LocalInputFile` (no Hadoop `FileSystem`).
+    * None only when the footer itself cannot be read. */
+  def read(p: java.nio.file.Path,
+      statTypes: Map[String, DataType]): Option[Map[String, String]] =
+    try {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(p),
+        org.apache.parquet.ParquetReadOptions.builder(
+          new org.apache.parquet.conf.PlainParquetConfiguration()).build())
+      try Some(of(r.getFooter, statTypes)) finally r.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Merge per-row-group parquet statistics into the engine's
@@ -3321,8 +3123,7 @@ private[sources] object FooterStats extends Serializable {
 
   /** Canonical whole-second UTC rendering for timestamp stats — min
     * floors to the second and max CEILS, so the truncation only ever
-    * widens the range (conservative). Lives here so both the driver
-    * pool and the distributed reader render identically. */
+    * widens the range (conservative). */
   private[sources] def canonTsStatMicros(us: Long, isMin: Boolean): String = {
     val floor = Math.floorDiv(us, 1000000L) * 1000000L
     val sec = if (isMin || us == floor) floor else floor + 1000000L

@@ -344,6 +344,24 @@ object StreamingOps {
       .map(i => root.resolve(s"batch-$i").toString)
   }
 
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val w = java.nio.file.Files.walk(p)
+      try w.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
+      finally w.close()
+    }
+
+  /** Stage `df` as the parquet files of `dir`, replacing what it held
+    * (a replayed batch overwrites its own dir). An empty frame leaves
+    * an empty dir, which the explicit-schema read-backs accept. */
+  private def stageBatch(df: DataFrame, dir: String): Unit = {
+    val p = java.nio.file.Paths.get(dir)
+    deleteTree(p)
+    graft.sources.StagedWriter.write(df, p)
+    ()
+  }
+
   /** The corpus relation every staged-lineage ingest batch reads: the
     * `seed` index ∪ ONE multi-path scan over the staged `dirs` (`view`
     * narrows that scan before the union). The plan has the same shape
@@ -448,12 +466,6 @@ object StreamingOps {
       : Option[Long] = {
     val root = java.nio.file.Paths.get(stageRoot)
     val (compacts, batches) = stagedIds(root)
-    def deleteTree(p: java.nio.file.Path): Unit = {
-      val w = java.nio.file.Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally w.close()
-    }
     // Retire orphaned `compact-*.tmp` dirs up front (round-17 ADVICE):
     // a crash between the tmp write and the rename leaves a .tmp the
     // folded-dir cleanup below never matches (it deletes stale
@@ -493,28 +505,38 @@ object StreamingOps {
     val newId = live.max
     val tmp = root.resolve(s"compact-$newId.tmp")
     val dst = root.resolve(s"compact-$newId")
-    val folded = spark.read.parquet(foldDirs: _*).distinct()
-    // Two encoding-locality repairs, both measured on the round-16
-    // sf1 rehearsal where the naive distinct().write cost sq8 ~2x in
-    // compact bytes vs the parts it folded:
-    //  - size the output to ~128 MB files (the fold is maintenance,
-    //    not a query — 32 shuffle-partition files each pay their own
-    //    parquet dictionary/footer, which dominates at MB-scale
-    //    staged state and still wastes at TB scale);
-    //  - partition-local sort on the leading columns to restore the
-    //    key-ordered runs the per-batch writers emit (RLE/dict pages
-    //    compress runs, the distinct shuffle scatters them). Neither
-    //    adds an exchange.
-    val foldBytes = foldDirs.map(d => {
+    // the fold's input: every folded dir's visible parquet files (a
+    // batch with no rows staged none; if no dir holds any, the fold is
+    // an empty compact dir)
+    val foldFiles = foldDirs.flatMap { d =>
+      import scala.jdk.CollectionConverters._
       val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-      try w.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size).sum
+      try w.iterator.asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }.toList
       finally w.close()
-    }).sum
-    val nFiles = math.max(1L, foldBytes / (128L << 20) + 1L).toInt
-    val keys = folded.columns.take(2).map(col)
-    folded.coalesce(nFiles).sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(tmp.toString)
+    }
+    if (foldFiles.isEmpty) java.nio.file.Files.createDirectories(tmp)
+    else {
+      val folded = spark.read.parquet(foldDirs: _*).distinct()
+      // Two encoding-locality repairs, both measured on the round-16
+      // sf1 rehearsal where the naive distinct().write cost sq8 ~2x in
+      // compact bytes vs the parts it folded:
+      //  - size the output to ~128 MB files (the fold is maintenance,
+      //    not a query — 32 shuffle-partition files each pay their own
+      //    parquet dictionary/footer, which dominates at MB-scale
+      //    staged state and still wastes at TB scale);
+      //  - partition-local sort on the leading columns to restore the
+      //    key-ordered runs the per-batch writers emit (RLE/dict pages
+      //    compress runs, the distinct shuffle scatters them). Neither
+      //    adds an exchange.
+      val foldBytes = foldFiles.map(java.nio.file.Files.size).sum
+      val nFiles = math.max(1L, foldBytes / (128L << 20) + 1L).toInt
+      val keys = folded.columns.take(2).map(col)
+      stageBatch(folded.coalesce(nFiles).sortWithinPartitions(keys: _*),
+        tmp.toString)
+    }
     java.nio.file.Files.move(tmp, dst,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     // delete the folded dirs (and any stale subsumed ones) only AFTER
@@ -595,7 +617,7 @@ object StreamingOps {
         // read-backs carry the just-written schema (all dirs under one
         // stage root share it): no per-micro-batch footer re-inference
         val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")))
-        sh.write.mode("overwrite").parquet(bdir)
+        stageBatch(sh, bdir)
         val newArrays = spark.read.schema(sh.schema).parquet(bdir)
         // the batch's own dir rides the corpus scan: corpus ∪ batch
         val arrays = stagedCorpus(spark,
@@ -652,7 +674,7 @@ object StreamingOps {
         val fp = MultimodalOps.mediaAHash(
             batch.select(col("media_id"), col("text"))
               .filter(length(col("text")) >= 60))
-        fp.write.mode("overwrite").parquet(bdir)
+        stageBatch(fp, bdir)
         val bfp = spark.read.schema(fp.schema).parquet(bdir)
         val corpusFp = stagedCorpus(spark,
           MultimodalOps.stagedMediaFingerprints(spark, seedDir), fp.schema,
@@ -731,7 +753,7 @@ object StreamingOps {
         val bdir = root.resolve(s"batch-$batchId").toString
         val assigned = SimilarityOps.cellAssign(batch, cent,
           carryEmbedding = true)
-        assigned.write.mode("overwrite").parquet(bdir)
+        stageBatch(assigned, bdir)
         val prior = priorBatchDirs(batchId)
         val corpus = stagedCorpus(spark,
           graft.Tables.load(spark, seedDir, "embeddings")
@@ -821,7 +843,7 @@ object StreamingOps {
         val bdir = root.resolve(s"batch-$batchId").toString
         val vecs = batch.select(col("vec_id"), col("embedding"))
         val quantized = SimilarityOps.quantizeBatchFrozen(spark, seedDir, vecs)
-        quantized.write.mode("overwrite").parquet(bdir)
+        stageBatch(quantized, bdir)
         val codes = spark.read.schema(quantized.schema).parquet(bdir)
         val mode =
           if (DeltaLog.versions(codesTable).isEmpty) "overwrite" else "append"
@@ -942,7 +964,7 @@ object StreamingOps {
         // stage this batch's distinct hashes for LATER batches
         // (overwrite -> replay-idempotent)
         val bh = bw.select("h").distinct()
-        bh.write.mode("overwrite").parquet(bdir)
+        stageBatch(bh, bdir)
         val corpusH = stagedCorpus(spark,
           DedupOps.stagedWindowHashSet(spark, seedDir), bh.schema,
           batchDirs(root, batchId))

@@ -49,4 +49,9 @@ object GraftSqlBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `schema` with every field, element and value nullable
+    * (`StructType.asNullable` is `private[spark]`): the schema Spark's
+    * file writers write. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

@@ -73,34 +73,196 @@ class DeltaSpec extends SparkSpec {
   }
 
   test("distributed footer stats past the file floor match the driver path") {
-    // round 18: collectStats reads footers in a Spark job once a commit
-    // stages more than spark.graft.stats.distributedFileFloor files
-    // (the driver pool would serialize a 100 TB commit's many-thousand
-    // footer opens). Pin the floor low to force the distributed branch
-    // and assert the committed stats are complete and exact.
-    val key = "spark.graft.stats.distributedFileFloor"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "4")
-    try {
-      val t = freshTable()
-      DeltaTable.write(
-        spark.range(200).select(col("id"), (col("id") % 7).as("k"))
-          .repartition(10), t, "overwrite")
-      val snap = DeltaLog.snapshot(t)
-      assert(snap.files.length > 4, s"need > floor files, got ${snap.files.length}")
-      snap.files.foreach { f =>
-        assert(f.stats.get("n").exists(_.toLong > 0L), s"${f.path}: ${f.stats}")
-        assert(f.stats.contains("min.id") && f.stats.contains("max.id"),
-          s"${f.path}: ${f.stats}")
-      }
-      assert(snap.files.map(_.stats("n").toLong).sum === 200L)
-      assert(snap.files.map(_.stats("min.id").toLong).min === 0L)
-      assert(snap.files.map(_.stats("max.id").toLong).max === 199L)
-      assert(DeltaTable.read(spark, t).count() === 200)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    // every staged file's stats come from the task that wrote it, so a
+    // many-file commit gets complete, exact stats with no driver pass
+    val t = freshTable()
+    DeltaTable.write(
+      spark.range(200).select(col("id"), (col("id") % 7).as("k"))
+        .repartition(10), t, "overwrite")
+    val snap = DeltaLog.snapshot(t)
+    assert(snap.files.length > 4, s"need > floor files, got ${snap.files.length}")
+    snap.files.foreach { f =>
+      assert(f.stats.get("n").exists(_.toLong > 0L), s"${f.path}: ${f.stats}")
+      assert(f.stats.contains("min.id") && f.stats.contains("max.id"),
+        s"${f.path}: ${f.stats}")
     }
+    assert(snap.files.map(_.stats("n").toLong).sum === 200L)
+    assert(snap.files.map(_.stats("min.id").toLong).min === 0L)
+    assert(snap.files.map(_.stats("max.id").toLong).max === 199L)
+    assert(DeltaTable.read(spark, t).count() === 200)
+  }
+
+  /** Every file under `t` outside `_delta_log`, relative to `t`. */
+  private def tableFiles(t: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(t)
+    val w = Files.walk(root)
+    try w.iterator.asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString)
+      .filterNot(_.startsWith("_delta_log/")).toSeq.sorted
+    finally w.close()
+  }
+
+  /** The parquet footer of a committed file. */
+  private def footerOf(p: java.nio.file.Path) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(p))
+    try r.getFooter finally r.close()
+  }
+
+  test("committed stats equal each file's footer and partition values its " +
+      "dirs, on every table shape and DML; no committer leftovers, no " +
+      "empty files, no add for an empty append, no file outside staging " +
+      "from a failed write") {
+    import java.sql.{Date, Timestamp}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    import org.apache.spark.sql.types.{DataType, StructType}
+    def rows(ids: Seq[Int]): DataFrame = ids.map { i =>
+      (i, s"name-$i", i * 10L, Date.valueOf(f"2024-01-${i % 28 + 1}%02d"),
+        new Timestamp(1700000000000L + i * 1234567L), i * 0.5,
+        Seq("a/b", null, "x")(i % 3))
+    }.toDF("id", "name", "v", "d", "ts", "x", "p")
+    // (name, partition columns, set-up after the first write, the
+    // logical column the frames call `name`)
+    val shapes: Seq[(String, Seq[String], String => Unit, String)] = Seq(
+      ("plain", Nil, _ => (), "name"),
+      ("partitioned", Seq("p"), _ => (), "name"),
+      ("column-mapped", Nil, { t =>
+        DeltaTable.enableColumnMapping(t)
+        DeltaTable.renameColumn(t, "name", "label") }, "label"),
+      ("row-tracked", Nil, t => { DeltaTable.enableRowTracking(t); () }, "name"),
+      ("deletion-vectors", Nil, t => { DeltaTable.enableDeletionVectors(t); () },
+        "name"),
+      ("change-data-feed", Nil,
+        t => { DeltaTable.setTableProperty(t, "delta.enableChangeDataFeed", "true"); () },
+        "name"))
+    for ((shape, partBy, setUp, nameCol) <- shapes) {
+      val t = freshTable()
+      def frame(ids: Seq[Int]) = rows(ids).withColumnRenamed("name", nameCol)
+      DeltaTable.write(rows(0 until 12), t, "overwrite", partitionBy = partBy)
+      setUp(t)
+      DeltaTable.write(frame(20 until 26).repartition(3), t, "append")
+      DeltaTable.merge(spark, t, frame(Seq(5, 6, 100, 101)), Seq("id"))
+      DeltaTable.update(spark, t, $"id" < 3, Map("v" -> ($"v" + 1L)))
+      DeltaTable.delete(spark, t, $"id" === 8)
+      DeltaTable.compact(spark, t)
+      val before = DeltaTable.latestVersion(t)
+      DeltaTable.write(frame(Nil), t, "append")
+      (before + 1 to DeltaTable.latestVersion(t)).foreach(v =>
+        assert(DeltaLog.versionChanges(t, v).adds.isEmpty,
+          s"$shape: an empty append committed an add"))
+      val adds = DeltaLog.versions(t).flatMap(DeltaLog.versionChanges(t, _).adds)
+      assert(adds.nonEmpty)
+      adds.foreach { a =>
+        val p = java.nio.file.Paths.get(t).resolve(a.path)
+        val footer = footerOf(p)
+        val sparkSchema = DataType.fromJson(footer.getFileMetaData
+          .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+          .asInstanceOf[StructType]
+        val statTypes: Map[String, DataType] =
+          graft.sources.FooterStats.statTypes(sparkSchema)
+        assert(Some(a.stats) === graft.sources.FooterStats.read(p, statTypes),
+          s"$shape: ${a.path}")
+        assert(a.stats("n").toLong > 0L, s"$shape: empty file ${a.path}")
+        val decoded = a.path.split('/').init.map { seg =>
+          val eq = seg.indexOf('=')
+          unescapePathName(seg.take(eq)) -> unescapePathName(seg.drop(eq + 1))
+        }.toMap
+        assert(a.partitionValues === decoded, s"$shape: ${a.path}")
+      }
+      if (partBy.nonEmpty)
+        assert(adds.flatMap(_.partitionValues.get("p")).toSet ===
+          Set("a/b", "x", "__HIVE_DEFAULT_PARTITION__"))
+      val files = tableFiles(t)
+      files.foreach { f =>
+        val name = f.split('/').last
+        assert(!f.split('/').exists(_ == "_temporary") && name != "_SUCCESS" &&
+          !name.endsWith(".crc") && !f.startsWith(".staging-"), s"$shape: $f")
+        if (name.endsWith(".parquet"))
+          assert(footerOf(java.nio.file.Paths.get(t).resolve(f)).getBlocks
+            .asScala.map(_.getRowCount).sum > 0L, s"$shape: empty file $f")
+      }
+      // a write whose task throws commits nothing and leaves its files
+      // only inside its staging dir
+      val boom = frame(200 until 240).repartition(4).withColumn("id",
+        when($"id" === 230, raise_error(lit("boom"))).otherwise($"id"))
+      intercept[Exception](DeltaTable.write(boom, t, "append"))
+      assert(tableFiles(t).filterNot(_.startsWith(".staging-")) === files,
+        s"$shape: a failed write left files outside staging")
+    }
+  }
+
+  test("two writers stage at once: no JVM-wide lock, INT64 micros " +
+      "timestamps, the session's timestamp encoding untouched") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit => PTimeUnit, TimestampLogicalTypeAnnotation}
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val tsBefore = spark.conf.getOption(tsKey)
+    // staged-write job intervals: (job id -> (start, end))
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.name.contains("StagedWriter")))
+          starts.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (starts.containsKey(e.jobId)) ends.put(e.jobId, e.time)
+    }
+    val (t1, t2) = (freshTable(), freshTable())
+    // each write's one task waits until the other write's task runs:
+    // the appends finish only if their staged writes overlap
+    ConcurrentStaging.latch = new java.util.concurrent.CountDownLatch(2)
+    val meet = udf { (i: Long) =>
+      if (i == 0L) {
+        ConcurrentStaging.latch.countDown()
+        ConcurrentStaging.latch.await(60, TimeUnit.SECONDS)
+      }
+      i
+    }.asNondeterministic()
+    def frame = spark.range(0, 500, 1, 1).select(meet($"id").as("id"),
+      timestamp_seconds($"id" + 1700000000L).as("ts"))
+    spark.sparkContext.addSparkListener(listener)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val fs = Seq(t1, t2).map(t => pool.submit(new Callable[Long] {
+        def call(): Long = DeltaTable.write(frame, t, "overwrite")
+      }))
+      fs.foreach(_.get(120, TimeUnit.SECONDS))
+      // the listener bus delivers job ends asynchronously
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(30)
+      while (ends.size < starts.size && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally {
+      pool.shutdown()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(ConcurrentStaging.latch.getCount === 0L)
+    val jobs = starts.keySet.asScala.toSeq.map(j => (starts.get(j), ends.get(j)))
+    assert(jobs.size === 2, s"staged-write jobs: $jobs")
+    val Seq((s1, e1), (s2, e2)) = jobs
+    assert(s1 <= e2 && s2 <= e1, s"staged writes did not overlap: $jobs")
+    val expected = (0 until 500).map(i =>
+      (i.toLong, new java.sql.Timestamp((1700000000L + i) * 1000L)))
+    for (t <- Seq(t1, t2)) {
+      assert(DeltaTable.read(spark, t).as[(Long, java.sql.Timestamp)]
+        .collect().sortBy(_._1).toSeq === expected)
+      DeltaLog.snapshot(t).files.foreach { f =>
+        val schema = footerOf(java.nio.file.Paths.get(t).resolve(f.path))
+          .getFileMetaData.getSchema
+        val ts = schema.getType(schema.getFieldIndex("ts")).asPrimitiveType
+        assert(ts.getPrimitiveTypeName.name === "INT64")
+        ts.getLogicalTypeAnnotation match {
+          case a: TimestampLogicalTypeAnnotation =>
+            assert(a.getUnit === PTimeUnit.MICROS)
+          case other => fail(s"ts annotated $other")
+        }
+      }
+    }
+    assert(spark.conf.getOption(tsKey) === tsBefore)
   }
 
   test("overwrite replaces prior contents entirely") {
@@ -3123,6 +3285,36 @@ class DeltaSpec extends SparkSpec {
     assert(graft.sources.RowTracking.highWaterMark(DeltaLog.snapshot(t)) === 8L)
   }
 
+  test("delta wire format: validator checks each add's stats against its " +
+      "data file (row count and min/max bounds)") {
+    import scala.jdk.CollectionConverters._
+    import scala.sys.process.{Process, ProcessLogger}
+    val t = freshTable()
+    DeltaTable.write(employees3.coalesce(1), t, "overwrite")
+    def validate(): (Int, String) = {
+      val out = new StringBuilder
+      val code = Process(Seq("python3",
+        new java.io.File("tools/delta_validate.py").getAbsolutePath, t))
+        .!(ProcessLogger(s => out.append(s).append('\n'),
+          s => out.append(s).append('\n')))
+      (code, out.toString)
+    }
+    assert(validate()._1 === 0)
+    // the one file holds salaries 65000..80000 in 3 rows; log n=10 and
+    // a max below 80000
+    val v0 = DeltaLog.logDir(t).resolve(f"${0L}%020d.json")
+    Files.write(v0, Files.readAllLines(v0).asScala.map { l =>
+      if (!l.startsWith("{\"add\"")) l
+      else l.replace("\\\"n\\\":\\\"3\\\"", "\\\"n\\\":\\\"10\\\"")
+        .replace("\\\"max.salary\\\":\\\"80000\\\"",
+          "\\\"max.salary\\\":\\\"79999\\\"")
+    }.asJava)
+    val (code, out) = validate()
+    assert(code !== 0)
+    assert(out.contains("stats n=10 but the footer holds 3 rows"), out)
+    assert(out.contains("max.salary='79999' does not bound the file's max 80000"), out)
+  }
+
   test("delta wire format: validator passes a row-tracked table; flags " +
       "an ungated protocol and overlapping id ranges") {
     import scala.sys.process.{Process, ProcessLogger}
@@ -4168,4 +4360,11 @@ class DeltaSpec extends SparkSpec {
     assert(deleteJobs(large) === deleteJobs(small))
     assert(DeltaTable.read(spark, large).count() === 4L * 40 - 1)
   }
+}
+
+/** The rendezvous of DeltaSpec's concurrent-staging test: a JVM-global
+  * latch both writes' tasks count down (local mode runs them in this
+  * JVM). */
+object ConcurrentStaging {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
 }

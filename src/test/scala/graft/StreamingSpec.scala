@@ -853,6 +853,58 @@ class StreamingSpec extends SparkSpec {
       assert(fileMtime(f) === m, s"seed index file rewritten: $f") }
   }
 
+  test("near-dup stage dirs: an empty batch stages an empty dir the " +
+      "read-back accepts; a replayed batch overwrites its own dir") {
+    import scala.jdk.CollectionConverters._
+    val base = tempDir("graft-stream-stagedir")
+    val (src, pairs, ckpt, stage) =
+      (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
+    val seedDir = s"$base/seed"
+    val text = "the quick brown fox jumps over the lazy dog near the " +
+      "old river bank while morning light filters through tall trees"
+    def docs(rows: (Long, String)*) = rows.toSeq
+      .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs(0L -> text, 1L -> "an unrelated seed document about spark joins")
+      .write.parquet(s"$seedDir/documents.parquet")
+    def files(dir: String): Seq[String] = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+      finally s.close()
+    }
+    def run(): Unit = {
+      val q = StreamingOps.nearDupIngestPipeline(
+        spark, seedDir, src, pairs, ckpt, stage)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // batch 0: two-word docs have no 3-word shingles
+    docs(100L -> "hi there", 101L -> "so short").write.format("graft-delta")
+      .mode("append").save(src)
+    run()
+    assert(files(s"$stage/batch-0").isEmpty)
+    // batch 1: a near-dup of a seed doc
+    docs(200L -> (text + " tonight"), 201L -> (text + " again"))
+      .write.format("graft-delta").mode("append").save(src)
+    run()
+    val schema = spark.read.parquet(s"$stage/batch-1").schema
+    assert(spark.read.schema(schema).parquet(s"$stage/batch-0").count() === 0L)
+    val first = files(s"$stage/batch-1")
+    val rows = spark.read.schema(schema).parquet(s"$stage/batch-1").count()
+    assert(first.nonEmpty && rows === 2L)
+    val pairsBefore = spark.read.format("graft-delta").load(pairs).count()
+    // forget batch 1's commit (and its checksum): the restart replays it
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    run()
+    val second = files(s"$stage/batch-1")
+    assert(second.nonEmpty && second.intersect(first).isEmpty,
+      s"replay left files over: $first -> $second")
+    assert(second.forall(f => f.endsWith(".parquet") && !f.startsWith(".")))
+    assert(spark.read.schema(schema).parquet(s"$stage/batch-1").count() === rows)
+    assert(spark.read.format("graft-delta").load(pairs).count() === pairsBefore)
+  }
+
   test("staged corpus: the near-dup batch plan has the same scans and " +
       "codegen stage ids over 1 prior dir and over 5") {
     import graft.operators.DedupOps

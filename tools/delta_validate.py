@@ -85,6 +85,12 @@ and asserts the wire-format invariants the Delta Lake protocol
  23. domain metadata: a version that commits a `domainMetadata` action
      leaves the protocol at writer 7 listing the `domainMetadata`
      writer feature (the protocol permits the action only there).
+ 24. file stats: every live add whose `stats` carries `n` holds exactly
+     n rows (the parquet footer's row count), and each logged
+     `min.<c>` / `max.<c>` bounds the file's values of column c, read
+     with pyarrow — numbers and dates exactly, strings in UTF-8 byte
+     order, timestamps at the engine's whole-second floor (min) and
+     ceiling (max). Skipping trusts these bounds to drop files.
 
 Usage: python3 tools/delta_validate.py TABLE_DIR [TABLE_DIR...]
 Exit 0 = every table passes; 1 = at least one invariant violated.
@@ -280,6 +286,91 @@ def parquet_columns(path):
             "hive_partitioning=false)").fetchall()]
     finally:
         con.close()
+
+
+def stats_problems(path, stats):
+    """Invariant 24 for one data file: `n` equals the footer's row
+    count, and each min.<c>/max.<c> bounds column c's non-null values.
+    Returns a list of problem strings."""
+    import calendar, datetime, decimal
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    out = []
+    pf = pq.ParquetFile(path)
+    if "n" in stats and int(stats["n"]) != pf.metadata.num_rows:
+        out.append(f"stats n={stats['n']} but the footer holds "
+                   f"{pf.metadata.num_rows} rows")
+    cols = sorted({k.split(".", 1)[1] for k in stats
+                   if k.startswith(("min.", "max."))})
+    names = pf.schema_arrow.names
+    for c in cols:
+        if c not in names:
+            out.append(f"stats for column {c} absent from the file")
+            continue
+        arr = pa.chunked_array(pf.read(columns=[c]).column(0).chunks)
+        arr = pc.drop_null(arr)
+        if len(arr) == 0:
+            out.append(f"stats for column {c}, which holds only nulls")
+            continue
+        t = arr.type
+        if pa.types.is_timestamp(t):
+            # whole-second UTC renderings: min floors, max ceils
+            us = pc.cast(pc.cast(arr, pa.timestamp("us", t.tz), safe=False),
+                         pa.int64())
+            lo, hi = pc.min(us).as_py(), pc.max(us).as_py()
+            lo, hi = (lo // 10**6) * 10**6, -((-hi) // 10**6) * 10**6
+
+            def parse(v):
+                d = datetime.datetime.strptime(v, "%Y-%m-%d %H:%M:%S")
+                return calendar.timegm(d.timetuple()) * 10**6
+        elif pa.types.is_string(t) or pa.types.is_large_string(t):
+            vals = [v.encode("utf-8") for v in arr.to_pylist()]
+            lo, hi = min(vals), max(vals)
+
+            def parse(v):
+                return v.encode("utf-8")
+        elif pa.types.is_date(t):
+            lo, hi = pc.min(arr).as_py(), pc.max(arr).as_py()
+
+            def parse(v):
+                return datetime.date.fromisoformat(v)
+        elif pa.types.is_decimal(t):
+            lo, hi = pc.min(arr).as_py(), pc.max(arr).as_py()
+            parse = decimal.Decimal
+        elif pa.types.is_floating(t):
+            # compare in the column's own width: a float32 bound logged
+            # as Java renders it reparses to the same float32
+            import numpy as np
+            width = np.float32 if pa.types.is_float32(t) else np.float64
+            vals = arr.to_numpy()
+            vals = vals[~np.isnan(vals)]
+            if len(vals) == 0:
+                continue
+            lo, hi = vals.min(), vals.max()
+
+            def parse(v):
+                return width(float(v))
+        elif pa.types.is_integer(t):
+            lo, hi = pc.min(arr).as_py(), pc.max(arr).as_py()
+            parse = int
+        else:
+            out.append(f"stats for column {c} of unstatted type {t}")
+            continue
+        for side, actual, ok in (("min", lo, lambda a, b: a <= b),
+                                 ("max", hi, lambda a, b: a >= b)):
+            key = f"{side}.{c}"
+            if key not in stats:
+                continue
+            try:
+                logged = parse(stats[key])
+            except Exception as e:
+                out.append(f"{key}={stats[key]!r} unparseable: {e}")
+                continue
+            if not ok(logged, actual):
+                out.append(f"{key}={stats[key]!r} does not bound the "
+                           f"file's {side} {actual!r}")
+    return out
 
 
 def checkpoint_parquet_actions(path):
@@ -943,6 +1034,24 @@ def validate(table):
                 if extra:
                     problems.append(f"data file {p} carries columns {extra} "
                                     "outside the logged schema")
+
+        # -- file stats (invariant 24): row counts and min/max bounds
+        # checked against the data itself, independently of the writer
+        for p, f in sorted(full.live.items()):
+            fp = os.path.join(table, p)
+            if not os.path.isfile(fp) or not f.get("stats"):
+                continue
+            try:
+                st = json.loads(f["stats"])
+            except Exception:
+                continue  # invariant 4 flags it
+            if "n" not in st:
+                continue
+            try:
+                problems += [f"stats of {p}: {m}"
+                             for m in stats_problems(fp, st)]
+            except Exception as e:
+                problems.append(f"stats of {p}: data file undecodable: {e}")
 
     # -- checkpoints: cross-format agreement + replay equality
     for c, formats in sorted(cps.items()):
