@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * default). A null ELEMENT nulls the result too (the function is
   * session-registered and reachable from arbitrary SQL, where
   * getLong on a null slot would read garbage); the per-element check
-  * is emitted only when the input's STATIC type admits null elements,
-  * so the WordShingles production arrays (containsNull=false) keep
-  * the branch-free loop. */
+  * runs only when the input's STATIC type admits null elements (a
+  * constant flag to [[SortedOverlap.merge]], the one merge loop both
+  * evaluation paths call). */
 case class SortedOverlap(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -61,13 +61,38 @@ case class SortedOverlap(left: Expression, right: Expression)
     left.nullable || right.nullable || mayHaveNullElems
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+    val c = SortedOverlap.merge(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], mayHaveNullElems)
+    if (c < 0) null else c
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val c = ctx.freshName("c")
+      s"""
+         |int $c = graft.functions.SortedOverlap$$.MODULE$$.merge($x, $y, $mayHaveNullElems);
+         |if ($c < 0) { ${ev.isNull} = true; } else { ${ev.value} = $c; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedOverlap =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedOverlap {
+
+  /** |x ∩ y| for two ascending long arrays by a two-pointer merge:
+    * O(|x|+|y|), no allocation. With `checkNulls`, a null element makes
+    * the result -1. The one merge of the dedup family: the expression's
+    * interpreted and generated paths call it, and so does the
+    * incremental near-dup probe
+    * ([[graft.operators.DedupOps.incrementalNearDupsFrom]]). */
+  def merge(x: ArrayData, y: ArrayData, checkNulls: Boolean): Int = {
     var i = 0; var j = 0; var c = 0
     val nx = x.numElements(); val ny = y.numElements()
-    val checkNulls = mayHaveNullElems
     while (i < nx && j < ny) {
-      if (checkNulls && (x.isNullAt(i) || y.isNullAt(j))) return null
+      if (checkNulls && (x.isNullAt(i) || y.isNullAt(j))) return -1
       val xi = x.getLong(i); val yj = y.getLong(j)
       if (xi == yj) { c += 1; i += 1; j += 1 }
       else if (xi < yj) i += 1
@@ -75,31 +100,4 @@ case class SortedOverlap(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi"); val yj = ctx.freshName("yj")
-      val nullCheck =
-        if (mayHaveNullElems)
-          s"if ($x.isNullAt($i) || $y.isNullAt($j)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |int $i = 0, $j = 0, $c = 0;
-         |int $nx = $x.numElements(), $ny = $y.numElements();
-         |while ($i < $nx && $j < $ny) {
-         |  $nullCheck
-         |  long $xi = $x.getLong($i); long $yj = $y.getLong($j);
-         |  if ($xi == $yj) { $c++; $i++; $j++; }
-         |  else if ($xi < $yj) { $i++; } else { $j++; }
-         |}
-         |if (!${ev.isNull}) { ${ev.value} = $c; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedOverlap =
-    copy(left = newLeft, right = newRight)
 }

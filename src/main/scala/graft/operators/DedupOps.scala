@@ -56,10 +56,10 @@ object DedupOps {
     * prefix relation + candidate join, not the raw shingling.) */
   /** `spread = false` (round 18) for INLINE consumers — q75's derived
     * batch lineage executes inside every job that references it (the
-    * candidate probe plus each verify broadcast build), so the
-    * build-parallelism repartition below became 3-4 redundant
-    * exchanges per invocation; a ~300-doc batch shingles fine on its
-    * scan partitions. Staged-write callers keep the spread. */
+    * batch collect and the probe pass over corpus ∪ batch), so the
+    * build-parallelism repartition below would add an exchange to
+    * each; a ~300-doc batch shingles fine on its scan partitions.
+    * Staged-write callers keep the spread. */
   private[graft] def shingleArrays(docs: DataFrame, gramN: Int = 3,
       spread: Boolean = true): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
@@ -119,11 +119,21 @@ object DedupOps {
       gramN: Int = 3): DataFrame = {
     val e = shingleIndex.get(StagedCache.source(dir, "documents"), gramN) {
       val t = graft.Scratch.dir("graft-shingles").resolve("sh").toString
-      shingleArrays(Tables.load(spark, dir, "documents"), gramN)
-        .write.parquet(t)
+      stageShingles(Tables.load(spark, dir, "documents"), gramN, t, Seq(t))
       StagedParts(Nil, Seq(t), Tables.load(spark, dir, "documents").count())
     }
     StagedCache.readStaged(spark, e.dirs: _*)
+  }
+
+  /** Shingle `docs` into staged dir `d` through the engine's one staged
+    * writer, and register the frame's schema as the read schema of the
+    * index's `dirs`: an empty corpus stages an empty dir, which parquet
+    * schema inference would reject. */
+  private def stageShingles(docs: DataFrame, gramN: Int, d: String,
+      dirs: Seq[String]): Unit = {
+    val sh = shingleArrays(docs, gramN)
+    graft.sources.StagedWriter.write(sh, java.nio.file.Paths.get(d))
+    StagedCache.registerSchema(sh.schema, dirs: _*)
   }
 
   /** Incremental index refresh — the append workflow a 100 TB corpus
@@ -143,9 +153,9 @@ object DedupOps {
   def refreshShingleIndex(spark: SparkSession, dir: String,
       newDocs: DataFrame, gramN: Int = 3): Unit =
     shingleIndex.extend(StagedCache.source(dir, "documents"), gramN)(
-        Tables.rowCount(spark, dir, "documents"), newDocs.count()) { _ =>
+        Tables.rowCount(spark, dir, "documents"), newDocs.count()) { p =>
       val d = graft.Scratch.dir("graft-shingles").resolve("delta").toString
-      shingleArrays(newDocs, gramN).write.parquet(d)
+      stageShingles(newDocs, gramN, d, p.dirs :+ d)
       Some(d)
     }
 
@@ -1689,59 +1699,67 @@ object DedupOps {
   /** Near-dup pairs TOUCHING a new batch, given the full array
     * relation (`arrays` = corpus index ∪ batch, or a refreshed index
     * that already contains the batch) and the batch's own arrays.
-    * This is the incremental-dedup kernel: candidates come from ONE
-    * equi-join of the corpus prefix rows against the BROADCAST batch
-    * prefix rows — the corpus side streams map-side and never
-    * shuffles (the q36 decontamination posture: a daily batch is tiny
-    * relative to the indexed corpus). Batch-internal pairs fall out of
-    * the same join because `arrays` includes the batch. Verification
-    * is the shared [[jaccardFor]] sorted-overlap kernel.
+    * This is the incremental-dedup kernel, and it is ONE narrow pass
+    * over `arrays`: no shuffle, no join, no corpus-sized broadcast.
+    *
+    *   - Driver: collect the batch (batch-sized, never corpus-sized;
+    *     refused with a [[BatchTooLargeException]] when the optimizer's
+    *     size estimate passes `capBytes`, the [[Hints.broadcastIfSmall]]
+    *     rule) into a [[BatchPrefixIndex]] — each batch doc's AllPairs
+    *     prefix, shingle → (batch slot, pos) — and broadcast it.
+    *   - Executors: one typed `mapPartitions` over `arrays`. Each row
+    *     walks its own prefix against the index, prunes each hit, and
+    *     verifies a surviving (row, batch doc) pair at once with the
+    *     [[graft.functions.SortedOverlap.merge]] two-pointer merge on
+    *     the two arrays it already holds. A per-row bit set emits each
+    *     pair once, and a batch-doc row pairs only with larger batch
+    *     ids, so a within-batch pair is emitted once too: no distinct.
     *
     * Three LOSSLESS prunes, the q31 set ([[prefixCandidatesFrom]])
     * under a different global order:
     *   - the AllPairs PREFIX filter: each side probes only the first
-    *     n - ⌈τ·n⌉ + 1 shingles of its array. The order is the shingle
+    *     n - ⌈lo·n⌉ + 1 shingles of its array. The order is the shingle
     *     HASH order — the shingler already emits ascending arrays, so
     *     the order is global, fixed as the corpus grows, and needs no
     *     df statistic (q31's rarity order would need a corpus-wide
     *     freq pass per batch). Any pair with J >= τ shares its first
     *     common shingle inside both prefixes;
-    *   - the AllPairs LENGTH filter: min(|A|,|B|) >= τ·max(|A|,|B|);
+    *   - the AllPairs LENGTH filter: min(|A|,|B|) >= lo·max(|A|,|B|);
     *   - the PPJoin POSITIONAL filter: a match at 0-based slot p of A
     *     and q of B supports at most min(|A|-p, |B|-q) overlapping
-    *     shingles, and J >= τ needs overlap >= τ·(|A|+|B|)/(1+τ); the
-    *     first common shingle's own row always meets it.
-    * All three prune at `lo` = τ - 1e-4, not τ: the final filter is
-    * round(J, 4) >= τ, which admits J down to τ - 5e-5, and every
-    * float comparison errs toward KEEPING a row. The same floor gates
-    * a double-only prefilter ahead of `round`, which goes through
-    * BigDecimal per row and so only runs for the few pairs that
-    * nearly pass. At production scale a boilerplate-grade corpus
-    * shingle would fan out by its df here — that is q31's skew
-    * territory, and the same df cap composes (drop capped shingles
-    * from the broadcast side); the oracled query keeps the exact
-    * uncapped form. */
+    *     shingles, and J >= τ needs overlap >= lo·(|A|+|B|)/(1+lo); the
+    *     first common shingle's own hit always meets it.
+    * All three prune at `lo` = [[pruneFloor]] = τ - 1e-4, not τ: the
+    * final filter is round(J, 4) >= τ, which admits J down to
+    * τ - 5e-5, and every float comparison errs toward KEEPING a pair.
+    * The same floor gates a double-only prefilter ahead of `round`,
+    * which goes through BigDecimal per row and so only runs for the
+    * few pairs that nearly pass. At production scale a
+    * boilerplate-grade shingle shared by many batch docs would fan a
+    * row out by that count — q31's skew territory, and the same df cap
+    * composes (leave capped shingles out of the index); the oracled
+    * query keeps the exact uncapped form. */
   private[graft] def incrementalNearDupsFrom(arrays: DataFrame,
-      newArrays: DataFrame, tau: Double): DataFrame = {
+      newArrays: DataFrame, tau: Double,
+      capBytes: Long = Hints.BroadcastCap): DataFrame = {
+    val spark = arrays.sparkSession
+    import spark.implicits._
     val lo = pruneFloor(tau)
-    def prefixRows(a: DataFrame): DataFrame = a.select(col("doc_id"), col("n"),
-      posexplode(slice(col("sarr"), lit(1),
-        (col("n") - ceil(col("n") * lo - 1e-9) + 1).cast("int")))
-        .as(Seq("pos", "shingle")))
-    val probe = prefixRows(arrays)
-    val batch = prefixRows(newArrays)
-    val cand = Hints.spreadDedupPairs(
-      probe.as("s").join(broadcast(batch.as("b")),
-          col("s.shingle") === col("b.shingle") &&
-            col("s.doc_id") =!= col("b.doc_id") &&
-            least(col("s.n"), col("b.n")) >=
-              greatest(col("s.n"), col("b.n")) * lo - 1e-9 &&
-            least(col("s.n") - col("s.pos"), col("b.n") - col("b.pos"))
-              * (1.0 + lo) >= (col("s.n") + col("b.n")) * lo - 1e-9)
-        .select(least(col("s.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("s.doc_id"), col("b.doc_id")).as("doc_b")),
-      Seq("doc_a", "doc_b"))
-    jaccardFor(cand, arrays)
+    val est = newArrays.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est > BigInt(capBytes)) throw new BatchTooLargeException(est, capBytes)
+    def docs(a: DataFrame) = a.select("doc_id", "n", "sarr").as[(Long, Int, Array[Long])]
+    val batch = docs(newArrays).collect()
+    val index = spark.sparkContext.broadcast(new BatchPrefixIndex(batch, lo))
+    // an empty batch prunes the corpus scan away
+    docs(arrays.filter(lit(batch.nonEmpty)))
+      .mapPartitions { rows =>
+        val ix = index.value
+        rows.flatMap { case (id, n, sarr) => ix.probe(id, n, sarr) }
+      }
+      .toDF("doc_a", "doc_b", "inter", "n_a", "n_b")
+      .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"),
+        round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 4)
+          .as("jaccard"))
       .filter(col("inter") / (col("n_a") + col("n_b") - col("inter")) >= lo)
       .filter(col("jaccard") >= tau)
   }
@@ -1772,8 +1790,8 @@ object DedupOps {
   }
 
   /** Naive exact Jaccard over corpus ∪ derived batch, restricted to
-    * pairs touching the batch — proves the incremental candidate
-    * generator (broadcast batch join + length filter) is lossless.
+    * pairs touching the batch — proves the incremental kernel's
+    * prefix, length and positional prunes lossless.
     *
     * Staged AS MATERIALIZED (round 14): the shingle relation `o75_sh`
     * is consumed FOUR times (both sides of the candidate self-join,
@@ -2557,4 +2575,72 @@ object DedupOps {
     "q33_simhash" -> q33Oracle,
     "q34_dedup_clusters" -> q34Oracle,
     "q75_incremental_dedup" -> q75Oracle)
+}
+
+/** A near-dup batch too large to index on the driver: its optimizer size
+  * estimate `estimate` passed `cap` bytes. */
+final class BatchTooLargeException(val estimate: BigInt, val cap: Long)
+  extends IllegalArgumentException(
+    s"near-dup batch size estimate $estimate bytes exceeds the $cap-byte " +
+      "cap for a driver-side batch index: split the batch")
+
+/** The batch side of [[DedupOps.incrementalNearDupsFrom]], built on the
+  * driver from the collected batch `(doc_id, n, sarr)` and broadcast.
+  * Each batch doc's AllPairs prefix (its first n - ⌈lo·n⌉ + 1 shingles)
+  * is indexed shingle → packed (batch slot << 32 | pos). [[probe]] runs
+  * once per row of the array relation and returns that row's verified
+  * pairs, oriented `doc_a < doc_b` as (doc_a, doc_b, inter, n_a, n_b). */
+private[graft] final class BatchPrefixIndex(
+    batch: Array[(Long, Int, Array[Long])], lo: Double) extends Serializable {
+  import scala.collection.mutable
+  import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+  import org.apache.spark.sql.catalyst.util.ArrayData
+
+  private val ids = batch.map(_._1)
+  private val ns = batch.map(_._2)
+  private val sarrs = batch.map(_._3)
+  private val idSet = ids.toSet
+  private val hits: mutable.LongMap[Array[Long]] = {
+    val m = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    for (s <- ids.indices; q <- 0 until prefixLen(ns(s)))
+      m.getOrElseUpdate(sarrs(s)(q), new mutable.ArrayBuilder.ofLong) +=
+        (s.toLong << 32 | q)
+    m.mapValuesNow(_.result())
+  }
+  @transient private lazy val data: Array[ArrayData] =
+    sarrs.map(UnsafeArrayData.fromPrimitiveArray)
+
+  private def prefixLen(n: Int): Int =
+    math.min(n.toLong, n - math.ceil(n * lo - 1e-9).toLong + 1).toInt
+
+  def probe(id: Long, n: Int, sarr: Array[Long]): Seq[(Long, Long, Int, Int, Int)] = {
+    val isBatch = idSet.contains(id)
+    val paired = new java.util.BitSet(ids.length)
+    var arr: ArrayData = null
+    val out = Seq.newBuilder[(Long, Long, Int, Int, Int)]
+    var p = 0
+    val pl = prefixLen(n)
+    while (p < pl) {
+      val hs = hits.getOrNull(sarr(p))
+      if (hs != null) {
+        var h = 0
+        while (h < hs.length) {
+          val s = (hs(h) >>> 32).toInt
+          val q = (hs(h) & 0xffffffffL).toInt
+          val bid = ids(s); val bn = ns(s)
+          if ((if (isBatch) bid > id else bid != id) && !paired.get(s) &&
+              math.min(n, bn) >= math.max(n, bn) * lo - 1e-9 &&
+              math.min(n - p, bn - q) * (1.0 + lo) >= (n + bn) * lo - 1e-9) {
+            paired.set(s)
+            if (arr == null) arr = UnsafeArrayData.fromPrimitiveArray(sarr)
+            val inter = graft.functions.SortedOverlap.merge(arr, data(s), false)
+            out += (if (id < bid) (id, bid, inter, n, bn) else (bid, id, inter, bn, n))
+          }
+          h += 1
+        }
+      }
+      p += 1
+    }
+    out.result()
+  }
 }

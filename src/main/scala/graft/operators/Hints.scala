@@ -44,7 +44,13 @@ private[graft] object Hints {
     * digits) cross the exchange raw — a few extra bytes per pair
     * against a parallel verify. `numShufflePartitions` tracks
     * SPARK_GRAFT_CPUS locally and the cluster's setting at scale, so
-    * the spread is scale-adaptive, not a local[32] constant. */
+    * the spread is scale-adaptive, not a local[32] constant.
+    *
+    * Users: q31's candidate verify, and q43's (with q140's) and q45's
+    * candidate verifies in SimilarityOps. q75 and the streaming
+    * near-dup ingest left it: their kernel
+    * ([[DedupOps.incrementalNearDupsFrom]]) emits each pair once in a
+    * narrow pass and has nothing to dedup. */
   def spreadDedupPairs(df: DataFrame, keys: Seq[String]): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       keys.map(org.apache.spark.sql.functions.col): _*)

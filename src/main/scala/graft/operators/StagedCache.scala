@@ -61,7 +61,7 @@ private[graft] object StagedCache {
 
   def readStaged(spark: org.apache.spark.sql.SparkSession,
       dirs: String*): org.apache.spark.sql.DataFrame = {
-    val key = dirs.mkString("\u0000")
+    val key = schemaKey(dirs)
     val s = stagedSchemas.get(key)
     if (s != null) spark.read.schema(s).parquet(dirs: _*)
     else {
@@ -70,6 +70,14 @@ private[graft] object StagedCache {
       df
     }
   }
+
+  /** Register `schema` as the read schema of staged `dirs`, for a
+    * writer that knows it: [[readStaged]] then never infers it, and an
+    * empty staged dir reads as an empty relation. */
+  def registerSchema(schema: org.apache.spark.sql.types.StructType,
+      dirs: String*): Unit = stagedSchemas.put(schemaKey(dirs), schema)
+
+  private def schemaKey(dirs: Seq[String]): String = dirs.mkString("\u0000")
 
   /** Content fingerprint of a source dataset path (a parquet file OR a
     * directory of part files) for cache-validity keying. The previous

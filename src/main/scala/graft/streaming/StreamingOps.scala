@@ -265,9 +265,11 @@ object StreamingOps {
     * micro-batch (a) shingle ONLY the batch and stage it under a
     * DETERMINISTIC per-batchId dir, (b) find near-dups of the batch
     * against seed-corpus index ∪ previously staged batches
-    * ([[graft.operators.DedupOps.incrementalNearDupsFrom]] — the
-    * corpus side streams map-side against the broadcast batch, q75's
-    * shape), and (c) append the surviving pairs to a downstream
+    * ([[graft.operators.DedupOps.incrementalNearDupsFrom]], q75's
+    * kernel: one narrow pass in which each corpus row probes a
+    * broadcast index of the batch's prefixes and verifies its pairs in
+    * place — no shuffle, no corpus broadcast), and (c) append the
+    * surviving pairs to a downstream
     * graft-delta table. So each batch is deduped against everything
     * that came before WITHOUT ever re-shingling the corpus — the index
     * grows one staged delta dir per batch, exactly

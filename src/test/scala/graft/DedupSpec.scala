@@ -407,7 +407,6 @@ class DedupSpec extends SparkSpec {
     // length bound ⌈τ·max⌉, a pair at exactly J = 0.5, and a pair at
     // J = 5000/10001 that round(·, 4) lifts to 0.5000. Reference: the
     // unpruned join (every shingle probed, no length filter).
-    import org.apache.spark.sql.functions.{explode, greatest, least}
     val rng = new scala.util.Random(20260)
     val vocab = (0 until 30).map(i => s"w$i")
     def words(k: Int) = Seq.fill(k)(vocab(rng.nextInt(vocab.size)))
@@ -425,14 +424,7 @@ class DedupSpec extends SparkSpec {
       .map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
     val arrays = DedupOps.shingleArrays(all, spread = false)
     val batchArrays = arrays.filter(col("doc_id") >= 1000L)
-    val probeRows = arrays.select(col("doc_id"), explode(col("sarr")).as("shingle"))
-    val unpruned = DedupOps.jaccardFor(
-      probeRows.as("s").join(probeRows.as("b").filter(col("doc_id") >= 1000L),
-          col("s.shingle") === col("b.shingle") && col("s.doc_id") =!= col("b.doc_id"))
-        .select(least(col("s.doc_id"), col("b.doc_id")).as("doc_a"),
-          greatest(col("s.doc_id"), col("b.doc_id")).as("doc_b"))
-        .distinct(), arrays)
-      .filter(col("jaccard") >= 0.5)
+    val unpruned = unprunedNearDups(arrays, batchArrays)
     val pruned = rows(DedupOps.incrementalNearDupsFrom(arrays, batchArrays, 0.5))
     val expect = rows(unpruned)
     assert(pruned === expect)
@@ -444,6 +436,80 @@ class DedupSpec extends SparkSpec {
     val kept = truncated.count { case (a, b) =>
       expect.exists(r => r._1 == a && r._2 == b) }
     assert(kept > 0 && kept < truncated.size)
+  }
+
+  /** The unpruned reference for the incremental kernel: every shingle
+    * of every doc probes every shingle of the batch (no prefix, length
+    * or positional filter), distinct pairs, exact verify. */
+  private def unprunedNearDups(arrays: org.apache.spark.sql.DataFrame,
+      batchArrays: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.{col, explode, greatest, least}
+    def shingleRows(a: org.apache.spark.sql.DataFrame) =
+      a.select(col("doc_id"), explode(col("sarr")).as("shingle"))
+    DedupOps.jaccardFor(
+      shingleRows(arrays).as("s").join(shingleRows(batchArrays).as("b"),
+          col("s.shingle") === col("b.shingle") && col("s.doc_id") =!= col("b.doc_id"))
+        .select(least(col("s.doc_id"), col("b.doc_id")).as("doc_a"),
+          greatest(col("s.doc_id"), col("b.doc_id")).as("doc_b"))
+        .distinct(), arrays)
+      .filter(col("jaccard") >= 0.5)
+  }
+
+  test("incremental near-dups: each pair exactly once, as the unpruned reference") {
+    import org.apache.spark.sql.functions.col
+    val rng = new scala.util.Random(18018)
+    val vocab = (0 until 400).map(i => s"v$i")
+    def words(k: Int) = Seq.fill(k)(vocab(rng.nextInt(vocab.size)))
+    val a = words(40); val b = words(30); val c = words(50)
+    val docs = Seq(
+      100L -> a, 200L -> b, 300L -> words(35), 301L -> words(20), // corpus
+      5L -> a.updated(3, "x1"), // batch id below its corpus partner 100
+      500L -> (b :+ "tail"), // batch id above its corpus partner 200
+      7L -> c, 600L -> c.take(45), // a within-batch pair, n(7) > n(600)
+      800L -> a) // a copy of 100: the pair shares every prefix shingle
+      .map { case (id, ws) => (id, ws.mkString(" ")) }.toDF("doc_id", "text")
+    val arrays = DedupOps.shingleArrays(docs, spread = false)
+    val batch = arrays.filter(col("doc_id").isin(5L, 500L, 7L, 600L, 800L))
+    // a sorted Seq, not a Set: a pair emitted twice must fail
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getInt(3), r.getInt(4), r.getDouble(5))).toSeq.sorted
+    val got = rows(DedupOps.incrementalNearDupsFrom(arrays, batch, 0.5))
+    assert(got === rows(unprunedNearDups(arrays, batch)))
+    val n = arrays.select("doc_id", "n").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    def pair(x: Long, y: Long) = got.filter(r => r._1 == x && r._2 == y)
+    assert(pair(5L, 100L).size === 1, "batch id below its partner")
+    assert(pair(200L, 500L).size === 1, "batch id above its partner")
+    assert(pair(100L, 800L).map(_._6) === Seq(1.0), "several shared prefix shingles")
+    assert(n(7L) > n(600L))
+    assert(pair(7L, 600L).map(r => (r._4, r._5)) === Seq((n(7L), n(600L))),
+      "a within-batch pair: one row, n_a/n_b oriented by id")
+    assert(got.forall(r => r._1 < r._2))
+    // an empty batch: no rows and no error
+    assert(DedupOps.incrementalNearDupsFrom(arrays,
+      batch.filter(col("doc_id") < 0L), 0.5).count() === 0L)
+  }
+
+  test("incremental near-dups: a batch over the broadcast cap fails typed") {
+    import org.apache.spark.sql.functions.col
+    val arrays = DedupOps.stagedShingleArrays(spark, corpusDir)
+    val batch = arrays.filter(col("doc_id") >= 2L)
+    val e = intercept[graft.operators.BatchTooLargeException](
+      DedupOps.incrementalNearDupsFrom(arrays, batch, 0.5, capBytes = 16L))
+    assert(e.cap === 16L && e.estimate > BigInt(16))
+    assert(e.getMessage.contains(e.estimate.toString) && e.getMessage.contains("16-byte"))
+    assert(DedupOps.incrementalNearDupsFrom(arrays, batch, 0.5).count() > 0L)
+  }
+
+  test("q31 over an empty documents table returns an empty result") {
+    val dir = tempDir("graft-q31-empty").toString
+    Seq.empty[(Long, String, String, String, Long)]
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(DedupOps.stagedShingleArrays(spark, dir).count() === 0L)
+    assert(DedupOps.q31NgramJaccard(spark, dir).collect().isEmpty)
   }
 
   test("q36 gram relation is memoized: second invocation stages no new dir") {

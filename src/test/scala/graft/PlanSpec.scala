@@ -58,8 +58,9 @@ class PlanSpec extends SparkSpec {
       "q147_model_quality" ->
         graft.operators.TextOps.queries("q147_model_quality"),
       "q149_tpch_q8" -> Relational.queries("q149_tpch_q8"),
-      // the streaming near-dup kernel's prefix probe (slice +
-      // posexplode) must stay codegen'd like q31's
+      // the streaming near-dup kernel: its typed probe pass and the
+      // final jaccard filters must stay free of interpreted fallbacks
+      // and nested-loop joins
       "incremental_near_dups" -> { (s: org.apache.spark.sql.SparkSession,
           d: String) =>
         val arrays = DedupOps.stagedShingleArrays(s, d)
