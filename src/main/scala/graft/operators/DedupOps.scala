@@ -771,13 +771,9 @@ object DedupOps {
     * and manifest fingerprint are hash-verified by one DuckDB oracle
     * replaying the identical chain (the round-13 verdict's "handoff
     * artifact" item). */
-  /** q137's labeled projection, extracted (round 17) so the stage-cost
-    * profiler ([[graft.DevQ137Profile]]) times the SAME relation the
-    * pipeline aggregates — the verdict's "prove the short-circuit"
-    * item. `withModelGate = false` removes stage 10 entirely (the
-    * model_score column then has no consumer and ColumnPruning never
-    * computes it), giving the honest no-model baseline the profile
-    * subtracts.
+  /** q137's labeled projection: every corpus row with its funnel
+    * verdict, the relation [[q137CurationPipeline]] aggregates and
+    * PlanSpec inspects.
     *
     * WHY THE FOLD IS CHEAP HERE (the short-circuit, MADE structural in
     * round 17): the fold expression is constructed DIRECTLY inside the
@@ -848,8 +844,8 @@ object DedupOps {
         t
       })
 
-  private[graft] def q137Labeled(spark: SparkSession, dir: String,
-      withModelGate: Boolean = true): DataFrame = {
+  private[graft] def q137Labeled(spark: SparkSession, dir: String)
+      : DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     // explicit spread (Hints.spreadIfCompact): the per-row text
     // kernels below (shingling, stopword regex, md5 keying, the fold)
@@ -861,10 +857,8 @@ object DedupOps {
     val contam = q137Contam(spark, dir)
       .withColumn("is_contam", lit(true))
     val modelGate =
-      if (withModelGate)
-        when(TextOps.modelScore(col("text")) < TextOps.ModelScoreBar,
-          "model_filtered")
-      else when(lit(false), "model_filtered")
+      when(TextOps.modelScore(col("text")) < TextOps.ModelScoreBar,
+        "model_filtered")
     val keepers = q137Keepers(spark, dir)
       .withColumnRenamed("fingerprint", "k_fingerprint")
     corpus
@@ -1237,12 +1231,6 @@ object DedupOps {
     * τ − 5e-5, so a prune at τ would lose those pairs. */
   private def pruneFloor(tau: Double): Double = tau - 1e-4
 
-  /** prefixCandidates minus its final distinct (profiling hook). */
-  private[graft] def prefixCandidatesRaw(spark: SparkSession, dir: String,
-      tau: Double): DataFrame =
-    prefixCandidatesFrom(
-      stagedPrefix(spark, dir, tau, defaultDfCap(spark, dir)), tau)
-
   val q31NgramJaccard: Q = (spark, dir) => {
     val tau = 0.5
     val arrays = stagedShingleArrays(spark, dir)
@@ -1250,7 +1238,9 @@ object DedupOps {
     // so the sorted-overlap verify runs at full parallelism — measured
     // 1.52 → 0.63 s at sf0.1 beside the positional filter (round 18)
     val cand = Hints.spreadDedupPairs(
-      prefixCandidatesRaw(spark, dir, tau), Seq("doc_a", "doc_b"))
+      prefixCandidatesFrom(
+        stagedPrefix(spark, dir, tau, defaultDfCap(spark, dir)), tau),
+      Seq("doc_a", "doc_b"))
     jaccardFor(cand, arrays)
       .filter(col("jaccard") >= tau)
       .orderBy("doc_a", "doc_b")

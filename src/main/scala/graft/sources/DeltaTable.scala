@@ -2950,10 +2950,12 @@ object DeltaTable {
     }
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  /** Delete `p` and everything under it, deepest first; a missing `p`
+    * is a no-op. Strict: an entry that cannot be deleted throws. */
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
-      try s.iterator.asScala.toSeq.reverse.foreach(Files.delete)
+      try s.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists)
       finally s.close()
     }
 }

@@ -1,9 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
+import graft.sources.{DeltaLog, DeltaTable}
 
 /** [EXT] Structured Streaming twins of the batch EventOps plans: the
   * same logical shapes (tumbling-window rollup, gap sessionization)
@@ -84,8 +87,7 @@ object StreamingOps {
     * every transform is the same codegen'd expression a batch run
     * would use. */
   def fileEnrichPipeline(spark: SparkSession, srcDir: String,
-      outDir: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
     spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("value") > 0)
@@ -105,8 +107,7 @@ object StreamingOps {
     * watermark passes its end — the contract a downstream consumer of
     * finalized hourly partitions relies on. */
   def fileRollupPipeline(spark: SparkSession, srcDir: String,
-      outDir: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
     hourlyRollup(spark.readStream.schema(schema).parquet(srcDir))
       .writeStream.format("parquet")
@@ -126,8 +127,7 @@ object StreamingOps {
     * batch readers always see a consistent snapshot mid-stream —
     * the property a plain parquet sink cannot give them. */
   def fileDeltaIngestPipeline(spark: SparkSession, srcDir: String,
-      table: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      table: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
     spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("value") > 0)
@@ -155,39 +155,15 @@ object StreamingOps {
     * the right tool: the refresh is a multi-step transaction (read
     * downstream, join, merge) no declarative sink expresses. */
   def incrementalViewPipeline(spark: SparkSession, srcTable: String,
-      downTable: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.DeltaTable
+      downTable: String, ckptDir: String): StreamingQuery = {
     val money = org.apache.spark.sql.types.DecimalType(18, 2)
-    val sumT = org.apache.spark.sql.types.DecimalType(28, 2)
-    spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val deltaAgg = batch.groupBy("event_type")
+    ledgeredStream(spark, srcTable, ckptDir) { (batch, batchId) =>
+      additiveMerge(spark, downTable, Seq("event_type"),
+        batch.groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
-            sum(col("value").cast(money)).as("total_value"))
-        val cur =
-          if (graft.sources.DeltaLog.versions(downTable).isEmpty)
-            deltaAgg.filter(lit(false)) // empty, same schema
-          else DeltaTable.read(spark, downTable)
-        val upserts = cur.as("o")
-          .join(deltaAgg.as("d"), Seq("event_type"), "right")
-          .select(col("event_type"),
-            (coalesce(col("o.n_events"), lit(0L)) + col("d.n_events"))
-              .as("n_events"),
-            (coalesce(col("o.total_value"), lit(0).cast(sumT))
-              + col("d.total_value")).cast(sumT).as("total_value"))
-        if (graft.sources.DeltaLog.versions(downTable).isEmpty)
-          DeltaTable.write(upserts, downTable, "overwrite",
-            txn = Some((s"view:$ckptDir", batchId)))
-        else
-          DeltaTable.merge(spark, downTable, upserts, Seq("event_type"),
-            txn = Some((s"view:$ckptDir", batchId)))
-        ()
-      }
-      .outputMode(OutputMode.Update())
-      .start()
+            sum(col("value").cast(money)).as("total_value")),
+        (s"view:$ckptDir", batchId))
+    }
   }
 
   /** STREAMING HOST REPUTATION MV (round 17) — the incremental twin
@@ -208,43 +184,61 @@ object StreamingOps {
     * a (checkpoint, batchId) SetTransaction and replays
     * short-circuit. */
   def hostReputationIngestPipeline(spark: SparkSession, srcTable: String,
-      mvTable: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.DeltaTable
-    spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partials = graft.operators.DedupOps.hostUrlMetrics(batch)
+      mvTable: String, ckptDir: String): StreamingQuery =
+    ledgeredStream(spark, srcTable, ckptDir) { (batch, batchId) =>
+      additiveMerge(spark, mvTable, Seq("host", "canonical_url"),
+        graft.operators.DedupOps.hostUrlMetrics(batch)
           .groupBy("host", "canonical_url")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_tokens")).as("sum_tok"),
-            sum(col("stop_hits")).as("sum_stop"))
-        val empty = graft.sources.DeltaLog.versions(mvTable).isEmpty
-        val cur =
-          if (empty) partials.filter(lit(false))
-          else DeltaTable.read(spark, mvTable)
-        val upserts = cur.as("o")
-          .join(partials.as("d"), Seq("host", "canonical_url"), "right")
-          .select(col("host"), col("canonical_url"),
-            (coalesce(col("o.n_docs"), lit(0L)) + col("d.n_docs"))
-              .as("n_docs"),
-            (coalesce(col("o.sum_tok"), lit(0L)) + col("d.sum_tok"))
-              .as("sum_tok"),
-            (coalesce(col("o.sum_stop"), lit(0L)) + col("d.sum_stop"))
-              .as("sum_stop"))
-        if (empty)
-          DeltaTable.write(upserts, mvTable, "overwrite",
-            txn = Some((s"hostrep:$ckptDir", batchId)))
-        else
-          DeltaTable.merge(spark, mvTable, upserts,
-            Seq("host", "canonical_url"),
-            txn = Some((s"hostrep:$ckptDir", batchId)))
-        ()
+            sum(col("stop_hits")).as("sum_stop")),
+        (s"hostrep:$ckptDir", batchId))
+    }
+
+  /** The additive merge of both materialized views: right-join the
+    * current view onto `partials` (one row per key), add each measure
+    * to its current value (0 for a key the view lacks), cast back to
+    * the partial's type, and [[writeOrMerge]] the sums under `txn`. */
+  private def additiveMerge(spark: SparkSession, table: String,
+      keys: Seq[String], partials: DataFrame, txn: (String, Long)): Unit = {
+    val cur =
+      if (DeltaLog.versions(table).isEmpty) partials.filter(lit(false))
+      else DeltaTable.read(spark, table)
+    val sums = partials.schema.fields.filterNot(f => keys.contains(f.name))
+      .map { f =>
+        (coalesce(col(s"o.${f.name}"), lit(0).cast(f.dataType))
+          + col(s"d.${f.name}")).cast(f.dataType).as(f.name)
       }
-      .outputMode(OutputMode.Update())
-      .start()
+    writeOrMerge(spark, table, keys,
+      cur.as("o").join(partials.as("d"), keys, "right")
+        .select(keys.map(col) ++ sums: _*), txn)
   }
+
+  /** Create `table` from `df` on its first commit, MERGE `df` into it
+    * on `keys` after; either way under the `txn` ledger entry. */
+  private def writeOrMerge(spark: SparkSession, table: String,
+      keys: Seq[String], df: DataFrame, txn: (String, Long)): Unit =
+    if (DeltaLog.versions(table).isEmpty)
+      DeltaTable.write(df, table, "append", txn = Some(txn))
+    else DeltaTable.merge(spark, table, df, keys, txn = Some(txn))
+
+  /** A ledgered pipeline's micro-batch loop: tail `srcTable`'s
+    * graft-delta feed (through `view`) under the checkpoint `ckptDir`
+    * and hand each micro-batch and its id to `perBatch`. Every sink
+    * write `perBatch` makes carries a SetTransaction keyed by
+    * (app:checkpoint, batchId), so a replayed batch short-circuits
+    * against the sink's ledger. The output mode is Spark's default,
+    * Append: a watermarked aggregate emits each window once under it,
+    * and for a query without aggregation Spark treats Update as
+    * Append. */
+  private def ledgeredStream(spark: SparkSession, srcTable: String,
+      ckptDir: String, view: DataFrame => DataFrame = identity)(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    view(spark.readStream.format("graft-delta").load(srcTable))
+      .writeStream
+      .option("checkpointLocation", ckptDir)
+      .foreachBatch(perBatch)
+      .start()
 
   /** The host report off the maintained (host, canonical_url) view —
     * shares [[graft.operators.DedupOps.hostVerdict]]'s arithmetic
@@ -252,62 +246,22 @@ object StreamingOps {
   def hostReputationFromMv(spark: SparkSession,
       mvTable: String): DataFrame =
     graft.operators.DedupOps.hostVerdict(
-      graft.sources.DeltaTable.read(spark, mvTable)
+      DeltaTable.read(spark, mvTable)
         .groupBy("host")
         .agg(sum(col("n_docs")).as("n_docs"),
           count(lit(1)).as("n_pages"),
           sum(col("sum_tok")).as("sum_tok"),
           sum(col("sum_stop")).as("sum_stop")))
 
-  /** STREAMING INCREMENTAL NEAR-DUP — the whole production ingestion
-    * pipeline composed from pieces the batch path already proves: tail
-    * a graft-delta documents table's change feed, and for each
-    * micro-batch (a) shingle ONLY the batch and stage it under a
-    * DETERMINISTIC per-batchId dir, (b) find near-dups of the batch
-    * against seed-corpus index ∪ previously staged batches
-    * ([[graft.operators.DedupOps.incrementalNearDupsFrom]], q75's
-    * kernel: one narrow pass in which each corpus row probes a
-    * broadcast index of the batch's prefixes and verifies its pairs in
-    * place — no shuffle, no corpus broadcast), and (c) append the
-    * surviving pairs to a downstream
-    * graft-delta table. So each batch is deduped against everything
-    * that came before WITHOUT ever re-shingling the corpus — the index
-    * grows one staged delta dir per batch, exactly
-    * [[graft.operators.DedupOps.refreshShingleIndex]]'s contract at
-    * micro-batch grain.
-    *
-    * Exactly-once: the pairs append commits a SetTransaction keyed by
-    * (checkpoint, batchId) — a replayed batch short-circuits against
-    * the ledger like the streaming sink's, and its re-staged shingle
-    * dir OVERWRITES the same per-batchId path, so replays are
-    * idempotent on both the output and the index. Restart-safe with no
-    * driver state: prior batches' dirs are rediscovered by LISTING the
-    * staging root (ids < current batch only, so a replay never reads
-    * its own half-staged attempt as corpus). foreachBatch is right
-    * here for the same reason as the materialized view: stage + join +
-    * ledgered append is a multi-step transaction no declarative sink
-    * expresses.
-    *
-    * The corpus is read through [[stagedCorpus]]: seed index ∪ one
-    * scan whose file list holds every prior staged dir plus this
-    * batch's, so the batch plan — and its generated code — is the same
-    * at every lineage depth. A long-running pipeline still accumulates
-    * one staged dir per batch, and with it files, footers and listing
-    * work per scan; [[compactStagedState]] folds the committed batch
-    * dirs into one compact dir between restarts — O(staged bytes),
-    * results bit-identical, the stream resumes on its original
-    * checkpoint (round 16; the former path — rebuild the seed index
-    * from a corpus snapshot and clear the staging root wholesale — was
-    * O(corpus) and remains legal but is no longer the maintenance
-    * default). */
   /** (compact ids, batch ids) currently present under a staging root.
     * Names that don't parse (a compactor's in-flight `compact-N.tmp`,
-    * the `_drift` metric dir, the `_graft_checkpoint` stamp) are
-    * skipped — the listing degrades to the state it can read. */
-  private def stagedIds(root: java.nio.file.Path): (Seq[Long], Seq[Long]) =
-    if (!java.nio.file.Files.isDirectory(root)) (Seq.empty, Seq.empty)
+    * the `_drift` metric dir, the `_graft_checkpoint` stamp and its
+    * temp) are skipped — the listing degrades to the state it can
+    * read. */
+  private def stagedIds(root: Path): (Seq[Long], Seq[Long]) =
+    if (!Files.isDirectory(root)) (Seq.empty, Seq.empty)
     else {
-      val s = java.nio.file.Files.list(root)
+      val s = Files.list(root)
       try {
         import scala.jdk.CollectionConverters._
         val names = s.iterator.asScala.map(_.getFileName.toString).toSeq
@@ -330,7 +284,7 @@ object StreamingOps {
     * (it ran against a live stream, or folded the newest batch) — and
     * fails loudly rather than silently serving the replaying batch a
     * corpus containing its own rows. */
-  private def batchDirs(root: java.nio.file.Path, before: Long): Seq[String] = {
+  private def batchDirs(root: Path, before: Long): Seq[String] = {
     val (compacts, batches) = stagedIds(root)
     val c = compacts.lastOption
     c.filter(_ >= before).foreach { cid =>
@@ -346,20 +300,12 @@ object StreamingOps {
       .map(i => root.resolve(s"batch-$i").toString)
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val w = java.nio.file.Files.walk(p)
-      try w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally w.close()
-    }
-
   /** Stage `df` as the parquet files of `dir`, replacing what it held
     * (a replayed batch overwrites its own dir). An empty frame leaves
     * an empty dir, which the explicit-schema read-backs accept. */
   private def stageBatch(df: DataFrame, dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    deleteTree(p)
+    val p = Paths.get(dir)
+    DeltaTable.deleteRecursively(p)
     graft.sources.StagedWriter.write(df, p)
     ()
   }
@@ -379,6 +325,36 @@ object StreamingOps {
       schema: StructType, dirs: Seq[String],
       view: DataFrame => DataFrame = identity): DataFrame =
     seed.unionByName(view(spark.read.schema(schema).parquet(dirs: _*)))
+
+  /** The BETWEEN-restarts compaction cue, the [[sustainedDrift]]
+    * pattern applied to lineage: true when the staging root holds
+    * more than `maxDirs` corpus dirs a micro-batch would have to read
+    * (highest compact + live batches). The operator's play on true:
+    * stop the stream at its next natural restart point, run
+    * [[compactStagedState]], restart — results are bit-identical
+    * (StreamingSpec) and the per-batch corpus scan is back to one
+    * compact dir + the recent batches. Kept OUT of foreachBatch
+    * on purpose, like the IVF rebuild: a Spark job inside the
+    * micro-batch would stall ingest, and the fold needs the stopped-
+    * stream replay-safety contract. */
+  def shouldCompact(stageRoot: String, maxDirs: Int = 8): Boolean =
+    batchDirs(Paths.get(stageRoot), Long.MaxValue).size > maxDirs
+
+  /** ENGINE-TRIGGERED compaction (round 17, verdict #7): the
+    * trigger-then-fold composition an operator would otherwise have to
+    * remember to write — at a stopped-stream boundary, fold iff the
+    * lineage cue fires. Call it between drains (stream stopped; the
+    * stopped-stream contract is [[compactStagedState]]'s, unchanged)
+    * and the staged dir count stays bounded at maxDirs+1 forever with
+    * ZERO operator-remembered compact calls: the count only grows one
+    * dir per batch, the cue fires the first drain after it passes
+    * maxDirs, and the fold collapses everything but the newest batch
+    * back to 2. Returns Some(newCompactId) when a fold ran, None when
+    * the cue said the lineage is still cheap. */
+  def maybeCompactStagedState(spark: SparkSession, stageRoot: String,
+      maxDirs: Int = 8): Option[Long] =
+    if (shouldCompact(stageRoot, maxDirs)) compactStagedState(spark, stageRoot)
+    else None
 
   /** INCREMENTAL STAGED-STATE COMPACTION (round 16) — retires the
     * "clear the staging root wholesale + rebuild the seed index"
@@ -433,40 +409,9 @@ object StreamingOps {
     * Returns the new compact id, or None when fewer than two dirs are
     * foldable (compacting one dir into one dir buys no lineage).
     * Idempotent: a second call with no new batches is a no-op. */
-  /** The BETWEEN-restarts compaction cue, the [[sustainedDrift]]
-    * pattern applied to lineage: true when the staging root holds
-    * more than `maxDirs` corpus dirs a micro-batch would have to read
-    * (highest compact + live batches). The operator's play on true:
-    * stop the stream at its next natural restart point, run
-    * [[compactStagedState]], restart — results are bit-identical
-    * (StreamingSpec) and the per-batch corpus scan is back to one
-    * compact dir + the recent batches. Kept OUT of foreachBatch
-    * on purpose, like the IVF rebuild: a Spark job inside the
-    * micro-batch would stall ingest, and the fold needs the stopped-
-    * stream replay-safety contract. */
-  def shouldCompact(stageRoot: String, maxDirs: Int = 8): Boolean =
-    batchDirs(java.nio.file.Paths.get(stageRoot), Long.MaxValue)
-      .size > maxDirs
-
-  /** ENGINE-TRIGGERED compaction (round 17, verdict #7): the
-    * trigger-then-fold composition an operator would otherwise have to
-    * remember to write — at a stopped-stream boundary, fold iff the
-    * lineage cue fires. Call it between drains (stream stopped; the
-    * stopped-stream contract is [[compactStagedState]]'s, unchanged)
-    * and the staged dir count stays bounded at maxDirs+1 forever with
-    * ZERO operator-remembered compact calls: the count only grows one
-    * dir per batch, the cue fires the first drain after it passes
-    * maxDirs, and the fold collapses everything but the newest batch
-    * back to 2. Returns Some(newCompactId) when a fold ran, None when
-    * the cue said the lineage is still cheap. */
-  def maybeCompactStagedState(spark: SparkSession, stageRoot: String,
-      maxDirs: Int = 8): Option[Long] =
-    if (shouldCompact(stageRoot, maxDirs)) compactStagedState(spark, stageRoot)
-    else None
-
   def compactStagedState(spark: SparkSession, stageRoot: String)
       : Option[Long] = {
-    val root = java.nio.file.Paths.get(stageRoot)
+    val root = Paths.get(stageRoot)
     val (compacts, batches) = stagedIds(root)
     // Retire orphaned `compact-*.tmp` dirs up front (round-17 ADVICE):
     // a crash between the tmp write and the rename leaves a .tmp the
@@ -476,8 +421,8 @@ object StreamingOps {
     // non-parsing names, so no reader can hold a .tmp open — deletion
     // is always safe, and this same pass runs whether or not anything
     // is foldable.
-    if (java.nio.file.Files.isDirectory(root)) {
-      val l = java.nio.file.Files.list(root)
+    if (Files.isDirectory(root)) {
+      val l = Files.list(root)
       try {
         import scala.jdk.CollectionConverters._
         l.iterator.asScala
@@ -485,7 +430,7 @@ object StreamingOps {
             val n = p.getFileName.toString
             n.startsWith("compact-") && n.endsWith(".tmp")
           }
-          .toSeq.foreach(deleteTree)
+          .toSeq.foreach(DeltaTable.deleteRecursively)
       } finally l.close()
     }
     val cMax = compacts.lastOption.getOrElse(-1L)
@@ -498,7 +443,7 @@ object StreamingOps {
       // crashed before deleting — the highest compact subsumes them)
       (compacts.dropRight(1).map(i => root.resolve(s"compact-$i")) ++
         batches.filter(_ <= cMax).map(i => root.resolve(s"batch-$i")))
-        .foreach(deleteTree)
+        .foreach(DeltaTable.deleteRecursively)
       return None
     }
     val foldDirs =
@@ -512,14 +457,14 @@ object StreamingOps {
     // an empty compact dir)
     val foldFiles = foldDirs.flatMap { d =>
       import scala.jdk.CollectionConverters._
-      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      val w = Files.walk(Paths.get(d))
       try w.iterator.asScala.filter { p =>
         val n = p.getFileName.toString
         n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
       }.toList
       finally w.close()
     }
-    if (foldFiles.isEmpty) java.nio.file.Files.createDirectories(tmp)
+    if (foldFiles.isEmpty) Files.createDirectories(tmp)
     else {
       val folded = spark.read.parquet(foldDirs: _*).distinct()
       // Two encoding-locality repairs, both measured on the round-16
@@ -533,20 +478,19 @@ object StreamingOps {
       //    key-ordered runs the per-batch writers emit (RLE/dict pages
       //    compress runs, the distinct shuffle scatters them). Neither
       //    adds an exchange.
-      val foldBytes = foldFiles.map(java.nio.file.Files.size).sum
+      val foldBytes = foldFiles.map(Files.size).sum
       val nFiles = math.max(1L, foldBytes / (128L << 20) + 1L).toInt
       val keys = folded.columns.take(2).map(col)
       stageBatch(folded.coalesce(nFiles).sortWithinPartitions(keys: _*),
         tmp.toString)
     }
-    java.nio.file.Files.move(tmp, dst,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, dst, ATOMIC_MOVE)
     // delete the folded dirs (and any stale subsumed ones) only AFTER
     // the rename landed — the only non-atomic window leaves extra
     // subsumed dirs, which readers already ignore
     (compacts.map(i => root.resolve(s"compact-$i")) ++
       batches.filter(_ <= newId).map(i => root.resolve(s"batch-$i")))
-      .foreach(deleteTree)
+      .foreach(DeltaTable.deleteRecursively)
     Some(newId)
   }
 
@@ -564,19 +508,19 @@ object StreamingOps {
     * (seed index rebuilt from the current snapshot, staging cleared)
     * — and is restamped on start; [[compactStagedState]]'s compact
     * dirs carry the SAME stamp and validate like staged batches. */
-  private def validateStageRoot(root: java.nio.file.Path,
+  private def validateStageRoot(root: Path,
       ckptDir: String, staged: Boolean): Unit = {
     val marker = root.resolve("_graft_checkpoint")
-    val meta = java.nio.file.Paths.get(ckptDir, "metadata")
+    val meta = Paths.get(ckptDir, "metadata")
     val ckptId: Option[String] =
-      if (java.nio.file.Files.exists(meta))
+      if (Files.exists(meta))
         "\"id\"\\s*:\\s*\"([^\"]+)\"".r
           .findFirstMatchIn(new String(
-            java.nio.file.Files.readAllBytes(meta), "UTF-8")).map(_.group(1))
+            Files.readAllBytes(meta), "UTF-8")).map(_.group(1))
       else None
     val stamped: Option[String] =
-      if (java.nio.file.Files.exists(marker))
-        Some(new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim)
+      if (Files.exists(marker))
+        Some(new String(Files.readAllBytes(marker), "UTF-8").trim)
       else None
     (ckptId, stamped) match {
       case (Some(c), Some(m)) if c != m =>
@@ -601,44 +545,115 @@ object StreamingOps {
     }
   }
 
-  def nearDupIngestPipeline(spark: SparkSession, seedDir: String,
-      srcTable: String, pairsTable: String, ckptDir: String,
-      stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.DedupOps
-    import graft.sources.{DeltaLog, DeltaTable}
-    val root = java.nio.file.Paths.get(stageRoot)
-    java.nio.file.Files.createDirectories(root)
-    def priorBatchDirs(before: Long): Seq[String] = batchDirs(root, before)
-    validateStageRoot(root, ckptDir, priorBatchDirs(Long.MaxValue).nonEmpty)
-    val q = spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bdir = root.resolve(s"batch-$batchId").toString
-        // read-backs carry the just-written schema (all dirs under one
-        // stage root share it): no per-micro-batch footer re-inference
-        val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")))
-        stageBatch(sh, bdir)
-        val newArrays = spark.read.schema(sh.schema).parquet(bdir)
-        // the batch's own dir rides the corpus scan: corpus ∪ batch
-        val arrays = stagedCorpus(spark,
-          DedupOps.stagedShingleArrays(spark, seedDir), sh.schema,
-          priorBatchDirs(batchId) :+ bdir)
-        val pairs = DedupOps.incrementalNearDupsFrom(arrays, newArrays, 0.5)
-        val mode =
-          if (DeltaLog.versions(pairsTable).isEmpty) "overwrite" else "append"
-        DeltaTable.write(pairs, pairsTable, mode,
-          txn = Some((s"neardup:$ckptDir", batchId)))
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
+  /** The stage-root protocol of every staged-lineage ingest pipeline
+    * (near-dup, media near-dup, semantic, SQ8 and the two substring
+    * pipelines), run around the pipeline's own per-batch kernel
+    * `perBatch`:
+    *   - before the stream starts, the root is created and guarded
+    *     against a checkpoint swap ([[validateStageRoot]]);
+    *   - each micro-batch stages its standing state under the
+    *     DETERMINISTIC dir `batch-<batchId>` ([[Stage]]), replacing
+    *     what the dir held, so a replayed batch overwrites its own
+    *     attempt and replays are idempotent on the staged index;
+    *   - a batch's corpus is the staged dirs with ids below its own
+    *     ([[batchDirs]]), rediscovered by LISTING the root: restart-safe
+    *     with no driver state, and a replay never reads its own
+    *     half-staged attempt as corpus;
+    *   - every sink write commits under its (app:checkpoint, batchId)
+    *     SetTransaction ([[ledgeredStream]]): a replay short-circuits
+    *     against each sink's ledger. A plain append creates the sink
+    *     table on its first commit;
+    *   - after start, the root is stamped with the query's persistent
+    *     id (`_graft_checkpoint`) through [[writeAtomically]], so a
+    *     crash mid-stamp cannot leave an empty stamp that the guard
+    *     would refuse on every restart.
+    * foreachBatch is right here for the same reason as the
+    * materialized views: stage + join + ledgered append is a
+    * multi-step transaction no declarative sink expresses. */
+  private def stagedIngest(spark: SparkSession, srcTable: String,
+      ckptDir: String, stageRoot: String)(
+      perBatch: (DataFrame, Long, Stage) => Unit): StreamingQuery = {
+    val root = Paths.get(stageRoot)
+    Files.createDirectories(root)
+    validateStageRoot(root, ckptDir, batchDirs(root, Long.MaxValue).nonEmpty)
+    val q = ledgeredStream(spark, srcTable, ckptDir) { (batch, batchId) =>
+      perBatch(batch, batchId, new Stage(spark, root, batchId))
+    }
     // stamp AFTER start: q.id is the persistent query id the metadata
     // file records — on a fresh checkpoint it only exists from here
-    java.nio.file.Files.write(root.resolve("_graft_checkpoint"),
-      q.id.toString.getBytes("UTF-8"))
+    writeAtomically(root.resolve("_graft_checkpoint"), q.id.toString)
     q
+  }
+
+  /** Micro-batch `batchId`'s share of its stage root. */
+  private final class Stage(spark: SparkSession, root: Path, batchId: Long) {
+    /** This batch's staged dir. */
+    val dir: String = root.resolve(s"batch-$batchId").toString
+
+    /** Stage `df` as [[dir]] and read it back with `df`'s schema (all
+      * dirs under one root share it: no per-batch footer inference). */
+    def apply(df: DataFrame): DataFrame = {
+      stageBatch(df, dir)
+      spark.read.schema(df.schema).parquet(dir)
+    }
+
+    /** The staged dirs of the batches before this one. */
+    def prior: Seq[String] = batchDirs(root, batchId)
+  }
+
+  /** Replace `dst`'s contents with `text` through a sibling temp file
+    * and an atomic rename: a crash leaves the old contents or the new,
+    * never an empty or half-written file, and a crash before the
+    * rename leaves only the temp, which the next write replaces. */
+  private def writeAtomically(dst: Path, text: String): Unit = {
+    val tmp = dst.resolveSibling(s"${dst.getFileName}.tmp")
+    Files.write(tmp, text.getBytes("UTF-8"))
+    Files.move(tmp, dst, ATOMIC_MOVE, REPLACE_EXISTING)
+  }
+
+  /** STREAMING INCREMENTAL NEAR-DUP — the whole production ingestion
+    * pipeline composed from pieces the batch path already proves: tail
+    * a graft-delta documents table's change feed, and for each
+    * micro-batch (a) shingle ONLY the batch and stage it, (b) find
+    * near-dups of the batch against seed-corpus index ∪ previously
+    * staged batches ([[graft.operators.DedupOps.incrementalNearDupsFrom]],
+    * q75's kernel: one narrow pass in which each corpus row probes a
+    * broadcast index of the batch's prefixes and verifies its pairs in
+    * place — no shuffle, no corpus broadcast), and (c) append the
+    * surviving pairs to a downstream graft-delta table under the
+    * `neardup:` ledger. So each batch is deduped against everything
+    * that came before WITHOUT ever re-shingling the corpus — the index
+    * grows one staged dir per batch, exactly
+    * [[graft.operators.DedupOps.refreshShingleIndex]]'s contract at
+    * micro-batch grain. Staging, replay and the stamp are
+    * [[stagedIngest]]'s.
+    *
+    * The corpus is read through [[stagedCorpus]]: seed index ∪ one
+    * scan whose file list holds every prior staged dir plus this
+    * batch's, so the batch plan — and its generated code — is the same
+    * at every lineage depth. A long-running pipeline still accumulates
+    * one staged dir per batch, and with it files, footers and listing
+    * work per scan; [[compactStagedState]] folds the committed batch
+    * dirs into one compact dir between restarts — O(staged bytes),
+    * results bit-identical, the stream resumes on its original
+    * checkpoint (round 16; the former path — rebuild the seed index
+    * from a corpus snapshot and clear the staging root wholesale — was
+    * O(corpus) and remains legal but is no longer the maintenance
+    * default). */
+  def nearDupIngestPipeline(spark: SparkSession, seedDir: String,
+      srcTable: String, pairsTable: String, ckptDir: String,
+      stageRoot: String): StreamingQuery = {
+    import graft.operators.DedupOps
+    stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch, batchId, stage) =>
+      val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")))
+      val newArrays = stage(sh)
+      // the batch's own dir rides the corpus scan: corpus ∪ batch
+      val arrays = stagedCorpus(spark,
+        DedupOps.stagedShingleArrays(spark, seedDir), sh.schema,
+        stage.prior :+ stage.dir)
+      DeltaTable.write(DedupOps.incrementalNearDupsFrom(arrays, newArrays, 0.5),
+        pairsTable, "append", txn = Some((s"neardup:$ckptDir", batchId)))
+    }
   }
 
   /** STREAMING PERCEPTUAL MEDIA NEAR-DUP — the media-side twin of
@@ -648,52 +663,29 @@ object StreamingOps {
     * ONLY the batch with the native 60-bit blocked-mean aHash (one
     * codegen'd projection — the corpus is never re-hashed; items
     * under the 60-char resize floor are dropped at the boundary like
-    * q136's gate) and stage (media_id, ahash) under a deterministic
-    * per-batchId dir — 8 BYTES of standing state per item; (b) pair
-    * the batch against seed-fingerprints ∪ previously staged batches
-    * through the q136 pigeonhole band join plus a within-batch pass
+    * q136's gate) and stage (media_id, ahash) — 8 BYTES of standing
+    * state per item; (b) pair the batch against seed-fingerprints ∪
+    * previously staged batches through the q136 pigeonhole band join
+    * plus a within-batch pass
     * ([[graft.operators.MultimodalOps.neardupFingerprintPairs]] — the
     * batch side broadcasts, the q75 shape); (c) append surviving
-    * (media_a, media_b, hamming) pairs under a (checkpoint, batchId)
-    * SetTransaction. Staging, replay idempotence (a replayed batch
-    * overwrites its own dir, reads only ids < its own) and the
-    * checkpoint-identity stamp follow the other ingest pipelines. */
+    * (media_a, media_b, hamming) pairs under the `mediadup:` ledger. */
   def mediaNeardupIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, pairsTable: String, ckptDir: String,
-      stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      stageRoot: String): StreamingQuery = {
     import graft.operators.MultimodalOps
-    import graft.sources.{DeltaLog, DeltaTable}
-    val root = java.nio.file.Paths.get(stageRoot)
-    java.nio.file.Files.createDirectories(root)
-    def priorBatchDirs(before: Long): Seq[String] = batchDirs(root, before)
-    validateStageRoot(root, ckptDir, priorBatchDirs(Long.MaxValue).nonEmpty)
-    val q = spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bdir = root.resolve(s"batch-$batchId").toString
-        val fp = MultimodalOps.mediaAHash(
-            batch.select(col("media_id"), col("text"))
-              .filter(length(col("text")) >= 60))
-        stageBatch(fp, bdir)
-        val bfp = spark.read.schema(fp.schema).parquet(bdir)
-        val corpusFp = stagedCorpus(spark,
-          MultimodalOps.stagedMediaFingerprints(spark, seedDir), fp.schema,
-          priorBatchDirs(batchId))
-        val pairs = MultimodalOps.neardupFingerprintPairs(
-          bfp, corpusFp, selfPairs = true)
-        val mode =
-          if (DeltaLog.versions(pairsTable).isEmpty) "overwrite" else "append"
-        DeltaTable.write(pairs, pairsTable, mode,
-          txn = Some((s"mediadup:$ckptDir", batchId)))
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
-    java.nio.file.Files.write(root.resolve("_graft_checkpoint"),
-      q.id.toString.getBytes("UTF-8"))
-    q
+    stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch, batchId, stage) =>
+      val fp = MultimodalOps.mediaAHash(
+          batch.select(col("media_id"), col("text"))
+            .filter(length(col("text")) >= 60))
+      val bfp = stage(fp)
+      val corpusFp = stagedCorpus(spark,
+        MultimodalOps.stagedMediaFingerprints(spark, seedDir), fp.schema,
+        stage.prior)
+      DeltaTable.write(
+        MultimodalOps.neardupFingerprintPairs(bfp, corpusFp, selfPairs = true),
+        pairsTable, "append", txn = Some((s"mediadup:$ckptDir", batchId)))
+    }
   }
 
   /** STREAMING INCREMENTAL SEMANTIC DEDUP — the embedding-space twin
@@ -702,17 +694,15 @@ object StreamingOps {
     * emission — and now q141's semantic clusters). Tail a graft-delta
     * embeddings table's feed; per micro-batch: (a) cell-assign ONLY
     * the batch against the SEED corpus's frozen centroids (never a
-    * retrain) and stage (vec_id, cell, embedding) under a
-    * deterministic per-batchId dir; (b) pair batch-vs-(seed ∪
-    * previously staged batches) and batch-vs-batch through the celled
-    * candidate join; (c) contract every standing cluster to its
-    * representative and converge the pointer-doubling CC over the
-    * contracted sliver — the IDENTICAL kernel batch q141 runs
-    * ([[graft.operators.SimilarityOps.absorbSemanticBatch]]); (d)
+    * retrain) and stage (vec_id, cell, embedding); (b) pair
+    * batch-vs-(seed ∪ previously staged batches) and batch-vs-batch
+    * through the celled candidate join; (c) contract every standing
+    * cluster to its representative and converge the pointer-doubling
+    * CC over the contracted sliver — the IDENTICAL kernel batch q141
+    * runs ([[graft.operators.SimilarityOps.absorbSemanticBatch]]); (d)
     * bring the downstream labels table to the updated standing index
-    * under a SetTransaction keyed by (checkpoint, batchId) — the
-    * first batch writes it whole, every later batch MERGEs only the
-    * labels it moved.
+    * under the `semcc:` ledger — the first batch writes it whole,
+    * every later batch MERGEs only the labels it moved.
     *
     * Not append-only, on purpose: one batch vector can MERGE two
     * standing clusters, relabeling corpus vectors committed long ago
@@ -720,14 +710,10 @@ object StreamingOps {
     * [[incrementalViewPipeline]] stance). Labels never disappear
     * (clusters only grow or merge), so upserting {new rows} ∪ {rows
     * whose cluster changed} reconstructs the full index with write
-    * amplification O(batch + touched clusters), not O(index).
-    * Exactly-once:
-    * replays short-circuit on the txn ledger, a replayed batch
-    * re-stages its own per-batchId dir (overwrite) and reads only
-    * dirs with id < its own as corpus. The standing min-label
-    * invariant is maintained inductively — each overwrite holds the
-    * pointer-doubled min labels, which is exactly what the next
-    * batch's contraction requires.
+    * amplification O(batch + touched clusters), not O(index). The
+    * standing min-label invariant is maintained inductively — each
+    * labels commit holds the pointer-doubled min labels, which is exactly
+    * what the next batch's contraction requires.
     *
     * The staged (vec_id, embedding) rows take ONE `distinct()` over
     * the combined scan of every prior dir, not one per dir. That is
@@ -738,70 +724,52 @@ object StreamingOps {
     * read twice before or after a fold. */
   def semanticIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, labelsTable: String, ckptDir: String,
-      stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      stageRoot: String): StreamingQuery = {
     import graft.operators.SimilarityOps
-    import graft.sources.{DeltaLog, DeltaTable}
-    val root = java.nio.file.Paths.get(stageRoot)
-    java.nio.file.Files.createDirectories(root)
-    def priorBatchDirs(before: Long): Seq[String] = batchDirs(root, before)
-    validateStageRoot(root, ckptDir, priorBatchDirs(Long.MaxValue).nonEmpty)
-    val q = spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val batch = batch0.select(col("vec_id"), col("embedding"))
-        val cent = SimilarityOps.frozenCentroids(spark, seedDir)
-        val bdir = root.resolve(s"batch-$batchId").toString
-        val assigned = SimilarityOps.cellAssign(batch, cent,
-          carryEmbedding = true)
-        stageBatch(assigned, bdir)
-        val prior = priorBatchDirs(batchId)
-        val corpus = stagedCorpus(spark,
-          graft.Tables.load(spark, seedDir, "embeddings")
-            .select("vec_id", "embedding"),
-          assigned.schema, prior,
-          _.select(col("vec_id"), col("embedding")).distinct())
-        val corpusCells = stagedCorpus(spark,
-          SimilarityOps.stagedCorpusCells(spark, seedDir), assigned.schema,
-          prior, _.select(col("vec_id"), col("cell")))
-        val labels =
-          if (DeltaLog.versions(labelsTable).isEmpty)
-            SimilarityOps.stagedSemanticLabels(spark, seedDir)
-              .select("id", "label")
-          else DeltaTable.read(spark, labelsTable)
-            .select(col("vec_id").as("id"), col("cluster_id").as("label"))
-        val updated = SimilarityOps.absorbSemanticBatch(spark, labels,
-          corpus, corpusCells,
-          spark.read.schema(assigned.schema).parquet(bdir), s"ing$batchId")
-        if (DeltaLog.versions(labelsTable).isEmpty)
-          DeltaTable.write(updated, labelsTable, "overwrite",
-            txn = Some((s"semcc:$ckptDir", batchId)))
-        else {
-          // MERGE only the labels this batch actually moved (round 15
-          // closes the scaladoc's "at lake scale this is a MERGE"
-          // promise): labels never disappear — clusters only grow or
-          // merge — so upserting {new rows} ∪ {rows whose cluster_id
-          // changed} reconstructs the full standing index while the
-          // write amplification stays O(batch + touched clusters),
-          // not O(index). The diff join reads the same label relation
-          // the contraction already consumed this batch.
-          val changed = updated.as("u")
-            .join(labels.select(col("id").as("vec_id"),
-              col("label").as("old_label")).as("c"), Seq("vec_id"), "left")
-            .filter(col("old_label").isNull ||
-              col("old_label") =!= col("cluster_id"))
-            .select(col("vec_id"), col("cluster_id"))
-          DeltaTable.merge(spark, labelsTable, changed, Seq("vec_id"),
-            txn = Some((s"semcc:$ckptDir", batchId)))
-        }
-        ()
+    stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch0, batchId, stage) =>
+      val batch = batch0.select(col("vec_id"), col("embedding"))
+      val cent = SimilarityOps.frozenCentroids(spark, seedDir)
+      val assigned = SimilarityOps.cellAssign(batch, cent,
+        carryEmbedding = true)
+      val staged = stage(assigned)
+      val prior = stage.prior
+      val corpus = stagedCorpus(spark,
+        graft.Tables.load(spark, seedDir, "embeddings")
+          .select("vec_id", "embedding"),
+        assigned.schema, prior,
+        _.select(col("vec_id"), col("embedding")).distinct())
+      val corpusCells = stagedCorpus(spark,
+        SimilarityOps.stagedCorpusCells(spark, seedDir), assigned.schema,
+        prior, _.select(col("vec_id"), col("cell")))
+      val fresh = DeltaLog.versions(labelsTable).isEmpty
+      val labels =
+        if (fresh)
+          SimilarityOps.stagedSemanticLabels(spark, seedDir)
+            .select("id", "label")
+        else DeltaTable.read(spark, labelsTable)
+          .select(col("vec_id").as("id"), col("cluster_id").as("label"))
+      val updated = SimilarityOps.absorbSemanticBatch(spark, labels,
+        corpus, corpusCells, staged, s"ing$batchId")
+      val txn = Some((s"semcc:$ckptDir", batchId))
+      if (fresh) DeltaTable.write(updated, labelsTable, "append", txn = txn)
+      else {
+        // MERGE only the labels this batch actually moved (round 15
+        // closes the scaladoc's "at lake scale this is a MERGE"
+        // promise): labels never disappear — clusters only grow or
+        // merge — so upserting {new rows} ∪ {rows whose cluster_id
+        // changed} reconstructs the full standing index while the
+        // write amplification stays O(batch + touched clusters),
+        // not O(index). The diff join reads the same label relation
+        // the contraction already consumed this batch.
+        val changed = updated.as("u")
+          .join(labels.select(col("id").as("vec_id"),
+            col("label").as("old_label")).as("c"), Seq("vec_id"), "left")
+          .filter(col("old_label").isNull ||
+            col("old_label") =!= col("cluster_id"))
+          .select(col("vec_id"), col("cluster_id"))
+        DeltaTable.merge(spark, labelsTable, changed, Seq("vec_id"), txn = txn)
       }
-      .outputMode(OutputMode.Update())
-      .start()
-    java.nio.file.Files.write(root.resolve("_graft_checkpoint"),
-      q.id.toString.getBytes("UTF-8"))
-    q
+    }
   }
 
   /** STREAMING INCREMENTAL SQ8 — the vector-side twin of
@@ -811,74 +779,40 @@ object StreamingOps {
     * ([[graft.operators.SimilarityOps.quantizeBatchFrozen]] — the
     * production codebook contract: out-of-range values saturate, the
     * codebook never rescales, every previously served code stays
-    * valid), stage the codes under a DETERMINISTIC per-batchId dir,
-    * and append them to a downstream graft-delta codes table. The
-    * serving index ([[sqServingRecon]]) is seed ∪ staged batches —
-    * the corpus is never re-quantized, mirroring
+    * valid), stage the codes, and append them to a downstream
+    * graft-delta codes table under the `sqcodes:` ledger. The serving
+    * index ([[sqServingRecon]]) is seed ∪ staged batches — the corpus
+    * is never re-quantized, mirroring
     * [[graft.operators.SimilarityOps.refreshSqIndex]]'s contract at
-    * micro-batch grain.
-    *
-    * Exactly-once: the codes append commits a SetTransaction keyed by
-    * (checkpoint, batchId) — a replayed batch short-circuits against
-    * the ledger — and its re-staged dir OVERWRITES the same
-    * per-batchId path, so replays are idempotent on both the output
-    * table and the index. Restart-safe with no driver state (batch
-    * dirs rediscovered by listing), and the staging root carries the
-    * same checkpoint-identity stamp as the near-dup pipeline: a
-    * checkpoint reset cannot silently pair with stale staged codes.
-    * Compaction path: [[compactStagedState]] between restarts folds
-    * the committed code dirs into one compact dir in O(staged bytes)
-    * — [[sqServingRecon]] reads compact ∪ recent batches unchanged. */
+    * micro-batch grain. Compaction path: [[compactStagedState]]
+    * between restarts folds the committed code dirs into one compact
+    * dir in O(staged bytes) — [[sqServingRecon]] reads compact ∪
+    * recent batches unchanged. */
   def sqIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, codesTable: String, ckptDir: String,
-      stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      stageRoot: String): StreamingQuery = {
     import graft.operators.SimilarityOps
-    import graft.sources.{DeltaLog, DeltaTable}
-    val root = java.nio.file.Paths.get(stageRoot)
-    java.nio.file.Files.createDirectories(root)
-    validateStageRoot(root, ckptDir, batchDirs(root, Long.MaxValue).nonEmpty)
-    val q = spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bdir = root.resolve(s"batch-$batchId").toString
-        val vecs = batch.select(col("vec_id"), col("embedding"))
-        val quantized = SimilarityOps.quantizeBatchFrozen(spark, seedDir, vecs)
-        stageBatch(quantized, bdir)
-        val codes = spark.read.schema(quantized.schema).parquet(bdir)
-        val mode =
-          if (DeltaLog.versions(codesTable).isEmpty) "overwrite" else "append"
-        DeltaTable.write(codes, codesTable, mode,
-          txn = Some((s"sqcodes:$ckptDir", batchId)))
-        // MAINTENANCE METRIC, log-only: score the batch against the
-        // seed corpus's IVF quality baseline (one k×dim broadcast
-        // argmax — never a corpus pass) and persist it per batch under
-        // `_drift/` (a name batchDirs cannot mistake for staged
-        // codes). The REBUILD decision stays OUTSIDE the micro-batch
-        // by design — an operator (or a scheduled job) watches the
-        // metric and calls maybeRebuildIvfIndex between batches; a
-        // re-cluster inside foreachBatch would stall the stream and
-        // tie index lifetime to micro-batch cadence.
-        val drift = SimilarityOps.ivfDriftFraction(spark, seedDir, vecs)
-        val ddir = root.resolve("_drift")
-        java.nio.file.Files.createDirectories(ddir)
-        // temp + atomic move, same discipline as the log paths: a
-        // crash mid-write must never leave a half-written metric file
-        // for sqIngestDriftLog to choke on
-        val tmp = java.nio.file.Files.createTempFile(ddir, ".tmp-", "")
-        java.nio.file.Files.write(tmp, drift.toString.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp, ddir.resolve(batchId.toString),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        System.err.println(s"[graft] sqIngest batch=$batchId driftFraction=$drift")
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
-    java.nio.file.Files.write(root.resolve("_graft_checkpoint"),
-      q.id.toString.getBytes("UTF-8"))
-    q
+    stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch, batchId, stage) =>
+      val vecs = batch.select(col("vec_id"), col("embedding"))
+      val codes = stage(SimilarityOps.quantizeBatchFrozen(spark, seedDir, vecs))
+      DeltaTable.write(codes, codesTable, "append",
+        txn = Some((s"sqcodes:$ckptDir", batchId)))
+      // MAINTENANCE METRIC, log-only: score the batch against the
+      // seed corpus's IVF quality baseline (one k×dim broadcast
+      // argmax — never a corpus pass) and persist it per batch under
+      // `_drift/` (a name batchDirs cannot mistake for staged
+      // codes), atomically: a crash mid-write must never leave a
+      // half-written metric file for sqIngestDriftLog to choke on.
+      // The REBUILD decision stays OUTSIDE the micro-batch by design
+      // — an operator (or a scheduled job) watches the metric and
+      // calls maybeRebuildIvfIndex between batches; a re-cluster
+      // inside foreachBatch would stall the stream and tie index
+      // lifetime to micro-batch cadence.
+      val drift = SimilarityOps.ivfDriftFraction(spark, seedDir, vecs)
+      val ddir = Files.createDirectories(Paths.get(stageRoot, "_drift"))
+      writeAtomically(ddir.resolve(batchId.toString), drift.toString)
+      System.err.println(s"[graft] sqIngest batch=$batchId driftFraction=$drift")
+    }
   }
 
   /** STREAMING EXACT-SUBSTRING DEDUP — the ingest twin of the batch
@@ -906,14 +840,11 @@ object StreamingOps {
     * set (hash-partitioned, no payloads); the within-batch pass is
     * one rank window over batch-sized rows. The corpus is never
     * re-scanned — its hash set is staged once (seed) plus one small
-    * parquet per ingested batch. Exactly-once via SetTransaction
-    * keyed by (checkpoint, batchId); staged batch dirs OVERWRITE on
-    * replay; the staging root carries the checkpoint-identity stamp
-    * shared with the other ingest pipelines. */
+    * parquet per ingested batch. The spans append commits under the
+    * `substr:` ledger. */
   def substrIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, spansTable: String, ckptDir: String,
-      stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      stageRoot: String): StreamingQuery =
     substrPipeline(spark, seedDir, srcTable, spansTable, None,
       ckptDir, stageRoot)
 
@@ -926,93 +857,71 @@ object StreamingOps {
     * docs rebuilt from kept tokens, clean docs one canonical
     * projection — the batch's spans are already in hand, so emission
     * adds no second detection pass). Exactly-once per table: the
-    * spans write and the clean write each carry their own
-    * SetTransaction ledger keyed by (checkpoint, batchId), so a crash
-    * between the two writes replays idempotently — the spans write
-    * no-ops, the clean write completes. */
+    * spans write and the clean write each carry their own ledger
+    * (`substr:`, `substrclean:`), so a crash between the two writes
+    * replays idempotently — the spans write no-ops, the clean write
+    * completes. */
   def substrCleanIngestPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, spansTable: String, cleanTable: String,
-      ckptDir: String, stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      ckptDir: String, stageRoot: String): StreamingQuery =
     substrPipeline(spark, seedDir, srcTable, spansTable, Some(cleanTable),
       ckptDir, stageRoot)
 
   private def substrPipeline(spark: SparkSession, seedDir: String,
       srcTable: String, spansTable: String, cleanTable: Option[String],
-      ckptDir: String, stageRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      ckptDir: String, stageRoot: String): StreamingQuery = {
     import graft.operators.DedupOps
-    import graft.sources.{DeltaLog, DeltaTable}
     import org.apache.spark.sql.expressions.Window
-    val root = java.nio.file.Paths.get(stageRoot)
-    java.nio.file.Files.createDirectories(root)
-    validateStageRoot(root, ckptDir, batchDirs(root, Long.MaxValue).nonEmpty)
-    val q = spark.readStream.format("graft-delta").load(srcTable)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bdir = root.resolve(s"batch-$batchId").toString
-        val docs = batch.select(col("doc_id"), col("text"))
-        val bw0 = DedupOps.windowHashes(docs)
-        // boilerplate guard, batch-grained (see scaladoc): a hash
-        // occurring absurdly often in ONE batch is excluded before
-        // any join can fan out on it
-        val occ = bw0.groupBy("h")
-          .agg(count(lit(1)).as("occ"),
-            countDistinct(col("doc_id")).as("nd"))
-        val bw = bw0.join(
-          occ.filter(col("occ") <= DedupOps.substrOccCap)
-            .select("h", "nd"), "h")
-        // stage this batch's distinct hashes for LATER batches
-        // (overwrite -> replay-idempotent)
-        val bh = bw.select("h").distinct()
-        stageBatch(bh, bdir)
-        val corpusH = stagedCorpus(spark,
-          DedupOps.stagedWindowHashSet(spark, seedDir), bh.schema,
-          batchDirs(root, batchId))
-        val vsCorpus = bw.join(corpusH, Seq("h"), "left_semi")
-          .select("doc_id", "pos")
-        // within-batch: cross-document hashes only (nd > 1, the batch
-        // q131 rule — a hash repeating inside a single new doc and
-        // nowhere else is NOT duplicated text), keeper = rank 1
-        val withinBatch = bw.filter(col("nd") > 1)
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("h").orderBy("doc_id", "pos")))
-          .filter(col("rk") > 1)
-          .select("doc_id", "pos")
-        val spans = DedupOps.mergeRemovalSpans(
-          vsCorpus.unionByName(withinBatch).distinct())
-          .withColumn("batch_id", lit(batchId))
-        // With a clean sink the span relation is consumed FOUR times
-        // (the spans write + three subtrees inside cleanedTextOver);
-        // persist it so span detection — hashing, occurrence cap,
-        // corpus probe — executes once per batch, not per consumer.
-        if (cleanTable.isDefined) spans.persist()
-        try {
-          val mode =
-            if (DeltaLog.versions(spansTable).isEmpty) "overwrite"
-            else "append"
-          DeltaTable.write(spans, spansTable, mode,
-            txn = Some((s"substr:$ckptDir", batchId)))
-          cleanTable.foreach { ct =>
-            val cleaned = DedupOps.cleanedTextOver(docs,
-              spans.select("doc_id", "span_start", "span_end"))
-              .withColumn("batch_id", lit(batchId))
-            val cmode =
-              if (DeltaLog.versions(ct).isEmpty) "overwrite" else "append"
-            DeltaTable.write(cleaned, ct, cmode,
-              txn = Some((s"substrclean:$ckptDir", batchId)))
-          }
-        } finally {
-          if (cleanTable.isDefined) spans.unpersist()
+    stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch, batchId, stage) =>
+      val docs = batch.select(col("doc_id"), col("text"))
+      val bw0 = DedupOps.windowHashes(docs)
+      // boilerplate guard, batch-grained (see scaladoc): a hash
+      // occurring absurdly often in ONE batch is excluded before
+      // any join can fan out on it
+      val occ = bw0.groupBy("h")
+        .agg(count(lit(1)).as("occ"),
+          countDistinct(col("doc_id")).as("nd"))
+      val bw = bw0.join(
+        occ.filter(col("occ") <= DedupOps.substrOccCap)
+          .select("h", "nd"), "h")
+      // stage this batch's distinct hashes for LATER batches
+      val bh = bw.select("h").distinct()
+      stage(bh)
+      val corpusH = stagedCorpus(spark,
+        DedupOps.stagedWindowHashSet(spark, seedDir), bh.schema,
+        stage.prior)
+      val vsCorpus = bw.join(corpusH, Seq("h"), "left_semi")
+        .select("doc_id", "pos")
+      // within-batch: cross-document hashes only (nd > 1, the batch
+      // q131 rule — a hash repeating inside a single new doc and
+      // nowhere else is NOT duplicated text), keeper = rank 1
+      val withinBatch = bw.filter(col("nd") > 1)
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("h").orderBy("doc_id", "pos")))
+        .filter(col("rk") > 1)
+        .select("doc_id", "pos")
+      val spans = DedupOps.mergeRemovalSpans(
+        vsCorpus.unionByName(withinBatch).distinct())
+        .withColumn("batch_id", lit(batchId))
+      // With a clean sink the span relation is consumed FOUR times
+      // (the spans write + three subtrees inside cleanedTextOver);
+      // persist it so span detection — hashing, occurrence cap,
+      // corpus probe — executes once per batch, not per consumer.
+      if (cleanTable.isDefined) spans.persist()
+      try {
+        DeltaTable.write(spans, spansTable, "append",
+          txn = Some((s"substr:$ckptDir", batchId)))
+        cleanTable.foreach { ct =>
+          val cleaned = DedupOps.cleanedTextOver(docs,
+            spans.select("doc_id", "span_start", "span_end"))
+            .withColumn("batch_id", lit(batchId))
+          DeltaTable.write(cleaned, ct, "append",
+            txn = Some((s"substrclean:$ckptDir", batchId)))
         }
-        ()
+      } finally {
+        if (cleanTable.isDefined) spans.unpersist()
       }
-      .outputMode(OutputMode.Append())
-      .start()
-    java.nio.file.Files.write(root.resolve("_graft_checkpoint"),
-      q.id.toString.getBytes("UTF-8"))
-    q
+    }
   }
 
   /** The live SQ8 serving relation a [[sqIngestPipeline]] maintains:
@@ -1023,14 +932,9 @@ object StreamingOps {
       stageRoot: String): DataFrame = {
     val seed = graft.operators.SimilarityOps.stagedSqRecon(spark, seedDir)
     stagedCorpus(spark, seed, seed.schema,
-      batchDirs(java.nio.file.Paths.get(stageRoot), Long.MaxValue))
+      batchDirs(Paths.get(stageRoot), Long.MaxValue))
   }
 
-  /** The per-batch drift metrics a [[sqIngestPipeline]] persists under
-    * `_drift/` — batchId → drift fraction. This is the production
-    * trigger surface for [[graft.operators.SimilarityOps.maybeRebuildIvfIndex]]:
-    * an operator polls it BETWEEN batches and rebuilds when sustained
-    * drift crosses the policy threshold. */
   /** The BETWEEN-batches rebuild cue the drift log exists for: true
     * when the trailing `window` batches ALL scored past `threshold` —
     * sustained distribution shift, not one noisy batch. The operator's
@@ -1046,11 +950,16 @@ object StreamingOps {
     recent.size >= window && recent.forall(_._2 > threshold)
   }
 
+  /** The per-batch drift metrics a [[sqIngestPipeline]] persists under
+    * `_drift/` — batchId → drift fraction. This is the production
+    * trigger surface for [[graft.operators.SimilarityOps.maybeRebuildIvfIndex]]:
+    * an operator polls it BETWEEN batches and rebuilds when sustained
+    * drift crosses the policy threshold. */
   def sqIngestDriftLog(stageRoot: String): Map[Long, Double] = {
-    val d = java.nio.file.Paths.get(stageRoot).resolve("_drift")
-    if (!java.nio.file.Files.isDirectory(d)) Map.empty
+    val d = Paths.get(stageRoot).resolve("_drift")
+    if (!Files.isDirectory(d)) Map.empty
     else {
-      val s = java.nio.file.Files.list(d)
+      val s = Files.list(d)
       try {
         import scala.jdk.CollectionConverters._
         // entries that don't parse (stray files, a writer's in-flight
@@ -1060,7 +969,7 @@ object StreamingOps {
           for {
             id <- f.getFileName.toString.toLongOption
             v <- scala.util.Try(new String(
-              java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toDouble)
+              Files.readAllBytes(f), "UTF-8").trim.toDouble)
               .toOption
           } yield id -> v
         }.toMap
@@ -1098,63 +1007,46 @@ object StreamingOps {
     * fold in (type, day) order. */
   def burstAlertPipeline(spark: SparkSession, srcTable: String,
       alertsTable: String, stateTable: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.sources.{DeltaLog, DeltaTable}
-    spark.readStream.format("graft-delta").load(srcTable)
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(unix_timestamp(col("window.start")).as("day_epoch"),
-        col("event_type"), col("n_events"))
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        val newDays = batch
-          .select(col("event_type"), col("day_epoch"), col("n_events"))
-          .as[(String, Long, Long)].collect().sortBy(r => (r._1, r._2))
-        if (newDays.nonEmpty) {
-          var st: Map[String, (Long, Double, Double)] =
-            if (DeltaLog.versions(stateTable).isEmpty) Map.empty
-            else DeltaTable.read(spark, stateTable)
-              .select(col("event_type"), col("n"), col("mean"), col("m2"))
-              .as[(String, Long, Double, Double)]
-              .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-          val alerts = newDays.map { case (t, day, n) =>
-            val (cn, mean, m2) = st.getOrElse(t, (0L, 0.0, 0.0))
-            val std = if (cn >= 2) math.sqrt(m2 / (cn - 1)) else 0.0
-            val z =
-              if (std == 0.0) 0.0
-              else BigDecimal((n - mean) / std)
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-            val n1 = cn + 1
-            val d = n - mean
-            val mean1 = mean + d / n1
-            st += t -> ((n1, mean1, m2 + d * (n - mean1)))
-            (t, day, n, z, math.abs(z) > 2.0)
-          }.toSeq
-          val adf = alerts.toDF("event_type", "day_epoch", "n_events",
-            "z_score", "is_burst")
-          val amode =
-            if (DeltaLog.versions(alertsTable).isEmpty) "overwrite"
-            else "append"
-          DeltaTable.write(adf, alertsTable, amode,
-            txn = Some((s"burst:$ckptDir", batchId)))
-          val sdf = alerts.map(_._1).distinct
+      : StreamingQuery =
+    ledgeredStream(spark, srcTable, ckptDir, _.withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(unix_timestamp(col("window.start")).as("day_epoch"),
+          col("event_type"), col("n_events"))) { (batch, batchId) =>
+      import spark.implicits._
+      val newDays = batch
+        .select(col("event_type"), col("day_epoch"), col("n_events"))
+        .as[(String, Long, Long)].collect().sortBy(r => (r._1, r._2))
+      if (newDays.nonEmpty) {
+        var st: Map[String, (Long, Double, Double)] =
+          if (DeltaLog.versions(stateTable).isEmpty) Map.empty
+          else DeltaTable.read(spark, stateTable)
+            .select(col("event_type"), col("n"), col("mean"), col("m2"))
+            .as[(String, Long, Double, Double)]
+            .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+        val alerts = newDays.map { case (t, day, n) =>
+          val (cn, mean, m2) = st.getOrElse(t, (0L, 0.0, 0.0))
+          val std = if (cn >= 2) math.sqrt(m2 / (cn - 1)) else 0.0
+          val z =
+            if (std == 0.0) 0.0
+            else BigDecimal((n - mean) / std)
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+          val n1 = cn + 1
+          val d = n - mean
+          val mean1 = mean + d / n1
+          st += t -> ((n1, mean1, m2 + d * (n - mean1)))
+          (t, day, n, z, math.abs(z) > 2.0)
+        }.toSeq
+        DeltaTable.write(alerts.toDF("event_type", "day_epoch", "n_events",
+            "z_score", "is_burst"), alertsTable, "append",
+          txn = Some((s"burst:$ckptDir", batchId)))
+        writeOrMerge(spark, stateTable, Seq("event_type"),
+          alerts.map(_._1).distinct
             .map(t => (t, st(t)._1, st(t)._2, st(t)._3))
-            .toDF("event_type", "n", "mean", "m2")
-          if (DeltaLog.versions(stateTable).isEmpty)
-            DeltaTable.write(sdf, stateTable, "overwrite",
-              txn = Some((s"burststate:$ckptDir", batchId)))
-          else
-            DeltaTable.merge(spark, stateTable, sdf, Seq("event_type"),
-              txn = Some((s"burststate:$ckptDir", batchId)))
-        }
-        ()
+            .toDF("event_type", "n", "mean", "m2"),
+          (s"burststate:$ckptDir", batchId))
       }
-      .start()
-  }
+    }
 
   /** Emit-on-finalize sessionization: `flatMapGroupsWithState` with an
     * EVENT-TIME timeout — a session row is emitted exactly once, when
@@ -1241,8 +1133,7 @@ object StreamingOps {
     * `dropDuplicatesWithinWatermark` on an event-time column to cap
     * state instead of keeping it forever. */
   def dedupIngestPipeline(spark: SparkSession, srcDir: String,
-      outDir: String, ckptDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Doc].schema
     spark.readStream.schema(schema).parquet(srcDir)
       .withColumn("fingerprint",

@@ -14,6 +14,22 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** A ledgered sink table a staged ingest pipeline left: valid on the
+    * wire (`tools/delta_validate.py`) and created by an APPEND commit. */
+  private def assertLedgeredSink(t: String): Unit = {
+    import scala.sys.process._
+    val out = new StringBuilder
+    val code = Process(Seq("python3",
+      new java.io.File("tools/delta_validate.py").getAbsolutePath, t))
+      .!(ProcessLogger(s => out.append(s).append('\n'),
+        s => out.append(s).append('\n')))
+    assert(code === 0, s"delta_validate.py failed on $t:\n$out")
+    val v0 = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
+      .get(t, "_delta_log", "00000000000000000000.json")), "UTF-8")
+    assert(v0.contains("\"operation\":\"APPEND\""),
+      s"$t: version 0 is not an APPEND commit:\n$v0")
+  }
+
   test("streaming hourly rollup equals batch aggregation of same data") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
@@ -851,6 +867,7 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSet === expected)
     seedMtimes.foreach { case (f, m) =>
       assert(fileMtime(f) === m, s"seed index file rewritten: $f") }
+    assertLedgeredSink(pairs)
   }
 
   test("near-dup stage dirs: an empty batch stages an empty dir the " +
@@ -903,6 +920,7 @@ class StreamingSpec extends SparkSpec {
     assert(second.forall(f => f.endsWith(".parquet") && !f.startsWith(".")))
     assert(spark.read.schema(schema).parquet(s"$stage/batch-1").count() === rows)
     assert(spark.read.format("graft-delta").load(pairs).count() === pairsBefore)
+    assertLedgeredSink(pairs)
   }
 
   test("staged corpus: the near-dup batch plan has the same scans and " +
@@ -1160,6 +1178,7 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairRows() === expected2,
       "engine-triggered compaction changed results")
+    assertLedgeredSink(pairs)
   }
 
   test("streaming exact-substring dedup: batch spans == the batch q131 " +
@@ -1238,6 +1257,7 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(got.toSet === expected,
       s"stream/batch span divergence:\n got ${got.toSet}\n exp $expected")
+    assertLedgeredSink(spansT)
   }
 
   test("streaming cleaned-corpus emission: per-batch cleaned rows == the " +
@@ -1308,6 +1328,7 @@ class StreamingSpec extends SparkSpec {
       spark.read.format("graft-delta").load(spansT)
         .filter(col("doc_id") === g._1).count() > 0).map(_._1).toSet
     assert(affected === Set(100L, 103L, 200L, 300L))
+    Seq(spansT, cleanT).foreach(assertLedgeredSink)
   }
 
   test("streaming incremental SQ8: frozen-codebook batches, exactly-once " +
@@ -1404,6 +1425,7 @@ class StreamingSpec extends SparkSpec {
       "no batch can exceed an impossible threshold")
     assert(!StreamingOps.sustainedDrift(fake.toString, window = 4),
       "a window larger than the log must not cue")
+    assertLedgeredSink(codes)
   }
 
   test("streaming perceptual media near-dup: batch pairs vs the growing " +
@@ -1471,6 +1493,7 @@ class StreamingSpec extends SparkSpec {
     } yield (fps(i)._1, fps(j)._1)).toSet
     assert(got.toSet === expected,
       s"streamed pairs != brute-force ground truth: got=${got.toSet} want=$expected")
+    assertLedgeredSink(pairsT)
   }
 
   test("streaming incremental semantic dedup: labels == from-scratch " +
@@ -1577,6 +1600,7 @@ class StreamingSpec extends SparkSpec {
       s"post-compaction batch must join the prior-batch cluster: $got2")
     assert(got2 === want + (400L -> 101L),
       s"compaction changed standing labels: got=$got2")
+    assertLedgeredSink(labelsT)
   }
 
   test("maintenance rehearsal e2e: drifting stream trips the cue, the " +
@@ -1685,6 +1709,7 @@ class StreamingSpec extends SparkSpec {
       "replays must not duplicate code rows")
     assert(out.length === (20 + 30 + 30 + 30 + 25) * dims,
       s"expected codes for every streamed vector: ${out.length}")
+    assertLedgeredSink(codes)
   }
 
   test("streaming change feed: readChangeFeed delivers row-level changes " +
@@ -1890,6 +1915,63 @@ class StreamingSpec extends SparkSpec {
       spark, seedDir, src, pairs, s"$base/ckpt1", stage)
     q2.processAllAvailable()
     q2.stop()
+  }
+
+  test("staging guard: every staged pipeline refuses a fresh or a swapped " +
+      "checkpoint; the stamp is replaced atomically") {
+    import java.nio.file.{Files, Paths}
+    val base = tempDir("graft-stage-guard-all")
+    val (src, pairs, stage) = (s"$base/src", s"$base/pairs", s"$base/stage")
+    val seedDir = s"$base/seed"
+    def docs(rows: (Long, String)*) = rows.toSeq
+      .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs(0L -> "seed document about rivers and morning light on the path")
+      .write.parquet(s"$seedDir/documents.parquet")
+    docs(100L -> "a streamed doc with its own unique phrasing entirely")
+      .write.format("graft-delta").mode("append").save(src)
+    def run(ckpt: String, root: String): String = {
+      val q = StreamingOps.nearDupIngestPipeline(
+        spark, seedDir, src, pairs, ckpt, root)
+      try q.processAllAvailable() finally q.stop()
+      q.id.toString
+    }
+    // `stage` holds staged batches stamped for ckpt1; ckpt2 is live
+    // under another root
+    run(s"$base/ckpt1", stage)
+    run(s"$base/ckpt2", s"$base/stage2")
+    // the guard runs before any stream starts, so every start function
+    // reaches it with the near-dup source and seed
+    val starts: Seq[(String, (String, String) => Any)] = Seq(
+      "nearDup" -> ((c, r) => StreamingOps.nearDupIngestPipeline(
+        spark, seedDir, src, pairs, c, r)),
+      "media" -> ((c, r) => StreamingOps.mediaNeardupIngestPipeline(
+        spark, seedDir, src, pairs, c, r)),
+      "semantic" -> ((c, r) => StreamingOps.semanticIngestPipeline(
+        spark, seedDir, src, pairs, c, r)),
+      "sq" -> ((c, r) => StreamingOps.sqIngestPipeline(
+        spark, seedDir, src, pairs, c, r)),
+      "substr" -> ((c, r) => StreamingOps.substrIngestPipeline(
+        spark, seedDir, src, pairs, c, r)),
+      "substrClean" -> ((c, r) => StreamingOps.substrCleanIngestPipeline(
+        spark, seedDir, src, pairs, s"$base/clean", c, r)))
+    for ((name, start) <- starts) {
+      val exFresh = intercept[IllegalStateException](
+        start(s"$base/ckpt-fresh", stage))
+      assert(exFresh.getMessage.contains("fresh"), name)
+      val exSwap = intercept[IllegalStateException](
+        start(s"$base/ckpt2", stage))
+      assert(exSwap.getMessage.contains("stamped for"), name)
+    }
+    // a crash before the stamp's rename leaves only its temp beside
+    // the intact stamp: the restart validates, restamps, and leaves no
+    // temp behind
+    val tmp = Paths.get(stage, "_graft_checkpoint.tmp")
+    Files.write(tmp, Array.emptyByteArray)
+    val id = run(s"$base/ckpt1", stage)
+    assert(!Files.exists(tmp))
+    assert(new String(Files.readAllBytes(
+      Paths.get(stage, "_graft_checkpoint")), "UTF-8") === id)
   }
 
   test("finalized sessionization emits each closed session exactly once") {
