@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -110,19 +111,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** Session-scoped registration so SQL/expr() can call the native
-  * functions. Idempotent — safe to call from every query builder. */
+  * functions. Idempotent — safe to call from every query builder: each
+  * name is written only when the session's registry lacks it, so a
+  * session whose [[graft.GraftExtensions]] already installed the
+  * functions, or an earlier call, is left as it is. */
 object GraftFunctions {
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
+    val registry = spark.sessionState.functionRegistry
+    def define(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    define("graft_cosine",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2,
           s"graft_cosine requires exactly 2 arguments, got ${exprs.length}")
         CosineSimilarity(exprs.head, exprs(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
+      })
+    define("graft_shingles",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2,
           s"graft_shingles requires exactly 2 arguments, got ${exprs.length}")
@@ -132,18 +137,14 @@ object GraftFunctions {
             s"graft_shingles n must be an integer literal, got $other")
         }
         WordShingles(exprs.head, n)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_overlap",
+      })
+    define("graft_sorted_overlap",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2,
           s"graft_sorted_overlap requires exactly 2 arguments, got ${exprs.length}")
         SortedOverlap(exprs.head, exprs(1))
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane_bits",
+      })
+    define("graft_hyperplane_bits",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2,
           s"graft_hyperplane_bits requires exactly 2 arguments, got ${exprs.length}")
@@ -153,10 +154,8 @@ object GraftFunctions {
             s"graft_hyperplane_bits nPlanes must be an integer literal, got $other")
         }
         HyperplaneBits(exprs.head, n)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_project",
+      })
+    define("graft_project",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2,
           s"graft_project requires exactly 2 arguments, got ${exprs.length}")
@@ -166,54 +165,43 @@ object GraftFunctions {
             s"graft_project k must be an integer literal, got $other")
         }
         RandomProjection(exprs.head, n)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ahash",
+      })
+    define("graft_ahash",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 1,
           s"graft_ahash requires exactly 1 argument, got ${exprs.length}")
         AHash(exprs.head)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc",
+      })
+    define("graft_nfc",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 1,
           s"graft_nfc requires exactly 1 argument, got ${exprs.length}")
         NfcNormalize(exprs.head)
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_agg",
+      })
+    define("graft_simhash_agg",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 1,
           s"graft_simhash_agg requires exactly 1 argument, got ${exprs.length}")
         SimHashAgg(exprs.head).toAggregateExpression()
-      },
-      "built-in")
+      })
     def intLit(e: Expression, what: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
       case other => throw new IllegalArgumentException(
         s"$what must be an integer literal, got $other")
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
+    define("graft_bloom_agg",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 3,
           s"graft_bloom_agg requires exactly 3 arguments, got ${exprs.length}")
         BloomFilterAgg(exprs.head, intLit(exprs(1), "graft_bloom_agg mBits"),
           intLit(exprs(2), "graft_bloom_agg k")).toAggregateExpression()
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
+      })
+    define("graft_bloom_contains",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 3,
           s"graft_bloom_contains requires exactly 3 arguments, got ${exprs.length}")
         BloomContains(exprs.head, exprs(1),
           intLit(exprs(2), "graft_bloom_contains k"))
-      },
-      "built-in")
+      })
   }
 }

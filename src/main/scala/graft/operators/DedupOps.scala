@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.TextOps.normText
@@ -1731,17 +1731,35 @@ object DedupOps {
     * query keeps the exact uncapped form. */
   private[graft] def incrementalNearDupsFrom(arrays: DataFrame,
       newArrays: DataFrame, tau: Double,
-      capBytes: Long = Hints.BroadcastCap): DataFrame = {
+      capBytes: Long = Hints.BroadcastCap): DataFrame =
+    nearDupsOfBatch(arrays, collectBatch(newArrays, capBytes), tau)
+
+  /** The batch's (doc_id, n, sarr) rows on the driver, refused with a
+    * [[BatchTooLargeException]] when `newArrays`'s optimizer size
+    * estimate passes `capBytes`. */
+  private[graft] def collectBatch(newArrays: DataFrame,
+      capBytes: Long): Array[(Long, Int, Array[Long])] = {
+    val est = newArrays.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est > BigInt(capBytes)) throw new BatchTooLargeException(est, capBytes)
+    arrayRows(newArrays).collect()
+  }
+
+  /** An array relation's (doc_id, n, sarr) rows, typed. */
+  private def arrayRows(a: DataFrame): Dataset[(Long, Int, Array[Long])] = {
+    import a.sparkSession.implicits._
+    a.select("doc_id", "n", "sarr").as[(Long, Int, Array[Long])]
+  }
+
+  /** [[incrementalNearDupsFrom]]'s pass over `arrays` for a batch already
+    * collected by [[collectBatch]]. */
+  private[graft] def nearDupsOfBatch(arrays: DataFrame,
+      batch: Array[(Long, Int, Array[Long])], tau: Double): DataFrame = {
     val spark = arrays.sparkSession
     import spark.implicits._
     val lo = pruneFloor(tau)
-    val est = newArrays.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est > BigInt(capBytes)) throw new BatchTooLargeException(est, capBytes)
-    def docs(a: DataFrame) = a.select("doc_id", "n", "sarr").as[(Long, Int, Array[Long])]
-    val batch = docs(newArrays).collect()
     val index = spark.sparkContext.broadcast(new BatchPrefixIndex(batch, lo))
     // an empty batch prunes the corpus scan away
-    docs(arrays.filter(lit(batch.nonEmpty)))
+    arrayRows(arrays.filter(lit(batch.nonEmpty)))
       .mapPartitions { rows =>
         val ix = index.value
         rows.flatMap { case (id, n, sarr) => ix.probe(id, n, sarr) }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
@@ -444,8 +445,7 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
       }
       val ordered = df.select(
         schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-      return org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(
-        sqlContext, ordered.queryExecution.toRdd, ordered.schema)
+      return asStreaming(ordered)
     }
     val files: Seq[DeltaLog.AddFile] = (if (fileCapped) Some(()) else None) match {
       case Some(_) =>
@@ -540,7 +540,8 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
     val spark = sqlContext.sparkSession
     if (files.isEmpty)
       return org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(
-        sqlContext, spark.sparkContext.emptyRDD[InternalRow], schema)
+        sqlContext, spark.sparkContext.emptyRDD[InternalRow], schema,
+        Statistics(sizeInBytes = 0))
     // the batch's files through the log-backed relation of the PINNED
     // creation snapshot: its schema, mapping and partition columns;
     // partition values from each file's log entry; dead rows of a
@@ -549,9 +550,16 @@ class GraftDeltaStreamSource(sqlContext: SQLContext, table: String,
     val ordered = GraftDeltaRelation.frame(spark, table,
         initialSnap.copy(files = files))
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-    org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(
-      sqlContext, ordered.queryExecution.toRdd, ordered.schema)
+    asStreaming(ordered)
   }
+
+  /** `batch` as the streaming frame `getBatch` must return, carrying
+    * `batch`'s optimizer size estimate (a `foreachBatch` consumer's
+    * size-conditioned decisions read it). */
+  private def asStreaming(batch: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.streamingDataFrame(sqlContext,
+      batch.queryExecution.toRdd, batch.schema,
+      batch.queryExecution.optimizedPlan.stats)
 
   override def stop(): Unit = ()
 

@@ -10,7 +10,7 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, UnsafeProjection, UnsafeRow}
@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils, ParquetWriteSupport}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** One parquet file a [[StagedWriter]] task wrote: its path relative to
   * the write's dir, its size and modification time, its Hive partition
@@ -32,8 +32,10 @@ final case class StagedFile(path: String, size: Long, modificationTime: Long,
   * and change-data files before their commit, and the streaming
   * pipelines' per-batch state dirs.
   *
-  * One Spark job, run as a SQL execution of the frame's own plan (so the
-  * session's SQL confs reach the tasks as they do for Spark's writer).
+  * [[write]] is one Spark job, run as a SQL execution of the frame's own
+  * plan (so the session's SQL confs reach the tasks as they do for
+  * Spark's writer); [[writeRows]] runs the same task code on the driver
+  * over rows it already holds.
   * Each non-empty task writes its rows with parquet-mr over Spark's own
   * `ParquetWriteSupport` straight to a local file: no Hadoop
   * `FileSystem`, no output committer, no `_temporary` dirs, `.crc` or
@@ -67,19 +69,36 @@ object StagedWriter {
       output.find(a => sqlConf.resolver(a.name, c)).getOrElse(
         throw new IllegalArgumentException(
           s"partition column $c is not among ${output.map(_.name).mkString(", ")}")))
-    val dataAttrs = output.filterNot(a => partAttrs.exists(_.exprId == a.exprId))
-    val dataSchema = GraftSqlBridge.asNullable(DataTypeUtils.fromAttributes(dataAttrs))
-    val task = TaskSpec(dir.toAbsolutePath.toString,
-      UUID.randomUUID().toString.take(8), writeProps(sqlConf, dataSchema),
-      output, dataAttrs, partAttrs,
-      partAttrs.map(a => Cast(a, StringType, Some(sqlConf.sessionLocalTimeZone))),
-      FooterStats.statTypes(dataSchema))
+    val task = taskSpec(sqlConf, dir, output, partAttrs)
     Files.createDirectories(dir)
     SQLExecution.withNewExecutionId(qe, Some(s"graft: staged write to $dir")) {
       qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
         if (rows.hasNext) writeTask(task, pid, rows).iterator else Iterator.empty
       }.collect().toSeq
     }
+  }
+
+  /** Write `rows` of `schema`, already on the driver, as one file under
+    * `dir` from the calling thread: the same file [[write]]'s task 0
+    * would write, with no Spark job. For batch-sized rows only; no
+    * rows leave `dir` empty. */
+  def writeRows(spark: SparkSession, schema: StructType,
+      rows: Iterator[InternalRow], dir: Path): Seq[StagedFile] = {
+    val task = taskSpec(spark.sessionState.conf, dir,
+      DataTypeUtils.toAttributes(schema), Nil)
+    Files.createDirectories(dir)
+    if (rows.hasNext) writeTask(task, 0, rows) else Nil
+  }
+
+  private def taskSpec(sqlConf: SQLConf, dir: Path, output: Seq[Attribute],
+      partAttrs: Seq[Attribute]): TaskSpec = {
+    val dataAttrs = output.filterNot(a => partAttrs.exists(_.exprId == a.exprId))
+    val dataSchema = GraftSqlBridge.asNullable(DataTypeUtils.fromAttributes(dataAttrs))
+    TaskSpec(dir.toAbsolutePath.toString,
+      UUID.randomUUID().toString.take(8), writeProps(sqlConf, dataSchema),
+      output, dataAttrs, partAttrs,
+      partAttrs.map(a => Cast(a, StringType, Some(sqlConf.sessionLocalTimeZone))),
+      FooterStats.statTypes(dataSchema))
   }
 
   /** What every task of one write needs: the write's root and tag, the
@@ -95,7 +114,7 @@ object StagedWriter {
     * compression, …), with the timestamp encoding pinned to
     * TIMESTAMP_MICROS. */
   private def writeProps(sqlConf: SQLConf,
-      dataSchema: org.apache.spark.sql.types.StructType): Map[String, String] = {
+      dataSchema: StructType): Map[String, String] = {
     val job = org.apache.hadoop.mapreduce.Job.getInstance(new Configuration(false))
     ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
       new ParquetOptions(Map.empty[String, String], sqlConf))
@@ -113,13 +132,14 @@ object StagedWriter {
       new ParquetWriteSupport()
   }
 
-  /** Write one input partition's rows; returns the files it wrote. */
+  /** Write one input partition's rows (on an executor, or on the
+    * driver for [[writeRows]]); returns the files it wrote. */
   private def writeTask(task: TaskSpec, pid: Int,
       rows: Iterator[InternalRow]): Seq[StagedFile] = {
     val conf = new Configuration(false)
     task.props.foreach { case (k, v) => conf.set(k, v) }
     val codec = CompressionCodecName.fromConf(conf.get("parquet.compression"))
-    val attempt = TaskContext.get().attemptNumber()
+    val attempt = Option(TaskContext.get()).fold(0)(_.attemptNumber())
     val partitioned = task.partAttrs.nonEmpty
     val toData: InternalRow => InternalRow =
       if (partitioned) UnsafeProjection.create(task.dataAttrs, task.output)

@@ -3,10 +3,13 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
-import graft.sources.{DeltaLog, DeltaTable}
+import graft.sources.{DeltaLog, DeltaTable, StagedWriter}
 
 /** [EXT] Structured Streaming twins of the batch EventOps plans: the
   * same logical shapes (tumbling-window rollup, gap sessionization)
@@ -89,7 +92,7 @@ object StreamingOps {
   def fileEnrichPipeline(spark: SparkSession, srcDir: String,
       outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
-    spark.readStream.schema(schema).parquet(srcDir)
+    start(spark, spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("value") > 0)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"),
@@ -97,8 +100,7 @@ object StreamingOps {
       .writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .start()
+      .outputMode(OutputMode.Append()))
   }
 
   /** End-to-end filesystem pipeline, stateful: the hourly rollup over
@@ -109,12 +111,11 @@ object StreamingOps {
   def fileRollupPipeline(spark: SparkSession, srcDir: String,
       outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
-    hourlyRollup(spark.readStream.schema(schema).parquet(srcDir))
+    start(spark, hourlyRollup(spark.readStream.schema(schema).parquet(srcDir))
       .writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .start()
+      .outputMode(OutputMode.Append()))
   }
 
   /** End-to-end CONTINUOUS INGEST into the ACID table layer: watch
@@ -129,7 +130,7 @@ object StreamingOps {
   def fileDeltaIngestPipeline(spark: SparkSession, srcDir: String,
       table: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Event].schema
-    spark.readStream.schema(schema).parquet(srcDir)
+    start(spark, spark.readStream.schema(schema).parquet(srcDir)
       .filter(col("value") > 0)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"),
@@ -137,8 +138,7 @@ object StreamingOps {
       .writeStream.format("graft-delta")
       .option("path", table)
       .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .start()
+      .outputMode(OutputMode.Append()))
   }
 
   /** STREAMING MATERIALIZED VIEW — the streaming twin of the q83
@@ -234,11 +234,21 @@ object StreamingOps {
   private def ledgeredStream(spark: SparkSession, srcTable: String,
       ckptDir: String, view: DataFrame => DataFrame = identity)(
       perBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    view(spark.readStream.format("graft-delta").load(srcTable))
+    start(spark, view(spark.readStream.format("graft-delta").load(srcTable))
       .writeStream
       .option("checkpointLocation", ckptDir)
-      .foreachBatch(perBatch)
-      .start()
+      .foreachBatch(perBatch))
+
+  /** Start `w`, the one start of every stream this object builds, with
+    * [[GraftCheckpointFileManager]] serving its checkpoint: no shell
+    * forks per checkpoint file. A session that already names a
+    * checkpoint manager keeps its own. */
+  private def start(spark: SparkSession, w: DataStreamWriter[_]): StreamingQuery = {
+    if (spark.conf.getOption(GraftCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(GraftCheckpointFileManager.ConfKey,
+        classOf[GraftCheckpointFileManager].getName)
+    w.start()
+  }
 
   /** The host report off the maintained (host, canonical_url) view —
     * shares [[graft.operators.DedupOps.hostVerdict]]'s arithmetic
@@ -306,7 +316,7 @@ object StreamingOps {
   private def stageBatch(df: DataFrame, dir: String): Unit = {
     val p = Paths.get(dir)
     DeltaTable.deleteRecursively(p)
-    graft.sources.StagedWriter.write(df, p)
+    StagedWriter.write(df, p)
     ()
   }
 
@@ -552,9 +562,11 @@ object StreamingOps {
     *   - before the stream starts, the root is created and guarded
     *     against a checkpoint swap ([[validateStageRoot]]);
     *   - each micro-batch stages its standing state under the
-    *     DETERMINISTIC dir `batch-<batchId>` ([[Stage]]), replacing
-    *     what the dir held, so a replayed batch overwrites its own
-    *     attempt and replays are idempotent on the staged index;
+    *     DETERMINISTIC dir `batch-<batchId>` ([[Stage]]: from a frame
+    *     in one staged-write job, or from rows the kernel already
+    *     collected with no job), replacing what the dir held, so a
+    *     replayed batch overwrites its own attempt and replays are
+    *     idempotent on the staged index;
     *   - a batch's corpus is the staged dirs with ids below its own
     *     ([[batchDirs]]), rediscovered by LISTING the root: restart-safe
     *     with no driver state, and a replay never reads its own
@@ -567,6 +579,8 @@ object StreamingOps {
     *     id (`_graft_checkpoint`) through [[writeAtomically]], so a
     *     crash mid-stamp cannot leave an empty stamp that the guard
     *     would refuse on every restart.
+    * The stream's checkpoint goes through [[GraftCheckpointFileManager]]
+    * ([[start]]): its checkpoint files cost no shell forks.
     * foreachBatch is right here for the same reason as the
     * materialized views: stage + join + ledgered append is a
     * multi-step transaction no declarative sink expresses. */
@@ -590,10 +604,23 @@ object StreamingOps {
     /** This batch's staged dir. */
     val dir: String = root.resolve(s"batch-$batchId").toString
 
+    /** Stage `df` as [[dir]]. */
+    def write(df: DataFrame): Unit = stageBatch(df, dir)
+
+    /** Stage `rows` of `schema`, already on the driver, as [[dir]] with
+      * no Spark job ([[StagedWriter.writeRows]]), replacing what it held
+      * as [[write]] does. */
+    def writeRows(schema: StructType, rows: Iterator[InternalRow]): Unit = {
+      val p = Paths.get(dir)
+      DeltaTable.deleteRecursively(p)
+      StagedWriter.writeRows(spark, schema, rows, p)
+      ()
+    }
+
     /** Stage `df` as [[dir]] and read it back with `df`'s schema (all
       * dirs under one root share it: no per-batch footer inference). */
     def apply(df: DataFrame): DataFrame = {
-      stageBatch(df, dir)
+      write(df)
       spark.read.schema(df.schema).parquet(dir)
     }
 
@@ -614,18 +641,31 @@ object StreamingOps {
   /** STREAMING INCREMENTAL NEAR-DUP — the whole production ingestion
     * pipeline composed from pieces the batch path already proves: tail
     * a graft-delta documents table's change feed, and for each
-    * micro-batch (a) shingle ONLY the batch and stage it, (b) find
-    * near-dups of the batch against seed-corpus index ∪ previously
-    * staged batches ([[graft.operators.DedupOps.incrementalNearDupsFrom]],
-    * q75's kernel: one narrow pass in which each corpus row probes a
-    * broadcast index of the batch's prefixes and verifies its pairs in
-    * place — no shuffle, no corpus broadcast), and (c) append the
-    * surviving pairs to a downstream graft-delta table under the
-    * `neardup:` ledger. So each batch is deduped against everything
-    * that came before WITHOUT ever re-shingling the corpus — the index
-    * grows one staged dir per batch, exactly
+    * micro-batch
+    *   (a) shingle ONLY the batch, inline (no exchange), and collect
+    *       its arrays to the driver in ONE job
+    *       ([[graft.operators.DedupOps.collectBatch]]: refused typed
+    *       when the source's size estimate for the batch passes the
+    *       broadcast cap);
+    *   (b) stage those rows as the batch's dir from the driver
+    *       ([[Stage.writeRows]]: the staged writer's own task code, no
+    *       Spark job and no read-back);
+    *   (c) find near-dups of the batch against seed-corpus index ∪
+    *       previously staged batches ∪ the batch itself with the same
+    *       rows as the probe index
+    *       ([[graft.operators.DedupOps.nearDupsOfBatch]], q75's kernel:
+    *       one narrow pass in which each corpus row probes a broadcast
+    *       index of the batch's prefixes and verifies its pairs in
+    *       place — no shuffle, no corpus broadcast), and append the
+    *       surviving pairs to a downstream graft-delta table under the
+    *       `neardup:` ledger; the append's job runs the probe pass.
+    * So each batch is deduped against everything that came before
+    * WITHOUT ever re-shingling the corpus — the index grows one staged
+    * dir per batch, exactly
     * [[graft.operators.DedupOps.refreshShingleIndex]]'s contract at
-    * micro-batch grain. Staging, replay and the stamp are
+    * micro-batch grain. A batch with no rows (a `dataChange=false`
+    * compaction or a property change on the source) stages an empty
+    * dir and appends no pairs. Staging, replay and the stamp are
     * [[stagedIngest]]'s.
     *
     * The corpus is read through [[stagedCorpus]]: seed index ∪ one
@@ -645,13 +685,16 @@ object StreamingOps {
       stageRoot: String): StreamingQuery = {
     import graft.operators.DedupOps
     stagedIngest(spark, srcTable, ckptDir, stageRoot) { (batch, batchId, stage) =>
-      val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")))
-      val newArrays = stage(sh)
+      val sh = DedupOps.shingleArrays(batch.select(col("doc_id"), col("text")),
+        spread = false)
+      val rows = DedupOps.collectBatch(sh, graft.operators.Hints.BroadcastCap)
+      stage.writeRows(sh.schema, rows.iterator.map { case (id, n, sarr) =>
+        InternalRow(id, n, UnsafeArrayData.fromPrimitiveArray(sarr)) })
       // the batch's own dir rides the corpus scan: corpus ∪ batch
       val arrays = stagedCorpus(spark,
         DedupOps.stagedShingleArrays(spark, seedDir), sh.schema,
         stage.prior :+ stage.dir)
-      DeltaTable.write(DedupOps.incrementalNearDupsFrom(arrays, newArrays, 0.5),
+      DeltaTable.write(DedupOps.nearDupsOfBatch(arrays, rows, 0.5),
         pairsTable, "append", txn = Some((s"neardup:$ckptDir", batchId)))
     }
   }
@@ -886,7 +929,7 @@ object StreamingOps {
           .select("h", "nd"), "h")
       // stage this batch's distinct hashes for LATER batches
       val bh = bw.select("h").distinct()
-      stage(bh)
+      stage.write(bh)
       val corpusH = stagedCorpus(spark,
         DedupOps.stagedWindowHashSet(spark, seedDir), bh.schema,
         stage.prior)
@@ -1135,7 +1178,7 @@ object StreamingOps {
   def dedupIngestPipeline(spark: SparkSession, srcDir: String,
       outDir: String, ckptDir: String): StreamingQuery = {
     val schema = org.apache.spark.sql.Encoders.product[Doc].schema
-    spark.readStream.schema(schema).parquet(srcDir)
+    start(spark, spark.readStream.schema(schema).parquet(srcDir)
       .withColumn("fingerprint",
         md5(graft.operators.TextOps.normText(col("text"))))
       .dropDuplicates("fingerprint")
@@ -1143,8 +1186,7 @@ object StreamingOps {
       .writeStream.format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append())
-      .start()
+      .outputMode(OutputMode.Append()))
   }
 
   /** Convenience: run `hourlyRollup` over a bounded events DataFrame
@@ -1152,9 +1194,9 @@ object StreamingOps {
     * by tests to prove batch/stream agreement on the same input. */
   def runRollupOnce(spark: SparkSession, events: DataFrame,
       sinkName: String): DataFrame = {
-    val q = hourlyRollup(events)
+    val q = start(spark, hourlyRollup(events)
       .writeStream.format("memory").queryName(sinkName)
-      .outputMode(OutputMode.Complete()).start()
+      .outputMode(OutputMode.Complete()))
     q.processAllAvailable()
     q.stop()
     spark.table(sinkName)

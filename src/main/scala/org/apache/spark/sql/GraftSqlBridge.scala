@@ -2,6 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into Spark's `private[sql]` surface, required at the
@@ -11,9 +14,15 @@ import org.apache.spark.sql.types.StructType
   *
   *  - the graft V1 streaming SOURCE: `MicroBatchExecution` asserts that
   *    the DataFrame a V1 `Source.getBatch` returns is tagged
-  *    `isStreaming = true`, and the only constructor for such a frame
-  *    is `SparkSession.internalCreateDataFrame(_, _, isStreaming=true)`
-  *    — `private[sql]` with no public equivalent;
+  *    `isStreaming = true`, and such a frame can only be built over a
+  *    streaming `LogicalRDD` (what `SparkSession.internalCreateDataFrame`
+  *    builds with `isStreaming=true`) — `private[sql]` with no public
+  *    equivalent. The frame carries
+  *    the caller's size `stats`: without them a streaming relation
+  *    estimates `spark.sql.defaultSizeInBytes` (Long.MaxValue), and
+  *    every size-conditioned decision downstream of the micro-batch
+  *    (`foreachBatch` frames inherit the estimate) sees an unbounded
+  *    batch;
   *  - the graft V1 streaming SINK: `Sink.addBatch`'s DataFrame still
   *    has streaming leaves (a fresh action throws
   *    CALL_ON_STREAMING_DATASET_UNSUPPORTED), so its already-planned
@@ -23,10 +32,12 @@ import org.apache.spark.sql.types.StructType
   *    ingest hot path; wrapping the InternalRow RDD directly keeps the
   *    micro-batch write zero-copy end-to-end. */
 object GraftSqlBridge {
-  def streamingDataFrame(sqlContext: SQLContext,
-      rows: RDD[InternalRow], schema: StructType): DataFrame =
-    sqlContext.sparkSession.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rows, schema, isStreaming = true)
+  def streamingDataFrame(sqlContext: SQLContext, rows: RDD[InternalRow],
+      schema: StructType, stats: Statistics): DataFrame = {
+    val spark = sqlContext.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(spark, LogicalRDD(DataTypeUtils.toAttributes(schema),
+      rows, isStreaming = true)(spark, Some(stats)))
+  }
 
   def batchDataFrame(spark: SparkSession,
       rows: RDD[InternalRow], schema: StructType): DataFrame =

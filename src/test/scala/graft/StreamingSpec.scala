@@ -923,6 +923,111 @@ class StreamingSpec extends SparkSpec {
     assertLedgeredSink(pairs)
   }
 
+  test("near-dup empty micro-batch: commits that add no rows stage empty " +
+      "dirs and no pairs, and a later batch reads past them") {
+    import graft.sources.DeltaTable
+    val base = tempDir("graft-stream-emptybatch")
+    val (src, pairs, ckpt, stage) =
+      (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
+    val seedDir = s"$base/seed"
+    val text = "the quick brown fox jumps over the lazy dog near the " +
+      "old river bank while morning light filters through tall trees"
+    val novel = "novel content sharing no phrasing with anything already indexed"
+    def docs(rows: (Long, String)*) = rows.toSeq
+      .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs(0L -> text, 1L -> "an unrelated seed document about spark joins")
+      .write.parquet(s"$seedDir/documents.parquet")
+    def append(rows: (Long, String)*): Unit =
+      docs(rows: _*).write.format("graft-delta").mode("append").save(src)
+    def pairRows() = spark.read.format("graft-delta").load(pairs)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    def batchIds(): Set[Long] = listingNames(stage)
+      .flatMap(n => n.stripPrefix("batch-").toLongOption).toSet
+    // two files, so the compaction below has something to fold
+    append(100L -> (text + " tonight"))
+    append(101L -> novel)
+    val q = StreamingOps.nearDupIngestPipeline(
+      spark, seedDir, src, pairs, ckpt, stage)
+    try {
+      q.processAllAvailable()
+      val first = pairRows()
+      assert(first === Set((0L, 100L)))
+      val staged = batchIds()
+      // a property change and a dataChange=false compaction: versions
+      // with no rows for the stream
+      DeltaTable.setTableProperty(src, "graft.test.owner", "ingest")
+      q.processAllAvailable()
+      DeltaTable.compact(spark, src)
+      q.processAllAvailable()
+      val empty = batchIds() -- staged
+      assert(empty.nonEmpty, "the no-row commits ran no micro-batch")
+      empty.foreach(i => assert(listingNames(s"$stage/batch-$i").isEmpty,
+        s"batch-$i staged rows for a batch without any"))
+      assert(pairRows() === first)
+      // the next batch's corpus scan lists the empty dirs and still
+      // finds doc 101 in the first batch's dir
+      append(200L -> (novel + " tonight"))
+      q.processAllAvailable()
+      assert(pairRows() === first + ((101L, 200L)))
+    } finally q.stop()
+    assertLedgeredSink(pairs)
+  }
+
+  test("near-dup drain forks no readlink or chmod: the stream's checkpoint " +
+      "goes through java.nio") {
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val base = tempDir("graft-stream-forks")
+    val (src, pairs, ckpt, stage) =
+      (s"$base/src", s"$base/pairs", s"$base/ckpt", s"$base/stage")
+    val seedDir = s"$base/seed"
+    val text = "the quick brown fox jumps over the lazy dog near the " +
+      "old river bank while morning light filters through tall trees"
+    def docs(rows: (Long, String)*) = rows.toSeq
+      .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs(0L -> text).write.parquet(s"$seedDir/documents.parquet")
+    def append(b: Int): Unit = docs(b * 100L -> s"$text and batch $b")
+      .write.format("graft-delta").mode("append").save(src)
+    append(1)
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val q = StreamingOps.nearDupIngestPipeline(
+      spark, seedDir, src, pairs, ckpt, stage)
+    try (1 to 3).foreach { b =>
+      if (b > 1) append(b)
+      q.processAllAvailable()
+    } finally q.stop()
+    // a process of the test's own: the recording sees process starts
+    assert(scala.sys.process.Process(Seq("true")).! === 0)
+    rec.stop()
+    val jfr = base.resolve("drain.jfr")
+    rec.dump(jfr)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(jfr).asScala
+      .map(e => e.getString("command")).toSeq
+    def program(c: String) = c.trim.split("\\s+").head.split('/').last
+    assert(commands.map(program).contains("true"), commands)
+    assert(!commands.exists(c => Set("readlink", "chmod")(program(c))),
+      s"process starts during the drain: ${commands.mkString("; ")}")
+    assert(listingNames(s"$ckpt/commits").filterNot(_.startsWith(".")) ===
+      Seq("0", "1", "2"))
+    assert(spark.read.format("graft-delta").load(pairs)
+      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ===
+      Set((0L, 100L), (0L, 200L), (0L, 300L), (100L, 200L), (100L, 300L),
+        (200L, 300L)))
+  }
+
+  private def listingNames(dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator.asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
   test("staged corpus: the near-dup batch plan has the same scans and " +
       "codegen stage ids over 1 prior dir and over 5") {
     import graft.operators.DedupOps
